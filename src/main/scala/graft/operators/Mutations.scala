@@ -1,8 +1,9 @@
 package graft.operators
 
 import graft.engine.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField, StructType}
 
 /** Mutation operators M1-M8 (SURVEY.md §2.8): the reference mutates Mongo
   * collections in place with manual compensating rollbacks
@@ -261,10 +262,18 @@ object Mutations {
     * version (guide §1.2 #1 / §2.6: the version scans are independent —
     * one action lets the scheduler overlap them, and N-1 driver round
     * trips disappear). Values and column names/types are identical to the
-    * former per-version collect loop; every caller stays oracle-gated. */
-  private def versionSummaries(vs: Seq[String], read: String => DataFrame,
+    * former per-version collect loop; every caller stays oracle-gated. An
+    * empty version list gives an empty frame of the same schema. */
+  private[graft] def versionSummaries(vs: Seq[String], read: String => DataFrame,
       cur: Option[String] = None): DataFrame =
-    vs.map { v =>
+    if (vs.isEmpty) {
+      val s = SparkSession.active
+      s.createDataFrame(s.sparkContext.emptyRDD[Row], StructType(Seq(
+        StructField("version", StringType, nullable = false),
+        StructField("n_docs", LongType, nullable = false),
+        StructField("sum_ids", LongType, nullable = false)) ++
+        cur.map(_ => StructField("is_current", BooleanType, nullable = false))))
+    } else vs.map { v =>
       val base = read(v)
         .agg(count(lit(1)).as("n_docs"),
           coalesce(sum(col("doc_id")), lit(0L)).as("sum_ids"))

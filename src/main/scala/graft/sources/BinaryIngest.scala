@@ -195,55 +195,19 @@ object BinaryIngest {
       case None => ()
     }
     val diffs = parseDifferences(raw)
-    // Standard-security-handler decryption (round 6): when /Encrypt is
-    // present, derive the file key from /O, /P and /ID (empty user
-    // password — the encryption-for-permissions case; a passworded file
-    // yields no key and extracts empty rather than garbage, verified via
-    // the /U check), and decrypt each stream under its PER-OBJECT key
-    // before any inflate. Object numbers come from one pass over the
-    // "N G obj" headers; each stream decrypts under the closest header
-    // above it.
-    // AES-256 (V=5 R=6 /AESV3): the file key comes from the /U + /UE
-    // wrap under the empty user password (PdfCrypto.fileKeyR6) and
-    // encrypts every stream DIRECTLY — no per-object keys in V5
-    val v5Key: Option[Array[Byte]] =
-      if (!raw.contains("/AESV3")) None
-      else try {
-        for {
-          u <- """/U\s*<([0-9A-Fa-f\s]+)>""".r.findFirstMatchIn(raw)
-            .map(m => PdfCrypto.fromHex(m.group(1).replaceAll("\\s", "")))
-          ue <- """/UE\s*<([0-9A-Fa-f\s]+)>""".r.findFirstMatchIn(raw)
-            .map(m => PdfCrypto.fromHex(m.group(1).replaceAll("\\s", "")))
-          k <- PdfCrypto.fileKeyR6(u, ue)
-        } yield k
-      } catch { case _: Exception => None }
-    val encKey: Option[Array[Byte]] =
-      if (v5Key.isDefined || !raw.contains("/Encrypt")) None
-      else try {
-        for {
-          o <- """/O\s*<([0-9A-Fa-f\s]+)>""".r.findFirstMatchIn(raw)
-            .map(m => PdfCrypto.fromHex(m.group(1).replaceAll("\\s", "")))
-          // .toLong.toInt: several producers write /P as the UNSIGNED
-          // 32-bit decimal (4294963392) instead of the negative two's
-          // complement — the truncation recovers the intended bits either
-          // way, and the outer try keeps any other malformed field on the
-          // extract-empty path, never an executor crash
-          p <- """/P\s+(-?\d+)""".r.findFirstMatchIn(raw).map(_.group(1).toLong.toInt)
-          id0 <- """/ID\s*\[\s*<([0-9A-Fa-f\s]+)>""".r.findFirstMatchIn(raw)
-            .map(m => PdfCrypto.fromHex(m.group(1).replaceAll("\\s", "")))
-          key = PdfCrypto.fileKey(o, p, id0)
-          // wrong/absent password: /U's first 16 bytes won't reproduce
-          uOk = """/U\s*<([0-9A-Fa-f\s]+)>""".r.findFirstMatchIn(raw)
-            .map(m => PdfCrypto.fromHex(m.group(1).replaceAll("\\s", "")))
-            .forall(u => java.util.Arrays.equals(u.take(16),
-              PdfCrypto.computeU(key, id0).take(16)))
-          k <- if (uOk) Some(key) else None
-        } yield k
-      } catch { case _: Exception => None }
-    // V=4 crypt filters: /AESV2 switches the stream cipher (salted
-    // per-object key + AES-128-CBC with a prepended IV); anything else
-    // under /Encrypt is the V=2 RC4 path
-    val encAes = encKey.isDefined && raw.contains("/AESV2")
+    // Standard-security-handler decryption: when /Encrypt is present,
+    // derive the decryptor from the dictionary the trailer's /Encrypt
+    // names and the trailer's /ID (empty user password — the
+    // encryption-for-permissions case; a passworded file yields no key
+    // and extracts empty rather than garbage, verified via the /U check),
+    // and decrypt each stream before any inflate. RC4 and AESV2 decrypt
+    // under the PER-OBJECT key of the closest "N G obj" header above the
+    // stream; AES-256 (V=5 R=6 /AESV3) encrypts every stream directly
+    // under the file key.
+    val encryption = PdfXref.encryptionDicts(raw)
+    val dec = encryption.flatMap { case (trailer, encDict) =>
+      PdfXref.buildDecryptor(trailer, encDict) }
+    val fileKeyOnly = encryption.exists(_._2.contains("/AESV3"))
     // always computed (round 12): per-object keys need it under /Encrypt,
     // and the per-font ToUnicode resolution needs stream contents keyed
     // by object number on every path — one linear regex pass either way
@@ -296,31 +260,15 @@ object BinaryIngest {
             val anchor0 = if (dictStart >= 0) dictStart else idx
             val hdr0 = objHeaders.lastIndexWhere(_._1 < anchor0)
             val streamObjNum = if (hdr0 < 0) -1 else objHeaders(hdr0)._2
-            val content: Option[String] = if (v5Key.isDefined) {
-              // V5: decrypt under the file key itself, then inflate
-              val ct = java.util.Arrays.copyOfRange(bytes, dataStart, dataEnd)
-              PdfCrypto.aesDecrypt(v5Key.get, ct).flatMap { dd =>
-                if (dict.contains("/FlateDecode")) inflateRange(dd, 0, dd.length)
-                else Some(new String(dd,
-                  java.nio.charset.StandardCharsets.ISO_8859_1))
-              }
-            } else encKey match {
-              case Some(fk) =>
-                if (hdr0 < 0) None
-                else {
-                  val (_, objNum, gen) = objHeaders(hdr0)
-                  val ct = java.util.Arrays.copyOfRange(bytes, dataStart, dataEnd)
-                  val dec: Option[Array[Byte]] =
-                    if (encAes)
-                      PdfCrypto.aesDecrypt(
-                        PdfCrypto.objKey(fk, objNum, gen, aes = true), ct)
-                    else Some(PdfCrypto.rc4(PdfCrypto.objKey(fk, objNum, gen), ct))
-                  dec.flatMap { d =>
-                    if (dict.contains("/FlateDecode")) inflateRange(d, 0, d.length)
-                    else Some(new String(d,
-                      java.nio.charset.StandardCharsets.ISO_8859_1))
+            val content: Option[String] = dec match {
+              case Some(d) if hdr0 >= 0 || fileKeyOnly =>
+                val (_, objNum, gen) = if (hdr0 < 0) (0, 0, 0) else objHeaders(hdr0)
+                d(objNum, gen, java.util.Arrays.copyOfRange(bytes, dataStart, dataEnd))
+                  .flatMap { plain =>
+                    if (dict.contains("/FlateDecode")) inflateRange(plain, 0, plain.length)
+                    else Some(new String(plain, java.nio.charset.StandardCharsets.ISO_8859_1))
                   }
-                }
+              case Some(_) => None
               case None =>
                 if (dict.contains("/FlateDecode")) inflateRange(bytes, dataStart, dataEnd)
                 else Some(raw.substring(dataStart, dataEnd))

@@ -231,7 +231,7 @@ object PdfXref {
     * guarantees). The xref stream itself and the /Encrypt dictionary
     * are NEVER encrypted (ISO 32000-1 §7.5.8.2, §7.6.1), so table
     * resolution needs no key; ObjStm, content and CMap STREAMS are. */
-  private type Dec = (Int, Int, Array[Byte]) => Option[Array[Byte]]
+  private[sources] type Dec = (Int, Int, Array[Byte]) => Option[Array[Byte]]
 
   /** Decrypt-then-maybe-inflate a stream's data slice. */
   private def streamData(bytes: Array[Byte], ds: Int, len: Int, dict: String,
@@ -334,7 +334,7 @@ object PdfXref {
     * build does not implement) — the caller falls back to the legacy
     * path, whose own derivation then fails the same way and extracts
     * EMPTY rather than garbage. */
-  private def buildDecryptor(trailer: String, encDict: String): Option[Dec] = try {
+  private[sources] def buildDecryptor(trailer: String, encDict: String): Option[Dec] = try {
     def hex(owner: String, key: String): Option[Array[Byte]] =
       (java.util.regex.Pattern.quote("/" + key) + """\s*<([0-9A-Fa-f\s]+)>""").r
         .findFirstMatchIn(owner)
@@ -348,6 +348,8 @@ object PdfXref {
     } else {
       for {
         o <- hex(encDict, "O")
+        // .toLong.toInt: some producers write /P as the unsigned 32-bit
+        // decimal; the truncation recovers the intended bits
         p <- """/P\s+(-?\d+)""".r.findFirstMatchIn(encDict)
           .map(_.group(1).toLong.toInt)
         id0 <- """/ID\s*\[\s*<([0-9A-Fa-f\s]+)>""".r.findFirstMatchIn(trailer)
@@ -366,6 +368,30 @@ object PdfXref {
       }
     }
   } catch { case _: Exception => None }
+
+  /** The standard-security dictionaries of a file read WITHOUT its xref
+    * table: the trailer (or xref-stream dictionary) whose /Encrypt comes
+    * last in the file, and the dictionary that /Encrypt names — an
+    * indirect `N G R` resolved to the last `N G obj` of that number, or
+    * an inline `<< >>`. /O, /P and /U are read from that dictionary and
+    * /ID from that trailer only: a whole-file scan also matches an
+    * annotation's `/P 3 0 R`, or stream ciphertext that happens to hold
+    * `/P` and a digit, ahead of the real entry. None when the file has
+    * no /Encrypt or either dictionary cannot be found. */
+  private[sources] def encryptionDicts(raw: String): Option[(String, String)] =
+    if (!raw.contains("/Encrypt")) None
+    else """/Encrypt\s*(?:(\d+)\s+(\d+)\s+R|<<)""".r.findAllMatchIn(raw).toSeq.lastOption
+      .flatMap { m =>
+        val owner = math.max(raw.lastIndexOf("trailer", m.start), raw.lastIndexOf("obj", m.start))
+        val encDict =
+          if (m.group(1) == null) dictAt(raw, m.start + "/Encrypt".length)
+          else ("""(?<!\d)""" + m.group(1) + """\s+""" + m.group(2) + """\s+obj\b""").r
+            .findAllMatchIn(raw).toSeq.lastOption.flatMap(o => dictAt(raw, o.end))
+        for {
+          (trailer, _) <- if (owner < 0) None else dictAt(raw, owner)
+          (enc, _) <- encDict
+        } yield (trailer, enc)
+      }
 
   /** The xref-stream entry point: when the file's `startxref` points at
     * a cross-reference STREAM, walk /Root -> /Pages -> /Kids ->

@@ -1,10 +1,12 @@
 package graft.streaming
 
 import graft.operators.{Mutations, SnippetGen}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import scala.jdk.CollectionConverters._
 
 /** Command-dispatch loop (SURVEY §2.9 T1-T4): the reference drains a
   * bounded FIFO `Queue(maxsize=40)` one item at a time, routing on
@@ -24,6 +26,17 @@ import org.apache.spark.sql.types._
   * artifact; per-type ordering preserves its observable semantics for
   * non-conflicting batches and is documented engine behavior for
   * conflicting ones.
+  *
+  * A batch is dispatched in two passes. DECIDE: the batch's key columns
+  * (action, ids, names, category id and name; never the text) and the
+  * state rows those keys touch come to the driver, where every per-command
+  * decision is made — accepted uploads and category adds, the removed
+  * names and categories, content-dedup rejections, the message text. The
+  * decisions are held on the driver, bounded by the trigger's batch size
+  * as the reference's queue is bounded at 40 items. APPLY: each next
+  * table is the previous one filtered by the removed keys plus the
+  * accepted rows (uploads from the cached batch, categories and messages
+  * as small local frames), so each snapshot write is one scan.
   */
 object CommandDispatch {
 
@@ -59,7 +72,7 @@ object CommandDispatch {
     dispatchWith(state, commands, Some(threshold))
 
   /** Per-batch cache registry: dispatch caches small frames that several
-    * branches re-read (the command batch, the rejected-id set, FIFO runs).
+    * branches re-read (the command batch, FIFO runs).
     * Inside a long-lived foreachBatch stream those blocks would otherwise
     * accumulate across micro-batches until executor-cache pressure evicts
     * them, so [[runStream]] releases them once the batch's snapshot and
@@ -88,106 +101,166 @@ object CommandDispatch {
     finally buf.foreach(_.unpersist(blocking = false))
   }
 
+  /** One command as the driver holds it: the collected key row (row id,
+    * action_code, document_name, category_name, document_id, category_id)
+    * and its decoded keys. Never the text. */
+  private final case class Cmd(row: Row, action: Option[Int], name: Option[String],
+      catName: Option[String], docId: Option[Long], catId: Option[Long]) {
+    def id: Long = row.getLong(0)
+  }
+
+  private val CmdId = "__cmd"
+
+  /** Spark's string order (UTF-8 bytes); Option orders put None (null) first, as Spark does. */
+  private implicit val sparkStringOrder: Ordering[String] =
+    Ordering.fromLessThan((a, b) => UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0)
+
+  private def isIn(c: Column, values: Iterable[Any]): Column =
+    if (values.isEmpty) lit(false) else c.isin(values.toSeq: _*)
+
+  /** Keeps the rows whose key is not in `values`; a null key is kept, as an anti-join keeps it. */
+  private def notIn(c: Column, values: Iterable[Any]): Column =
+    !coalesce(isIn(c, values), lit(false))
+
   private def dispatchWith(state: EngineState, commands: DataFrame,
       contentDedup: Option[Double]): (EngineState, DataFrame) = {
-    val cmds = cached(commands)
+    val spark = commands.sparkSession
+    // the row ids name the batch's rows in every later query: the batch is
+    // cached, and a recomputed partition of a deterministic source gets
+    // the same ids
+    val cmds = cached(commands.withColumn(CmdId, monotonically_increasing_id()))
 
-    // 2: add categories (uniqueness on name, M7)
-    val catAdds = cmds.filter(col("action_code") === 2)
-      .select(col("category_id"), col("category_name"))
-    val cats1 = Mutations.dimInsert(state.categories, catAdds, "category_name")
+    // ---- decide, on the driver: the batch's keys, then the state's rows
+    // that those keys touch
+    def opt[A](r: Row, i: Int)(f: Any => A): Option[A] =
+      if (r.isNullAt(i)) None else Some(f(r.get(i)))
+    def num(x: Any): Long = x.asInstanceOf[Number].longValue
+    val keys = cmds.select(col(CmdId), col("action_code"), col("document_name"),
+        col("category_name"), col("document_id"), col("category_id"))
+      .collect().toSeq.sortBy(_.getLong(0)).map { r =>
+        Cmd(r, opt(r, 1)(num(_).toInt), opt(r, 2)(_.toString), opt(r, 3)(_.toString),
+          opt(r, 4)(num), opt(r, 5)(num))
+      }
+    def of(code: Int) = keys.filter(_.action.contains(code))
+    val (removes, uploads, catAdds, catRemoves) = (of(0), of(1), of(2), of(3))
+    val removeNames = removes.flatMap(_.name).toSet
+    val removeCats = catRemoves.flatMap(_.catId).toSet
+    val uploadNames = uploads.flatMap(_.name).distinct
+    val uploadCats = uploads.flatMap(_.catId).distinct
+    val addNames = catAdds.flatMap(_.catName).distinct
+    // one query: (name, null, null) per existing document the uploads
+    // name, (name, id, true) per category the adds or uploads touch
+    val touched: Seq[Row] =
+      if (uploadNames.isEmpty && uploadCats.isEmpty && addNames.isEmpty) Nil
+      else state.docs.filter(isIn(col("document_name"), uploadNames))
+        .select(col("document_name").as("name"))
+        .unionByName(state.categories
+          .filter(isIn(col("category_name"), addNames) || isIn(col("category_id"), uploadCats))
+          .select(col("category_name").as("name"), col("category_id").cast("long").as("id"),
+            lit(true).as("cat")), allowMissingColumns = true)
+        .collect().toSeq
+    val (catRows, docRows) = touched.partition(r => !r.isNullAt(2))
+    val existingNames = docRows.map(_.getString(0)).toSet
+    val stateCats = catRows.map(r => (opt(r, 1)(num), Option(r.getString(0))))
+    val existingCats = stateCats.flatMap(_._2).toSet
 
-    // 1: uploads — dedup on name (M1/J3), dim lookup (J1), snippet gen (F3/F4).
-    // The state's docs table OPTIONALLY carries document_expiryDate
-    // (upload_one_doc's expiry_date, data_ingestion.py:77): when it does,
-    // uploads propagate the command's expiry (null when the command batch
-    // was written without the column) so the per-batch expiry sweep
-    // ([[expiryMaintenance]]) has something to sweep. A state without the
-    // column dispatches exactly as before — q_dispatch is unchanged.
-    val hasExpiry = state.docs.columns.contains("document_expiryDate")
+    // 2: category adds — a name absent from the state, one per name: the
+    // first in (category_id, category_name) order (Mutations.dimInsert)
+    val addedCats = catAdds.filterNot(_.catName.exists(existingCats))
+      .groupBy(_.catName).values.map(_.minBy(c => (c.catId, c.id))).toSeq
+    // an upload's category_name: the first name its id has among the
+    // categories after the adds (a left join, then the tie-break below)
+    val catNameOf: Map[Long, Option[String]] =
+      (stateCats ++ addedCats.map(c => (c.catId, c.catName)))
+        .collect { case (Some(id), n) => id -> n }
+        .groupBy(_._1).map { case (id, ns) => id -> ns.map(_._2).min }
+    def catName(c: Cmd): Option[String] = c.catId.flatMap(catNameOf.get).flatten
+
+    // 1: uploads — a name absent from the state, one per name: the first
+    // in full-row order (Mutations.acceptedNew), so a replayed batch
+    // inserts the same row. Rows tied on every key column are ordered by
+    // text and expiry in one small query; the text stays on the cluster.
     val expiryCmd =
       if (cmds.columns.contains("document_expiryDate"))
         col("document_expiryDate").cast("string")
       else lit(null).cast("string")
-    val uploads = cmds.filter(col("action_code") === 1)
-      .select(Seq(col("document_id"), col("document_name"), col("category_id"),
-        col("text")) ++
-        (if (hasExpiry) Seq(expiryCmd.as("document_expiryDate")) else Nil): _*)
-    val newDocs = uploads
-      .join(broadcast(cats1.select(col("category_id"), col("category_name"))), Seq("category_id"), "left")
-      .withColumn("document_status", lit("Active"))
-      .select(Seq("document_id", "document_name", "category_id", "category_name",
-        "text", "document_status") ++
-        (if (hasExpiry) Seq("document_expiryDate") else Nil) map col: _*)
-    // the accepted set is computed ONCE and drives both the docs append and
-    // snippet generation — so a within-batch duplicate name contributes
-    // exactly one doc row and one snippet set (no orphan snippets)
-    val nameAccepted = Mutations.acceptedNew(state.docs, newDocs, "document_name")
+    val rank = (c: Cmd) => (c.docId, c.catId, catName(c))
+    val byName = uploads.filterNot(_.name.exists(existingNames))
+      .groupBy(_.name).values.toSeq.map(_.sortBy(c => (rank(c), c.id)))
+    val (single, tied) = byName.map(g => g.takeWhile(c => rank(c) == rank(g.head)))
+      .partition(_.size == 1)
+    val tieWinners: Seq[Long] =
+      if (tied.isEmpty) Nil
+      else {
+        val groupOf = typedLit(tied.zipWithIndex.flatMap { case (g, i) => g.map(_.id -> i) }.toMap)
+        cmds.filter(isIn(col(CmdId), tied.flatten.map(_.id)))
+          .groupBy(groupOf.getItem(col(CmdId)))
+          .agg(min(struct(col("text"), expiryCmd, col(CmdId))).getField(CmdId))
+          .collect().toSeq.map(_.getLong(1))
+      }
+    val nameAccepted = single.map(_.head.id).toSet ++ tieWinners
     // optional content near-dup gate: reject uploads whose TEXT is a
     // near-dup of an existing doc (the streaming content-dedup extension).
     // This re-signs state.docs per batch — at scale keep the persisted
     // MinHash index (Dedup.writeIndex/probeIndex/appendIndex) instead.
-    val contentRejected = contentDedup.map { t =>
+    val rejected: Set[Long] = contentDedup.fold(Set.empty[Long]) { t =>
       graft.operators.Dedup.crossNearDups(
-        nameAccepted.select(col("document_id").as("doc_id"), col("text")),
+        cmds.filter(isIn(col(CmdId), nameAccepted))
+          .select(col("document_id").as("doc_id"), col("text")),
         state.docs.select(col("document_id").as("doc_id"), col("text")), t)
-        .select(col("doc_a").as("document_id")).distinct()
-        .transform(cached)
+        .select(col("doc_a")).distinct().collect()
+        .flatMap(r => opt(r, 0)(num)).toSet
     }
-    val acceptedDocs = contentRejected match {
-      case Some(rej) => nameAccepted.join(broadcast(rej), Seq("document_id"), "left_anti")
-      case None => nameAccepted
+    // 0 and 3: removals by name and by category apply to the uploads too
+    val accepted = uploads.filter(c => nameAccepted(c.id) && !c.docId.exists(rejected) &&
+      !c.name.exists(removeNames) && !c.catId.exists(removeCats))
+
+    def message(c: Cmd): String = {
+      def s(v: Option[Any]) = v.fold("null")(_.toString)
+      c.action match {
+        case Some(1) if c.name.exists(existingNames) => s"Document ${s(c.name)} already exists"
+        case Some(1) if c.docId.exists(rejected) => s"Document ${s(c.name)} is a near-duplicate"
+        case Some(1) => s"Document ${s(c.name)} was uploaded"
+        case Some(0) => s"Document ${s(c.name)} was removed"
+        case Some(2) if c.catName.exists(existingCats) => s"Category ${s(c.catName)} already exists"
+        case Some(2) => s"Category ${s(c.catName)} was added"
+        case Some(3) => s"Category ${s(c.catId)} was removed"
+        case _ => "Unknown action"
+      }
     }
-    val docs1 = state.docs.unionByName(acceptedDocs)
-    val newSnippets = acceptedDocs
+
+    // ---- apply: the state filtered by the removed keys, plus the rows
+    // the decisions accepted
+    def survivors(df: DataFrame): DataFrame =
+      df.filter(notIn(col("document_name"), removeNames) && notIn(col("category_id"), removeCats))
+    val hasExpiry = state.docs.columns.contains("document_expiryDate")
+    val catNames = accepted.flatMap(c => catName(c).map(c.id -> _)).toMap
+    val newDocs = cmds.filter(isIn(col(CmdId), accepted.map(_.id)))
+      .select(Seq(col("document_id"), col("document_name"), col("category_id"),
+        (if (catNames.isEmpty) lit(null).cast("string")
+         else typedLit(catNames).getItem(col(CmdId))).as("category_name"),
+        col("text"), lit("Active").as("document_status")) ++
+        (if (hasExpiry) Seq(expiryCmd.as("document_expiryDate")) else Nil): _*)
+    val newSnippets = newDocs
       .select(col("document_id"), col("document_name"), col("category_id"),
         col("document_status"),
         explode(SnippetGen.snippetWindows(SnippetGen.splitWords(col("text")))).as("s"))
       .select(col("document_id"), col("document_name"), col("category_id"),
         col("s.snippet_id").as("snippet_id"), col("s.snippet_text").as("snippet_text"),
         col("document_status"))
-    val snippets1 = state.snippets.unionByName(newSnippets)
-
-    // 0: remove documents by name (M4/M8) — cascade to snippets
-    val removeNames = cmds.filter(col("action_code") === 0).select("document_name")
-    val docs2 = Mutations.deleteKeys(docs1, removeNames, "document_name")
-    val snippets2 = Mutations.deleteKeys(snippets1, removeNames, "document_name")
-
-    // 3: remove categories (M5) — cascade to docs + snippets
-    val removeCats = cmds.filter(col("action_code") === 3).select("category_id")
-    val cats2 = Mutations.deleteKeys(cats1, removeCats, "category_id")
-    val docs3 = Mutations.deleteKeys(docs2, removeCats, "category_id")
-    val snippets3 = Mutations.deleteKeys(snippets2, removeCats, "category_id")
-
-    // status messages (C3 analog), one per command
-    val existingNames = state.docs.select(col("document_name").as("n")).distinct()
-    val existingCats = state.categories.select(col("category_name").as("cn")).distinct()
-    val rejIds = contentRejected
-      .map(_.select(col("document_id").as("rid"), lit(1).as("__rej")))
-      .getOrElse(cmds.filter(lit(false))
-        .select(col("document_id").as("rid"), lit(1).as("__rej")))
-    val messages = cmds
-      .join(existingNames, cmds("document_name") === col("n"), "left")
-      .join(existingCats, cmds("category_name") === col("cn"), "left")
-      .join(broadcast(rejIds), cmds("document_id") === col("rid"), "left")
-      .select(col("action_code"), col("document_name"), col("category_name"),
-        when(col("action_code") === 1 && col("n").isNotNull,
-            format_string("Document %s already exists", col("document_name")))
-          .when(col("action_code") === 1 && col("__rej").isNotNull,
-            format_string("Document %s is a near-duplicate", col("document_name")))
-          .when(col("action_code") === 1,
-            format_string("Document %s was uploaded", col("document_name")))
-          .when(col("action_code") === 0,
-            format_string("Document %s was removed", col("document_name")))
-          .when(col("action_code") === 2 && col("cn").isNotNull,
-            format_string("Category %s already exists", col("category_name")))
-          .when(col("action_code") === 2,
-            format_string("Category %s was added", col("category_name")))
-          .when(col("action_code") === 3,
-            format_string("Category %d was removed", col("category_id")))
-          .otherwise(lit("Unknown action"))
-          .as("message"))
-    (EngineState(docs3, snippets3, cats2), messages)
+    val newCats = spark.createDataFrame(
+      addedCats.filterNot(c => c.catId.exists(removeCats)).sortBy(_.id)
+        .map(c => Row(c.row.get(5), c.row.get(3))).asJava,
+      StructType(Seq("category_id", "category_name").map(cmds.schema(_))))
+    val messages = spark.createDataFrame(
+      keys.map(c => Row(c.row.get(1), c.row.get(2), c.row.get(3), message(c))).asJava,
+      StructType(Seq("action_code", "document_name", "category_name").map(cmds.schema(_)) :+
+        StructField("message", StringType, nullable = false)))
+    (EngineState(
+      survivors(state.docs).unionByName(newDocs),
+      survivors(state.snippets).unionByName(newSnippets),
+      state.categories.filter(notIn(col("category_id"), removeCats)).unionByName(newCats)),
+      messages)
   }
 
   /** Oracle-checked batch demo: seed state from the test tables (documents
@@ -259,10 +332,8 @@ object CommandDispatch {
     val (next0, _) = dispatch(EngineState(docs0, snippets0, cats0), commands)
     // pin the dispatched docs ONCE (VERDICT r11 Next #8): the sweep reads
     // that lineage twice — the expireSweep scan AND the newly-expired
-    // delta — so without a checkpoint the gate recomputes the whole
-    // dispatch chain per consumer (sf1 exponent 0.77). The production
-    // streaming path never has this problem: runStream's recovery
-    // contract re-reads the batch SNAPSHOT parquet as the sweep's base.
+    // delta — so without a checkpoint the gate rescans the documents
+    // table per consumer.
     val next = next0.copy(docs = next0.docs.localCheckpoint())
     val swept = expiryMaintenance(lit("2026-01-01"))(next)
     swept.docs.select("document_id", "document_status", "document_expiryDate")
@@ -338,11 +409,12 @@ object CommandDispatch {
       .filter(col("document_status") === "Active" &&
         col(expiryCol).isNotNull && col(expiryCol) < asOf)
       .select(col("document_id").as("__eid"))
-    val sweptSnips = st.snippets
-      .join(broadcast(newlyExpired), col("document_id") === col("__eid"), "left")
-      .withColumn("document_status",
-        when(col("__eid").isNotNull, lit("Expired")).otherwise(col("document_status")))
-      .drop("__eid")
+    // an IN-subquery (an existence join) rather than a left join, so a
+    // document id that expires on two rows flips its snippets once, not
+    // duplicating them
+    val sweptSnips = st.snippets.withColumn("document_status",
+      when(col("document_id").isin(broadcast(newlyExpired)), lit("Expired"))
+        .otherwise(col("document_status")))
     EngineState(sweptDocs, sweptSnips, st.categories)
   }
 
@@ -351,12 +423,16 @@ object CommandDispatch {
       dispatcher: (EngineState, DataFrame) => (EngineState, DataFrame) = dispatch,
       maintenance: EngineState => EngineState = identity,
       checkpoint: Option[String] = None): StreamingQuery = {
+    // the schemas of the last snapshot this query wrote: reading it back
+    // with them skips Parquet schema inference; the first batch after a
+    // restart infers
+    var written: Option[(Long, Seq[StructType])] = None
     def loadState(id: Long): Option[EngineState] = {
       val ok = new java.io.File(s"$stateDir/$id/categories/_SUCCESS").exists()
-      if (ok) Some(EngineState(
-        spark.read.parquet(s"$stateDir/$id/docs"),
-        spark.read.parquet(s"$stateDir/$id/snippets"),
-        spark.read.parquet(s"$stateDir/$id/categories")))
+      def read(i: Int, table: String) =
+        written.collect { case (`id`, ss) => spark.read.schema(ss(i)) }.getOrElse(spark.read)
+          .parquet(s"$stateDir/$id/$table")
+      if (ok) Some(EngineState(read(0, "docs"), read(1, "snippets"), read(2, "categories")))
       else None
     }
     def latestBelow(batchId: Long): Option[EngineState] = {
@@ -382,9 +458,12 @@ object CommandDispatch {
           val dir = s"$stateDir/$batchId"
           next.docs.write.mode("overwrite").parquet(s"$dir/docs")
           next.snippets.write.mode("overwrite").parquet(s"$dir/snippets")
-          messages.write.mode("overwrite").parquet(s"$dir/messages")
+          // the two small tables are written as one file each
+          messages.coalesce(1).write.mode("overwrite").parquet(s"$dir/messages")
           // categories last: its _SUCCESS marks the snapshot complete for recovery
-          next.categories.write.mode("overwrite").parquet(s"$dir/categories")
+          next.categories.coalesce(1).write.mode("overwrite").parquet(s"$dir/categories")
+          written = Some(batchId -> Seq(next.docs, next.snippets, next.categories)
+            .map(df => StructType(df.schema.map(_.copy(nullable = true)))))
         }
         onBatch(batchId, loadState(batchId).get)
       }

@@ -250,6 +250,16 @@ class EmptyInputSpec extends SparkSpec {
     assert(Doremi.domainLossKn(emptyDocs).count() === 0)
   }
 
+  test("version summaries of an empty version list: no rows, the summary schema") {
+    import spark.implicits._
+    val docs = Seq(1L, 2L).toDF("doc_id")
+    for (cur <- Seq(None, Some("v_0"))) {
+      val none = Mutations.versionSummaries(Nil, _ => docs, cur)
+      assert(none.count() === 0)
+      assert(none.schema === Mutations.versionSummaries(Seq("v_0"), _ => docs, cur).schema)
+    }
+  }
+
   test("dispatch with an empty command batch is a no-op") {
     import spark.implicits._
     val docs0 = Seq((1L, "doc_a", 1, "Cat1", "alpha", "Active"))

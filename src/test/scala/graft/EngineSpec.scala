@@ -637,6 +637,18 @@ class EngineSpec extends SparkSpec {
     assert(BinaryIngest.pdfExtract(corrupt) === "")
   }
 
+  test("RC4 decryption reads /P from the /Encrypt dictionary, not an earlier annotation's /P") {
+    import graft.sources.BinaryIngest
+    // an annotation's /P is its page reference; ahead of the encrypt
+    // dictionary, a whole-file /P scan reads it as the permissions 3
+    val text = "the permissions come from the encrypt dictionary"
+    val s = new String(BinaryIngest.buildPdfEncrypted(text), "ISO-8859-1")
+    val annotated = s.replaceFirst("\n", "\n6 0 obj << /Type /Annot /Subtype /Text " +
+      "/P 3 0 R /Rect [0 0 10 10] >> endobj\n")
+    assert(annotated.indexOf("/P 3 0 R") < annotated.indexOf("/P -4"))
+    assert(BinaryIngest.pdfExtract(annotated.getBytes("ISO-8859-1")) === text)
+  }
+
   test("AES-256 (V5/R6) round trip: 2.B hash, /UE unwrap, file-key streams") {
     import graft.sources.{BinaryIngest, PdfCrypto}
     // hash2B self-consistency: deterministic, 32 bytes, salt-sensitive

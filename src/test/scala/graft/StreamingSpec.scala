@@ -498,6 +498,71 @@ class StreamingSpec extends SparkSpec {
     assert(names.sorted === Seq("doc_a", "doc_b"))
   }
 
+  test("streaming dispatch: a 40-command batch runs in at most 15 jobs and releases its caches") {
+    import spark.implicits._
+    // the reference's queue holds 40 commands (DI:37); one file is one batch
+    val cmdDir = Files.createTempDirectory("graft_jobs_cmds")
+    val stateDir = Files.createTempDirectory("graft_jobs_state").toString
+    def upload(id: Int, expiry: String) =
+      s"""{"action_code":1,"document_id":$id,"document_name":"doc_$id","category_id":${1 + id % 3},""" +
+        s""""text":"w$id alpha beta gamma delta epsilon zeta eta theta","document_expiryDate":"$expiry"}"""
+    def stage(i: Int, lines: Seq[String]): Unit = {
+      val tmp = cmdDir.resolve(s".b$i.tmp")
+      Files.write(tmp, lines.mkString("\n").getBytes("UTF-8"))
+      Files.move(tmp, cmdDir.resolve(s"b$i.json"))
+    }
+    // batch 0: 60 uploads, every fifth already past its expiry
+    stage(0, (1 to 60).map(i => upload(i, if (i % 5 == 0) "2001-01-01" else "2099-01-01")))
+    val docs0 = Seq.empty[(Long, String, Int, String, String, String, String)]
+      .toDF("document_id", "document_name", "category_id", "category_name", "text",
+        "document_status", "document_expiryDate")
+    val snippets0 = docs0.select(col("document_id"), col("document_name"),
+      col("category_id"), lit(1).as("snippet_id"), col("text").as("snippet_text"),
+      col("document_status"))
+    val cats0 = Seq((1, "Cat1"), (2, "Cat2"), (3, "Cat3")).toDF("category_id", "category_name")
+    val before = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    @volatile var leftCached = Map.empty[Long, Int]
+    val query = CommandDispatch.runStream(spark,
+      spark.readStream.schema(CommandDispatch.commandSchema)
+        .option("maxFilesPerTrigger", "1").json(cmdDir.toString),
+      EngineState(docs0, snippets0, cats0), stateDir,
+      (id, _) => leftCached += id -> spark.sparkContext.getRDDStorageInfo
+        .count(r => !before(r.id)),
+      maintenance = CommandDispatch.expiryMaintenance(lit("2026-01-01")))
+    @volatile var jobs = 0
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs += 1
+    }
+    // the listener bus is async: poll until the count is stable
+    def settled(): Int = {
+      var last = -1
+      var spins = 0
+      while (jobs != last && spins < 30) { last = jobs; Thread.sleep(100); spins += 1 }
+      jobs
+    }
+    try {
+      query.processAllAvailable()
+      spark.sparkContext.addSparkListener(listener)
+      settled()
+      jobs = 0
+      // batch 1: 14 uploads (4 past expiry), 2 reusing a live name, 10
+      // removals of live and 4 of expired documents, 5 category adds (one
+      // reusing a name), 5 category removals
+      stage(1, (101 to 114).map(i => upload(i, if (i <= 104) "2002-02-02" else "2099-01-01")) ++
+        Seq(1, 2).map(i => upload(i, "2099-01-01")) ++
+        (Seq(11, 12, 13, 14, 16, 17, 18, 19, 21, 22) ++ Seq(5, 10, 15, 20))
+          .map(i => s"""{"action_code":0,"document_name":"doc_$i"}""") ++
+        (4 to 7).map(c => s"""{"action_code":2,"category_id":$c,"category_name":"Cat$c"}""") ++
+        Seq("""{"action_code":2,"category_id":9,"category_name":"Cat1"}""") ++
+        Seq(2, 4, 50, 51, 52).map(c => s"""{"action_code":3,"category_id":$c}"""))
+      query.processAllAvailable()
+    } finally query.stop()
+    val batchJobs = try settled() finally spark.sparkContext.removeSparkListener(listener)
+    assert(batchJobs > 0 && batchJobs <= 15, s"a 40-command batch ran $batchJobs jobs")
+    assert(leftCached === Map(0L -> 0, 1L -> 0), "cached blocks left after a batch")
+  }
+
   test("dispatch messages report per-command outcomes") {
     import spark.implicits._
     val docs0 = Seq((1L, "doc_a", 1, "Cat1", "alpha", "Active"))
