@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.engine.Tables
+import graft.engine.{Scope, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -93,9 +93,10 @@ object Dedup {
     shingleIndexLazy(docs).localCheckpoint()
 
   /** The shingle projection WITHOUT the eager materialization — for
-    * compositions that checkpoint once on top (e.g. [[signedIndexOf]],
-    * which would otherwise materialize the bulky shingle arrays twice). */
-  private def shingleIndexLazy(docs: DataFrame): DataFrame =
+    * compositions that checkpoint once on top (e.g. the dedup gate's
+    * signed frame, which would otherwise materialize the bulky shingle
+    * arrays twice). */
+  private[graft] def shingleIndexLazy(docs: DataFrame): DataFrame =
     Tables.rebalance(docs, "doc_id")
       .select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
       .filter(size(col("words")) >= 3)
@@ -423,7 +424,7 @@ object Dedup {
     * materialized the bulky shingle+signature rows once into executor
     * blocks and then again into the output parquet, for nothing
     * (round 14; guide §5 — cache only what is reused). */
-  private def sigsOfLazy(sh: DataFrame): DataFrame =
+  private[graft] def sigsOfLazy(sh: DataFrame): DataFrame =
     sh.withColumn("sig", graft.functions.GraftFunctions.minhash_sig(
       col("sh"), hashParams.map(_._1), hashParams.map(_._2)))
 
@@ -441,7 +442,7 @@ object Dedup {
   private def minhashCandidatesIdx(sh: DataFrame): DataFrame =
     minhashCandidatesSigs(sigsOf(sh))
 
-  private def minhashCandidatesSigs(sigs: DataFrame): DataFrame = {
+  private[graft] def minhashCandidatesSigs(sigs: DataFrame): DataFrame = {
     val bands = bandsOf(sigs)
     val pairs = bands.select(col("band"), col("band_key"), col("doc_id").as("doc_a"))
       .join(bands.select(col("band"), col("band_key"), col("doc_id").as("doc_b")),
@@ -503,11 +504,7 @@ object Dedup {
   private def minhashNearDupsIdx(sh: DataFrame, threshold: Double): DataFrame =
     verifyPairs(minhashCandidatesIdx(sh), threshold)
 
-  /** Band-bucket near-dups over an already-signed frame (no re-signing). */
-  private[graft] def minhashNearDupsOnSigs(sigs: DataFrame, threshold: Double): DataFrame =
-    verifyPairs(minhashCandidatesSigs(sigs), threshold)
-
-  private def verifyPairs(cands: DataFrame, threshold: Double): DataFrame =
+  private[graft] def verifyPairs(cands: DataFrame, threshold: Double): DataFrame =
     cands
       .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= threshold)
@@ -647,15 +644,9 @@ object Dedup {
   def writeIndex(docs: DataFrame, path: String): Unit =
     sigsOfLazy(shingleIndexLazy(docs)).write.mode("overwrite").parquet(path)
 
-  /** Append newly-accepted docs to the persisted index. `withSigs=false`
-    * writes the (doc_id, sh) postings only — for an EXACT-pairs-mode
-    * gate directory, where MinHash signatures are never read back (both
-    * probe paths prune to (doc_id, sh)) and would cost 128 permutations
-    * per doc to build. An index directory is mode-consistent by
-    * construction: the gate pins one mode per dir. */
-  def appendIndex(docs: DataFrame, path: String, withSigs: Boolean = true): Unit =
-    if (withSigs) sigsOfLazy(shingleIndexLazy(docs)).write.mode("append").parquet(path)
-    else shingleIndexLazy(docs).select("doc_id", "sh").write.mode("append").parquet(path)
+  /** Append newly-accepted docs to the persisted index. */
+  def appendIndex(docs: DataFrame, path: String): Unit =
+    sigsOfLazy(shingleIndexLazy(docs)).write.mode("append").parquet(path)
 
   /** Probe the persisted index: (incoming doc -> indexed doc) near-dup
     * pairs with Jaccard >= threshold. The incoming micro-batch is signed
@@ -663,57 +654,6 @@ object Dedup {
   def probeIndex(spark: SparkSession, path: String, incoming: DataFrame,
       threshold: Double): DataFrame =
     crossNearDupsSigs(sigsOf(shingleIndexLazy(incoming)), spark.read.parquet(path), threshold)
-
-  /** Exact-pair probe of the persisted index (the stored (doc_id, sh)
-    * columns feed the inverted-postings join; `sig` is pruned away).
-    * Complete, unlike the band-bucket [[probeIndex]] — use it where a
-    * declared-exact result matters and the probe side is small. */
-  def probeIndexExact(spark: SparkSession, path: String, incoming: DataFrame,
-      threshold: Double): DataFrame =
-    crossNearDupsExactIdx(shingleIndexLazy(incoming),
-      spark.read.parquet(path).select("doc_id", "sh"), threshold)
-
-  // ---- shingle-frame entry points (one shingle pass shared across stages)
-  // A multi-stage consumer (the streaming dedup gate) probes the index,
-  // pairs the remainder within-batch, and appends survivors' signatures —
-  // three operations that would each re-shingle the same batch through the
-  // public entry points. These variants accept the (doc_id, sh[, sig])
-  // frame directly so the batch is shingled (and signed) exactly once.
-
-  /** Shingle AND MinHash-sign a batch in one materialization pass — the
-    * (doc_id, sh, sig) frame reused across probe/pair/append stages. */
-  private[graft] def signedIndexOf(docs: DataFrame): DataFrame =
-    sigsOf(shingleIndexLazy(docs))
-
-  /** The checkpointed (doc_id, sh) frame WITHOUT signatures — for the
-    * gate's exact-pairs mode, where no stage reads `sig` and the
-    * 32-permutation MinHash signing would be pure waste. */
-  private[graft] def shingledIndexOf(docs: DataFrame): DataFrame =
-    shingleIndex(docs)
-
-  /** Append pre-computed (doc_id, sh) postings to an exact-mode index
-    * directory (the `withSigs = false` layout) without re-shingling. */
-  private[graft] def appendIndexPostings(sh: DataFrame, path: String): Unit =
-    sh.select("doc_id", "sh").write.mode("append").parquet(path)
-
-  private[graft] def ngramNearDupsOnIdx(sh: DataFrame, threshold: Double): DataFrame =
-    ngramNearDupsIdx(sh, threshold)
-
-  private[graft] def minhashNearDupsOnIdx(sh: DataFrame, threshold: Double): DataFrame =
-    minhashNearDupsIdx(sh, threshold)
-
-  private[graft] def probeIndexExactOnIdx(spark: SparkSession, path: String,
-      sh: DataFrame, threshold: Double): DataFrame =
-    crossNearDupsExactIdx(sh.select("doc_id", "sh"),
-      spark.read.parquet(path).select("doc_id", "sh"), threshold)
-
-  private[graft] def probeIndexOnSigs(spark: SparkSession, path: String,
-      sigs: DataFrame, threshold: Double): DataFrame =
-    crossNearDupsSigs(sigs, spark.read.parquet(path), threshold)
-
-  /** Append pre-computed (doc_id, sh, sig) rows to the persisted index. */
-  private[graft] def appendIndexSigs(sigs: DataFrame, path: String): Unit =
-    sigs.select("doc_id", "sh", "sig").write.mode("append").parquet(path)
 
   // ------------------------------------ compactable sharded index store
 
@@ -725,9 +665,6 @@ object Dedup {
     * Snapshot's claim/swap atomicity, so a crashed compaction never
     * corrupts the index. Probe results are spec-pinned identical before
     * and after compaction (a pure layout operation). */
-  def writeIndexStore(docs: DataFrame, store: graft.engine.ShardStore): Unit =
-    store.write(sigsOfLazy(shingleIndexLazy(docs)))
-
   def appendIndexStore(docs: DataFrame, store: graft.engine.ShardStore): Unit =
     store.append(sigsOfLazy(shingleIndexLazy(docs)))
 
@@ -825,7 +762,7 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
   }
 
-  private def crossNearDupsSigs(ls: DataFrame, rs: DataFrame,
+  private[graft] def crossNearDupsSigs(ls: DataFrame, rs: DataFrame,
       threshold: Double): DataFrame = {
     val pairs = bandsOf(ls).select(col("band"), col("band_key"), col("doc_id").as("doc_a"))
       .join(bandsOf(rs).select(col("band"), col("band_key"), col("doc_id").as("doc_b")),
@@ -888,9 +825,9 @@ object Dedup {
     // budget+1 exists -> distributed loop; the probe's work is bounded
     // by the budget and discarded). Three jobs became one on the
     // in-budget path every micro-batch gate hits.
-    if (driverEdgeBudget < Int.MaxValue - 1) {
-      val taken = peLazy.take(driverEdgeBudget.toInt + 1)
-      if (taken.length.toLong <= driverEdgeBudget) {
+    // a null id takes the loop, whose join semantics define it
+    Scope.collectWithin(peLazy, driverEdgeBudget).filterNot(_.exists(_.anyNull)) match {
+      case Some(taken) =>
         import s.implicits._
         val parent = scala.collection.mutable.HashMap.empty[Long, Long]
         def find(x: Long): Long = {
@@ -910,7 +847,7 @@ object Dedup {
         }
         return parent.keys.toSeq.sorted.map(id => (id, find(id)))
           .toDF("id", "label")
-      }
+      case None =>
     }
     val pe = peLazy.localCheckpoint()
     val edges = pe

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.engine.Tables
+import graft.engine.{Scope, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -82,11 +82,12 @@ object Graph {
     // types `node` as src's dataType while the node set mixes src and dst
     // values; the distributed loop below UNIONS the columns and lets Spark
     // coerce, so heterogeneous edge frames must take it for both paths to
-    // stay behaviorally identical (ADVICE r13)
-    if (driverEdgeBudget < Int.MaxValue - 1 &&
-        e.schema("src").dataType == e.schema("dst").dataType) {
-      val taken = e.take(driverEdgeBudget.toInt + 1)
-      if (taken.length.toLong <= driverEdgeBudget) {
+    // stay behaviorally identical (ADVICE r13). A null cell takes it too:
+    // its join semantics define what a null node or weight does.
+    val local = if (e.schema("src").dataType != e.schema("dst").dataType) None
+      else Scope.collectWithin(e, driverEdgeBudget).filterNot(_.exists(_.anyNull))
+    local match {
+      case Some(taken) =>
         if (taken.isEmpty) return Seq.empty[(Long, Double)].toDF("node", "pr")
         // insertion-ordered distinct: deterministic over the checkpointed
         // edge order (output order is irrelevant — callers ORDER BY)
@@ -112,7 +113,7 @@ object Graph {
             org.apache.spark.sql.types.StructField("node", e.schema("src").dataType),
             org.apache.spark.sql.types.StructField("pr",
               org.apache.spark.sql.types.DoubleType))))
-      }
+      case None =>
     }
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst"))).distinct().localCheckpoint()
@@ -218,36 +219,38 @@ object Graph {
     // waves when graph AND seed set fit the budget — integer set algebra,
     // trivially identical to the wave loop (spec'd in GraphSpec with the
     // forced-distributed path). Crawl-scale graphs take the loop below.
-    if (driverEdgeBudget < Int.MaxValue - 1) {
-      val takenE = edges.select("src", "dst").take(driverEdgeBudget.toInt + 1)
-      if (takenE.length.toLong <= driverEdgeBudget) {
-        val takenS = seeds.select("node").take(driverEdgeBudget.toInt + 1)
-        if (takenS.length.toLong <= driverEdgeBudget) {
-          val adj = takenE.groupBy(_.get(0)).map { case (s, rs) =>
-            s -> rs.map(_.get(1)).toSeq }
-          // seeds keep their multiplicity at hop 0 (the wave loop never
-          // dedups the seed rows); reachability works on the distinct set
-          val visited = scala.collection.mutable.HashSet[Any](takenS.map(_.get(0)): _*)
-          val out = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row](
-            takenS.map(r => org.apache.spark.sql.Row(r.get(0), 0L)): _*)
-          var frontier: Seq[Any] = takenS.map(_.get(0)).distinct.toSeq
-          var hop = 1
-          while (hop <= maxHops && frontier.nonEmpty) {
-            val next = frontier.flatMap(n => adj.getOrElse(n, Nil))
-              .foldLeft(scala.collection.mutable.LinkedHashSet.empty[Any])(_ += _)
-              .toSeq.filterNot(visited.contains)
-            next.foreach { n => visited += n; out += org.apache.spark.sql.Row(n, hop.toLong) }
-            frontier = next
-            hop += 1
-          }
-          return localFrame(seeds.sparkSession, out.toSeq,
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("node",
-                seeds.schema("node").dataType),
-              org.apache.spark.sql.types.StructField("hop",
-                org.apache.spark.sql.types.LongType))))
+    // A null node takes the loop too: its join semantics define it.
+    val local = for {
+      e <- Scope.collectWithin(edges.select("src", "dst"), driverEdgeBudget)
+      s <- Scope.collectWithin(seeds.select("node"), driverEdgeBudget)
+      if !(e ++ s).exists(_.anyNull)
+    } yield (e, s)
+    local match {
+      case Some((takenE, takenS)) =>
+        val adj = takenE.groupBy(_.get(0)).map { case (s, rs) =>
+          s -> rs.map(_.get(1)).toSeq }
+        // seeds keep their multiplicity at hop 0 (the wave loop never
+        // dedups the seed rows); reachability works on the distinct set
+        val visited = scala.collection.mutable.HashSet[Any](takenS.map(_.get(0)): _*)
+        val out = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row](
+          takenS.map(r => org.apache.spark.sql.Row(r.get(0), 0L)): _*)
+        var frontier: Seq[Any] = takenS.map(_.get(0)).distinct.toSeq
+        var hop = 1
+        while (hop <= maxHops && frontier.nonEmpty) {
+          val next = frontier.flatMap(n => adj.getOrElse(n, Nil))
+            .foldLeft(scala.collection.mutable.LinkedHashSet.empty[Any])(_ += _)
+            .toSeq.filterNot(visited.contains)
+          next.foreach { n => visited += n; out += org.apache.spark.sql.Row(n, hop.toLong) }
+          frontier = next
+          hop += 1
         }
-      }
+        return localFrame(seeds.sparkSession, out.toSeq,
+          org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("node",
+              seeds.schema("node").dataType),
+            org.apache.spark.sql.types.StructField("hop",
+              org.apache.spark.sql.types.LongType))))
+      case None =>
     }
     var visited = seeds.select(col("node"), lit(0L).as("hop")).localCheckpoint()
     var frontier = visited.select("node")
@@ -325,11 +328,12 @@ object Graph {
     // overflow; corpus-scale graphs take the distributed loop below.
     // Heterogeneous src/dst types also take the distributed loop: the
     // local frame types `node` as src's dataType while the distributed
-    // union lets Spark coerce (ADVICE r13).
-    if (driverEdgeBudget < Int.MaxValue - 1 &&
-        e.schema("src").dataType == e.schema("dst").dataType) {
-      val taken = e.take(driverEdgeBudget.toInt + 1)
-      if (taken.length.toLong <= driverEdgeBudget) {
+    // union lets Spark coerce (ADVICE r13). So does a null cell, as in
+    // [[pageRank]].
+    val local = if (e.schema("src").dataType != e.schema("dst").dataType) None
+      else Scope.collectWithin(e, driverEdgeBudget).filterNot(_.exists(_.anyNull))
+    local match {
+      case Some(taken) =>
         if (taken.isEmpty)
           return Seq.empty[(Long, Double, Double)].toDF("node", "authority", "hub")
         val nodes = taken.iterator.flatMap(r => Iterator(r.get(0), r.get(1)))
@@ -363,7 +367,7 @@ object Graph {
               org.apache.spark.sql.types.DoubleType),
             org.apache.spark.sql.types.StructField("hub",
               org.apache.spark.sql.types.DoubleType))))
-      }
+      case None =>
     }
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst"))).distinct().localCheckpoint()

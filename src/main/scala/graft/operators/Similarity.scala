@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.engine.Tables
+import graft.engine.{Scope, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1174,21 +1174,21 @@ object Similarity {
     val s = emb.sparkSession
     import s.implicits._
     require(k >= 1, "k-center needs k >= 1")
-    if (driverRowBudget < Int.MaxValue - 1) {
-      val taken = emb.select(col("vec_id"), col("embedding"))
-        .take(driverRowBudget.toInt + 1)
-      if (taken.length.toLong <= driverRowBudget) {
+    Scope.collectWithin(emb.select(col("vec_id"), col("embedding")), driverRowBudget) match {
+      case Some(taken) =>
         if (taken.isEmpty)
           return Seq.empty[(Long, Long, Double)].toDF("sel_rank", "vec_id", "d_min")
         // bit-identical replication of the distributed loop (spec'd in
         // SimilaritySpec against the forced-distributed path): the same
         // index-order double cosine (TextHashes.cosineSim), Spark's
-        // round(x,6) as valueOf+HALF_UP, `least` and the (dmin desc,
+        // round(x,6) as valueOf+HALF_UP (NaN, a zero vector's cosine,
+        // passes through as Spark's round passes it), `least` and the (dmin desc,
         // vec_id) TakeOrdered both replayed through Double.compare —
         // Spark's double ordering (NaN greatest, -0.0 < 0.0), not the
         // IEEE `<` (which would diverge on NaN/-0.0 corners)
-        def r6(x: Double): Double = java.math.BigDecimal.valueOf(x)
-          .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+        def r6(x: Double): Double =
+          if (x.isNaN || x.isInfinite) x
+          else java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
         def cosA(a: Array[Double], b: Array[Double]): Double = {
           var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
           while (i < a.length) {
@@ -1201,6 +1201,7 @@ object Similarity {
           else r.getSeq[Any](1).iterator.map {
             case f: java.lang.Float => f.toDouble // float→double widening,
             case n: java.lang.Number => n.doubleValue // as cosineSim does
+            case null => 0.0 // cosineSim's primitive read of a null slot
           }.toArray
         val rows = taken.map(r => (r.getLong(0), embOf(r)))
         val seedRow = rows.minBy(_._1)
@@ -1229,15 +1230,17 @@ object Similarity {
         return selected.zipWithIndex
           .map { case ((id, d, _), i) => (i.toLong, id, d) }
           .toDF("sel_rank", "vec_id", "d_min")
-      }
+      case None =>
     }
     val seed = emb.orderBy("vec_id").limit(1)
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("e"))
       .collect()
     if (seed.isEmpty)
       return Seq.empty[(Long, Long, Double)].toDF("sel_rank", "vec_id", "d_min")
-    var selected = Vector((seed(0).getLong(0), 2.0,
-      seed(0).getSeq[Double](1).toArray))
+    // a null embedding decodes to null and folds into no distance
+    def vec(r: org.apache.spark.sql.Row, i: Int): Array[Double] =
+      Option(r.getSeq[Double](i)).map(_.toArray).orNull
+    var selected = Vector((seed(0).getLong(0), 2.0, vec(seed(0), 1)))
     // dmin starts at the cosine-distance diameter: the first fold against
     // the seed always wins (d ≤ 2.0), so round 1 reduces to plain
     // distance-to-seed — same numbers as evaluating the full chain.
@@ -1245,19 +1248,20 @@ object Similarity {
     var prev: DataFrame = null
     while (selected.size < k) {
       val cv = selected.last._3 // fold ONLY the newest center into dmin
-      state = state
-        .withColumn("dmin", least(col("dmin"),
-          lit(1.0) - round(cosine(col("embedding"), lit(cv)), 6)))
-        .localCheckpoint()
-      if (prev != null) prev.unpersist() // drop the superseded round's blocks
-      prev = state
+      if (cv != null) {
+        state = state
+          .withColumn("dmin", least(col("dmin"),
+            lit(1.0) - round(cosine(col("embedding"), lit(cv)), 6)))
+          .localCheckpoint()
+        if (prev != null) prev.unpersist() // drop the superseded round's blocks
+        prev = state
+      }
       val nxt = state
         .orderBy(col("dmin").desc, col("vec_id")).limit(1)
         .select(col("vec_id"), col("dmin"),
           transform(col("embedding"), _.cast("double")).as("e"))
         .collect()(0)
-      selected :+= ((nxt.getLong(0), nxt.getDouble(1),
-        nxt.getSeq[Double](2).toArray))
+      selected :+= ((nxt.getLong(0), nxt.getDouble(1), vec(nxt, 2)))
     }
     if (prev != null) prev.unpersist()
     selected.zipWithIndex.map { case ((id, d, _), i) => (i.toLong, id, d) }

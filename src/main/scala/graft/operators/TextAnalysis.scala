@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.engine.Tables
+import graft.engine.{Scope, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -725,10 +725,9 @@ object TextAnalysis {
     // job waves with one take(). Bit-identical to the distributed loop
     // (spec'd in TextSearchSpec with the forced-distributed path);
     // a corpus-scale feature frame takes the loop below unchanged.
-    if (driverRowBudget < Int.MaxValue - 1) {
-      val cols = col("y").cast("double") +: (0 until b).map(j => col(s"x$j"))
-      val taken = feat.select(cols: _*).take(driverRowBudget.toInt + 1)
-      if (taken.length.toLong <= driverRowBudget) {
+    val cols = col("y").cast("double") +: (0 until b).map(j => col(s"x$j"))
+    Scope.collectWithin(feat.select(cols: _*), driverRowBudget) match {
+      case Some(taken) =>
         var w = Array.fill(b + 1)(0.0)
         if (taken.isEmpty) return w // empty corpus: zero model
         val n = taken.length.toDouble
@@ -737,7 +736,9 @@ object TextAnalysis {
         var it = 0
         while (it < iters) {
           val g = Array.fill(b + 1)(java.math.BigDecimal.ZERO)
-          taken.foreach { r =>
+          // a null label or feature nulls the row's error, which every
+          // gradient sum then skips (it still counts in n)
+          taken.filterNot(_.anyNull).foreach { r =>
             // zExprN's left-associated reduce, then + bias, then 6dp
             var acc = r.getDouble(1) * w(0)
             var j = 1
@@ -753,7 +754,7 @@ object TextAnalysis {
           it += 1
         }
         return w
-      }
+      case None =>
     }
     val n = feat.count().toDouble
     var w = Array.fill(b + 1)(0.0)
@@ -765,8 +766,9 @@ object TextAnalysis {
         sum((err * col(s"x$j")).cast("decimal(28,12)")).as(s"g$j")) :+
         sum(err.cast("decimal(28,12)")).as("gb")
       val row = feat.agg(gradAggs.head, gradAggs.tail: _*).head()
+      // a sum over only null errors is null: no gradient
       w = Array.tabulate(b + 1) { j =>
-        round6(w(j) - lr * row.getDecimal(j).doubleValue / n)
+        round6(w(j) - lr * Option(row.getDecimal(j)).fold(0.0)(_.doubleValue) / n)
       }
       it += 1
     }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.engine.Scope
 import graft.operators.{Mutations, SnippetGen}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -71,36 +72,6 @@ object CommandDispatch {
       state: EngineState, commands: DataFrame): (EngineState, DataFrame) =
     dispatchWith(state, commands, Some(threshold))
 
-  /** Per-batch cache registry: dispatch caches small frames that several
-    * branches re-read (the command batch, FIFO runs).
-    * Inside a long-lived foreachBatch stream those blocks would otherwise
-    * accumulate across micro-batches until executor-cache pressure evicts
-    * them, so [[runStream]] releases them once the batch's snapshot and
-    * messages are on disk (the caches are fully consumed by then).
-    *
-    * The registry is THREAD-scoped (each streaming query executes its
-    * micro-batches on its own thread): a JVM-global queue would let one
-    * stream's release unpersist a concurrent stream's in-flight caches.
-    * Outside [[withBatchCaches]] (plain batch callers) frames are cached
-    * without registration — the pre-existing behavior. */
-  private val batchCaches = new scala.util.DynamicVariable[
-    Option[scala.collection.mutable.ArrayBuffer[DataFrame]]](None)
-
-  private def cached(df: DataFrame): DataFrame = {
-    val c = df.cache()
-    batchCaches.value.foreach(_ += c)
-    c
-  }
-
-  /** Run `body` with a fresh cache registry, then unpersist everything the
-    * enclosed dispatch calls cached. The result of `body` must already be
-    * MATERIALIZED (written out) when it returns. */
-  def withBatchCaches[A](body: => A): A = {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try batchCaches.withValue(Some(buf))(body)
-    finally buf.foreach(_.unpersist(blocking = false))
-  }
-
   /** One command as the driver holds it: the collected key row (row id,
     * action_code, document_name, category_name, document_id, category_id)
     * and its decoded keys. Never the text. */
@@ -128,7 +99,7 @@ object CommandDispatch {
     // the row ids name the batch's rows in every later query: the batch is
     // cached, and a recomputed partition of a deterministic source gets
     // the same ids
-    val cmds = cached(commands.withColumn(CmdId, monotonically_increasing_id()))
+    val cmds = Scope.pin(commands.withColumn(CmdId, monotonically_increasing_id()))
 
     // ---- decide, on the driver: the batch's keys, then the state's rows
     // that those keys touch
@@ -361,7 +332,7 @@ object CommandDispatch {
         when(col("action_code") === lag(col("action_code"), 1).over(w), 0).otherwise(1))
       .withColumn("__run", sum(col("__chg")).over(w))
       .drop("__chg")
-      .transform(cached)
+      .transform(Scope.pin)
     val runIds = runs.select("__run").distinct().orderBy("__run")
       .collect().map(_.getLong(0))
     if (runIds.isEmpty) return dispatch(state, commands) // empty micro-batch
@@ -445,10 +416,10 @@ object CommandDispatch {
       (w, c) => w.option("checkpointLocation", c))
     writer
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the registry scope ends after the writes below: snapshot +
-        // messages are on disk by then, so the batch's cached frames are
+        // the batch scope ends after the writes below: snapshot +
+        // messages are on disk by then, so the batch's pinned frames are
         // fully consumed and safe to unpersist
-        withBatchCaches {
+        Scope.batch {
           val base = if (batchId == 0) initial else latestBelow(batchId).getOrElse(initial)
           val (dispatched, messages) = dispatcher(base, batch)
           // maintenance INSIDE the batch transaction: the swept state is

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.engine.Scope
 import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -354,23 +355,21 @@ object StreamingJobs {
       StructField("v_user", LongType), StructField("view_ts", TimestampType)))
     val cSchema = StructType(Seq(StructField("click_id", LongType),
       StructField("c_user", LongType), StructField("click_ts", TimestampType)))
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
     // 2 state partitions: a stream-stream join runs FOUR state stores per
     // partition, and the replay's cost is per-(store x partition x batch)
     // fixed overhead, not rows (probe: 8 partitions 26s, 2 partitions 6s
     // for the same 40k rows); a production deployment sizes this to its
-    // actual key cardinality
-    s.conf.set("spark.sql.shuffle.partitions", "2")
+    // actual key cardinality.
     // No-data micro-batches exist to advance watermarks PROMPTLY on a
     // continuous stream; an INNER stream-stream join emits each match on
     // arrival, so in this bounded AvailableNow replay the trailing
     // no-data batch contributes zero output rows at any scale and costs a
-    // full trigger (StreamProbe: ~0.5 s of state-store commits). Scoped
-    // and restored like the partition count. (q_stream_session keeps the
-    // default: its single-flush design EMITS in the post-flush batch.)
-    val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try {
+    // full trigger (~0.5 s of state-store commits, measured from the
+    // per-batch StreamingQueryListener durations in OPTIMIZATION_r14.md
+    // change #9). (q_stream_session keeps the default: its single-flush
+    // design EMITS in the post-flush batch.)
+    Scope.withConf(s, "spark.sql.shuffle.partitions" -> "2",
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
       val v = s.readStream.schema(vSchema).option("maxFilesPerTrigger", "1")
         .parquet(srcV).withWatermark("view_ts", "1 hour")
       val c = s.readStream.schema(cSchema).option("maxFilesPerTrigger", "1")
@@ -385,9 +384,6 @@ object StreamingJobs {
         .outputMode("append")
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
     }
     s.read.parquet(out)
   }
@@ -449,15 +445,12 @@ object StreamingJobs {
       waves.indices.map(i => t0 + i * 10000L))
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("ts", TimestampType)))
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
     // dropDuplicatesWithinWatermark emits survivors ON ARRIVAL — the
     // trailing no-data batch contributes nothing to a bounded replay's
     // output at any scale (the replayStreamJoin rationale; eviction
     // timing is already proven by the explicit advance waves)
-    val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try {
+    Scope.withConf(s, "spark.sql.shuffle.partitions" -> "8",
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
       val q = s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
         .withWatermark("ts", delay)
         .dropDuplicatesWithinWatermark("doc_id")
@@ -466,9 +459,6 @@ object StreamingJobs {
         .outputMode("append")
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
     }
     s.read.parquet(out)
   }
@@ -488,9 +478,8 @@ object StreamingJobs {
       waves.indices.map(i => t0 + i * 10000L))
     val schema = StructType(Seq(
       StructField("user_id", LongType), StructField("ts", TimestampType)))
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    statePartitions.foreach(n => s.conf.set("spark.sql.shuffle.partitions", n.toString))
-    try {
+    val conf = statePartitions.map("spark.sql.shuffle.partitions" -> _.toString).toSeq
+    Scope.withConf(s, conf: _*) {
       val q = s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
         .withWatermark("ts", delay)
         .groupBy(session_window(col("ts"), gap), col("user_id"))
@@ -503,8 +492,7 @@ object StreamingJobs {
         .outputMode("append")
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-    } finally statePartitions.foreach(_ =>
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle))
+    }
     s.read.parquet(out)
   }
 
@@ -532,9 +520,8 @@ object StreamingJobs {
       waves.indices.map(i => t0 + i * 10000L))
     val schema = StructType(Seq(
       StructField("ts", TimestampType), StructField("event_type", StringType)))
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    statePartitions.foreach(n => s.conf.set("spark.sql.shuffle.partitions", n.toString))
-    try {
+    val conf = statePartitions.map("spark.sql.shuffle.partitions" -> _.toString).toSeq
+    Scope.withConf(s, conf: _*) {
       val q = s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
         .withWatermark("ts", delay)
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
@@ -545,8 +532,7 @@ object StreamingJobs {
         .outputMode("append")
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-    } finally statePartitions.foreach(_ =>
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle))
+    }
     s.read.parquet(out)
   }
 
@@ -610,26 +596,23 @@ object StreamingJobs {
     * callable directly to bulk-load a corpus through the same gate).
     * `exactPairs = true` pins both near-dup steps to the exact
     * inverted-postings pair joins ([[Dedup.ngramNearDups]] /
-    * [[Dedup.probeIndexExact]]) instead of the MinHash band buckets — the
+    * [[Dedup.gateFusedExactPairs]]) instead of the MinHash band buckets — the
     * same pinned-vs-auto split as qDedupNgram vs qDedupAuto, so a
     * declared-exact gate result can never silently depend on LSH recall. */
   def dedupGateBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
       acceptedDir: String, indexDir: String, rejectedDir: String,
       threshold: Double, exactPairs: Boolean = false): Unit = {
-    val cached = scala.collection.mutable.ArrayBuffer[DataFrame]()
     // The corpus-facing rejection frames are tiny (doc_id, reason, witness)
     // key lists, but each sits on top of an EXPENSIVE subtree (pruned corpus
     // scan / index band probe) that `live`'s lineage would otherwise replay
-    // on every one of the three publish actions below — cache them so the
-    // expensive probes run once per batch.
-    def pin(df: DataFrame): DataFrame = { df.cache(); cached += df; df }
-    // label each materialization phase in the UI/listeners (guide §1.5);
-    // thread-local, so AQE's captured-thread exchange jobs inherit it
-    def phase[A](label: String)(f: => A): A = {
-      spark.sparkContext.setJobDescription(s"gate[$batchId] $label")
-      try f finally spark.sparkContext.setJobDescription(null)
-    }
-    try {
+    // on every one of the three publish actions below — they are pinned so
+    // the expensive probes run once per batch. Every pin and checkpoint is
+    // released when the batch ends.
+    // Each materialization phase is labelled in the UI/listeners (guide
+    // §1.5); the label is thread-local, so AQE's captured-thread exchange
+    // jobs inherit it.
+    def phase[A](label: String)(f: => A): A = Scope.phase(s"gate[$batchId] $label")(f)
+    Scope.batch {
       // 1. exact within batch: min doc_id per text hash survives. ONE
       // min-over-window pass — the witness IS the per-hash minimum, so
       // the old rank-then-self-join (an extra exchange + join over the
@@ -642,14 +625,11 @@ object StreamingJobs {
       // micro-batch for nothing (guide §2.4: remove repeated shuffles of
       // the same data). The checkpoint pins batch+witness ONCE; the cost
       // is one batch-sized materialization, per-batch state a gate holds
-      // anyway. (A cache was tried here in round 7 for deterministic
-      // release; the checkpoint's RDD blocks are instead freed by the
-      // ContextCleaner, bounded by the 60s periodicGC floor.)
+      // anyway, and its blocks are dropped when the batch ends.
       val wx = org.apache.spark.sql.expressions.Window.partitionBy(col("xxh"))
-      val ranked = phase("stage1 window")(
+      val ranked = phase("stage1 window")(Scope.checkpoint(
         batch.withColumn("xxh", xxhash64(col("text")))
-          .withColumn("__witness", min(col("doc_id")).over(wx))
-          .localCheckpoint())
+          .withColumn("__witness", min(col("doc_id")).over(wx))))
       val exactBatchRej = ranked.filter(col("doc_id") =!= col("__witness"))
         .select(col("doc_id"), lit("exact_batch").as("reason"),
           col("__witness").as("witness"))
@@ -657,7 +637,7 @@ object StreamingJobs {
 
       // 2. exact vs corpus: anti-join on the accepted fingerprint column
       //    (pruned scan — only `xxh` and the witness id leave the parquet)
-      val exactCorpusRej = pin(
+      val exactCorpusRej = Scope.pin(
         if (!exists(spark, acceptedDir)) spark.emptyDataFrame
           .select(lit(0L).as("doc_id"), lit("").as("reason"), lit(0L).as("witness"))
           .limit(0)
@@ -679,9 +659,9 @@ object StreamingJobs {
       // the public entry points each would re-shingle (and re-sign) the
       // batch from text. Exact mode never reads `sig`, so it skips the
       // 32-permutation signing outright.
-      val sigs = phase("shingle")(
-        if (exactPairs) Dedup.shingledIndexOf(live)
-        else Dedup.signedIndexOf(live))
+      val sigs = phase("shingle")(Scope.checkpoint(
+        if (exactPairs) Dedup.shingleIndexLazy(live)
+        else Dedup.sigsOfLazy(Dedup.shingleIndexLazy(live))))
 
       // 3 + 4. near-dup vs corpus, then within batch. Exact mode FUSES the
       // two into one postings join ([[Dedup.gateFusedExactPairs]]): the
@@ -694,15 +674,14 @@ object StreamingJobs {
       val (nearCorpusRej, pairs) =
         if (exactPairs) {
           val idx = if (exists(spark, indexDir)) Some(indexDir) else None
-          val fused = phase("fused pairs")(
-            Dedup.gateFusedExactPairs(spark, idx, sigs, threshold)
-              .localCheckpoint())
+          val fused = phase("fused pairs")(Scope.checkpoint(
+            Dedup.gateFusedExactPairs(spark, idx, sigs, threshold)))
           // pinned (round 14): this tiny key list is read by FOUR consumers
           // (live's anti-join, both pair-list anti-joins, the rejected
           // write) and each evaluation re-ran the groupBy shuffle over the
           // checkpointed pair list — the minhash branch below already pins
           // its ncr for the same reason
-          val ncr = pin(fused.filter(col("is_corpus"))
+          val ncr = Scope.pin(fused.filter(col("is_corpus"))
             .groupBy(col("doc_a").as("doc_id"))
             .agg(min(col("doc_b")).as("witness"))
             .select(col("doc_id"), lit("near_dup_corpus").as("reason"), col("witness")))
@@ -712,32 +691,32 @@ object StreamingJobs {
             .select("doc_a", "doc_b")
           (ncr, p)
         } else {
-          val ncr = pin(
+          val ncr = Scope.pin(
             if (!exists(spark, indexDir)) exactCorpusRej.limit(0)
-            else Dedup.probeIndexOnSigs(spark, indexDir, sigs, threshold)
+            else Dedup.crossNearDupsSigs(sigs, spark.read.parquet(indexDir), threshold)
               .groupBy(col("doc_a").as("doc_id"))
               .agg(min(col("doc_b")).as("witness"))
               .select(col("doc_id"), lit("near_dup_corpus").as("reason"), col("witness")))
           val sigsLive = sigs.join(ncr.select("doc_id"), Seq("doc_id"), "left_anti")
-          (ncr, Dedup.minhashNearDupsOnSigs(sigsLive, threshold).select("doc_a", "doc_b"))
+          (ncr, Dedup.verifyPairs(Dedup.minhashCandidatesSigs(sigsLive), threshold)
+            .select("doc_a", "doc_b"))
         }
       live = live.join(nearCorpusRej.select("doc_id"), Seq("doc_id"), "left_anti")
 
       // cluster the within-batch pair graph, keep minima
-      val nearBatchRej = pin(phase("cluster")(Dedup.nearDupClusters(pairs))
+      val nearBatchRej = Scope.pin(phase("cluster")(Dedup.nearDupClusters(pairs))
         .filter(col("id") =!= col("label"))
         .select(col("id").as("doc_id"), lit("near_dup_batch").as("reason"),
           col("label").as("witness")))
-      live = phase("survivors")(
-        live.join(nearBatchRej.select("doc_id"), Seq("doc_id"), "left_anti")
-          // EAGER materialization before any publish action. This is load-
-          // bearing for correctness, not just speed: the accepted write below
-          // appends to acceptedDir, and Spark's recache-by-path would hand any
-          // LATER re-evaluation of `live` a refreshed file listing in which the
-          // batch's own rows are already "in the corpus" — the exact_corpus
-          // anti-join would then erase the batch from the index append. With
-          // the survivors pinned here, the three writes replay nothing.
-          .localCheckpoint())
+      // EAGER materialization before any publish action. This is load-
+      // bearing for correctness, not just speed: the accepted write below
+      // appends to acceptedDir, and Spark's recache-by-path would hand any
+      // LATER re-evaluation of `live` a refreshed file listing in which the
+      // batch's own rows are already "in the corpus" — the exact_corpus
+      // anti-join would then erase the batch from the index append. With
+      // the survivors pinned here, the three writes replay nothing.
+      live = phase("survivors")(Scope.checkpoint(
+        live.join(nearBatchRej.select("doc_id"), Seq("doc_id"), "left_anti")))
 
       // publish: rejections audit, accepted rows, index signatures — each
       // write stays atomic-per-directory and none replays the probes.
@@ -750,13 +729,12 @@ object StreamingJobs {
       // index append reuses the checkpointed shingle (+sig) frame,
       // semi-joined to the FINAL survivor set (sigs was built before
       // stages 3/4 rejected) — the public appendIndex would re-shingle
-      // (and in minhash mode re-sign) the batch from text
-      val finalIdx = sigs.join(live.select("doc_id"), Seq("doc_id"), "left_semi")
+      // (and in minhash mode re-sign) the batch from text. Its columns are
+      // the index layout of the gate's mode: (doc_id, sh) for exact pairs,
+      // (doc_id, sh, sig) for MinHash.
       phase("publish index")(
-        if (exactPairs) Dedup.appendIndexPostings(finalIdx, indexDir)
-        else Dedup.appendIndexSigs(finalIdx, indexDir))
-    } finally {
-      cached.foreach(_.unpersist(blocking = false)); ()
+        sigs.join(live.select("doc_id"), Seq("doc_id"), "left_semi")
+          .write.mode("append").parquet(indexDir))
     }
   }
 

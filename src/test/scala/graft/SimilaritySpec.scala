@@ -410,6 +410,16 @@ class SimilaritySpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(got.toSeq === forced.toSeq,
       "kCenterSelect driver fast path diverged from the distributed loop")
+    // a null embedding slot reads as 0.0 on both paths (cosineSim's
+    // primitive read), where the driver path used to throw a MatchError;
+    // an all-null embedding is a zero vector, whose NaN cosine both paths
+    // carry through round() and never fold into a distance
+    val withNullSlot = vecs.map { case (id, v) => (id, v.map(x => x: java.lang.Float)) } ++
+      Seq((100L, Array[java.lang.Float](null, 0.5f, null, -1.0f)),
+        (101L, Array[java.lang.Float](null, null, null, null)))
+    val nullSlotDf = withNullSlot.toDF("vec_id", "embedding")
+    assert(Similarity.kCenterSelect(nullSlotDf, 6).collect().toSeq ===
+      Similarity.kCenterSelect(nullSlotDf, 6, driverRowBudget = 0L).collect().toSeq)
     // driver replay of the exact greedy rule
     val byId = vecs.toMap
     var sel = Vector(vecs.map(_._1).min)

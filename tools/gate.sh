@@ -4,6 +4,12 @@ set -e
 cd "$(dirname "$0")/.."
 echo "=== sbt test ==="
 sbt -batch test 2>&1 | grep -E "Tests:|Passed:"
+echo "=== benchmark harness build ==="
+# graftbench compiles src/main from source, so an API break the tests miss
+# fails here (needs SPARK_HOME, as graftbench/run.py does)
+(cd graftbench && sbt -batch compile) > /tmp/gate_bench_build.log 2>&1 \
+  || { tail -20 /tmp/gate_bench_build.log; exit 1; }
+grep '\[success\]' /tmp/gate_bench_build.log | tail -1
 echo "=== smoke (t1) ==="
 sbt -batch "runMain graft.Smoke" 2>&1 | grep '\[smoke\]'
 echo "=== oracle (t2, sf0.01) ==="
