@@ -454,6 +454,14 @@ object GraftFunctions {
   def simhash64(c: Column): Column =
     ColumnBridge.column(SimHash64(ColumnBridge.expression(c)))
 
+  def snippet_windows(units: Column, window: Int, stride: Int): Column =
+    ColumnBridge.column(SnippetWindows(ColumnBridge.expression(units), window, stride))
+
+  def ingest_pages(words: Column, source: Column, pageTokens: Int, window: Int,
+      stride: Int): Column =
+    ColumnBridge.column(IngestPages(ColumnBridge.expression(words),
+      ColumnBridge.expression(source), pageTokens, window, stride))
+
   def minhash_sig(c: Column, a: Seq[Long], b: Seq[Long]): Column =
     ColumnBridge.column(MinHashSig(ColumnBridge.expression(c), a, b))
 

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.engine.Tables
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,18 +14,18 @@ import org.apache.spark.sql.functions._
   * denormalization (J2) — parent columns simply survive the explode, no
   * join needed.
   *
-  * The reference's PDF parsing (fitz/OCR, DI:110-168) is out of engine
-  * core (SURVEY §2.1 S1/S2): text is assumed extracted; pagination here is
-  * a deterministic 40-token page size so the whole pipeline is
-  * oracle-checkable.
+  * The reference's PDF parsing (fitz/OCR, DI:110-168) happens upstream in
+  * [[graft.sources.BinaryIngest]] (binary scan plus a text extractor);
+  * this pipeline takes its `text` column. Pagination here is a
+  * deterministic 40-token page size, so the whole pipeline is
+  * oracle-checkable. Pages, their text, windows and links are built by
+  * one compiled kernel ([[graft.functions.IngestPages]]).
   *
   * Scale: building the nested row is narrow per-document work; the only
   * join is the broadcast category-dim lookup (J1, DI:248). The flatten is
   * narrow too — at 100 TB both directions scale with input splits.
   */
 object Ingest {
-  import SnippetGen.snippetWindows
-
   val PageTokens = 40
 
   /** Assemble the nested Document rows (DI:245-255 analog) from the raw
@@ -44,22 +45,8 @@ object Ingest {
       array(col("lang"), col("source")).as("document_tags"),
       lit(null).cast("date").as("document_expiryDate"),
       map(lit("lang"), col("lang"), lit("source"), col("source")).as("document_metadata"),
-      // two chained transforms: the first materializes each page's token
-      // sub-array ONCE as a lambda variable; the second builds the page
-      // struct from that variable. Referencing `slice(words, ...)` directly
-      // inside the snippet-window lambda would re-slice per window element
-      // (same re-evaluation trap as Dedup.shinglesFromWords; measured 3x
-      // on this query).
-      transform(
-        transform(
-          sequence(lit(0), floor((size(col("words")) - 1) / PageTokens).cast("int")),
-          p => slice(col("words"), p * PageTokens + 1, lit(PageTokens))),
-        (pw, p) => struct(
-          (p + 1).cast("int").as("page_number"),
-          array_join(pw, " ").as("page_text"),
-          snippetWindows(pw).as("page_snippets"),
-          concat(col("source"), lit("#page="), (p + 1).cast("string")).as("page_link")))
-        .as("pages"),
+      GraftFunctions.ingest_pages(col("words"), col("source"), PageTokens,
+        SnippetGen.WindowSize, SnippetGen.Stride).as("pages"),
       lit("Active").as("document_status"),
       lit("2026-01-01").cast("date").as("date_uploaded"))
   }

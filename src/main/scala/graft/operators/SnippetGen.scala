@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -19,10 +20,14 @@ import org.apache.spark.sql.functions._
   *     (0-based) covers sentences[3k : 3k+5], for k = 0 .. floor((n-1)/3),
   *     and no snippets for n = 0.
   *
-  * Design: pure Catalyst column expressions (sequence/transform/slice/
-  * array_join) — no UDF, fully codegen'd, and a NARROW transformation: no
-  * shuffle, so at 100 TB it scales embarrassingly with input splits
-  * (SURVEY.md §7.6.5). spaCy's ML splitter is deliberately replaced by a
+  * Design: sentence split and tokenizing are built-in column functions;
+  * the windowing is one custom Catalyst expression
+  * ([[graft.functions.SnippetWindows]]) that runs inside whole-stage
+  * codegen, where the declarative `transform` form is interpreted per
+  * window. No UDF, and a NARROW transformation: no shuffle, so at 100 TB
+  * it scales embarrassingly with input splits (SURVEY.md §7.6.5). The
+  * sentence synthesis of [[qSentenceSnippets]] is still an interpreted
+  * `transform`. spaCy's ML splitter is deliberately replaced by a
   * documented deterministic regex (SURVEY.md §7.6.1) so results are
   * oracle-checkable.
   */
@@ -47,21 +52,11 @@ object SnippetGen {
 
   /** F4: overlapping windows over an array of units (sentences or words).
     * Returns `array<struct<snippet_id int, snippet_text string>>` with
-    * 1-based dense ids; empty array for an empty input.
+    * 1-based dense ids; empty array for an empty input, null for null.
+    * One compiled loop ([[graft.functions.SnippetWindows]]).
     */
-  def snippetWindows(units: Column, window: Int = WindowSize, stride: Int = Stride): Column = {
-    val n = size(units)
-    val emptyOut = array().cast("array<struct<snippet_id:int,snippet_text:string>>")
-    when(n <= 0, emptyOut).otherwise(
-      transform(
-        // window starts i = 0, stride, 2*stride, ... while i < n
-        // => k = 0 .. floor((n-1)/stride)
-        sequence(lit(0), floor((n - lit(1)) / lit(stride)).cast("int")),
-        k =>
-          struct(
-            (k + 1).cast("int").as("snippet_id"),
-            array_join(slice(units, k * stride + 1, lit(window)), " ").as("snippet_text"))))
-  }
+  def snippetWindows(units: Column, window: Int = WindowSize, stride: Int = Stride): Column =
+    GraftFunctions.snippet_windows(units, window, stride)
 
   /** Flagship pipeline (SURVEY.md §7.3): documents table -> tokenize ->
     * sliding windows -> explode to flat snippets carrying parent attrs

@@ -1,7 +1,9 @@
 package graft
 
+import graft.engine.Scope
 import graft.functions.GraftFunctions
-import graft.operators.{Dedup, TextAnalysis}
+import graft.operators.{Dedup, Ingest, SnippetGen, TextAnalysis}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Custom codegen expressions must be bit-identical to the declarative
@@ -252,6 +254,91 @@ class FunctionsSpec extends SparkSpec {
         abs(typed("variance") - builtin("variance")) > 1e-6).count()
     assert(bad === 0)
     assert(typed.count() === 3)
+  }
+
+  /** Runs `body` twice: compiled, with whole-stage codegen on and a
+    * compile failure fatal (checks `doGenCode`), then with every
+    * expression interpreted (checks `eval`). */
+  private def compiledAndInterpreted(body: => Unit): Unit = {
+    Scope.withConf(spark, "spark.sql.codegen.wholeStage" -> "true",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false")(body)
+    Scope.withConf(spark, "spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(body)
+  }
+
+  /** Asserts `slow` and `fast` have the same Catalyst type and
+    * nullability on `df` and agree (null-safe) on every row. */
+  private def assertSame(df: DataFrame, slow: Column, fast: Column): Unit = {
+    assert(df.select(slow.as("v")).schema === df.select(fast.as("v")).schema)
+    val rows = df.select(slow.as("slow"), fast.as("fast"))
+    assert(rows.count() > 0)
+    assert(rows.filter(!(col("slow") <=> col("fast"))).count() === 0)
+  }
+
+  /** Generated documents: null, empty and whitespace-only text, token
+    * counts around the 40-token page and 3-token stride, a null source
+    * and multi-byte UTF-8. Repartitioned so the projection runs in a
+    * stage rather than being folded into the local relation. */
+  private def generatedDocs: DataFrame = {
+    import spark.implicits._
+    def tokens(n: Int) = Some((1 to n).map(i => s"w$i").mkString(" "))
+    val utf8 = Some(Seq.tabulate(45)(i => Seq("naïve", "café", "日本語", "テキスト", "😀x")(i % 5))
+      .mkString(" "))
+    (Seq[(Option[String], Option[String])](
+      (None, Some("s.pdf")), (Some(""), Some("s.pdf")), (Some("   "), Some("s.pdf")),
+      (tokens(41), None), (utf8, Some("dössier/ü.pdf"))) ++
+      Seq(1, 2, 3, 5, 6, 39, 40, 41, 80, 81).map(n => (tokens(n), Some(s"d$n.pdf"))))
+      .zipWithIndex.map { case ((t, src), i) => (i.toLong, t, src) }
+      .toDF("doc_id", "text", "source").repartition(2)
+  }
+
+  test("SnippetWindows == declarative windows, compiled and interpreted") {
+    import spark.implicits._
+    // units arrays with null elements, an all-null window, empty and null
+    val units = Seq[Option[Seq[String]]](
+      Some(Seq("a", null, "b", null, null, "c", "d")), Some(Seq(null)),
+      Some(Seq.fill(7)(null)), Some(Seq.empty), None, Some(Seq("x")),
+      Some(Seq.tabulate(16)(i => if (i % 3 == 2) null else s"u$i")))
+      .toDF("units").repartition(2)
+    compiledAndInterpreted {
+      val real = docs.select(SnippetGen.splitWords(col("text")).as("w"),
+        SnippetGen.splitSentences(col("text")).as("s"))
+      assertSame(real, SnippetDeclarative.snippetWindows(col("w")),
+        SnippetGen.snippetWindows(col("w")))
+      assertSame(real, SnippetDeclarative.snippetWindows(col("s")),
+        SnippetGen.snippetWindows(col("s")))
+      val gen = generatedDocs.select(SnippetGen.splitWords(col("text")).as("w"))
+      assertSame(gen, SnippetDeclarative.snippetWindows(col("w")),
+        SnippetGen.snippetWindows(col("w")))
+      assertSame(units, SnippetDeclarative.snippetWindows(col("units")),
+        SnippetGen.snippetWindows(col("units")))
+      // a non-default window and stride take the same path
+      assertSame(units, SnippetDeclarative.snippetWindows(col("units"), 2, 4),
+        SnippetGen.snippetWindows(col("units"), 2, 4))
+    }
+  }
+
+  test("IngestPages == declarative pages, compiled and interpreted") {
+    def pages(df: DataFrame): Unit = {
+      val w = df.select(SnippetGen.splitWords(col("text")).as("words"), col("source"))
+      assertSame(w, SnippetDeclarative.pages(col("words"), col("source")),
+        GraftFunctions.ingest_pages(col("words"), col("source"), Ingest.PageTokens,
+          SnippetGen.WindowSize, SnippetGen.Stride))
+    }
+    compiledAndInterpreted {
+      pages(docs)
+      pages(generatedDocs)
+    }
+    // non-nullable inputs: the declarative type has non-nullable page
+    // text and link fields, and the kernel's must follow it
+    val lits = docs.limit(1).select(array(lit("a"), lit("b")).as("words"),
+      lit("s.pdf").as("source"))
+    assertSame(lits, SnippetDeclarative.pages(col("words"), col("source")),
+      GraftFunctions.ingest_pages(col("words"), col("source"), Ingest.PageTokens,
+        SnippetGen.WindowSize, SnippetGen.Stride))
+    assertSame(lits, SnippetDeclarative.snippetWindows(col("words")),
+      SnippetGen.snippetWindows(col("words")))
   }
 
   test("custom expressions run inside whole-stage codegen (no fallback)") {

@@ -356,13 +356,35 @@ class PlanSpec extends SparkSpec {
   }
 
   test("whole-stage codegen covers the snippet pipeline scan+generate") {
+    import graft.operators.Ingest
+    import graft.sources.BinaryIngest
+    import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+    import org.apache.spark.sql.functions.{col, lit, regexp_extract}
+    import spark.implicits._
     // AQE's pre-execution plan string hides codegen spans; inspect with AQE off
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    graft.engine.Scope.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       val p = SparkEntry.queries("q_snippets")(spark, sf0001)
         .queryExecution.executedPlan.toString
       // codegen spans render as `*(n)` in plan strings
       assert("""\*\(\d+\)""".r.findAllIn(p).nonEmpty, p)
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+      // ...and no interpreted lambda rides inside them: `transform` and the
+      // other higher-order functions are CodegenFallback, walked per element
+      val pdfs = BinaryIngest.stagePdfFixture(spark, sf0001)
+      val binary = BinaryIngest.readBinaryDocs(spark, pdfs,
+        BinaryIngest.pdfTextExtractorFull, "*.pdf")
+        .select(regexp_extract(col("path"), "doc(\\d+)\\.pdf", 1).cast("long").as("doc_id"),
+          lit("en").as("lang"), col("path").as("source"), col("text"))
+      val ingest = Ingest.flattenSnippets(Ingest.buildDocuments(binary,
+        Seq((0, "c0"), (1, "c1")).toDF("category_id", "category_name")))
+      Seq("q_snippets" -> SparkEntry.queries("q_snippets")(spark, sf0001),
+        "q_ingest_flatten" -> SparkEntry.queries("q_ingest_flatten")(spark, sf0001),
+        "readBinaryDocs -> buildDocuments -> flattenSnippets" -> ingest)
+        .foreach { case (name, df) =>
+          val exec = df.queryExecution.executedPlan
+          val hofs = exec.flatMap(_.expressions.flatMap(_.collect {
+            case h: HigherOrderFunction => h.prettyName }))
+          assert(hofs.isEmpty, s"$name evaluates ${hofs.mkString(", ")}:\n$exec")
+        }
+    }
   }
 }

@@ -10,6 +10,12 @@ echo "=== benchmark harness build ==="
 (cd graftbench && sbt -batch compile) > /tmp/gate_bench_build.log 2>&1 \
   || { tail -20 /tmp/gate_bench_build.log; exit 1; }
 grep '\[success\]' /tmp/gate_bench_build.log | tail -1
+echo "=== benchmark harness self-test ==="
+# graftbench's checks must still reject wrong answers (a changed snippet
+# row, a shifted page, ...) when run on this engine
+python3 -m unittest discover -s graftbench/tests > /tmp/gate_bench_selftest.log 2>&1 \
+  || { tail -20 /tmp/gate_bench_selftest.log; exit 1; }
+tail -1 /tmp/gate_bench_selftest.log
 echo "=== smoke (t1) ==="
 sbt -batch "runMain graft.Smoke" 2>&1 | grep '\[smoke\]'
 echo "=== oracle (t2, sf0.01) ==="
