@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graft.BlockBridge
 import scala.collection.mutable.ArrayBuffer
 
 /** Driver-side state scoped to a block and undone when the block exits:
@@ -44,13 +45,17 @@ object Scope {
     c
   }
 
-  /** `df.localCheckpoint()` (eager), whose blocks the enclosing [[batch]]
+  /** `df.localCheckpoint(eager)`, whose blocks the enclosing [[batch]]
     * drops when it ends instead of leaving them to the ContextCleaner's
-    * periodic GC. Outside a batch this is a plain local checkpoint. */
-  def checkpoint(df: DataFrame): DataFrame = {
-    val c = df.localCheckpoint()
+    * periodic GC. Outside a batch this is a plain local checkpoint. A lazy
+    * checkpoint is materialized by the first action over it, which saves
+    * a job when the caller reads it at once. The blocks are removed by RDD
+    * id: `RDD.unpersist` would log a warning for every locally
+    * checkpointed RDD, and dropping these is what the batch is for. */
+  def checkpoint(df: DataFrame, eager: Boolean = true): DataFrame = {
+    val c = df.localCheckpoint(eager)
     register(() => c.queryExecution.logical.foreach {
-      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case r: LogicalRDD => BlockBridge.unpersist(r.rdd)
       case _ =>
     })
     c

@@ -571,9 +571,11 @@ object Dedup {
       indexDir: Option[String], sigs: DataFrame, threshold: Double): DataFrame = {
     val batchSh = sigs.select(col("doc_id"), col("sh"))
     val right = indexDir match {
+      // the stored index is read with the batch's own (doc_id, sh) schema:
+      // inferring it would cost a footer-reading job per micro-batch
       case Some(p) => batchSh.withColumn("is_corpus", lit(false))
-        .unionByName(spark.read.parquet(p).select(col("doc_id"), col("sh"))
-          .withColumn("is_corpus", lit(true)))
+        .unionByName(spark.read.schema(batchSh.schema).parquet(p)
+          .select(col("doc_id"), col("sh")).withColumn("is_corpus", lit(true)))
       case None => batchSh.withColumn("is_corpus", lit(false))
     }
     // set sizes RIDE THE POSTINGS (8 bytes a row) instead of joining back

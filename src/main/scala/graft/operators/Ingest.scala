@@ -54,17 +54,25 @@ object Ingest {
   /** create_snippets_list_from_document (DI:203-224): nested Document ->
     * flat denormalized snippet rows. The reference loops pages then
     * snippets copying 7 parent attrs by hand; in Spark that is two
-    * explodes — parent columns ride along for free. */
+    * explodes — parent columns ride along for free.
+    *
+    * The pages explode is `explode_outer` plus a null filter, which drops
+    * the same rows: for a plain `explode` Spark infers `size(pages) > 0
+    * AND isnotnull(pages)` and pushes it down through the projection that
+    * builds `pages`, evaluating the page kernel three times per document.
+    * The outer form leaves `page` nullable, so `page_number` is coalesced
+    * with a literal to keep it non-nullable in the written schema. */
   def flattenSnippets(nested: DataFrame): DataFrame =
     nested
       .select(
         col("document_id"), col("document_name"), col("category_id"),
         col("category_name"), col("document_tags"), col("document_status"),
-        explode(col("pages")).as("page"))
+        explode_outer(col("pages")).as("page"))
+      .filter(col("page").isNotNull)
       .select(
         col("document_id"), col("document_name"), col("category_id"),
         col("category_name"), col("document_tags"), col("document_status"),
-        col("page.page_number").as("page_number"),
+        coalesce(col("page.page_number"), lit(0)).as("page_number"),
         col("page.page_link").as("page_link"),
         explode(col("page.page_snippets")).as("s"))
       .select(

@@ -2,10 +2,13 @@ package graft.streaming
 
 import graft.engine.Scope
 import graft.operators.Dedup
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 /** Structured Streaming jobs (engine extension; the reference has no
   * event-time processing — SURVEY §2.9 "absent" row). The batch
@@ -550,27 +553,31 @@ object StreamingJobs {
     * and the survivors become corpus state for every later batch:
     *
     *   1. exact within-batch — one survivor (min doc_id) per text hash;
-    *   2. exact vs corpus   — anti-join on the accepted-fingerprint set;
-    *   3. near-dup vs corpus — MinHash band-bucket probe of the persisted
-    *      dedup index ([[Dedup.probeIndex]]), Jaccard >= threshold rejects;
-    *   4. near-dup within batch — band-bucket pairs on the remainder,
-    *      connected components, non-minima rejected
-    *      ([[Dedup.nearDupClusters]]).
+    *   2. exact vs corpus   — a hash already in the accepted table;
+    *   3. near-dup vs corpus — Jaccard >= threshold against the persisted
+    *      dedup index, through the fused postings join
+    *      ([[Dedup.gateFusedExactPairs]]) or the MinHash band-bucket probe
+    *      ([[Dedup.crossNearDupsSigs]]); the witness is the min corpus id;
+    *   4. near-dup within batch — pairs among the remainder, connected
+    *      components, non-minima rejected ([[Dedup.nearDupClusters]]).
     *
     * Survivors are appended to `acceptedDir` (parquet, with an `xxh`
-    * fingerprint column) and their MinHash signatures to the index at
-    * `indexDir`; every rejection is appended to `rejectedDir` as
-    * (doc_id, reason, witness, batch_id) for audit.
+    * fingerprint column) and their shingles (and MinHash signatures) to
+    * the index at `indexDir`; every rejection is appended to
+    * `rejectedDir` as (doc_id, reason, witness, batch_id) for audit.
     *
     * Scale posture: ALL corpus state lives on storage, not executor
-    * memory — the fingerprint set is a one-column pruned scan (8 bytes a
-    * doc) and the dedup index stores (doc_id, sh, sig) exactly once (band
-    * keys are re-derived at probe time, Dedup.writeIndex). Per batch the
-    * incoming side is small: the anti-join and the band-bucket probe
-    * shuffle corpus KEYS only, never document bodies, and the within-batch
-    * cluster step runs on the batch alone. Backpressure comes from
-    * `maxFilesPerTrigger`, the file-source analog of the reference's
-    * bounded queue (data_ingestion.py:37). */
+    * memory — the fingerprint probe is a pruned (xxh, doc_id) scan
+    * restricted to the batch's hashes, and the dedup index stores each
+    * doc's shingles once (band keys are re-derived at probe time,
+    * Dedup.writeIndex). The corpus side of every stage leaves the cluster
+    * already reduced to one row per batch hash or batch document. Per
+    * batch the driver holds 16 bytes of keys per document (doc_id, xxh),
+    * one row per rejected document, and the within-batch pair list while
+    * it fits [[Dedup.nearDupClusters]]' edge budget (over it, the
+    * components are labelled on the cluster). `maxFilesPerTrigger`, the
+    * file-source analog of the reference's bounded queue
+    * (data_ingestion.py:37), bounds all of it. */
   def dedupGateStream(spark: SparkSession, docsDir: String, acceptedDir: String,
       indexDir: String, rejectedDir: String, checkpointDir: String,
       threshold: Double = 0.5, maxFilesPerTrigger: Option[Int] = None,
@@ -595,148 +602,129 @@ object StreamingJobs {
   /** One micro-batch of the dedup gate (also the batch-mode entry point —
     * callable directly to bulk-load a corpus through the same gate).
     * `exactPairs = true` pins both near-dup steps to the exact
-    * inverted-postings pair joins ([[Dedup.ngramNearDups]] /
-    * [[Dedup.gateFusedExactPairs]]) instead of the MinHash band buckets — the
-    * same pinned-vs-auto split as qDedupNgram vs qDedupAuto, so a
-    * declared-exact gate result can never silently depend on LSH recall. */
+    * inverted-postings pair join ([[Dedup.gateFusedExactPairs]]) instead
+    * of the MinHash band buckets — the same pinned-vs-auto split as
+    * qDedupNgram vs qDedupAuto, so a declared-exact gate result can never
+    * silently depend on LSH recall.
+    *
+    * Decide once, apply once: the batch is materialized once, each stage
+    * leaves the cluster as a small key list, the driver makes every
+    * decision, and three writes apply them with key sets. A row whose
+    * doc_id is null matches no witness, so it is neither accepted nor
+    * rejected (SQL comparison semantics). Stage 1 decides per row, the
+    * later stages per doc_id. */
   def dedupGateBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
       acceptedDir: String, indexDir: String, rejectedDir: String,
       threshold: Double, exactPairs: Boolean = false): Unit = {
-    // The corpus-facing rejection frames are tiny (doc_id, reason, witness)
-    // key lists, but each sits on top of an EXPENSIVE subtree (pruned corpus
-    // scan / index band probe) that `live`'s lineage would otherwise replay
-    // on every one of the three publish actions below — they are pinned so
-    // the expensive probes run once per batch. Every pin and checkpoint is
-    // released when the batch ends.
-    // Each materialization phase is labelled in the UI/listeners (guide
-    // §1.5); the label is thread-local, so AQE's captured-thread exchange
-    // jobs inherit it.
+    // Each phase labels its jobs in the UI/listeners (guide §1.5); the
+    // label is thread-local, so AQE's captured-thread exchange jobs
+    // inherit it.
     def phase[A](label: String)(f: => A): A = Scope.phase(s"gate[$batchId] $label")(f)
+    def witnesses(pairs: DataFrame): Map[Long, Long] =
+      pairs.groupBy("doc_a").agg(min(col("doc_b"))).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val rejected = ArrayBuffer.empty[Row]
+    def reject(id: Long, reason: String, witness: Any): Unit =
+      rejected += Row(id, reason, witness, batchId)
     Scope.batch {
-      // 1. exact within batch: min doc_id per text hash survives. ONE
-      // min-over-window pass — the witness IS the per-hash minimum, so
-      // the old rank-then-self-join (an extra exchange + join over the
-      // cached batch) collapses into a single window column.
-      // The windowed frame is localCheckpoint'ed (round 14): FOUR
-      // downstream evaluations read it (the corpus-probe broadcast build,
-      // the shingle checkpoint, the survivor checkpoint, the rejected
-      // write), and each used to re-shuffle and re-evaluate the window
-      // over a merely-cached input — ~4 extra exchange+window passes per
-      // micro-batch for nothing (guide §2.4: remove repeated shuffles of
-      // the same data). The checkpoint pins batch+witness ONCE; the cost
-      // is one batch-sized materialization, per-batch state a gate holds
-      // anyway, and its blocks are dropped when the batch ends.
-      val wx = org.apache.spark.sql.expressions.Window.partitionBy(col("xxh"))
-      val ranked = phase("stage1 window")(Scope.checkpoint(
-        batch.withColumn("xxh", xxhash64(col("text")))
-          .withColumn("__witness", min(col("doc_id")).over(wx))))
-      val exactBatchRej = ranked.filter(col("doc_id") =!= col("__witness"))
-        .select(col("doc_id"), lit("exact_batch").as("reason"),
-          col("__witness").as("witness"))
-      var live = ranked.filter(col("doc_id") === col("__witness")).drop("__witness")
+      // The one materialization of the batch, done by the keys collect:
+      // every later read (shingles, the accepted write) filters it, and
+      // none re-reads the source or `acceptedDir` (Spark's recache-by-path
+      // would hand a re-read the batch's own just-appended rows).
+      val (docs, keys) = phase("stage1 window") {
+        val m = Scope.checkpoint(batch.withColumn("xxh", xxhash64(col("text"))), eager = false)
+        (m, m.select("doc_id", "xxh").collect()
+          .collect { case r if !r.isNullAt(0) => (r.getLong(0), r.getLong(1)) })
+      }
 
-      // 2. exact vs corpus: anti-join on the accepted fingerprint column
-      //    (pruned scan — only `xxh` and the witness id leave the parquet)
-      val exactCorpusRej = Scope.pin(
-        if (!exists(spark, acceptedDir)) spark.emptyDataFrame
-          .select(lit(0L).as("doc_id"), lit("").as("reason"), lit(0L).as("witness"))
-          .limit(0)
-        else {
-          // batch hashes broadcast INTO the corpus scan, so the per-batch
-          // cost is one pruned pass over (xxh, doc_id) with a broadcast
-          // filter — never a full-corpus aggregate keyed on corpus size
-          val seen = spark.read.parquet(acceptedDir).select(col("xxh"), col("doc_id"))
-            .join(broadcast(live.select("xxh").distinct()), Seq("xxh"))
-            .groupBy("xxh").agg(min(col("doc_id")).as("witness"))
-          live.join(seen, Seq("xxh"))
-            .select(col("doc_id"), lit("exact_corpus").as("reason"), col("witness"))
-        })
-      live = live.join(exactCorpusRej.select("doc_id"), Seq("doc_id"), "left_anti")
+      // 1. exact within batch: the min doc_id per text hash survives
+      val first = keys.groupMapReduce(_._2)(_._1)(math.min)
+      val (live, copies) = keys.partition { case (id, h) => first(h) == id }
+      copies.foreach { case (id, h) => reject(id, "exact_batch", first(h)) }
 
-      // One shingle (+ signature, MINHASH MODE ONLY) pass for the whole
-      // batch: the index probe (step 3), the within-batch pair join
-      // (step 4) and the index append all consume this frame — through
-      // the public entry points each would re-shingle (and re-sign) the
-      // batch from text. Exact mode never reads `sig`, so it skips the
-      // 32-permutation signing outright.
-      val sigs = phase("shingle")(Scope.checkpoint(
-        if (exactPairs) Dedup.shingleIndexLazy(live)
-        else Dedup.sigsOfLazy(Dedup.shingleIndexLazy(live))))
+      // 2. exact vs corpus: one pruned (xxh, doc_id) scan of the accepted
+      //    table restricted to the surviving hashes, reduced per hash
+      val corpusFirst: Map[Long, Any] =
+        if (!exists(spark, acceptedDir)) Map.empty
+        else phase("exact corpus")(spark.read.schema(AcceptedKeys).parquet(acceptedDir)
+          .filter(inKeys(col("xxh"), live.map(_._2)))
+          .groupBy("xxh").agg(min(col("doc_id"))).collect()
+          .map(r => r.getLong(0) -> r.get(1)).toMap)
+      live.foreach { case (id, h) => corpusFirst.get(h).foreach(reject(id, "exact_corpus", _)) }
+      val exactCorpusIds = live.collect { case (id, h) if corpusFirst.contains(h) => id }.toSet
+      val live2 = live.filterNot { case (id, _) => exactCorpusIds(id) }
+
+      // One shingle (+ signature, MINHASH MODE ONLY) pass over the
+      // survivors: the corpus probe, the within-batch pairs and the index
+      // append all read this frame. Exact mode never reads `sig`, so it
+      // skips the 32-permutation signing outright.
+      val sh = phase("shingle")(Scope.checkpoint {
+        val sh = Dedup.shingleIndexLazy(docs.filter(inKeys(rowKey, live2)))
+        if (exactPairs) sh else Dedup.sigsOfLazy(sh)
+      })
 
       // 3 + 4. near-dup vs corpus, then within batch. Exact mode FUSES the
-      // two into one postings join ([[Dedup.gateFusedExactPairs]]): the
-      // batch shingles explode once against (batch UNION stored index),
-      // and the checkpointed pair list serves both the corpus rejection
-      // (is_corpus rows) and the within-batch pair graph (batch rows
-      // filtered to stage-3 survivors — identical to running stage 4 on
-      // the survivor set). The minhash band path keeps the split shape
-      // (its corpus side is the re-derived band-key probe, not postings).
-      val (nearCorpusRej, pairs) =
+      // two into one postings join: its checkpointed pair list serves
+      // both the corpus witnesses (is_corpus rows) and the within-batch
+      // pairs. The MinHash corpus side is the re-derived band-key probe
+      // of the stored index. Pairs touching a corpus-rejected document
+      // are dropped before clustering.
+      val (nearCorpus, batchPairs) =
         if (exactPairs) {
           val idx = if (exists(spark, indexDir)) Some(indexDir) else None
-          val fused = phase("fused pairs")(Scope.checkpoint(
-            Dedup.gateFusedExactPairs(spark, idx, sigs, threshold)))
-          // pinned (round 14): this tiny key list is read by FOUR consumers
-          // (live's anti-join, both pair-list anti-joins, the rejected
-          // write) and each evaluation re-ran the groupBy shuffle over the
-          // checkpointed pair list — the minhash branch below already pins
-          // its ncr for the same reason
-          val ncr = Scope.pin(fused.filter(col("is_corpus"))
-            .groupBy(col("doc_a").as("doc_id"))
-            .agg(min(col("doc_b")).as("witness"))
-            .select(col("doc_id"), lit("near_dup_corpus").as("reason"), col("witness")))
-          val p = fused.filter(!col("is_corpus"))
-            .join(ncr.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_anti")
-            .join(ncr.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_anti")
-            .select("doc_a", "doc_b")
-          (ncr, p)
+          phase("fused pairs") {
+            val fused = Scope.checkpoint(Dedup.gateFusedExactPairs(spark, idx, sh, threshold))
+            (witnesses(fused.filter(col("is_corpus"))), fused.filter(!col("is_corpus")))
+          }
         } else {
-          val ncr = Scope.pin(
-            if (!exists(spark, indexDir)) exactCorpusRej.limit(0)
-            else Dedup.crossNearDupsSigs(sigs, spark.read.parquet(indexDir), threshold)
-              .groupBy(col("doc_a").as("doc_id"))
-              .agg(min(col("doc_b")).as("witness"))
-              .select(col("doc_id"), lit("near_dup_corpus").as("reason"), col("witness")))
-          val sigsLive = sigs.join(ncr.select("doc_id"), Seq("doc_id"), "left_anti")
-          (ncr, Dedup.verifyPairs(Dedup.minhashCandidatesSigs(sigsLive), threshold)
-            .select("doc_a", "doc_b"))
+          val nc = if (!exists(spark, indexDir)) Map.empty[Long, Long]
+            else phase("corpus probe")(witnesses(Dedup.crossNearDupsSigs(sh,
+              spark.read.schema(sh.schema).parquet(indexDir), threshold)))
+          (nc, Dedup.verifyPairs(Dedup.minhashCandidatesSigs(sh), threshold))
         }
-      live = live.join(nearCorpusRej.select("doc_id"), Seq("doc_id"), "left_anti")
+      nearCorpus.foreach { case (id, w) => reject(id, "near_dup_corpus", w) }
+      val ncIds = nearCorpus.keys
+      val nearBatch = phase("cluster")(Dedup.nearDupClusters(batchPairs
+          .filter(!inKeys(col("doc_a"), ncIds) && !inKeys(col("doc_b"), ncIds))
+          .select("doc_a", "doc_b"))
+        .filter(col("id") =!= col("label")).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)))
+      nearBatch.foreach { case (id, w) => reject(id, "near_dup_batch", w) }
 
-      // cluster the within-batch pair graph, keep minima
-      val nearBatchRej = Scope.pin(phase("cluster")(Dedup.nearDupClusters(pairs))
-        .filter(col("id") =!= col("label"))
-        .select(col("id").as("doc_id"), lit("near_dup_batch").as("reason"),
-          col("label").as("witness")))
-      // EAGER materialization before any publish action. This is load-
-      // bearing for correctness, not just speed: the accepted write below
-      // appends to acceptedDir, and Spark's recache-by-path would hand any
-      // LATER re-evaluation of `live` a refreshed file listing in which the
-      // batch's own rows are already "in the corpus" — the exact_corpus
-      // anti-join would then erase the batch from the index append. With
-      // the survivors pinned here, the three writes replay nothing.
-      live = phase("survivors")(Scope.checkpoint(
-        live.join(nearBatchRej.select("doc_id"), Seq("doc_id"), "left_anti")))
-
-      // publish: rejections audit, accepted rows, index signatures — each
-      // write stays atomic-per-directory and none replays the probes.
-      phase("publish rejected")(
-        exactBatchRej.unionByName(exactCorpusRej).unionByName(nearCorpusRej)
-          .unionByName(nearBatchRej)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(rejectedDir))
-      phase("publish accepted")(live.write.mode("append").parquet(acceptedDir))
-      // index append reuses the checkpointed shingle (+sig) frame,
-      // semi-joined to the FINAL survivor set (sigs was built before
-      // stages 3/4 rejected) — the public appendIndex would re-shingle
-      // (and in minhash mode re-sign) the batch from text. Its columns are
-      // the index layout of the gate's mode: (doc_id, sh) for exact pairs,
-      // (doc_id, sh, sig) for MinHash.
-      phase("publish index")(
-        sigs.join(live.select("doc_id"), Seq("doc_id"), "left_semi")
-          .write.mode("append").parquet(indexDir))
+      val out = exactCorpusIds ++ nearCorpus.keySet ++ nearBatch.map(_._1)
+      val kept = live.filterNot { case (id, _) => out(id) }
+      // publish: rejections audit, accepted rows, index — each write stays
+      // atomic-per-directory. The index append reuses the checkpointed
+      // shingle (+sig) frame: (doc_id, sh) for exact pairs, (doc_id, sh,
+      // sig) for MinHash.
+      phase("publish rejected")(spark.createDataFrame(rejected.asJava,
+          rejectedSchema(docs.schema("doc_id").nullable))
+        .coalesce(1).write.mode("append").parquet(rejectedDir))
+      phase("publish accepted")(docs.filter(inKeys(rowKey, kept))
+        .write.mode("append").parquet(acceptedDir))
+      phase("publish index")(sh.filter(inKeys(col("doc_id"), kept.map(_._1)))
+        .write.mode("append").parquet(indexDir))
     }
   }
+
+  /** The gate's row key: stage 1 decides per (doc_id, text hash) row. */
+  private val rowKey = struct(col("doc_id"), col("xxh"))
+
+  /** `c IN keys` for Long keys or (doc_id, xxh) pairs, as one set: as
+    * `isin` literals, q_dedup_gate's keys at sf0.1 cost about 1.6 s a batch. */
+  private def inKeys(c: Column, keys: Iterable[Any]): Column =
+    if (keys.isEmpty) lit(false)
+    else ColumnBridge.inSet(c, keys.map { case (id, h) => Row(id, h); case k => k })
+
+  /** The pruned columns of the accepted table the exact-corpus probe reads. */
+  private val AcceptedKeys = StructType(Seq(
+    StructField("doc_id", LongType), StructField("xxh", LongType)))
+
+  /** The audit rows' schema; `doc_id` keeps the batch's nullability. */
+  private def rejectedSchema(idNullable: Boolean) = StructType(Seq(
+    StructField("doc_id", LongType, idNullable),
+    StructField("reason", StringType, nullable = false),
+    StructField("witness", LongType), StructField("batch_id", LongType, nullable = false)))
 
   private lazy val gateDir: String = Dedup.processTempDir("graft_dedup_gate")
 

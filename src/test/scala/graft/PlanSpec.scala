@@ -384,7 +384,15 @@ class PlanSpec extends SparkSpec {
           val hofs = exec.flatMap(_.expressions.flatMap(_.collect {
             case h: HigherOrderFunction => h.prettyName }))
           assert(hofs.isEmpty, s"$name evaluates ${hofs.mkString(", ")}:\n$exec")
+          // the page kernel runs once per document: no inferred filter on
+          // `pages` re-evaluates it below the explode
+          if (name != "q_snippets") {
+            val kernels = exec.flatMap(_.expressions.flatMap(_.collect {
+              case k: graft.functions.IngestPages => k }))
+            assert(kernels.size == 1, s"$name evaluates ingestpages ${kernels.size} times:\n$exec")
+          }
         }
+      assert(!ingest.schema("page_number").nullable, ingest.schema.treeString)
     }
   }
 }

@@ -563,6 +563,52 @@ class StreamingSpec extends SparkSpec {
     assert(leftCached === Map(0L -> 0, 1L -> 0), "cached blocks left after a batch")
   }
 
+  /** Jobs started by `body`, counted by a listener; the listener bus is
+    * asynchronous, so the count is read once it stops moving. */
+  private def jobsOf(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      var last = -1
+      var spins = 0
+      while (jobs.get != last && spins < 30) { last = jobs.get; Thread.sleep(100); spins += 1 }
+      jobs.get
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("dedup gate: a corpus-facing batch runs in at most 14 jobs and caches nothing") {
+    import spark.implicits._
+    def text(p: String, n: Int) = (1 to n).map(i => s"$p$i").mkString(" ")
+    val near = (t: String) => t.split(" ").dropRight(2).mkString(" ") + " x1 x2"
+    val fresh = (1 to 30).map(i => (i.toLong, text(s"w${i}_", 30)))
+    // batch 1 repeats and edits corpus documents and its own, so every
+    // stage has rows to decide
+    val batch1 = (101 to 130).map(i => (i.toLong, text(s"v${i}_", 30))) ++
+      Seq((140L, fresh(0)._2), (141L, near(fresh(1)._2)),
+        (142L, text("v101_", 30)), (143L, near(text("v102_", 30))))
+    Seq(true -> 14, false -> 17).foreach { case (exactPairs, bound) =>
+      val root = Files.createTempDirectory("graft_gate_jobs").toString
+      def gate(rows: Seq[(Long, String)], b: Long): Unit =
+        StreamingJobs.dedupGateBatch(spark, rows.toDF("doc_id", "text"), b,
+          s"$root/accepted", s"$root/index", s"$root/rejected", 0.5, exactPairs)
+      gate(fresh, 0)
+      val before = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+      val n = jobsOf(gate(batch1, 1))
+      assert(n > 0 && n <= bound, s"gate batch (exactPairs=$exactPairs) ran $n jobs")
+      val left = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet -- before
+      assert(left.isEmpty, s"gate batch (exactPairs=$exactPairs) left RDD blocks $left")
+      val rej = spark.read.parquet(s"$root/rejected").filter(col("batch_id") === 1)
+        .select("doc_id", "reason").as[(Long, String)].collect().toMap
+      assert(rej(140L) === "exact_corpus" && rej(142L) === "exact_batch", rej)
+      if (exactPairs) assert(rej(141L) === "near_dup_corpus" && rej(143L) === "near_dup_batch", rej)
+    }
+  }
+
   test("dispatch messages report per-command outcomes") {
     import spark.implicits._
     val docs0 = Seq((1L, "doc_a", 1, "Cat1", "alpha", "Active"))
