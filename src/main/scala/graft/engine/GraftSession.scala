@@ -24,7 +24,7 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 
   /** Local session with `cores` threads, UI off, WARN logs — what the
-    * driver mains (Smoke/Verify/Bench/ScaleProbe) and tests run on.
+    * driver mains (Smoke/Verify/Bench), the tools and tests run on.
     * `extraConf` lets a long-lived harness (Bench) bound session-state
     * growth without those knobs leaking into every test session. */
   def local(cores: Int, appName: String = "graft",

@@ -46,10 +46,9 @@ object Tables {
     normalizeTs(table(spark, sfDir, "events"))
 
   /** Normalize a scanned events frame's `ts` to session-zoned TimestampType,
-    * whatever decoding the scan produced — shared by the batch reader, the
-    * streaming file source ([[graft.streaming.StreamingJobs]]) and
-    * [[graft.ScaleProbe]], so a future encoding drift is a one-line fix
-    * here, not a hunt. */
+    * whatever decoding the scan produced — shared by the batch reader and
+    * the streaming file source ([[graft.streaming.StreamingJobs]]), so a
+    * future encoding drift is a one-line fix here, not a hunt. */
   def normalizeTs(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
     df.schema("ts").dataType match {

@@ -86,17 +86,13 @@ object Dedup {
 
   // -------------------------------------------------------------- n-gram Jaccard
 
-  /** The materialized (doc_id, sh) shingle-set index shared by the exact
-    * Jaccard strategies (shingling recomputation otherwise dominates). On
-    * a cluster persist this as a table for reuse across dedup runs. */
-  private def shingleIndex(docs: DataFrame): DataFrame =
-    shingleIndexLazy(docs).localCheckpoint()
-
-  /** The shingle projection WITHOUT the eager materialization — for
-    * compositions that checkpoint once on top (e.g. the dedup gate's
-    * signed frame, which would otherwise materialize the bulky shingle
-    * arrays twice). */
-  private[graft] def shingleIndexLazy(docs: DataFrame): DataFrame =
+  /** The (doc_id, sh) shingle-set index, lazy. A site that reads it more
+    * than once materializes it through `Scope.checkpoint` (shingling
+    * recomputation otherwise dominates the exact Jaccard strategies); a
+    * composition that checkpoints once on top (the dedup gate's signed
+    * frame) or has one consumer (an index write) takes it as is. On a
+    * cluster persist it as a table for reuse across dedup runs. */
+  private[graft] def shingleIndex(docs: DataFrame): DataFrame =
     Tables.rebalance(docs, "doc_id")
       .select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
       .filter(size(col("words")) >= 3)
@@ -117,7 +113,7 @@ object Dedup {
     * array_intersect: 6x slower at sf0.1 AND missed cross-lang dups — kept
     * as a design note. */
   def ngramNearDups(docs: DataFrame, threshold: Double): DataFrame =
-    ngramNearDupsIdx(shingleIndex(docs), threshold)
+    ngramNearDupsIdx(Scope.checkpoint(shingleIndex(docs)), threshold)
 
   private def ngramNearDupsIdx(sh: DataFrame, threshold: Double): DataFrame = {
     // set sizes RIDE THE POSTINGS (8 bytes a row) instead of joining back
@@ -149,7 +145,7 @@ object Dedup {
     * (high-scale / saturated-vocabulary corpora), and costs two extra
     * shuffles when they are not — pick by corpus profile (SCALE.md). */
   def ngramNearDupsPrefix(docs: DataFrame, threshold: Double): DataFrame =
-    ngramNearDupsPrefixIdx(shingleIndex(docs), threshold)
+    ngramNearDupsPrefixIdx(Scope.checkpoint(shingleIndex(docs)), threshold)
 
   private def ngramNearDupsPrefixIdx(sh: DataFrame, threshold: Double): DataFrame = {
     val postings = sh.select(col("doc_id"), size(col("sh")).cast("long").as("n_sh"),
@@ -213,7 +209,7 @@ object Dedup {
   def ngramStats(docs: DataFrame): NgramStats = {
     val nDocs = docs.count()
     val f = sampleFraction(nDocs)
-    if (f >= 1.0) ngramStatsIdx(shingleIndex(docs), nDocs, 1.0)
+    if (f >= 1.0) ngramStatsIdx(Scope.checkpoint(shingleIndex(docs)), nDocs, 1.0)
     else ngramStatsSampled(docs, nDocs, f)
   }
 
@@ -234,8 +230,8 @@ object Dedup {
   private def ngramStatsSampled(docs: DataFrame, nDocs: Long, f: Double): NgramStats = {
     val threshold = math.max(1L, (f * SampleModulus).toLong)
     val fReal = threshold.toDouble / SampleModulus
-    ngramStatsIdx(shingleIndex(
-      docs.filter(pmod(xxhash64(col("doc_id")), lit(SampleModulus)) < lit(threshold))),
+    ngramStatsIdx(Scope.checkpoint(shingleIndex(
+      docs.filter(pmod(xxhash64(col("doc_id")), lit(SampleModulus)) < lit(threshold)))),
       nDocs, fReal)
   }
 
@@ -261,10 +257,12 @@ object Dedup {
       if (estPairs == 0) 0.0 else headPairs / estPairs)
   }
 
-  /** Strategy rule, calibrated against measured ScaleProbe crossovers
-    * (sf0.1 corpus multiplied 1x/10x/30x: 253 / 469 / 1363 pairs per doc
-    * -> inverted 2.3 s / 6.3 s / 122 s, vs MinHash-LSH 2-3 s / 6.2 s /
-    * 7.1 s — the crossover sits right at ~500 pairs/doc):
+  /** Strategy rule, calibrated on crossovers measured with an in-memory
+    * multiplier of the sf0.1 corpus that has since been removed (1x/10x/30x:
+    * 253 / 469 / 1363 pairs per doc -> inverted 2.3 s / 6.3 s / 122 s, vs
+    * MinHash-LSH 2-3 s / 6.2 s / 7.1 s — the crossover sits right at ~500
+    * pairs/doc; SCALE.md findings 4-5; re-measure on `tools.Sf1Stage`
+    * data through q_dedup_ngram, q_dedup_minhash and q_dedup_auto):
     *  - within the pair budget the inverted index is the fastest exact
     *    strategy (its cost IS estPairs);
     *  - over budget with a hot HEAD (>= half of estPairs from the hottest
@@ -311,19 +309,19 @@ object Dedup {
       lshIdx: (DataFrame, Double) => DataFrame): (DataFrame, NgramStrategy) = {
     val nDocs = docs.count()
     val f = sampleFraction(nDocs)
-    val sharedIdx = if (f >= 1.0) Some(shingleIndex(docs)) else None
+    val sharedIdx = if (f >= 1.0) Some(Scope.checkpoint(shingleIndex(docs))) else None
     // sampled path: correct by the REALIZED fraction (cut/modulus),
     // exactly as [[ngramStatsSampled]] documents
     val (statsIdx, fReal) = sharedIdx match {
       case Some(idx) => (idx, 1.0)
       case None =>
         val cut = math.max(1L, (f * SampleModulus).toLong)
-        (shingleIndex(docs.filter(
-          pmod(xxhash64(col("doc_id")), lit(SampleModulus)) < lit(cut))),
+        (Scope.checkpoint(shingleIndex(docs.filter(
+          pmod(xxhash64(col("doc_id")), lit(SampleModulus)) < lit(cut)))),
           cut.toDouble / SampleModulus)
     }
     val strategy = routeStrategy(statsIdx, nDocs, fReal, pairBudgetPerDoc, what)
-    val idx = sharedIdx.getOrElse(shingleIndex(docs))
+    val idx = sharedIdx.getOrElse(Scope.checkpoint(shingleIndex(docs)))
     val pairs = strategy match {
       case NgramInverted => invertedIdx(idx, threshold)
       case NgramPrefix => prefixIdx(idx, threshold)
@@ -413,23 +411,18 @@ object Dedup {
 
   /** LSH candidate pairs: docs sharing any band of the signature. */
   def minhashCandidates(docs: DataFrame): DataFrame =
-    minhashCandidatesIdx(shingleIndex(docs))
+    minhashCandidatesIdx(Scope.checkpoint(shingleIndex(docs)))
 
-  /** (doc_id, sh, sig) with the signature materialized once: both join
-    * sides of the band bucketing and the Jaccard verification re-read it
-    * (signature gen is the CPU cost). Codegen'd MinHashSig: one compiled
-    * loop instead of K x |sh| interpreted lambda evaluations. */
-  /** (doc_id, sh, sig) WITHOUT the eager materialization — for sites whose
-    * result has exactly ONE consumer (an index write): checkpointing there
-    * materialized the bulky shingle+signature rows once into executor
-    * blocks and then again into the output parquet, for nothing
-    * (round 14; guide §5 — cache only what is reused). */
-  private[graft] def sigsOfLazy(sh: DataFrame): DataFrame =
+  /** (doc_id, sh, sig), lazy. Codegen'd MinHashSig: one compiled loop
+    * instead of K x |sh| interpreted lambda evaluations. Signing is the CPU
+    * cost, so a site whose band bucketing and verification both re-read
+    * the signatures materializes them once through `Scope.checkpoint`; a
+    * site with ONE consumer (an index write) does not, since checkpointing
+    * there would write the bulky shingle+signature rows into executor
+    * blocks and then again into the output parquet, for nothing. */
+  private[graft] def sigsOf(sh: DataFrame): DataFrame =
     sh.withColumn("sig", graft.functions.GraftFunctions.minhash_sig(
       col("sh"), hashParams.map(_._1), hashParams.map(_._2)))
-
-  private def sigsOf(sh: DataFrame): DataFrame =
-    sigsOfLazy(sh).localCheckpoint()
 
   /** Band keys only — the shingle arrays do NOT travel through the
     * candidate shuffle; they are joined back for verification afterwards. */
@@ -440,7 +433,7 @@ object Dedup {
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_key")
 
   private def minhashCandidatesIdx(sh: DataFrame): DataFrame =
-    minhashCandidatesSigs(sigsOf(sh))
+    minhashCandidatesSigs(Scope.checkpoint(sigsOf(sh)))
 
   private[graft] def minhashCandidatesSigs(sigs: DataFrame): DataFrame = {
     val bands = bandsOf(sigs)
@@ -478,7 +471,7 @@ object Dedup {
 
   /** [[qMinhashEst]]'s estimator frame over any (doc_id, text) corpus. */
   def minhashEstimates(docs0: DataFrame): DataFrame = {
-    val sigs = sigsOf(shingleIndexLazy(docs0))
+    val sigs = Scope.checkpoint(sigsOf(shingleIndex(docs0)))
     minhashCandidatesSigs(sigs)
       .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")), Seq("doc_a"))
       .join(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")), Seq("doc_b"))
@@ -499,7 +492,7 @@ object Dedup {
     * exact-Jaccard verification. Same output shape as [[qDedupNgram]] so
     * the two paths are directly comparable. */
   def minhashNearDups(docs: DataFrame, threshold: Double): DataFrame =
-    minhashNearDupsIdx(shingleIndexLazy(docs), threshold)
+    minhashNearDupsIdx(shingleIndex(docs), threshold)
 
   private def minhashNearDupsIdx(sh: DataFrame, threshold: Double): DataFrame =
     verifyPairs(minhashCandidatesIdx(sh), threshold)
@@ -519,7 +512,8 @@ object Dedup {
     * (sigs, bands) persisted as the corpus dedup index instead of
     * recomputing per call. */
   def crossNearDups(left: DataFrame, right: DataFrame, threshold: Double): DataFrame =
-    crossNearDupsSigs(sigsOf(shingleIndexLazy(left)), sigsOf(shingleIndexLazy(right)), threshold)
+    crossNearDupsSigs(Scope.checkpoint(sigsOf(shingleIndex(left))),
+      Scope.checkpoint(sigsOf(shingleIndex(right))), threshold)
 
   /** EXACT cross-frame near-dups via the inverted-postings join — the
     * exact analog of [[crossNearDups]] (complete for any threshold > 0:
@@ -528,7 +522,7 @@ object Dedup {
     * check: bounded as long as ONE side is small (the probe batch). */
   def crossNearDupsExact(left: DataFrame, right: DataFrame,
       threshold: Double): DataFrame =
-    crossNearDupsExactIdx(shingleIndexLazy(left), shingleIndexLazy(right), threshold)
+    crossNearDupsExactIdx(shingleIndex(left), shingleIndex(right), threshold)
 
   private[graft] def crossNearDupsExactIdx(la: DataFrame, ra: DataFrame,
       threshold: Double): DataFrame = {
@@ -644,18 +638,19 @@ object Dedup {
     * the index row count. At cluster scale write this bucketed by doc_id
     * (or partitioned by band at read-mostly sites). */
   def writeIndex(docs: DataFrame, path: String): Unit =
-    sigsOfLazy(shingleIndexLazy(docs)).write.mode("overwrite").parquet(path)
+    sigsOf(shingleIndex(docs)).write.mode("overwrite").parquet(path)
 
   /** Append newly-accepted docs to the persisted index. */
   def appendIndex(docs: DataFrame, path: String): Unit =
-    sigsOfLazy(shingleIndexLazy(docs)).write.mode("append").parquet(path)
+    sigsOf(shingleIndex(docs)).write.mode("append").parquet(path)
 
   /** Probe the persisted index: (incoming doc -> indexed doc) near-dup
     * pairs with Jaccard >= threshold. The incoming micro-batch is signed
     * fresh; the corpus side comes straight off the stored parquet. */
   def probeIndex(spark: SparkSession, path: String, incoming: DataFrame,
       threshold: Double): DataFrame =
-    crossNearDupsSigs(sigsOf(shingleIndexLazy(incoming)), spark.read.parquet(path), threshold)
+    crossNearDupsSigs(Scope.checkpoint(sigsOf(shingleIndex(incoming))),
+      spark.read.parquet(path), threshold)
 
   // ------------------------------------ compactable sharded index store
 
@@ -668,12 +663,12 @@ object Dedup {
     * corrupts the index. Probe results are spec-pinned identical before
     * and after compaction (a pure layout operation). */
   def appendIndexStore(docs: DataFrame, store: graft.engine.ShardStore): Unit =
-    store.append(sigsOfLazy(shingleIndexLazy(docs)))
+    store.append(sigsOf(shingleIndex(docs)))
 
   /** Band-bucket probe of the sharded index ([[probeIndex]] semantics). */
   def probeIndexStore(store: graft.engine.ShardStore, incoming: DataFrame,
       threshold: Double): DataFrame =
-    crossNearDupsSigs(sigsOf(shingleIndexLazy(incoming)), store.read(), threshold)
+    crossNearDupsSigs(Scope.checkpoint(sigsOf(shingleIndex(incoming))), store.read(), threshold)
 
   private lazy val compactIdxRoot: String = processTempDir("graft_dedup_idx_c")
 
@@ -1094,7 +1089,7 @@ object Dedup {
     * Same inverted-postings shape as [[ngramNearDups]]: sub-quadratic,
     * no per-pair array ops, and the same vocabulary-saturation caveats. */
   def containmentDups(docs: DataFrame, threshold: Double): DataFrame =
-    containmentDupsIdx(shingleIndex(docs), threshold)
+    containmentDupsIdx(Scope.checkpoint(shingleIndex(docs)), threshold)
 
   private def containmentDupsIdx(sh: DataFrame, threshold: Double): DataFrame = {
     // set sizes ride the postings — same two-exchange removal as
@@ -1133,7 +1128,7 @@ object Dedup {
     * number. Same guidance as the Jaccard pair: plain inverted join while
     * posting lists are short, prefix filter at scale. */
   def containmentDupsPrefix(docs: DataFrame, threshold: Double): DataFrame =
-    containmentDupsPrefixIdx(shingleIndex(docs), threshold)
+    containmentDupsPrefixIdx(Scope.checkpoint(shingleIndex(docs)), threshold)
 
   private def containmentDupsPrefixIdx(sh: DataFrame, threshold: Double): DataFrame = {
     val postings = sh.select(col("doc_id"), size(col("sh")).cast("long").as("n_sh"),
@@ -1183,7 +1178,7 @@ object Dedup {
     * only reaches this arm when the pairs are spread too broadly for the
     * prefix prune to bite. */
   def containmentLsh(docs: DataFrame, threshold: Double): DataFrame =
-    containmentLshIdx(shingleIndex(docs), threshold)
+    containmentLshIdx(Scope.checkpoint(shingleIndex(docs)), threshold)
 
   private def containmentLshIdx(sh: DataFrame, threshold: Double): DataFrame =
     minhashCandidatesIdx(sh)
@@ -1205,16 +1200,10 @@ object Dedup {
     * concentrate in a hot head (still exact — and the right arm for
     * asymmetric-heavy corpora, see [[containmentLsh]]'s recall caveat);
     * LSH-verified beyond that. Index built once and shared between the
-    * stats pass and the chosen arm below the sampling threshold. */
-  def containmentDupsAuto(docs: DataFrame, threshold: Double,
-      pairBudgetPerDoc: Double = 512.0): DataFrame =
-    containmentDupsAutoTagged(docs, threshold, pairBudgetPerDoc)._1
-
-  /** [[containmentDupsAuto]] plus the chosen strategy, so a caller (and
-    * the oracle gate) can assert WHICH branch ran. Same
-    * [[routeOverShingles]] skeleton as the Jaccard router — the
-    * measured crossovers transfer because the inverted containment join
-    * pays the identical Σ df·(df−1)/2 candidate cost. */
+    * stats pass and the chosen arm below the sampling threshold. Returns
+    * the chosen strategy too, so a caller (and the oracle gate) can
+    * assert WHICH branch ran; same [[routeOverShingles]] skeleton as the
+    * Jaccard router. */
   def containmentDupsAutoTagged(docs: DataFrame, threshold: Double,
       pairBudgetPerDoc: Double = 512.0): (DataFrame, NgramStrategy) =
     routeOverShingles(docs, threshold, pairBudgetPerDoc, "containment",

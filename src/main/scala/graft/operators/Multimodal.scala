@@ -1817,8 +1817,7 @@ object Multimodal {
   def qAudioFp(s: SparkSession, d: String): DataFrame =
     audioFpVerdicts(mediaTableAudioFp(s, d))
 
-  /** The fingerprint-bucket core over any (doc_id, media) frame — split
-    * out so the scale probe can run it on a grown media set. */
+  /** The fingerprint-bucket core over any (doc_id, media) frame. */
   def audioFpVerdicts(media: DataFrame): DataFrame = {
     val s = media.sparkSession
     import s.implicits._
@@ -1878,8 +1877,7 @@ object Multimodal {
       .toDF("doc_id", "b0", "b1", "b2", "b3")
   }
 
-  /** The dHash near-dup core over any (doc_id, media) frame — split out
-    * so the scale probe can run it on a grown media set. */
+  /** The dHash near-dup core over any (doc_id, media) frame. */
   def dhashNearDups(media: DataFrame): DataFrame = {
     val s = media.sparkSession
     import s.implicits._

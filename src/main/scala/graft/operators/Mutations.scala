@@ -33,16 +33,20 @@ object Mutations {
     * the same row. Shared by [[insertDedup]] and by callers that derive
     * follow-on work (e.g. snippet generation) from exactly the inserted
     * rows. */
-  def acceptedNew(existing: DataFrame, incoming: DataFrame, key: String): DataFrame = {
+  def acceptedNew(existing: DataFrame, incoming: DataFrame, key: String): DataFrame =
+    firstPerKey(incoming.join(existing.select(key), Seq(key), "left_anti"), key)
+
+  /** One row per value of the `keys` columns: the least in full-row
+    * order, so a replay or another partitioning keeps the same row. */
+  def firstPerKey(df: DataFrame, keys: String*): DataFrame = {
     // map columns are not orderable in Spark — order on everything else
     // (degenerate all-map rows fall back to an arbitrary-but-single pick)
-    val orderable = incoming.schema.fields
+    val orderable = df.schema.fields
       .filterNot(_.dataType.isInstanceOf[org.apache.spark.sql.types.MapType])
       .map(f => col(f.name))
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(key)).orderBy(struct(orderable.toIndexedSeq: _*))
-    incoming.join(existing.select(key), Seq(key), "left_anti")
-      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
+      .partitionBy(keys.map(col): _*).orderBy(struct(orderable.toIndexedSeq: _*))
+    df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
   }
 
   /** M1 insert-with-dedup (upload_one_doc, data_ingestion.py:227-291):

@@ -4,6 +4,7 @@ import graft.engine.Scope
 import graft.operators.{Mutations, SnippetGen}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -86,13 +87,6 @@ object CommandDispatch {
   private implicit val sparkStringOrder: Ordering[String] =
     Ordering.fromLessThan((a, b) => UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0)
 
-  private def isIn(c: Column, values: Iterable[Any]): Column =
-    if (values.isEmpty) lit(false) else c.isin(values.toSeq: _*)
-
-  /** Keeps the rows whose key is not in `values`; a null key is kept, as an anti-join keeps it. */
-  private def notIn(c: Column, values: Iterable[Any]): Column =
-    !coalesce(isIn(c, values), lit(false))
-
   private def dispatchWith(state: EngineState, commands: DataFrame,
       contentDedup: Option[Double]): (EngineState, DataFrame) = {
     val spark = commands.sparkSession
@@ -100,6 +94,12 @@ object CommandDispatch {
     // cached, and a recomputed partition of a deterministic source gets
     // the same ids
     val cmds = Scope.pin(commands.withColumn(CmdId, monotonically_increasing_id()))
+    // key-set filters on a column of `df`; notIn keeps a null key, as an
+    // anti-join keeps it
+    def isIn(df: DataFrame, c: String, keys: Iterable[Any]): Column =
+      ColumnBridge.inKeys(col(c), df.schema(c).dataType, keys)
+    def notIn(df: DataFrame, c: String, keys: Iterable[Any]): Column =
+      !coalesce(isIn(df, c, keys), lit(false))
 
     // ---- decide, on the driver: the batch's keys, then the state's rows
     // that those keys touch
@@ -123,10 +123,11 @@ object CommandDispatch {
     // name, (name, id, true) per category the adds or uploads touch
     val touched: Seq[Row] =
       if (uploadNames.isEmpty && uploadCats.isEmpty && addNames.isEmpty) Nil
-      else state.docs.filter(isIn(col("document_name"), uploadNames))
+      else state.docs.filter(isIn(state.docs, "document_name", uploadNames))
         .select(col("document_name").as("name"))
         .unionByName(state.categories
-          .filter(isIn(col("category_name"), addNames) || isIn(col("category_id"), uploadCats))
+          .filter(isIn(state.categories, "category_name", addNames) ||
+            isIn(state.categories, "category_id", uploadCats))
           .select(col("category_name").as("name"), col("category_id").cast("long").as("id"),
             lit(true).as("cat")), allowMissingColumns = true)
         .collect().toSeq
@@ -164,7 +165,7 @@ object CommandDispatch {
       if (tied.isEmpty) Nil
       else {
         val groupOf = typedLit(tied.zipWithIndex.flatMap { case (g, i) => g.map(_.id -> i) }.toMap)
-        cmds.filter(isIn(col(CmdId), tied.flatten.map(_.id)))
+        cmds.filter(isIn(cmds, CmdId, tied.flatten.map(_.id)))
           .groupBy(groupOf.getItem(col(CmdId)))
           .agg(min(struct(col("text"), expiryCmd, col(CmdId))).getField(CmdId))
           .collect().toSeq.map(_.getLong(1))
@@ -176,7 +177,7 @@ object CommandDispatch {
     // MinHash index (Dedup.writeIndex/probeIndex/appendIndex) instead.
     val rejected: Set[Long] = contentDedup.fold(Set.empty[Long]) { t =>
       graft.operators.Dedup.crossNearDups(
-        cmds.filter(isIn(col(CmdId), nameAccepted))
+        cmds.filter(isIn(cmds, CmdId, nameAccepted))
           .select(col("document_id").as("doc_id"), col("text")),
         state.docs.select(col("document_id").as("doc_id"), col("text")), t)
         .select(col("doc_a")).distinct().collect()
@@ -203,10 +204,10 @@ object CommandDispatch {
     // ---- apply: the state filtered by the removed keys, plus the rows
     // the decisions accepted
     def survivors(df: DataFrame): DataFrame =
-      df.filter(notIn(col("document_name"), removeNames) && notIn(col("category_id"), removeCats))
+      df.filter(notIn(df, "document_name", removeNames) && notIn(df, "category_id", removeCats))
     val hasExpiry = state.docs.columns.contains("document_expiryDate")
     val catNames = accepted.flatMap(c => catName(c).map(c.id -> _)).toMap
-    val newDocs = cmds.filter(isIn(col(CmdId), accepted.map(_.id)))
+    val newDocs = cmds.filter(isIn(cmds, CmdId, accepted.map(_.id)))
       .select(Seq(col("document_id"), col("document_name"), col("category_id"),
         (if (catNames.isEmpty) lit(null).cast("string")
          else typedLit(catNames).getItem(col(CmdId))).as("category_name"),
@@ -230,7 +231,8 @@ object CommandDispatch {
     (EngineState(
       survivors(state.docs).unionByName(newDocs),
       survivors(state.snippets).unionByName(newSnippets),
-      state.categories.filter(notIn(col("category_id"), removeCats)).unionByName(newCats)),
+      state.categories.filter(notIn(state.categories, "category_id", removeCats))
+        .unionByName(newCats)),
       messages)
   }
 

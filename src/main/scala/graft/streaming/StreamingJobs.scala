@@ -1,10 +1,10 @@
 package graft.streaming
 
 import graft.engine.Scope
-import graft.operators.Dedup
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import graft.operators.{Dedup, Mutations}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.graft.ColumnBridge.inKeys
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 import scala.collection.mutable.ArrayBuffer
@@ -610,9 +610,11 @@ object StreamingJobs {
     * Decide once, apply once: the batch is materialized once, each stage
     * leaves the cluster as a small key list, the driver makes every
     * decision, and three writes apply them with key sets. A row whose
-    * doc_id is null matches no witness, so it is neither accepted nor
-    * rejected (SQL comparison semantics). Stage 1 decides per row, the
-    * later stages per doc_id. */
+    * doc_id is null is no document: each such row is rejected as
+    * `null_id` with a null witness. Rows repeating one (doc_id, text
+    * hash) key are one document delivered more than once; the least of
+    * them in full-row order goes on. Stage 1 decides per key, the later
+    * stages per doc_id. */
   def dedupGateBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
       acceptedDir: String, indexDir: String, rejectedDir: String,
       threshold: Double, exactPairs: Boolean = false): Unit = {
@@ -624,18 +626,25 @@ object StreamingJobs {
       pairs.groupBy("doc_a").agg(min(col("doc_b"))).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val rejected = ArrayBuffer.empty[Row]
-    def reject(id: Long, reason: String, witness: Any): Unit =
+    def reject(id: Any, reason: String, witness: Any): Unit =
       rejected += Row(id, reason, witness, batchId)
     Scope.batch {
       // The one materialization of the batch, done by the keys collect:
       // every later read (shingles, the accepted write) filters it, and
       // none re-reads the source or `acceptedDir` (Spark's recache-by-path
       // would hand a re-read the batch's own just-appended rows).
-      val (docs, keys) = phase("stage1 window") {
+      val (batchRows, rows) = phase("stage1 window") {
         val m = Scope.checkpoint(batch.withColumn("xxh", xxhash64(col("text"))), eager = false)
-        (m, m.select("doc_id", "xxh").collect()
-          .collect { case r if !r.isNullAt(0) => (r.getLong(0), r.getLong(1)) })
+        (m, m.select("doc_id", "xxh").collect())
       }
+      rows.filter(_.isNullAt(0)).foreach(_ => reject(null, "null_id", null))
+      val rowKeys = rows.collect { case r if !r.isNullAt(0) => (r.getLong(0), r.getLong(1)) }
+      val keys = rowKeys.distinct
+      // only a batch with a repeated key pays the shuffle that collapses it
+      val docs =
+        if (keys.length == rowKeys.length) batchRows
+        else phase("stage1 window")(Scope.checkpoint(
+          Mutations.firstPerKey(batchRows, "doc_id", "xxh")))
 
       // 1. exact within batch: the min doc_id per text hash survives
       val first = keys.groupMapReduce(_._2)(_._1)(math.min)
@@ -646,8 +655,8 @@ object StreamingJobs {
       //    table restricted to the surviving hashes, reduced per hash
       val corpusFirst: Map[Long, Any] =
         if (!exists(spark, acceptedDir)) Map.empty
-        else phase("exact corpus")(spark.read.schema(AcceptedKeys).parquet(acceptedDir)
-          .filter(inKeys(col("xxh"), live.map(_._2)))
+        else phase("exact corpus")(spark.read.schema(RowKeyType).parquet(acceptedDir)
+          .filter(inKeys(col("xxh"), LongType, live.map(_._2)))
           .groupBy("xxh").agg(min(col("doc_id"))).collect()
           .map(r => r.getLong(0) -> r.get(1)).toMap)
       live.foreach { case (id, h) => corpusFirst.get(h).foreach(reject(id, "exact_corpus", _)) }
@@ -659,8 +668,8 @@ object StreamingJobs {
       // append all read this frame. Exact mode never reads `sig`, so it
       // skips the 32-permutation signing outright.
       val sh = phase("shingle")(Scope.checkpoint {
-        val sh = Dedup.shingleIndexLazy(docs.filter(inKeys(rowKey, live2)))
-        if (exactPairs) sh else Dedup.sigsOfLazy(sh)
+        val sh = Dedup.shingleIndex(docs.filter(inKeys(rowKey, RowKeyType, live2)))
+        if (exactPairs) sh else Dedup.sigsOf(sh)
       })
 
       // 3 + 4. near-dup vs corpus, then within batch. Exact mode FUSES the
@@ -685,7 +694,7 @@ object StreamingJobs {
       nearCorpus.foreach { case (id, w) => reject(id, "near_dup_corpus", w) }
       val ncIds = nearCorpus.keys
       val nearBatch = phase("cluster")(Dedup.nearDupClusters(batchPairs
-          .filter(!inKeys(col("doc_a"), ncIds) && !inKeys(col("doc_b"), ncIds))
+          .filter(!inKeys(col("doc_a"), LongType, ncIds) && !inKeys(col("doc_b"), LongType, ncIds))
           .select("doc_a", "doc_b"))
         .filter(col("id") =!= col("label")).collect()
         .map(r => r.getLong(0) -> r.getLong(1)))
@@ -700,24 +709,21 @@ object StreamingJobs {
       phase("publish rejected")(spark.createDataFrame(rejected.asJava,
           rejectedSchema(docs.schema("doc_id").nullable))
         .coalesce(1).write.mode("append").parquet(rejectedDir))
-      phase("publish accepted")(docs.filter(inKeys(rowKey, kept))
+      phase("publish accepted")(docs.filter(inKeys(rowKey, RowKeyType, kept))
         .write.mode("append").parquet(acceptedDir))
-      phase("publish index")(sh.filter(inKeys(col("doc_id"), kept.map(_._1)))
+      phase("publish index")(sh.filter(inKeys(col("doc_id"), LongType, kept.map(_._1)))
         .write.mode("append").parquet(indexDir))
     }
   }
 
-  /** The gate's row key: stage 1 decides per (doc_id, text hash) row. */
+  /** The gate's row key: stage 1 decides per (doc_id, text hash) key. As
+    * `isin` literals, q_dedup_gate's keys at sf0.1 cost about 1.6 s a
+    * batch; [[inKeys]] builds one set. */
   private val rowKey = struct(col("doc_id"), col("xxh"))
 
-  /** `c IN keys` for Long keys or (doc_id, xxh) pairs, as one set: as
-    * `isin` literals, q_dedup_gate's keys at sf0.1 cost about 1.6 s a batch. */
-  private def inKeys(c: Column, keys: Iterable[Any]): Column =
-    if (keys.isEmpty) lit(false)
-    else ColumnBridge.inSet(c, keys.map { case (id, h) => Row(id, h); case k => k })
-
-  /** The pruned columns of the accepted table the exact-corpus probe reads. */
-  private val AcceptedKeys = StructType(Seq(
+  /** The type of [[rowKey]], and the pruned columns of the accepted table
+    * the exact-corpus probe reads. */
+  private val RowKeyType = StructType(Seq(
     StructField("doc_id", LongType), StructField("xxh", LongType)))
 
   /** The audit rows' schema; `doc_id` keeps the batch's nullability. */

@@ -3,10 +3,9 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Stage an sf1-scale dataset by deterministic MULT-x replication of the
-  * driver's sf0.1 parquet (VERDICT r7 "Next" #2: one real sf1 run of the
-  * heaviest operators — the ScaleProbe fixture multiplier checks growth
-  * shape, this checks real on-disk data distribution + shuffle spill):
+/** Stage an sf1-scale dataset by deterministic MULT-x replication (any
+  * multiplier) of the driver's sf0.1 parquet — the one scale path: bench
+  * the staged directory, then `tools/sf1_exponents.py` (README "Running"):
   *
   *  - documents: doc_id remapped per replica; replica > 0 texts get a
   *    replica token INSERTED every 8 words, so cross-replica Jaccard

@@ -23,12 +23,16 @@ import scala.jdk.CollectionConverters._
   * near it but not the corpus. The MinHash gate is run on batches
   * without near edits, where no outcome depends on LSH recall. The
   * coverage check at the end of each suite asserts that every listed
-  * case was drawn. */
+  * case was drawn.
+  *
+  * The model holds the gate's input contract: a row without a doc_id is
+  * rejected as `null_id`, and a document delivered more than once (same
+  * doc_id, same text) counts once. */
 class DedupGatePropertySpec extends SparkSpec {
   import DedupGatePropertySpec._
 
-  private def run(batches: Seq[Seq[Doc]], exactPairs: Boolean): Outcome = {
-    val root = Files.createTempDirectory("graft_gate_prop").toString
+  private def run(batches: Seq[Seq[Doc]], exactPairs: Boolean,
+      root: String = Files.createTempDirectory("graft_gate_prop").toString): Outcome = {
     val (acc, idx, rej) = (s"$root/accepted", s"$root/index", s"$root/rejected")
     batches.zipWithIndex.foreach { case (b, i) =>
       val rows = b.map(d => Row(d.id.map(Long.box).orNull, d.text.orNull))
@@ -38,7 +42,8 @@ class DedupGatePropertySpec extends SparkSpec {
     Outcome(
       spark.read.parquet(acc).select("doc_id").collect().map(_.getLong(0)).toSeq.sorted,
       spark.read.parquet(rej).select("doc_id", "reason", "witness", "batch_id").collect()
-        .map(r => Rejection(r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
+        .map(r => Rejection(Option(r.get(0)).map(_.asInstanceOf[Long]), r.getString(1),
+          Option(r.get(2)).map(_.asInstanceOf[Long]), r.getLong(3)))
         .toSeq.sortBy(_.toString))
   }
 
@@ -60,6 +65,30 @@ class DedupGatePropertySpec extends SparkSpec {
 
   check("MinHash gate equals the model on batches without near edits", 6,
     near = false, exactPairs = false, Coverage -- NearCases)
+
+  test("a document delivered twice is one document: accepted and indexed once") {
+    // 9 of 27 shingles shared (Jaccard 1/3). Were postings counted per
+    // row, doc 1 sent twice would read 18/18 against doc 2, and both sent
+    // twice 36/0.
+    val w = (1 to 29).map(i => s"w$i")
+    val text = Map(1L -> w.take(20).mkString(" "), 2L -> (w.take(11) ++ w.drop(20)).mkString(" "))
+    for (exactPairs <- Seq(true, false); twice <- Seq(Set(1L), Set(1L, 2L))) {
+      val batch = text.toSeq.sorted.flatMap { case (id, t) =>
+        Seq.fill(if (twice(id)) 2 else 1)(Doc(Some(id), Some(t))) }
+      assert(model(Seq(batch)) === Outcome(Seq(1L, 2L), Nil))
+      val root = Files.createTempDirectory("graft_gate_twice").toString
+      assert(run(Seq(batch), exactPairs, root) === Outcome(Seq(1L, 2L), Nil), s"$exactPairs $twice")
+      assert(spark.read.parquet(s"$root/index").select("doc_id").collect()
+        .map(_.getLong(0)).sorted.toSeq === Seq(1L, 2L))
+    }
+  }
+
+  test("a row without a doc_id is rejected as null_id") {
+    val batch = Seq(Doc(None, Some("a b c d")), Doc(Some(1L), Some("a b c d")), Doc(None, None))
+    val want = Outcome(Seq(1L), Seq.fill(2)(Rejection(None, "null_id", None, 0L)))
+    assert(model(Seq(batch)) === want)
+    for (exactPairs <- Seq(true, false)) assert(run(Seq(batch), exactPairs) === want)
+  }
 }
 
 object DedupGatePropertySpec {
@@ -68,7 +97,7 @@ object DedupGatePropertySpec {
     StructField("doc_id", LongType), StructField("text", StringType)))
 
   final case class Doc(id: Option[Long], text: Option[String])
-  final case class Rejection(id: Long, reason: String, witness: Long, batch: Long)
+  final case class Rejection(id: Option[Long], reason: String, witness: Option[Long], batch: Long)
   final case class Outcome(accepted: Seq[Long], rejected: Seq[Rejection])
 
   /** Spark's `split(trim(text), "\\s+")` on single-spaced text, then the
@@ -78,34 +107,32 @@ object DedupGatePropertySpec {
     if (w.length < 3) Set.empty else w.sliding(3).map(_.mkString(" ")).toSet
   }
 
-  /** The gate's Jaccard over shingle rows: postings are counted per row,
-    * so an id on m rows on one side and n on the other counts each common
-    * shingle m * n times, over the set sizes of one row each. */
-  private def jaccard(a: (Set[String], Int), b: (Set[String], Int)): Option[Double] = {
-    val common = (a._1 intersect b._1).size.toLong * a._2 * b._2
-    if (common == 0) None else Some(common.toDouble / (a._1.size + b._1.size - common))
+  /** Jaccard of two shingle sets that share at least one shingle. */
+  private def jaccard(a: Set[String], b: Set[String]): Option[Double] = {
+    val common = (a intersect b).size
+    if (common == 0) None else Some(common.toDouble / (a.size + b.size - common))
   }
 
-  /** id -> (shingles, rows) over the rows that have at least one shingle. */
-  private def shingleRows(rows: Seq[(Long, Option[String])]): Map[Long, (Set[String], Int)] =
-    rows.collect { case (id, Some(t)) if shingles(t).nonEmpty => id -> shingles(t) }
-      .groupBy(_._1).map { case (id, xs) => id -> (xs.head._2, xs.size) }
+  /** id -> shingles over the documents that have at least one shingle. */
+  private def shingleSets(rows: Seq[(Long, Option[String])]): Map[Long, Set[String]] =
+    rows.collect { case (id, Some(t)) if shingles(t).nonEmpty => id -> shingles(t) }.toMap
 
   def model(batches: Seq[Seq[Doc]]): Outcome = {
     var corpus = Vector.empty[(Long, Option[String])]
     val rejected = ArrayBuffer.empty[Rejection]
     batches.zipWithIndex.foreach { case (batch, b) =>
-      def reject(id: Long, reason: String, w: Long) = rejected += Rejection(id, reason, w, b)
-      // a null id matches no witness: the row takes part in nothing
-      val rows = batch.collect { case Doc(Some(id), t) => (id, t) }
+      def reject(id: Long, reason: String, w: Long) =
+        rejected += Rejection(Some(id), reason, Some(w), b)
+      batch.filter(_.id.isEmpty).foreach(_ => rejected += Rejection(None, "null_id", None, b))
+      val rows = batch.collect { case Doc(Some(id), t) => (id, t) }.distinct
       val first = rows.groupMapReduce(_._2)(_._1)(math.min)
       val (live, copies) = rows.partition { case (id, t) => first(t) == id }
       copies.foreach { case (id, t) => reject(id, "exact_batch", first(t)) }
       val corpusFirst = corpus.groupMapReduce(_._2)(_._1)(math.min)
       live.foreach { case (id, t) => corpusFirst.get(t).foreach(reject(id, "exact_corpus", _)) }
       val exactCorpus = live.collect { case (id, t) if corpusFirst.contains(t) => id }.toSet
-      val sh = shingleRows(live.filterNot(r => exactCorpus(r._1)))
-      val indexed = shingleRows(corpus)
+      val sh = shingleSets(live.filterNot(r => exactCorpus(r._1)))
+      val indexed = shingleSets(corpus)
       val nearCorpus = sh.flatMap { case (a, sa) =>
         val ws = indexed.collect { case (c, sc) if jaccard(sa, sc).exists(_ >= Threshold) => c }
         ws.minOption.map(a -> _)
@@ -189,7 +216,7 @@ object DedupGatePropertySpec {
       b.count(_.id.nonEmpty))),
     "a copy of a document rejected in an earlier batch" -> { (bs, o) =>
       val rejectedText = (for {
-        rj <- o.rejected; d <- bs(rj.batch.toInt) if d.id.contains(rj.id)
+        rj <- o.rejected if rj.id.nonEmpty; d <- bs(rj.batch.toInt) if d.id == rj.id
       } yield rj.batch -> d.text).toSet
       bs.zipWithIndex.exists { case (b, i) =>
         b.exists(d => rejectedText.exists { case (j, t) => j < i && t == d.text }) }
@@ -202,14 +229,13 @@ object DedupGatePropertySpec {
       val text = bs.flatten.collect { case Doc(Some(id), Some(t)) => id -> t }.toMap
       val nearCorpus = o.rejected.filter(_.reason == "near_dup_corpus")
       nearCorpus.exists(n => bs(n.batch.toInt).exists { case Doc(id, t) =>
-        id.exists(i => i < n.id && !nearCorpus.exists(_.id == i)) && t.exists(u =>
-          jaccard((shingles(u), 1), (shingles(text(n.id)), 1)).exists(_ >= Threshold)) })
+        id.exists(i => n.id.exists(i < _) && !nearCorpus.exists(_.id.contains(i))) &&
+          t.exists(u => jaccard(shingles(u), shingles(text(n.id.get))).exists(_ >= Threshold)) })
     },
     "a near-duplicate chain whose witness is no neighbour" -> { (bs, o) =>
       val text = bs.flatten.collect { case Doc(Some(id), Some(t)) => id -> t }.toMap
       o.rejected.exists(n => n.reason == "near_dup_batch" &&
-        jaccard((shingles(text(n.id)), 1), (shingles(text(n.witness)), 1))
-          .forall(_ < Threshold))
+        jaccard(shingles(text(n.id.get)), shingles(text(n.witness.get))).forall(_ < Threshold))
     })
 
   val NearCases: Set[String] = Set("an exact copy of a corpus near-duplicate",

@@ -2,6 +2,14 @@
 # Local replica of the full round gate: tests, smoke, oracle, bench.
 set -e
 cd "$(dirname "$0")/.."
+echo "=== entry points ==="
+# the only mains in src/main are the driver contract (graft.Bench, Verify,
+# Smoke) and the diagnostic tools (graft.tools.*): a scratch probe main
+# elsewhere fails the gate
+stray=$(grep -rlE '^[[:space:]]*def main\(|extends App\b' src/main/scala \
+  | grep -vE '^src/main/scala/graft/((Bench|Verify|Smoke)\.scala|tools/)' || true)
+[ -z "$stray" ] || { echo "def main outside graft.{Bench,Verify,Smoke} and graft.tools: $stray"; exit 1; }
+echo "ok"
 echo "=== sbt test ==="
 sbt -batch test 2>&1 | grep -E "Tests:|Passed:"
 echo "=== benchmark harness build ==="
