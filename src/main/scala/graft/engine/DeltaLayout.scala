@@ -491,15 +491,10 @@ class DeltaLayoutTable(spark: SparkSession, root: String) extends VersionedTable
   /** Stage `df` as data files under the table root with commit-unique
     * names (write to scratch, move the part files in — the two-phase
     * stage Delta writers use: data lands invisible, only the log commit
-    * publishes it). */
-  private def rmDir(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(rmDir)
-    f.delete(); ()
-  }
-
-  /** Returns (name, size bytes, modification time ms) per staged file —
-    * the protocol-required add-action facts (ADVICE r12: strict
-    * ecosystem readers reject add actions missing them at parse time). */
+    * publishes it). Returns (name, size bytes, modification time ms) per
+    * staged file — the protocol-required add-action facts (ADVICE r12:
+    * strict ecosystem readers reject add actions missing them at parse
+    * time). */
   private def stageDataFiles(df: DataFrame, commit: Long): Seq[(String, Long, Long)] = {
     Files.createDirectories(Paths.get(root)) // first commit to a fresh path
     val tmp = Files.createTempDirectory("graft_dlw").toString
@@ -512,7 +507,7 @@ class DeltaLayoutTable(spark: SparkSession, root: String) extends VersionedTable
         Files.move(f.toPath, dst)
         (name, Files.size(dst), Files.getLastModifiedTime(dst).toMillis)
       }.toSeq
-    rmDir(new java.io.File(tmp)) // scratch (_SUCCESS/.crc) never accumulates
+    Scratch.rmTree(new java.io.File(tmp)) // scratch (_SUCCESS/.crc) never accumulates
     names
   }
 
@@ -670,7 +665,7 @@ class DeltaLayoutTable(spark: SparkSession, root: String) extends VersionedTable
           StandardCopyOption.REPLACE_EXISTING)
       }
     }
-    rmDir(new java.io.File(tmp))
+    Scratch.rmTree(new java.io.File(tmp))
     val lcTmp = logDir.resolve("_last_checkpoint.tmp")
     Files.writeString(lcTmp,
       s"""{"version":$n,"size":$total${if (p > 1) s""","parts":$p""" else ""}}""")

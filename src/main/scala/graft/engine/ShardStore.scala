@@ -184,10 +184,7 @@ class ShardStore(spark: SparkSession, root: String) {
     val deadDirs = entries.filter(f => f.isDirectory && !live.contains(f.getName))
     val deadClaims = entries.filter(f => f.isFile && f.getName.endsWith(".claim") &&
       !live.contains(f.getName.stripSuffix(".claim")))
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete(); ()
-    }
-    deadDirs.foreach(rm)
+    deadDirs.foreach(Scratch.rmTree)
     deadClaims.foreach(_.delete())
     // a crashed writer's stale manifest lock would block every future
     // swap; single-writer startup is the one safe point to clear it

@@ -121,14 +121,6 @@ class Snapshot(spark: SparkSession, root: String) extends VersionedTable {
     * one more published version, so it too can be undone. */
   def rollback(version: String): String = publish(readAsOf(version))
 
-  /** Recursive delete shared by [[vacuum]] and [[recoverOrphans]] —
-    * failures are deliberately ignored (both callers tolerate leftovers;
-    * the next run retries). */
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete(); ()
-  }
-
   /** History retention: delete published versions older than the newest
     * `keep` (the CURRENT version is always among the kept). Without this
     * the store grows one full table copy per mutation — at 100 TB that
@@ -156,7 +148,7 @@ class Snapshot(spark: SparkSession, root: String) extends VersionedTable {
         val old = entries.filter(f =>
           f.isDirectory && f.getName.startsWith("v_") &&
             versionOf(f.getName).exists(_ < cutoff))
-        old.foreach(deleteRecursively)
+        old.foreach(Scratch.rmTree)
         // numeric version order: lexicographic would put v_10 before v_2
         old.map(_.getName).toSeq
           .sortBy(n => versionOf(n).getOrElse(Long.MaxValue))
@@ -182,7 +174,7 @@ class Snapshot(spark: SparkSession, root: String) extends VersionedTable {
     // either way, and published data dirs are never touched
     val claims = entries.filter(f => f.isFile && f.getName.endsWith(".claim") &&
       versionOf(f.getName).isDefined)
-    orphans.foreach(deleteRecursively)
+    orphans.foreach(Scratch.rmTree)
     claims.foreach(_.delete())
     // numeric version order, like vacuum (listFiles order is unspecified)
     orphans.map(_.getName).toSeq.sortBy(n => versionOf(n).getOrElse(Long.MaxValue))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.engine.{Scope, Tables}
+import graft.engine.{Scope, Scratch, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -84,7 +84,7 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  // -------------------------------------------------------------- n-gram Jaccard
+  // -------------------------------------------------------------- shingle index
 
   /** The (doc_id, sh) shingle-set index, lazy. A site that reads it more
     * than once materializes it through `Scope.checkpoint` (shingling
@@ -97,6 +97,119 @@ object Dedup {
       .select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
       .filter(size(col("words")) >= 3)
       .select(col("doc_id"), shinglesFromWords(col("words")).as("sh"))
+
+  // ------------------------------------------------- pair-scoring kernel
+
+  /** A shingle-set overlap score. `ofCounts` reads the postings join's
+    * (common, |A|, |B|), `ofSets` two full sets: the same double for the
+    * same pair. `prefixPairs` joins postings `p` and their [[prefixOf]]. */
+  private sealed abstract class Overlap(val name: String) {
+    def ofCounts(common: Column, sa: Column, sb: Column): Column
+    def ofSets(a: Column, b: Column): Column
+    def prefixPairs(p: DataFrame, prefix: DataFrame): DataFrame
+
+    /** `keys` of the pairs scoring >= threshold, with the 6 dp score. */
+    def keep(pairs: DataFrame, score: Column, threshold: Double, keys: String*): DataFrame =
+      pairs.withColumn(name, score).filter(col(name) >= threshold)
+        .select(keys.map(col) :+ round(col(name), 6).as(name): _*)
+
+    /** The full-set verification of (doc_a, doc_b, sh_a, sh_b) candidates. */
+    def verify(cands: DataFrame, threshold: Double): DataFrame =
+      keep(cands, ofSets(col("sh_a"), col("sh_b")), threshold, "doc_a", "doc_b")
+  }
+
+  private case object JaccardScore extends Overlap("jaccard") {
+    def ofCounts(common: Column, sa: Column, sb: Column): Column =
+      common.cast("double") / (sa + sb - common)
+    def ofSets(a: Column, b: Column): Column = jaccard(a, b)
+    // a pair over t shares a shingle inside BOTH prefixes
+    def prefixPairs(p: DataFrame, prefix: DataFrame): DataFrame =
+      prefix.select(col("doc_id").as("doc_a"), col("shingle"))
+        .join(prefix.select(col("doc_id").as("doc_b"), col("shingle")), Seq("shingle"))
+        .filter(col("doc_a") < col("doc_b"))
+        .select("doc_a", "doc_b").distinct()
+  }
+
+  /** |A∩B| / min(|A|, |B|). */
+  private case object ContainmentScore extends Overlap("containment") {
+    def ofCounts(common: Column, sa: Column, sb: Column): Column =
+      common.cast("double") / least(sa, sb)
+    def ofSets(a: Column, b: Column): Column =
+      size(array_intersect(a, b)).cast("double") / least(size(a), size(b)).cast("double")
+    // only the SMALLER side's prefix bounds the pair, so it joins the
+    // other side's full postings; an equal-size pair comes from both
+    def prefixPairs(p: DataFrame, prefix: DataFrame): DataFrame =
+      prefix.select(col("doc_id").as("doc_a"), col("n_sh").as("na"), col("shingle"))
+        .join(p.select(col("doc_id").as("doc_b"), col("n_sh").as("nb"), col("shingle")),
+          Seq("shingle"))
+        .filter(col("na") < col("nb") ||
+          (col("na") === col("nb") && col("doc_a") =!= col("doc_b")))
+        .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
+          greatest(col("doc_a"), col("doc_b")).as("doc_b"))
+        .distinct()
+  }
+
+  /** (id, extra..., n, shingle) postings of a (doc_id, sh) index. The set
+    * size n RIDES THE POSTINGS (8 bytes a row): joining it back after the
+    * pair count cost two extra exchanges over the pair list. */
+  private def postings(sh: DataFrame, id: String, n: String, extra: Column*): DataFrame =
+    sh.select((col("doc_id").as(id) +: extra) ++
+      Seq(size(col("sh")).cast("long").as(n), explode(col("sh")).as("shingle")): _*)
+
+  /** The postings join: (doc_a, sa) postings `a` against (doc_b, sb)
+    * postings `b`, joined rows filtered by `pairs`, common shingles counted
+    * per `by` group (first() is exact: a size is constant per document),
+    * then scored. Complete for any threshold > 0; costs Σ freq_a·freq_b. */
+  private def postingsJoin(score: Overlap, a: DataFrame, b: DataFrame, pairs: Column,
+      threshold: Double, by: String*): DataFrame =
+    score.keep(a.join(b, Seq("shingle")).filter(pairs)
+        .groupBy(by.map(col): _*)
+        .agg(count(lit(1)).as("common"), first(col("sa")).as("sa"), first(col("sb")).as("sb")),
+      score.ofCounts(col("common"), col("sa"), col("sb")), threshold, by: _*)
+
+  /** The rarest-first prefix of (doc_id, n_sh, shingle) postings (PPJoin,
+    * Xiao et al., WWW 2008): shingles ranked by document frequency, then
+    * by the shingle, cut after n_sh - c + 1, c the least integer with
+    * c / n_sh >= t. Each score is at most common / |X| for a set X of the
+    * pair (either set for Jaccard, the smaller for containment), so an
+    * accepted pair shares a shingle inside X's prefix. c uses the
+    * verifier's own double division: ceil(n_sh * t) overshoots where the
+    * product rounds up (25 * 0.56 = 14.000000000000002). */
+  private def prefixOf(p: DataFrame, threshold: Double): DataFrame = {
+    val dfreq = p.groupBy("shingle").agg(count(lit(1)).as("df"))
+    val wr = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("shingle"))
+    val n = col("n_sh")
+    val c = ceil(n * threshold)
+    val minCommon =
+      when((c - 1) / n >= threshold, c - 1).when(c / n >= threshold, c).otherwise(c + 1)
+    p.join(dfreq, Seq("shingle"))
+      .withColumn("rn", row_number().over(wr))
+      .filter(col("rn") <= n - minCommon + 1)
+  }
+
+  /** (doc_a, doc_b) candidates with each side's `set` column joined back
+    * as `<set>_a` / `<set>_b`: the full shingle sets for [[Overlap.verify]]. */
+  private def withSets(pairs: DataFrame, a: DataFrame, b: DataFrame,
+      set: String = "sh"): DataFrame =
+    pairs
+      .join(a.select(col("doc_id").as("doc_a"), col(set).as(s"${set}_a")), Seq("doc_a"))
+      .join(b.select(col("doc_id").as("doc_b"), col(set).as(s"${set}_b")), Seq("doc_b"))
+
+  /** The self-join arms over a (doc_id, sh) index differ only in their
+    * candidates: pairs sharing a shingle, a prefix shingle or a band. */
+  private def invertedArm(score: Overlap, sh: DataFrame, threshold: Double): DataFrame =
+    postingsJoin(score, postings(sh, "doc_a", "sa"), postings(sh, "doc_b", "sb"),
+      col("doc_a") < col("doc_b"), threshold, "doc_a", "doc_b")
+
+  private def prefixArm(score: Overlap, sh: DataFrame, threshold: Double): DataFrame = {
+    val p = postings(sh, "doc_id", "n_sh")
+    score.verify(withSets(score.prefixPairs(p, prefixOf(p, threshold)), sh, sh), threshold)
+  }
+
+  private def lshArm(score: Overlap, sh: DataFrame, threshold: Double): DataFrame =
+    score.verify(minhashCandidatesSigs(Scope.checkpoint(sigsOf(sh))), threshold)
+
+  // -------------------------------------------------------------- n-gram Jaccard
 
   /** EXACT all-pairs n-gram Jaccard via an inverted shingle index: explode
     * (doc, shingle), self-join on shingle, count common shingles per pair,
@@ -113,61 +226,18 @@ object Dedup {
     * array_intersect: 6x slower at sf0.1 AND missed cross-lang dups — kept
     * as a design note. */
   def ngramNearDups(docs: DataFrame, threshold: Double): DataFrame =
-    ngramNearDupsIdx(Scope.checkpoint(shingleIndex(docs)), threshold)
+    invertedArm(JaccardScore, Scope.checkpoint(shingleIndex(docs)), threshold)
 
-  private def ngramNearDupsIdx(sh: DataFrame, threshold: Double): DataFrame = {
-    // set sizes RIDE THE POSTINGS (8 bytes a row) instead of joining back
-    // after the pair count — the [[gateFusedExactPairs]] shape: the two
-    // size-joins this replaces were each a full extra exchange over the
-    // pair list; first() is exact because sa/sb are constant per doc
-    val postings = sh.select(col("doc_id"),
-      size(col("sh")).cast("long").as("n_sh"), explode(col("sh")).as("shingle"))
-    postings.select(col("doc_id").as("doc_a"), col("n_sh").as("sa"), col("shingle"))
-      .join(postings.select(col("doc_id").as("doc_b"), col("n_sh").as("sb"),
-        col("shingle")), Seq("shingle"))
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy("doc_a", "doc_b")
-      .agg(count(lit(1)).as("common"),
-        first(col("sa")).as("sa"), first(col("sb")).as("sb"))
-      .withColumn("jaccard",
-        col("common").cast("double") / (col("sa") + col("sb") - col("common")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
-  }
-
-  /** EXACT n-gram Jaccard with PREFIX FILTERING (PPJoin family): rank each
-    * doc's shingles rarest-first by global document frequency; two docs
-    * with Jaccard >= t MUST share a shingle among their first
-    * |d| - ceil(t*|d|) + 1 ranked shingles, so only those prefix postings
-    * generate candidates; candidates are then verified with the full sets.
-    * Same results as [[ngramNearDups]] (equality spec'd in DedupSpec); the
+  /** EXACT n-gram Jaccard with PREFIX FILTERING (PPJoin family): two docs
+    * with Jaccard >= t MUST share a shingle among the rarest-first
+    * prefixes of [[prefixOf]], so only those prefix postings generate
+    * candidates; candidates are then verified with the full sets. Same
+    * results as [[ngramNearDups]] (equality spec'd in DedupSpec); the
     * extra document-frequency ranking pays off once posting lists are long
     * (high-scale / saturated-vocabulary corpora), and costs two extra
     * shuffles when they are not — pick by corpus profile (SCALE.md). */
   def ngramNearDupsPrefix(docs: DataFrame, threshold: Double): DataFrame =
-    ngramNearDupsPrefixIdx(Scope.checkpoint(shingleIndex(docs)), threshold)
-
-  private def ngramNearDupsPrefixIdx(sh: DataFrame, threshold: Double): DataFrame = {
-    val postings = sh.select(col("doc_id"), size(col("sh")).cast("long").as("n_sh"),
-      explode(col("sh")).as("shingle"))
-    val dfreq = postings.groupBy("shingle").agg(count(lit(1)).as("df"))
-    val wr = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("shingle"))
-    val prefix = postings
-      .join(dfreq, Seq("shingle"))
-      .withColumn("rn", row_number().over(wr))
-      .filter(col("rn") <= col("n_sh") - ceil(col("n_sh") * threshold) + 1)
-      .select(col("doc_id"), col("shingle"))
-    val cands = prefix.select(col("doc_id").as("doc_a"), col("shingle"))
-      .join(prefix.select(col("doc_id").as("doc_b"), col("shingle")), Seq("shingle"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
-    cands
-      .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
-      .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
-      .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
-  }
+    prefixArm(JaccardScore, Scope.checkpoint(shingleIndex(docs)), threshold)
 
   // ------------------------------------------------- strategy auto-selection
 
@@ -200,19 +270,6 @@ object Dedup {
     * (informational only). */
   private val StatsSampleDocs = 20000L
 
-  /** Single source of truth for the stats sampling rule — shared by
-    * [[ngramStats]] and [[ngramNearDupsAuto]]'s index-reuse decision so
-    * the two can never drift. */
-  private def sampleFraction(nDocs: Long): Double =
-    if (nDocs <= StatsSampleDocs) 1.0 else StatsSampleDocs.toDouble / nDocs
-
-  def ngramStats(docs: DataFrame): NgramStats = {
-    val nDocs = docs.count()
-    val f = sampleFraction(nDocs)
-    if (f >= 1.0) ngramStatsIdx(Scope.checkpoint(shingleIndex(docs)), nDocs, 1.0)
-    else ngramStatsSampled(docs, nDocs, f)
-  }
-
   /** Stats over a doc-id-hash sample. Sampling must be a pure function of
     * the ROW, not of the partitioning: df.sample's Bernoulli draw depends
     * on split boundaries, so the stats — and with them the strategy
@@ -227,35 +284,49 @@ object Dedup {
     * error below 1e-9 of the fraction. */
   private val SampleModulus = 1L << 30
 
-  private def ngramStatsSampled(docs: DataFrame, nDocs: Long, f: Double): NgramStats = {
-    val threshold = math.max(1L, (f * SampleModulus).toLong)
-    val fReal = threshold.toDouble / SampleModulus
-    ngramStatsIdx(Scope.checkpoint(shingleIndex(
-      docs.filter(pmod(xxhash64(col("doc_id")), lit(SampleModulus)) < lit(threshold)))),
-      nDocs, fReal)
-  }
+  /** The checkpointed index the stats read, and the fraction of documents
+    * it holds: the full index (exactly 1.0, which no sample reaches) up to
+    * [[StatsSampleDocs]] documents, else a doc-hash sample's. */
+  private def statsIndex(docs: DataFrame, nDocs: Long): (DataFrame, Double) =
+    if (nDocs <= StatsSampleDocs) (Scope.checkpoint(shingleIndex(docs)), 1.0)
+    else {
+      val cut = math.max(1L, (StatsSampleDocs.toDouble / nDocs * SampleModulus).toLong)
+      (Scope.checkpoint(shingleIndex(
+        docs.filter(pmod(xxhash64(col("doc_id")), lit(SampleModulus)) < lit(cut)))),
+        cut.toDouble / SampleModulus)
+    }
 
-  private def ngramStatsIdx(sh: DataFrame, nDocs: Long, f: Double): NgramStats = {
-    val dfreq = sh.select(explode(col("sh")).as("shingle"))
-      .groupBy("shingle").agg(count(lit(1)).as("df"))
+  def ngramStats(docs: DataFrame): NgramStats = {
+    val nDocs = docs.count()
+    val (sh, f) = statsIndex(docs, nDocs)
+    val dfreq = docFreq(sh)
       .localCheckpoint() // read twice (main stats + head share), tiny table
     val r = dfreq.agg(
       count(lit(1)).as("n_shingles"),
       sum(col("df")).as("n_postings"),
-      sum(col("df").cast("double") * (col("df") - 1) / 2).as("est_pairs"),
+      dfPairs.as("est_pairs"),
       expr("approx_percentile(df, 0.5)").as("p50"),
       expr("approx_percentile(df, 0.99)").as("p99"),
       expr("approx_percentile(df, 0.999)").as("p999")).head()
     if (r.isNullAt(2)) // empty corpus: the sums/percentiles aggregate to NULL
       return NgramStats(nDocs, 0L, 0L, 0.0, 0.0, 0.0, 0.0)
     val estPairs = r.getDouble(2) / (f * f)
-    val headPairs = dfreq.filter(col("df") >= r.getLong(5))
-      .agg(coalesce(sum(col("df").cast("double") * (col("df") - 1) / 2), lit(0.0)))
-      .head().getDouble(0) / (f * f)
     NgramStats(nDocs, r.getLong(0), r.getLong(1), estPairs,
-      r.getLong(3).toDouble, r.getLong(4).toDouble,
-      if (estPairs == 0) 0.0 else headPairs / estPairs)
+      r.getLong(3).toDouble, r.getLong(4).toDouble, headShare(dfreq, r.getLong(5), estPairs, f))
   }
+
+  /** (shingle, df): each shingle's document frequency in an index. */
+  private def docFreq(sh: DataFrame): DataFrame =
+    sh.select(explode(col("sh")).as("shingle")).groupBy("shingle").agg(count(lit(1)).as("df"))
+
+  /** Σ df·(df-1)/2 over (shingle, df) rows: the pairs the postings join scores. */
+  private val dfPairs = sum(col("df").cast("double") * (col("df") - 1) / 2)
+
+  /** The share of `estPairs` carried by the shingles with df >= `p999`. */
+  private def headShare(dfreq: DataFrame, p999: Long, estPairs: Double, f: Double): Double =
+    if (estPairs == 0) 0.0
+    else dfreq.filter(col("df") >= p999).agg(coalesce(dfPairs, lit(0.0)))
+      .head().getDouble(0) / (f * f) / estPairs
 
   /** Strategy rule, calibrated on crossovers measured with an in-memory
     * multiplier of the sf0.1 corpus that has since been removed (1x/10x/30x:
@@ -273,8 +344,14 @@ object Dedup {
     *    exact Jaccard verification of band-bucket candidates. */
   def chooseNgramStrategy(st: NgramStats,
       pairBudgetPerDoc: Double = 512.0): NgramStrategy =
-    if (st.pairsPerDoc <= pairBudgetPerDoc) NgramInverted
-    else if (st.headPairsShare >= 0.5) NgramPrefix
+    strategyRule(st.pairsPerDoc, pairBudgetPerDoc)(st.headPairsShare)
+
+  /** [[chooseNgramStrategy]]'s rule; `headShare` is evaluated only over
+    * budget, where the router's lazy stats pay for it. */
+  private def strategyRule(pairsPerDoc: Double, pairBudgetPerDoc: Double)(
+      headShare: => Double): NgramStrategy =
+    if (pairsPerDoc <= pairBudgetPerDoc) NgramInverted
+    else if (headShare >= 0.5) NgramPrefix
     else NgramLsh
 
   /** N-gram near-dup detection with strategy AUTO-SELECTION from cheap
@@ -291,41 +368,22 @@ object Dedup {
     * oracle gate) can assert WHICH branch ran rather than trusting logs. */
   def ngramNearDupsAutoTagged(docs: DataFrame, threshold: Double,
       pairBudgetPerDoc: Double = 512.0): (DataFrame, NgramStrategy) =
-    routeOverShingles(docs, threshold, pairBudgetPerDoc, "ngram",
-      ngramNearDupsIdx, ngramNearDupsPrefixIdx, minhashNearDupsIdx)
+    routeOverShingles(docs, threshold, pairBudgetPerDoc, JaccardScore)
 
-  /** ONE router skeleton for every shingle-pair family (review: the
-    * Jaccard and containment routers were verbatim copies that had to
-    * evolve in lockstep — the pair-budget rule, the sampling threshold,
-    * the shared-index reuse and the log format now live here once).
-    * Under the sampling threshold the stats pass and the chosen arm read
-    * the SAME full index — built (and checkpointed) once; above it,
-    * stats run on the doc-hash sample and the chosen arm re-shingles
-    * only its own input (the sample index is useless to it). */
+  /** The one router for both scores. Under the sampling threshold the
+    * stats pass and the chosen arm read the SAME full index, built (and
+    * checkpointed) once; above it, stats run on the doc-hash sample and
+    * the chosen arm re-shingles its own input. */
   private def routeOverShingles(docs: DataFrame, threshold: Double,
-      pairBudgetPerDoc: Double, what: String,
-      invertedIdx: (DataFrame, Double) => DataFrame,
-      prefixIdx: (DataFrame, Double) => DataFrame,
-      lshIdx: (DataFrame, Double) => DataFrame): (DataFrame, NgramStrategy) = {
+      pairBudgetPerDoc: Double, score: Overlap): (DataFrame, NgramStrategy) = {
     val nDocs = docs.count()
-    val f = sampleFraction(nDocs)
-    val sharedIdx = if (f >= 1.0) Some(Scope.checkpoint(shingleIndex(docs))) else None
-    // sampled path: correct by the REALIZED fraction (cut/modulus),
-    // exactly as [[ngramStatsSampled]] documents
-    val (statsIdx, fReal) = sharedIdx match {
-      case Some(idx) => (idx, 1.0)
-      case None =>
-        val cut = math.max(1L, (f * SampleModulus).toLong)
-        (Scope.checkpoint(shingleIndex(docs.filter(
-          pmod(xxhash64(col("doc_id")), lit(SampleModulus)) < lit(cut)))),
-          cut.toDouble / SampleModulus)
-    }
-    val strategy = routeStrategy(statsIdx, nDocs, fReal, pairBudgetPerDoc, what)
-    val idx = sharedIdx.getOrElse(Scope.checkpoint(shingleIndex(docs)))
+    val (statsIdx, f) = statsIndex(docs, nDocs)
+    val strategy = routeStrategy(statsIdx, nDocs, f, pairBudgetPerDoc, score.name)
+    val idx = if (f >= 1.0) statsIdx else Scope.checkpoint(shingleIndex(docs))
     val pairs = strategy match {
-      case NgramInverted => invertedIdx(idx, threshold)
-      case NgramPrefix => prefixIdx(idx, threshold)
-      case NgramLsh => lshIdx(idx, threshold)
+      case NgramInverted => invertedArm(score, idx, threshold)
+      case NgramPrefix => prefixArm(score, idx, threshold)
+      case NgramLsh => lshArm(score, idx, threshold)
     }
     (pairs, strategy)
   }
@@ -335,34 +393,24 @@ object Dedup {
     * checkpoint) settles the common case where the pair budget already
     * decides; only an over-budget corpus pays the p999 + head-share pair
     * of jobs that split prefix from LSH. Decision-identical to
-    * [[chooseNgramStrategy]] over [[ngramStatsIdx]] (same expressions,
-    * same sampling correction), asserted in DedupSpec — the full
-    * [[ngramStats]] remains the observability entry point. */
+    * [[chooseNgramStrategy]] over [[ngramStats]] (same rule, same
+    * expressions, same sampling correction), asserted in DedupSpec — the
+    * full [[ngramStats]] remains the observability entry point. */
   private def routeStrategy(sh: DataFrame, nDocs: Long, f: Double,
       pairBudgetPerDoc: Double, what: String): NgramStrategy = {
-    val dfreq = sh.select(explode(col("sh")).as("shingle"))
-      .groupBy("shingle").agg(count(lit(1)).as("df"))
-    val r = dfreq.agg(
-      sum(col("df").cast("double") * (col("df") - 1) / 2).as("est_pairs")).head()
+    val dfreq = docFreq(sh)
+    val r = dfreq.agg(dfPairs.as("est_pairs")).head()
     val estPairs = if (r.isNullAt(0)) 0.0 else r.getDouble(0) / (f * f)
     val pairsPerDoc = if (nDocs == 0) 0.0 else estPairs / nDocs
-    if (pairsPerDoc <= pairBudgetPerDoc) {
-      log.info(s"$what dedup strategy=inverted nDocs=$nDocs " +
-        f"pairsPerDoc=$pairsPerDoc%.1f budget=$pairBudgetPerDoc")
-      NgramInverted
-    } else {
+    lazy val share = {
       val ck = dfreq.localCheckpoint()
-      val p999 = ck.agg(expr("approx_percentile(df, 0.999)")).head().getLong(0)
-      val headPairs = ck.filter(col("df") >= p999)
-        .agg(coalesce(sum(col("df").cast("double") * (col("df") - 1) / 2), lit(0.0)))
-        .head().getDouble(0) / (f * f)
-      val headShare = if (estPairs == 0) 0.0 else headPairs / estPairs
-      val strategy = if (headShare >= 0.5) NgramPrefix else NgramLsh
-      log.info(s"$what dedup strategy=${strategy.name} nDocs=$nDocs " +
-        f"pairsPerDoc=$pairsPerDoc%.1f headPairsShare=$headShare%.3f " +
-        s"budget=$pairBudgetPerDoc")
-      strategy
+      headShare(ck, ck.agg(expr("approx_percentile(df, 0.999)")).head().getLong(0), estPairs, f)
     }
+    val strategy = strategyRule(pairsPerDoc, pairBudgetPerDoc)(share)
+    val head = if (strategy == NgramInverted) "" else f"headPairsShare=$share%.3f "
+    log.info(s"$what dedup strategy=${strategy.name} nDocs=$nDocs " +
+      f"pairsPerDoc=$pairsPerDoc%.1f " + head + s"budget=$pairBudgetPerDoc")
+    strategy
   }
 
   private val log = org.slf4j.LoggerFactory.getLogger("graft.operators.Dedup")
@@ -411,7 +459,7 @@ object Dedup {
 
   /** LSH candidate pairs: docs sharing any band of the signature. */
   def minhashCandidates(docs: DataFrame): DataFrame =
-    minhashCandidatesIdx(Scope.checkpoint(shingleIndex(docs)))
+    minhashCandidatesSigs(Scope.checkpoint(sigsOf(shingleIndex(docs))))
 
   /** (doc_id, sh, sig), lazy. Codegen'd MinHashSig: one compiled loop
     * instead of K x |sh| interpreted lambda evaluations. Signing is the CPU
@@ -432,20 +480,18 @@ object Dedup {
         bnd => concat_ws(",", slice(col("sig"), bnd * RowsPerBand + 1, lit(RowsPerBand))))))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_key")
 
-  private def minhashCandidatesIdx(sh: DataFrame): DataFrame =
-    minhashCandidatesSigs(Scope.checkpoint(sigsOf(sh)))
-
-  private[graft] def minhashCandidatesSigs(sigs: DataFrame): DataFrame = {
-    val bands = bandsOf(sigs)
-    val pairs = bands.select(col("band"), col("band_key"), col("doc_id").as("doc_a"))
-      .join(bands.select(col("band"), col("band_key"), col("doc_id").as("doc_b")),
+  /** The one band-bucket candidate join: distinct (doc_a, doc_b) pairs,
+    * `ls` doc against `rs` doc, that share any band of the signature and
+    * pass `pairs`. */
+  private def bandPairs(ls: DataFrame, rs: DataFrame, pairs: Column): DataFrame =
+    bandsOf(ls).select(col("band"), col("band_key"), col("doc_id").as("doc_a"))
+      .join(bandsOf(rs).select(col("band"), col("band_key"), col("doc_id").as("doc_b")),
         Seq("band", "band_key"))
-      .filter(col("doc_a") < col("doc_b"))
+      .filter(pairs)
       .select("doc_a", "doc_b").distinct()
-    pairs
-      .join(sigs.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
-      .join(sigs.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
-  }
+
+  private[graft] def minhashCandidatesSigs(sigs: DataFrame): DataFrame =
+    withSets(bandPairs(sigs, sigs, col("doc_a") < col("doc_b")), sigs, sigs)
 
   /** Estimator-quality observability for the MinHash family: every
     * band-bucket candidate pair carries its signature ESTIMATE
@@ -472,9 +518,7 @@ object Dedup {
   /** [[qMinhashEst]]'s estimator frame over any (doc_id, text) corpus. */
   def minhashEstimates(docs0: DataFrame): DataFrame = {
     val sigs = Scope.checkpoint(sigsOf(shingleIndex(docs0)))
-    minhashCandidatesSigs(sigs)
-      .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")), Seq("doc_a"))
-      .join(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")), Seq("doc_b"))
+    withSets(minhashCandidatesSigs(sigs), sigs, sigs, "sig")
       .withColumn("sig_match", expr(
         s"size(filter(sequence(0, ${MinhashK - 1}), i -> sig_a[i] = sig_b[i]))").cast("long"))
       .withColumn("est", round(col("sig_match").cast("double") / MinhashK, 6))
@@ -492,16 +536,11 @@ object Dedup {
     * exact-Jaccard verification. Same output shape as [[qDedupNgram]] so
     * the two paths are directly comparable. */
   def minhashNearDups(docs: DataFrame, threshold: Double): DataFrame =
-    minhashNearDupsIdx(shingleIndex(docs), threshold)
+    lshArm(JaccardScore, shingleIndex(docs), threshold)
 
-  private def minhashNearDupsIdx(sh: DataFrame, threshold: Double): DataFrame =
-    verifyPairs(minhashCandidatesIdx(sh), threshold)
-
-  private[graft] def verifyPairs(cands: DataFrame, threshold: Double): DataFrame =
-    cands
-      .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
+  /** [[minhashNearDups]] over (doc_id, sh, sig) rows. */
+  private[graft] def minhashNearDupsSigs(sigs: DataFrame, threshold: Double): DataFrame =
+    JaccardScore.verify(minhashCandidatesSigs(sigs), threshold)
 
   def qDedupMinhash(s: SparkSession, d: String): DataFrame =
     minhashNearDups(documents(s, d), 0.5).orderBy("doc_a", "doc_b")
@@ -522,31 +561,12 @@ object Dedup {
     * check: bounded as long as ONE side is small (the probe batch). */
   def crossNearDupsExact(left: DataFrame, right: DataFrame,
       threshold: Double): DataFrame =
-    crossNearDupsExactIdx(shingleIndex(left), shingleIndex(right), threshold)
-
-  private[graft] def crossNearDupsExactIdx(la: DataFrame, ra: DataFrame,
-      threshold: Double): DataFrame = {
-    // set sizes ride the postings — same two-exchange removal as
-    // [[ngramNearDupsIdx]] / [[gateFusedExactPairs]]
-    val lp = la.select(col("doc_id").as("doc_a"),
-      size(col("sh")).cast("long").as("sa"), explode(col("sh")).as("shingle"))
-    val rp = ra.select(col("doc_id").as("doc_b"),
-      size(col("sh")).cast("long").as("sb"), explode(col("sh")).as("shingle"))
-    // NO join hint here (round 14, measured): the probe side is bounded
-    // by contract (a micro-batch / the pinned q_cross_dedup prefix) and
-    // the planner already auto-BROADCASTS it — plans/r14/
-    // q_cross_dedup_before.txt shows BroadcastHashJoin, the best strategy
-    // (guide §3.1: no shuffle of either side). A shuffle_hash hint was
-    // tried and REVERTED: hints override the auto-broadcast and would
-    // force two exchanges where none are needed.
-    lp.join(rp, Seq("shingle"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("common"),
-        first(col("sa")).as("sa"), first(col("sb")).as("sb"))
-      .withColumn("jaccard",
-        col("common").cast("double") / (col("sa") + col("sb") - col("common")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
-  }
+    // NO join hint (round 14, measured): the probe side is bounded by
+    // contract and the planner auto-BROADCASTS it (plans/r14/
+    // q_cross_dedup_before.txt), shuffling neither side. A shuffle_hash
+    // hint overrode that with two exchanges and was reverted.
+    postingsJoin(JaccardScore, postings(shingleIndex(left), "doc_a", "sa"),
+      postings(shingleIndex(right), "doc_b", "sb"), lit(true), threshold, "doc_a", "doc_b")
 
   /** ONE-JOIN exact near-dup pass for a dedup-gate micro-batch: the batch
     * postings are exploded ONCE and joined against the union of the batch
@@ -572,30 +592,16 @@ object Dedup {
           .select(col("doc_id"), col("sh")).withColumn("is_corpus", lit(true)))
       case None => batchSh.withColumn("is_corpus", lit(false))
     }
-    // set sizes RIDE THE POSTINGS (8 bytes a row) instead of joining back
-    // after the count: the two size-joins this replaces were each a full
-    // extra shuffle stage over the pair list — first() is exact because
-    // sa/sb are constant within a (doc, is_corpus) group
-    val lp = batchSh.select(col("doc_id").as("doc_a"),
-      size(col("sh")).cast("long").as("sa"), explode(col("sh")).as("shingle"))
-    val rp = right.select(col("doc_id").as("doc_b"), col("is_corpus"),
-      size(col("sh")).cast("long").as("sb"), explode(col("sh")).as("shingle"))
     // SHUFFLE_HASH with the BATCH postings as the build side (guide §3.1):
     // the batch is micro-batch-bounded at any corpus scale, so its hash
     // table per partition stays bounded while the probe side (batch UNION
     // stored corpus index) grows with the corpus — sort-merge would sort
     // BOTH exploded posting lists per batch, paying the corpus-side sort
     // every micro-batch forever
-    lp.hint("shuffle_hash").join(rp, Seq("shingle"))
-      .filter(col("is_corpus") || col("doc_a") < col("doc_b"))
-      .groupBy("doc_a", "doc_b", "is_corpus")
-      .agg(count(lit(1)).as("common"),
-        first(col("sa")).as("sa"), first(col("sb")).as("sb"))
-      .withColumn("jaccard",
-        col("common").cast("double") / (col("sa") + col("sb") - col("common")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("is_corpus"),
-        round(col("jaccard"), 6).as("jaccard"))
+    postingsJoin(JaccardScore, postings(batchSh, "doc_a", "sa").hint("shuffle_hash"),
+      postings(right, "doc_b", "sb", col("is_corpus")),
+      col("is_corpus") || col("doc_a") < col("doc_b"), threshold,
+      "doc_a", "doc_b", "is_corpus")
   }
 
   /** Bounded-probe id prefix for [[qCrossDedup]]: ids are dense from 0,
@@ -670,7 +676,7 @@ object Dedup {
       threshold: Double): DataFrame =
     crossNearDupsSigs(Scope.checkpoint(sigsOf(shingleIndex(incoming))), store.read(), threshold)
 
-  private lazy val compactIdxRoot: String = processTempDir("graft_dedup_idx_c")
+  private lazy val compactIdxRoot: String = Scratch.processTempDir("graft_dedup_idx_c")
 
   /** Oracle-gated compaction demo: the even-id half arrives as FIVE
     * micro-batch appends (residues 0,2,4,6,8 mod 10) into the sharded
@@ -681,7 +687,7 @@ object Dedup {
     * shard is a loud hash FAIL. */
   def qIndexCompact(s: SparkSession, d: String): DataFrame = {
     val root = new java.io.File(compactIdxRoot, "store")
-    rmTree(root)
+    Scratch.rmTree(root)
     val store = new graft.engine.ShardStore(s, root.getPath)
     val docs = documents(s, d)
     Seq(0, 2, 4, 6, 8).foreach { r =>
@@ -694,6 +700,8 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
   }
 
+  private lazy val incrementalIdxDir: String = Scratch.processTempDir("graft_dedup_idx")
+
   /** Oracle-gated incremental-ingestion demo: the even-id half of the
     * corpus is written out as the persisted MinHash index, then the odd-id
     * half arrives as an incoming batch and probes it — the end-to-end
@@ -703,55 +711,6 @@ object Dedup {
     * (repeated calls in one JVM overwrite the same directory; concurrent
     * processes cannot clobber each other's index mid-read) and is removed
     * by a shutdown hook. */
-  private[graft] def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
-    f.delete(); ()
-  }
-
-  /** Per-process temp directory `<tmpdir>/<base>_<user>_<pid>`, removed by
-    * a shutdown hook. Also sweeps dead siblings left by crashed JVMs (a
-    * SIGKILL skips the hook; the pid suffix tells us whether the owner is
-    * still alive). Delete ONLY when a pid parsed AND is provably dead — a
-    * non-numeric suffix is some other tool's directory, never ours to
-    * remove. */
-  /** Root for process-scoped scratch: prefer tmpfs (/dev/shm) when
-    * present and writable. Every [[processTempDir]] consumer is
-    * ephemeral by construction (PID-scoped name, shutdown-hook cleanup,
-    * stale-PID reaping), and the streaming-gate replays are FSYNC-bound
-    * on a disk-backed /tmp — each micro-batch commits state-store
-    * deltas, offset/commit logs and sink files. A production deployment
-    * keeps its real checkpoint/publish directories on durable storage;
-    * this only relocates the harness scratch. */
-  private lazy val scratchRoot: java.io.File = {
-    val shm = new java.io.File("/dev/shm")
-    // capacity gate: Docker's default shm is 64 MB — a gate run writes
-    // hundreds of MB of state/publishes, so tmpfs only qualifies when it
-    // can actually hold a run (review finding, round 7)
-    if (shm.isDirectory && shm.canWrite && shm.getUsableSpace > (8L << 30)) shm
-    else new java.io.File(System.getProperty("java.io.tmpdir"))
-  }
-
-  private[graft] def processTempDir(base: String): String = {
-    val tmp = scratchRoot
-    val prefix = s"${base}_${System.getProperty("user.name")}_"
-    // reap stale dead-PID dirs in BOTH candidate roots: a host where the
-    // root choice flips (shm shrank/grew between runs) must not leak the
-    // other root's leftovers forever
-    Seq(tmp, new java.io.File(System.getProperty("java.io.tmpdir")))
-      .distinct.foreach { root =>
-        Option(root.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.isDirectory && f.getName.startsWith(prefix))
-          .filter(f => scala.util.Try(f.getName.stripPrefix(prefix).toLong).toOption
-            .exists(pid => !ProcessHandle.of(pid).map[Boolean](_.isAlive).orElse(false)))
-          .foreach(rmTree)
-      }
-    val dir = s"$tmp/$prefix${ProcessHandle.current().pid()}"
-    sys.addShutdownHook(rmTree(new java.io.File(dir)))
-    dir
-  }
-
-  private lazy val incrementalIdxDir: String = processTempDir("graft_dedup_idx")
-
   def qDedupIncremental(s: SparkSession, d: String): DataFrame = {
     val docs = documents(s, d)
     writeIndex(docs.filter(col("doc_id") % 2 === 0), incrementalIdxDir)
@@ -759,19 +718,11 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
   }
 
+  /** Band-bucket near-dups of every `ls` doc against every `rs` doc, both
+    * (doc_id, sh, sig) rows, verified on the full sets. */
   private[graft] def crossNearDupsSigs(ls: DataFrame, rs: DataFrame,
-      threshold: Double): DataFrame = {
-    val pairs = bandsOf(ls).select(col("band"), col("band_key"), col("doc_id").as("doc_a"))
-      .join(bandsOf(rs).select(col("band"), col("band_key"), col("doc_id").as("doc_b")),
-        Seq("band", "band_key"))
-      .select("doc_a", "doc_b").distinct()
-    pairs
-      .join(ls.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
-      .join(rs.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
-      .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
-  }
+      threshold: Double): DataFrame =
+    JaccardScore.verify(withSets(bandPairs(ls, rs, lit(true)), ls, rs), threshold)
 
   /** CONTENT near-dup rejection on insert — the streaming-dedup analog of
     * [[Mutations.insertDedup]] (which dedups on exact name): refuse
@@ -1089,32 +1040,13 @@ object Dedup {
     * Same inverted-postings shape as [[ngramNearDups]]: sub-quadratic,
     * no per-pair array ops, and the same vocabulary-saturation caveats. */
   def containmentDups(docs: DataFrame, threshold: Double): DataFrame =
-    containmentDupsIdx(Scope.checkpoint(shingleIndex(docs)), threshold)
-
-  private def containmentDupsIdx(sh: DataFrame, threshold: Double): DataFrame = {
-    // set sizes ride the postings — same two-exchange removal as
-    // [[ngramNearDupsIdx]] / [[gateFusedExactPairs]]
-    val postings = sh.select(col("doc_id"),
-      size(col("sh")).cast("long").as("n_sh"), explode(col("sh")).as("shingle"))
-    postings.select(col("doc_id").as("doc_a"), col("n_sh").as("sa"), col("shingle"))
-      .join(postings.select(col("doc_id").as("doc_b"), col("n_sh").as("sb"),
-        col("shingle")), Seq("shingle"))
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy("doc_a", "doc_b")
-      .agg(count(lit(1)).as("common"),
-        first(col("sa")).as("sa"), first(col("sb")).as("sb"))
-      .withColumn("containment",
-        col("common").cast("double") / least(col("sa"), col("sb")))
-      .filter(col("containment") >= threshold)
-      .select(col("doc_a"), col("doc_b"), round(col("containment"), 6).as("containment"))
-  }
+    invertedArm(ContainmentScore, Scope.checkpoint(shingleIndex(docs)), threshold)
 
   /** EXACT containment near-dups with PREFIX FILTERING — the containment
     * analog of [[ngramNearDupsPrefix]]. For a pair with containment >= t,
     * the SMALLER document S (ties broken by doc_id) satisfies
-    * |A∩B| >= t*|S|, so S must share a shingle among its first
-    * |S| - ceil(t*|S|) + 1 shingles ranked rarest-first by global document
-    * frequency. Candidates therefore come from joining SMALLER-side prefix
+    * |A∩B| >= t*|S|, so S must share a shingle inside its [[prefixOf]]
+    * prefix. Candidates therefore come from joining SMALLER-side prefix
     * postings against full postings (the larger side gets no usable prefix
     * bound: it only needs t*|S| common shingles, which for |B| >> |S| is a
     * vanishing fraction of B). Candidates are verified on the full shingle
@@ -1128,37 +1060,7 @@ object Dedup {
     * number. Same guidance as the Jaccard pair: plain inverted join while
     * posting lists are short, prefix filter at scale. */
   def containmentDupsPrefix(docs: DataFrame, threshold: Double): DataFrame =
-    containmentDupsPrefixIdx(Scope.checkpoint(shingleIndex(docs)), threshold)
-
-  private def containmentDupsPrefixIdx(sh: DataFrame, threshold: Double): DataFrame = {
-    val postings = sh.select(col("doc_id"), size(col("sh")).cast("long").as("n_sh"),
-      explode(col("sh")).as("shingle"))
-    val dfreq = postings.groupBy("shingle").agg(count(lit(1)).as("df"))
-    val wr = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("shingle"))
-    val prefix = postings
-      .join(dfreq, Seq("shingle"))
-      .withColumn("rn", row_number().over(wr))
-      .filter(col("rn") <= col("n_sh") - ceil(col("n_sh") * threshold) + 1)
-      .select(col("doc_id").as("doc_a"), col("n_sh").as("na"), col("shingle"))
-    // (n_sh, doc_id) lexicographic order decides which side is "smaller";
-    // equal-size pairs are generated from both prefixes and deduped below
-    val cands = prefix
-      .join(postings.select(col("doc_id").as("doc_b"), col("n_sh").as("nb"),
-        col("shingle")), Seq("shingle"))
-      .filter(col("na") < col("nb") ||
-        (col("na") === col("nb") && col("doc_a") =!= col("doc_b")))
-      .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
-        greatest(col("doc_a"), col("doc_b")).as("doc_b"))
-      .distinct()
-    cands
-      .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
-      .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
-      .withColumn("containment",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          least(size(col("sh_a")), size(col("sh_b"))).cast("double"))
-      .filter(col("containment") >= threshold)
-      .select(col("doc_a"), col("doc_b"), round(col("containment"), 6).as("containment"))
-  }
+    prefixArm(ContainmentScore, Scope.checkpoint(shingleIndex(docs)), threshold)
 
   /** MinHash-LSH-blocked containment — the BOUNDED arm for corpora whose
     * shingle vocabulary saturates broadly (where no exact containment
@@ -1178,15 +1080,7 @@ object Dedup {
     * only reaches this arm when the pairs are spread too broadly for the
     * prefix prune to bite. */
   def containmentLsh(docs: DataFrame, threshold: Double): DataFrame =
-    containmentLshIdx(Scope.checkpoint(shingleIndex(docs)), threshold)
-
-  private def containmentLshIdx(sh: DataFrame, threshold: Double): DataFrame =
-    minhashCandidatesIdx(sh)
-      .withColumn("containment",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          least(size(col("sh_a")), size(col("sh_b"))).cast("double"))
-      .filter(col("containment") >= threshold)
-      .select(col("doc_a"), col("doc_b"), round(col("containment"), 6).as("containment"))
+    lshArm(ContainmentScore, shingleIndex(docs), threshold)
 
   /** Containment with strategy AUTO-SELECTION — the containment front
     * door, completing the router family (VERDICT r9 Next #7: "give the
@@ -1199,15 +1093,12 @@ object Dedup {
     * inverted while exact fits the pair budget; prefix when the pairs
     * concentrate in a hot head (still exact — and the right arm for
     * asymmetric-heavy corpora, see [[containmentLsh]]'s recall caveat);
-    * LSH-verified beyond that. Index built once and shared between the
-    * stats pass and the chosen arm below the sampling threshold. Returns
-    * the chosen strategy too, so a caller (and the oracle gate) can
-    * assert WHICH branch ran; same [[routeOverShingles]] skeleton as the
-    * Jaccard router. */
+    * LSH-verified beyond that ([[routeOverShingles]]). Returns the chosen
+    * strategy too, so a caller (and the oracle gate) can assert WHICH
+    * branch ran. */
   def containmentDupsAutoTagged(docs: DataFrame, threshold: Double,
       pairBudgetPerDoc: Double = 512.0): (DataFrame, NgramStrategy) =
-    routeOverShingles(docs, threshold, pairBudgetPerDoc, "containment",
-      containmentDupsIdx, containmentDupsPrefixIdx, containmentLshIdx)
+    routeOverShingles(docs, threshold, pairBudgetPerDoc, ContainmentScore)
 
   /** The planted-truncation corpus BOTH containment gates run on: the
     * FIRST HALF of every 17th document re-planted at a shifted id — a
@@ -1301,7 +1192,7 @@ object Dedup {
     * 7 linear passes at cap 64, never a pairwise comparison.
     *
     * Shuffle discipline (HASH-GROUP, VERIFY-EXACT — the minhash
-    * verifyPairs pattern): the counting shuffle carries only the
+    * [[Overlap.verify]] pattern): the counting shuffle carries only the
     * codegen'd 8-byte rolling span hash per position (a joined string
     * up to ~400 bytes per span measured 73 s at sf0.1; this form takes
     * seconds); positions whose (length, hash) group holds ≥ 2 members

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.engine.Tables
+import graft.engine.{Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -472,7 +472,7 @@ object Hnsw {
     (v, fixed)
   }
 
-  private lazy val hnswDir: String = graft.operators.Dedup.processTempDir("graft_ann_hnsw")
+  private lazy val hnswDir: String = Scratch.processTempDir("graft_ann_hnsw")
 
   /** Driver-gated persisted-HNSW recall — the [[Similarity.qAnnIncremental]]
     * pattern on the graph index: the EVEN-vec_id half builds and
@@ -489,7 +489,7 @@ object Hnsw {
     val corpus = emb.filter(col("vec_id") % 2 === 0)
     val queries = emb.filter(col("vec_id") % 2 =!= 0 && col("vec_id") < 40)
     val k = 10
-    graft.operators.Dedup.rmTree(new java.io.File(hnswDir))
+    Scratch.rmTree(new java.io.File(hnswDir))
     writeHnswIndex(s, corpus, hnswDir)
     val panel = queries.select(col("vec_id"), col("embedding")).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
@@ -504,7 +504,7 @@ object Hnsw {
   }
 
   private lazy val hnswInsertDir: String =
-    graft.operators.Dedup.processTempDir("graft_ann_hnsw_insert")
+    Scratch.processTempDir("graft_ann_hnsw_insert")
 
   /** Driver-gated INCREMENTAL-INSERT recall — [[qHnswIncremental]]'s
     * companion for [[appendHnswIndex]]: the even half SPLITS into a base
@@ -524,7 +524,7 @@ object Hnsw {
     val batch = even.filter(col("vec_id") < 100)
     val queries = emb.filter(col("vec_id") % 2 =!= 0 && col("vec_id") < 40)
     val k = 10
-    graft.operators.Dedup.rmTree(new java.io.File(hnswInsertDir))
+    Scratch.rmTree(new java.io.File(hnswInsertDir))
     writeHnswIndex(s, base, hnswInsertDir)
     appendHnswIndex(s, hnswInsertDir, batch)
     val panel = queries.select(col("vec_id"), col("embedding")).collect()
@@ -540,7 +540,7 @@ object Hnsw {
   }
 
   private lazy val hnswReshardDir: String =
-    graft.operators.Dedup.processTempDir("graft_ann_hnsw_reshard")
+    Scratch.processTempDir("graft_ann_hnsw_reshard")
 
   /** Driver-gated RESHARD round trip (round 13 — VERDICT r12 Next #4):
     * a DELIBERATELY tight layout (2 shards; even ids all land in shard
@@ -562,7 +562,7 @@ object Hnsw {
     val batch = corpus.filter(col("vec_id") < 100)
     val queries = emb.filter(col("vec_id") % 2 =!= 0 && col("vec_id") < 40)
     val k = 10
-    graft.operators.Dedup.rmTree(new java.io.File(hnswReshardDir))
+    Scratch.rmTree(new java.io.File(hnswReshardDir))
     writeHnswIndex(s, base, hnswReshardDir, numShards = 2)
     appendHnswIndex(s, hnswReshardDir, batch)
     val (_, shards) = reshardHnswIndex(s, hnswReshardDir, nodeBudget = 60L)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.engine.Tables
+import graft.engine.{Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1958,7 +1958,7 @@ object Multimodal {
   }
 
   private lazy val dhashIdxDir: String =
-    Dedup.processTempDir("graft_dhash_idx")
+    Scratch.processTempDir("graft_dhash_idx")
 
   /** Oracle-checked incremental image dedup: EVEN base images persist as
     * the index; the probe batch is the ODD bases plus all 20 planted

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.engine.Tables
+import graft.engine.{Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField, StructType}
@@ -216,7 +216,7 @@ object Mutations {
     * per-version aggregates here are one count/sum scan each. */
   def qTimeTravel(s: SparkSession, d: String): DataFrame = {
     val root = new java.io.File(timeTravelRoot, "store")
-    Dedup.rmTree(root)
+    Scratch.rmTree(root)
     val snap = new graft.engine.Snapshot(s, root.getPath)
     val docs = documents(s, d).select(col("doc_id"), col("text"))
     snap.publish(docs.filter(col("doc_id") < 100))                       // v_0
@@ -255,10 +255,10 @@ object Mutations {
           val p = new java.io.File(tmp).listFiles()
             .find(_.getName.endsWith(".parquet")).get
           java.nio.file.Files.copy(p.toPath, new java.io.File(root, name).toPath)
-          Dedup.rmTree(new java.io.File(tmp))
+          Scratch.rmTree(new java.io.File(tmp))
       }
     }
-    Dedup.rmTree(stage.toFile)
+    Scratch.rmTree(stage.toFile)
   }
 
   /** Per-version (count, id-sum) summary of a versioned table as ONE
@@ -285,7 +285,7 @@ object Mutations {
       cur.fold(base)(c => base.withColumn("is_current", lit(v == c)))
     }.reduce(_ unionByName _)
 
-  private lazy val timeTravelRoot: String = Dedup.processTempDir("graft_time_travel")
+  private lazy val timeTravelRoot: String = Scratch.processTempDir("graft_time_travel")
 
   /** Oracle-gated read of an EXTERNAL Delta-layout table (VERDICT r10
     * Next #3): stage a three-commit log-structured table from the
@@ -299,7 +299,7 @@ object Mutations {
   def qDeltaRead(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val root = new java.io.File(timeTravelRoot, "delta")
-    Dedup.rmTree(root)
+    Scratch.rmTree(root)
     val log = new java.io.File(root, "_delta_log")
     log.mkdirs()
     val docs = documents(s, d).select(col("doc_id"), col("text"))
@@ -334,7 +334,7 @@ object Mutations {
   def qDeltaV2(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val root = new java.io.File(timeTravelRoot, "delta_v2")
-    Dedup.rmTree(root)
+    Scratch.rmTree(root)
     val log = new java.io.File(root, "_delta_log")
     val sidecars = new java.io.File(log, "_sidecars")
     sidecars.mkdirs()
@@ -388,7 +388,7 @@ object Mutations {
   def qDeltaWrite(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val root = new java.io.File(timeTravelRoot, "delta_w")
-    Dedup.rmTree(root)
+    Scratch.rmTree(root)
     root.mkdirs()
     val t = new graft.engine.DeltaLayoutTable(s, root.getPath)
     val docs = documents(s, d).select(col("doc_id"), col("text"))
@@ -411,7 +411,7 @@ object Mutations {
     * boolean; one that deletes the checkpoint or log breaks read(). */
   def qDeltaVacuum(s: SparkSession, d: String): DataFrame = {
     val root = new java.io.File(timeTravelRoot, "delta_vac")
-    Dedup.rmTree(root)
+    Scratch.rmTree(root)
     root.mkdirs()
     val t = new graft.engine.DeltaLayoutTable(s, root.getPath)
     val docs = documents(s, d).select(col("doc_id"), col("text"))
@@ -441,7 +441,7 @@ object Mutations {
     import s.implicits._
     val snapRoot = new java.io.File(timeTravelRoot, "mig_src")
     val deltaRoot = new java.io.File(timeTravelRoot, "mig_dst")
-    Dedup.rmTree(snapRoot); Dedup.rmTree(deltaRoot)
+    Scratch.rmTree(snapRoot); Scratch.rmTree(deltaRoot)
     deltaRoot.mkdirs()
     val docs = documents(s, d).select(col("doc_id"), col("text"))
     val snap = new graft.engine.Snapshot(s, snapRoot.getPath)
@@ -463,7 +463,7 @@ object Mutations {
     * the read surface. */
   def qDeltaCdf(s: SparkSession, d: String): DataFrame = {
     val root = new java.io.File(timeTravelRoot, "delta_cdf")
-    Dedup.rmTree(root)
+    Scratch.rmTree(root)
     val t = new graft.engine.DeltaLayoutTable(s, root.getPath)
     val docs = documents(s, d).select(col("doc_id"), col("text"))
     t.commitAppend(docs.filter(col("doc_id") < 120))                     // v_0
@@ -502,7 +502,7 @@ object Mutations {
     * form from the documents table. */
   def qCdcFeed(s: SparkSession, d: String): DataFrame = {
     val root = new java.io.File(timeTravelRoot, "feed")
-    Dedup.rmTree(root)
+    Scratch.rmTree(root)
     val snap = new graft.engine.Snapshot(s, root.getPath)
     val docs = documents(s, d).select(col("doc_id"), col("text"))
     snap.publish(docs.filter(col("doc_id") < 120))                        // v_0

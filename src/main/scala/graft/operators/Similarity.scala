@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.engine.{Scope, Tables}
+import graft.engine.{Scope, Scratch, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -822,7 +822,7 @@ object Similarity {
         col("n_id"), col("score"))
   }
 
-  private lazy val annIvfDir: String = Dedup.processTempDir("graft_ann_ivf")
+  private lazy val annIvfDir: String = Scratch.processTempDir("graft_ann_ivf")
 
   /** Driver-gated persisted-index recall (VERDICT r5 #7 — the
     * [[Dedup.qDedupIncremental]] pattern on the embedding side): the
@@ -841,7 +841,7 @@ object Similarity {
     val corpus = emb.filter(col("vec_id") % 2 === 0)
     val queries = emb.filter(col("vec_id") % 2 =!= 0 && col("vec_id") < 40)
     val k = 10
-    Dedup.rmTree(new java.io.File(annIvfDir))
+    Scratch.rmTree(new java.io.File(annIvfDir))
     writeIvfIndex(s, corpus, annIvfDir, 10, 2)
     val probed = ivfProbeIndex(s, annIvfDir, queries, k, 4).select("q_id", "n_id")
     // checkpointed: read by both aggregate branches below
@@ -1111,7 +1111,7 @@ object Similarity {
     embeddingDriftPsi(ref, cur).orderBy("dim")
   }
 
-  private lazy val driftRefRoot: String = Dedup.processTempDir("graft_drift_ref")
+  private lazy val driftRefRoot: String = Scratch.processTempDir("graft_drift_ref")
 
   /** [[qEmbedDrift]] through the PERSISTED-REFERENCE serving path: the
     * reference histogram writes once, the probe monitors the shifted
@@ -1126,7 +1126,7 @@ object Similarity {
       .select(transform(col("e"),
         (x, i) => when(i === 0, x + lit(0.3)).otherwise(x)).as("e"))
     val root = new java.io.File(driftRefRoot, "ref")
-    Dedup.rmTree(root)
+    Scratch.rmTree(root)
     writeDriftRef(ref, root.getPath)
     driftProbeRef(s, root.getPath, cur).orderBy("dim")
   }
@@ -2095,7 +2095,7 @@ object Similarity {
     maxSimRank(pairs, k)
   }
 
-  private lazy val maxSimIdxRoot: String = Dedup.processTempDir("graft_maxsim_idx")
+  private lazy val maxSimIdxRoot: String = Scratch.processTempDir("graft_maxsim_idx")
 
   /** Recall gate for persisted-index MaxSim serving (the q_hnsw_recall
     * coupling): build the packed-token index once, probe the 3-doc
@@ -2107,7 +2107,7 @@ object Similarity {
     val toks = maxSimTokens(s, d)
     val queryToks = toks.filter(col("doc_id") < 3)
     val root = new java.io.File(maxSimIdxRoot, "idx")
-    Dedup.rmTree(root)
+    Scratch.rmTree(root)
     writeMaxSimIndex(s, toks, root.getPath)
     val probed = maxSimProbeIndex(s, root.getPath, toks, queryToks, 10)
       .select("q_id", "doc_id")
@@ -2119,7 +2119,7 @@ object Similarity {
     Seq((exact.size.toLong, recall >= 0.7)).toDF("n_exact", "maxsim_recall_ok")
   }
 
-  private lazy val maxSimInsRoot: String = Dedup.processTempDir("graft_maxsim_ins")
+  private lazy val maxSimInsRoot: String = Scratch.processTempDir("graft_maxsim_ins")
 
   /** Recall gate for INCREMENTAL-INSERT MaxSim serving — [[qMaxSimIndex]]'s
     * companion for [[appendMaxSimIndex]], the q_hnsw_insert mold: the
@@ -2137,7 +2137,7 @@ object Similarity {
     val base = toks.filter(col("doc_id") >= 25)
     val batch = toks.filter(col("doc_id") < 25)
     val root = new java.io.File(maxSimInsRoot, "idx")
-    Dedup.rmTree(root)
+    Scratch.rmTree(root)
     writeMaxSimIndex(s, base, root.getPath)
     appendMaxSimIndex(s, root.getPath, batch)
     val probed = maxSimProbeIndex(s, root.getPath, toks, queryToks, 10)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.engine.Tables
+import graft.engine.{Scratch, Tables}
 import graft.operators.Ingest
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -658,7 +658,7 @@ object BinaryIngest {
     if (new java.io.File(target, "_SUCCESS").exists()) return
     val tmp = target + ".tmp." + java.lang.ProcessHandle.current().pid()
     val tmpDir = new java.io.File(tmp)
-    if (tmpDir.exists()) deleteRecursive(tmpDir)
+    if (tmpDir.exists()) Scratch.rmTree(tmpDir)
     tmpDir.mkdirs()
     build(tmp)
     new java.io.File(tmp, "_SUCCESS").createNewFile()
@@ -668,13 +668,8 @@ object BinaryIngest {
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     catch { // a racer published first; ours is identical — discard it
       case _: java.nio.file.FileAlreadyExistsException |
-           _: java.nio.file.FileSystemException => deleteRecursive(tmpDir)
+           _: java.nio.file.FileSystemException => Scratch.rmTree(tmpDir)
     }
-  }
-
-  private def deleteRecursive(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursive))
-    f.delete()
   }
 
   /** Stage the pre-extracted fixture: one text FILE per document (the

@@ -347,18 +347,6 @@ object CommandDispatch {
     (st, messages.reduceLeft(_ unionByName _))
   }
 
-  /** Streaming mode: run the dispatcher inside foreachBatch over a command
-    * stream, persisting each state snapshot under `stateDir/<batchId>/`.
-    *
-    * Recovery contract: batch N is ALWAYS dispatched against the batch N-1
-    * snapshot read back from `stateDir` (batch 0 against `initial`), never
-    * against driver-local state — so a query restarted from its streaming
-    * checkpoint resumes correctly (the source replays from batch N, the
-    * dispatcher rebases on snapshot N-1), and a re-run of a batch
-    * overwrites the same snapshot with the same result (idempotent per
-    * batch id; the reference's rollback intent via atomic dirs, SURVEY
-    * §7.4). If intermediate snapshots were pruned, the newest one below N
-    * is used. `onBatch` receives the post-batch state for inspection. */
   /** T4 as a STREAMING citizen (VERDICT r10 Next #6): per-batch
     * maintenance run INSIDE the same foreachBatch transaction as the
     * dispatch — the reference runs its expiry sweep once per run
@@ -391,6 +379,18 @@ object CommandDispatch {
     EngineState(sweptDocs, sweptSnips, st.categories)
   }
 
+  /** Streaming mode: run the dispatcher inside foreachBatch over a command
+    * stream, persisting each state snapshot under `stateDir/<batchId>/`.
+    *
+    * Recovery contract: batch N is ALWAYS dispatched against the batch N-1
+    * snapshot read back from `stateDir` (batch 0 against `initial`), never
+    * against driver-local state — so a query restarted from its streaming
+    * checkpoint resumes correctly (the source replays from batch N, the
+    * dispatcher rebases on snapshot N-1), and a re-run of a batch
+    * overwrites the same snapshot with the same result (idempotent per
+    * batch id; the reference's rollback intent via atomic dirs, SURVEY
+    * §7.4). If intermediate snapshots were pruned, the newest one below N
+    * is used. `onBatch` receives the post-batch state for inspection. */
   def runStream(spark: SparkSession, commands: DataFrame, initial: EngineState,
       stateDir: String, onBatch: (Long, EngineState) => Unit,
       dispatcher: (EngineState, DataFrame) => (EngineState, DataFrame) = dispatch,

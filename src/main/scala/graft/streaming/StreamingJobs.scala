@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.engine.Scope
+import graft.engine.{Scope, Scratch}
 import graft.operators.{Dedup, Mutations}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -138,7 +138,7 @@ object StreamingJobs {
 
   // --------------------------------------- watermark + late-data gate
 
-  private lazy val streamWinDir: String = Dedup.processTempDir("graft_stream_window")
+  private lazy val streamWinDir: String = Scratch.processTempDir("graft_stream_window")
 
   /** Stage `df` as ONE parquet file named `name` under `srcDir`, with an
     * explicit modification time: the FileStreamSource orders files by
@@ -154,7 +154,7 @@ object StreamingJobs {
     dst.getParentFile.mkdirs()
     java.nio.file.Files.copy(part.toPath, dst.toPath)
     dst.setLastModified(modMs)
-    Dedup.rmTree(stage.toFile)
+    Scratch.rmTree(stage.toFile)
   }
 
   /** Stage ALL waves of one replay in a single write job: the waves are
@@ -193,7 +193,7 @@ object StreamingJobs {
         case None => stageWave(waves(i), srcDir, names(i), modMs(i))
       }
     }
-    Dedup.rmTree(stage.toFile)
+    Scratch.rmTree(stage.toFile)
   }
 
   /** Event-time watermark + late-data handling, driver-gated (SURVEY §2.9
@@ -255,7 +255,7 @@ object StreamingJobs {
       .orderBy("hour", "event_type")
   }
 
-  private lazy val streamSessDir: String = Dedup.processTempDir("graft_stream_session")
+  private lazy val streamSessDir: String = Scratch.processTempDir("graft_stream_session")
 
   /** Event-time SESSION windows (`session_window`, 30-minute gap) through
     * a watermarked streaming aggregation — the companion to
@@ -303,7 +303,7 @@ object StreamingJobs {
       .orderBy("user_id", "session_start")
   }
 
-  private lazy val streamJoinDir: String = Dedup.processTempDir("graft_stream_join")
+  private lazy val streamJoinDir: String = Scratch.processTempDir("graft_stream_join")
 
   /** Stream-STREAM interval join, driver-gated: click events join view
     * events of the same user within 30 minutes AFTER the view — the
@@ -345,7 +345,7 @@ object StreamingJobs {
     * user_id). */
   private[graft] def replayStreamJoin(s: SparkSession, root: String,
       viewWaves: Seq[DataFrame], clickWaves: Seq[DataFrame]): DataFrame = {
-    Dedup.rmTree(new java.io.File(root))
+    Scratch.rmTree(new java.io.File(root))
     val (srcV, srcC, out, ck) = (s"$root/views", s"$root/clicks", s"$root/out", s"$root/ck")
     val t0 = System.currentTimeMillis() - 60000
     stageWaves(viewWaves, srcV,
@@ -391,7 +391,7 @@ object StreamingJobs {
     s.read.parquet(out)
   }
 
-  private lazy val streamDedupDir: String = Dedup.processTempDir("graft_stream_dedup")
+  private lazy val streamDedupDir: String = Scratch.processTempDir("graft_stream_dedup")
 
   /** Streaming exact dedup with BOUNDED state, driver-gated:
     * `dropDuplicatesWithinWatermark` keeps a key in the state store only
@@ -440,7 +440,7 @@ object StreamingJobs {
     * micro-batch, append output. */
   private[graft] def replayDedupWaves(s: SparkSession, root: String,
       waves: Seq[DataFrame], delay: String): DataFrame = {
-    Dedup.rmTree(new java.io.File(root))
+    Scratch.rmTree(new java.io.File(root))
     val (src, out, ck) = (s"$root/src", s"$root/out", s"$root/ck")
     val t0 = System.currentTimeMillis() - 60000
     stageWaves(waves, src,
@@ -473,7 +473,7 @@ object StreamingJobs {
   private[graft] def replaySessionWaves(s: SparkSession, root: String,
       waves: Seq[DataFrame], delay: String, gap: String,
       statePartitions: Option[Int] = None): DataFrame = {
-    Dedup.rmTree(new java.io.File(root))
+    Scratch.rmTree(new java.io.File(root))
     val (src, out, ck) = (s"$root/src", s"$root/out", s"$root/ck")
     val t0 = System.currentTimeMillis() - 60000
     stageWaves(waves, src,
@@ -515,7 +515,7 @@ object StreamingJobs {
   private[graft] def replayWatermarkedWaves(s: SparkSession, root: String,
       waves: Seq[DataFrame], delay: String,
       statePartitions: Option[Int] = None): DataFrame = {
-    Dedup.rmTree(new java.io.File(root))
+    Scratch.rmTree(new java.io.File(root))
     val (src, out, ck) = (s"$root/src", s"$root/out", s"$root/ck")
     val t0 = System.currentTimeMillis() - 60000
     stageWaves(waves, src,
@@ -689,7 +689,7 @@ object StreamingJobs {
           val nc = if (!exists(spark, indexDir)) Map.empty[Long, Long]
             else phase("corpus probe")(witnesses(Dedup.crossNearDupsSigs(sh,
               spark.read.schema(sh.schema).parquet(indexDir), threshold)))
-          (nc, Dedup.verifyPairs(Dedup.minhashCandidatesSigs(sh), threshold))
+          (nc, Dedup.minhashNearDupsSigs(sh, threshold))
         }
       nearCorpus.foreach { case (id, w) => reject(id, "near_dup_corpus", w) }
       val ncIds = nearCorpus.keys
@@ -732,7 +732,7 @@ object StreamingJobs {
     StructField("reason", StringType, nullable = false),
     StructField("witness", LongType), StructField("batch_id", LongType, nullable = false)))
 
-  private lazy val gateDir: String = Dedup.processTempDir("graft_dedup_gate")
+  private lazy val gateDir: String = Scratch.processTempDir("graft_dedup_gate")
 
   /** Oracle-gated two-batch run of the dedup gate (exactPairs pinned, like
     * qDedupNgram): the corpus plus planted exact copies (every 20th doc
@@ -743,7 +743,7 @@ object StreamingJobs {
     * including the recursive-CTE connected components of the within-batch
     * near-dup steps. */
   def qDedupGate(s: SparkSession, d: String): DataFrame = {
-    Dedup.rmTree(new java.io.File(gateDir))
+    Scratch.rmTree(new java.io.File(gateDir))
     val docs = graft.engine.Tables.documents(s, d).select("doc_id", "text")
     val all = docs
       .unionByName(docs.filter(col("doc_id") % 20 === 0)

@@ -1,6 +1,8 @@
 package graft
 
+import graft.engine.Scratch
 import graft.operators.Dedup
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Dedup correctness: LSH candidate recall and precision are checked
@@ -12,16 +14,52 @@ class DedupSpec extends SparkSpec {
   // file, silently disabling parquet pushdown/pruning engine-wide.
   private lazy val docs = spark.read.parquet(s"$sf0001/documents.parquet")
 
+  /** Brute-force model: every (left, right) pair, or every left pair
+    * doc_a < doc_b when `self`, scored on the full shingle sets and kept
+    * at >= t, with the score rounded as the arms round it. */
+  private def modelPairs(left: DataFrame, right: DataFrame, t: Double,
+      score: (Column, Column) => Column = Dedup.jaccard,
+      self: Boolean = false): Set[(Long, Long, Double)] = {
+    def sh(df: DataFrame, side: String) =
+      df.select(col("doc_id").as(s"doc_$side"), Dedup.shingles(col("text")).as(s"sh_$side"))
+    val all = sh(left, "a").crossJoin(sh(right, "b"))
+    scored((if (self) all.filter(col("doc_a") < col("doc_b")) else all)
+      .withColumn("s", score(col("sh_a"), col("sh_b")))
+      .filter(col("s") >= t)
+      .select(col("doc_a"), col("doc_b"), round(col("s"), 6)))
+  }
+
   /** Brute-force ground truth: all pairs with shingle-Jaccard >= t. */
-  private def bruteForcePairs(t: Double): Set[(Long, Long)] = {
-    val sh = docs.select(col("doc_id"), Dedup.shingles(col("text")).as("sh"))
-    val a = sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"))
-    val b = sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"))
-    a.crossJoin(b).filter(col("doc_a") < col("doc_b"))
-      .withColumn("j", Dedup.jaccard(col("sh_a"), col("sh_b")))
-      .filter(col("j") >= t)
-      .select("doc_a", "doc_b")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+  private def bruteForcePairs(t: Double): Set[(Long, Long)] =
+    modelPairs(docs, docs, t, self = true).map(p => (p._1, p._2))
+
+  private def scored(pairs: DataFrame): Set[(Long, Long, Double)] =
+    pairs.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+
+  private val containment = (a: Column, b: Column) =>
+    size(array_intersect(a, b)).cast("double") / least(size(a), size(b)).cast("double")
+
+  /** Doc 900001 is 27 distinct words (25 shingles); 900002 is its last 16
+    * words (14 of those shingles): Jaccard 14/25 = 0.56, where 25 * 0.56
+    * rounds up past 14 in doubles. */
+  private lazy val prefixEdge = {
+    import spark.implicits._
+    val w = (1 to 27).map(i => s"pe$i")
+    Seq((900001L, w.mkString(" ")), (900002L, w.drop(11).mkString(" ")))
+      .toDF("doc_id", "text")
+  }
+
+  /** A probe set and a corpus for the cross arms: a fifth of sf0.001 plus
+    * the edge pair's long doc and a copy of its short doc (900003) against
+    * the rest plus the short doc itself. */
+  private lazy val (probe, corpus) = {
+    val base = docs.select("doc_id", "text")
+    (base.filter(col("doc_id") % 5 === 0)
+      .unionByName(prefixEdge.filter(col("doc_id") === 900001L))
+      .unionByName(prefixEdge.filter(col("doc_id") === 900002L)
+        .withColumn("doc_id", lit(900003L))),
+      base.filter(col("doc_id") % 5 =!= 0)
+        .unionByName(prefixEdge.filter(col("doc_id") === 900002L)))
   }
 
   test("minhash-LSH finds every true near-dup pair (recall=1 at J>=0.5)") {
@@ -67,12 +105,47 @@ class DedupSpec extends SparkSpec {
   }
 
   test("prefix-filtered ngram == inverted-index ngram (both exact)") {
-    val a = Dedup.ngramNearDups(docs, 0.5)
-      .collect().map(_.toSeq).toSet
-    val b = Dedup.ngramNearDupsPrefix(docs, 0.5)
-      .collect().map(_.toSeq).toSet
-    assert(a === b)
-    assert(a.nonEmpty)
+    for ((input, t) <- Seq((docs, 0.5), (prefixEdge, 0.56))) {
+      val a = Dedup.ngramNearDups(input, t)
+        .collect().map(_.toSeq).toSet
+      val b = Dedup.ngramNearDupsPrefix(input, t)
+        .collect().map(_.toSeq).toSet
+      assert(a === b, s"threshold $t")
+      assert(a.nonEmpty, s"threshold $t")
+    }
+  }
+
+  test("exact cross and fused gate joins equal the brute-force model") {
+    val idx = java.nio.file.Files.createTempDirectory("graft_fused_idx")
+    val idxDir = idx.resolve("idx").toString
+    Dedup.shingleIndex(corpus).write.parquet(idxDir)
+    try for (t <- Seq(0.5, 0.56)) {
+      val cross = modelPairs(probe, corpus, t)
+      assert(cross.nonEmpty, s"threshold $t")
+      assert(scored(Dedup.crossNearDupsExact(probe, corpus, t)) === cross, s"threshold $t")
+      // the probe as a gate batch against the stored corpus index:
+      // batch x corpus pairs plus batch x batch pairs doc_a < doc_b
+      val fused = Dedup.gateFusedExactPairs(spark, Some(idxDir), Dedup.shingleIndex(probe), t)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2), r.getDouble(3)))
+      val batch = modelPairs(probe, probe, t, self = true)
+      assert(batch.nonEmpty, s"threshold $t")
+      assert(fused.toSet === cross.map { case (a, b, j) => (a, b, true, j) } ++
+        batch.map { case (a, b, j) => (a, b, false, j) }, s"threshold $t")
+      assert(fused.length === fused.toSet.size)
+    } finally Scratch.rmTree(idx.toFile)
+  }
+
+  test("band-bucket arms return a subset of the model, with identical scores") {
+    val all = probe.unionByName(corpus)
+    for (t <- Seq(0.5, 0.56)) {
+      val cross = scored(Dedup.crossNearDups(probe, corpus, t))
+      assert(cross.nonEmpty, s"threshold $t")
+      assert(cross.subsetOf(modelPairs(probe, corpus, t)), s"threshold $t")
+      val contained = scored(Dedup.containmentLsh(all, t))
+      assert(contained.nonEmpty, s"threshold $t")
+      assert(contained.subsetOf(modelPairs(all, all, t, containment, self = true)),
+        s"threshold $t")
+    }
   }
 
   test("longest repeated span: hand-computed lengths, cross-doc, self-overlap, cap") {

@@ -1,5 +1,6 @@
 package graft
 
+import graft.engine.Scratch
 import graft.operators.Hnsw
 import org.apache.spark.sql.functions._
 
@@ -110,7 +111,7 @@ class HnswSpec extends SparkSpec {
       val again = Hnsw.probeHnswIndex(spark, root, panel, 10)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(again === fresh)
-    } finally graft.operators.Dedup.rmTree(new java.io.File(root))
+    } finally Scratch.rmTree(new java.io.File(root))
   }
 
   test("stored shard column equals shardOf(vec_id); one directory per shard") {
@@ -128,7 +129,7 @@ class HnswSpec extends SparkSpec {
         s"vec ${r.getLong(1)} stored in shard ${r.getInt(0)}"))
       assert(rows.map(_.getInt(0)).distinct.sorted === (0 until Hnsw.Shards),
         "expected exactly one shard group per pmod value")
-    } finally graft.operators.Dedup.rmTree(new java.io.File(root))
+    } finally Scratch.rmTree(new java.io.File(root))
   }
 
   test("incremental insert: grown index serves the new ids; recall tracks a full rebuild") {
@@ -163,7 +164,7 @@ class HnswSpec extends SparkSpec {
         assert(grownRecall >= rebuiltRecall - 0.1,
           f"append lost too much vs rebuild: $grownRecall%.3f vs $rebuiltRecall%.3f")
         assert(grownRecall >= 0.7, f"grown recall $grownRecall%.3f under the gate bar")
-      } finally graft.operators.Dedup.rmTree(new java.io.File(rebuiltRoot))
+      } finally Scratch.rmTree(new java.io.File(rebuiltRoot))
       // a second append on top of the grown snapshot keeps serving
       // (build once, grow forever): append an empty batch is a no-op
       // publish, so grow with a disjoint synthetic id block instead
@@ -178,7 +179,7 @@ class HnswSpec extends SparkSpec {
       // neighbors (cosine 1.0) and must now top those queries' answers
       assert(grown2.exists(_._2 >= 10000L),
         "second-generation append is not servable")
-    } finally graft.operators.Dedup.rmTree(new java.io.File(root))
+    } finally Scratch.rmTree(new java.io.File(root))
   }
 
   test("reshard: no-op under budget; over budget splits to the fresh-build identity (round 13)") {
@@ -238,8 +239,8 @@ class HnswSpec extends SparkSpec {
       assert(storedShard === Hnsw.shardOf(10008L, 8),
         "post-reshard append must route by the grown shard count")
     } finally {
-      graft.operators.Dedup.rmTree(new java.io.File(root))
-      graft.operators.Dedup.rmTree(new java.io.File(freshRoot))
+      Scratch.rmTree(new java.io.File(root))
+      Scratch.rmTree(new java.io.File(freshRoot))
     }
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.{Dedup, Similarity}
+import graft.engine.Scratch
+import graft.operators.Similarity
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -471,7 +472,7 @@ class SimilaritySpec extends SparkSpec {
     assert(snap.currentVersion() === Some("v_0"))
     Similarity.writeIvfIndex(spark, corpus, root, 10, 2)
     assert(snap.currentVersion() === Some("v_1"))
-    Dedup.rmTree(new java.io.File(root))
+    Scratch.rmTree(new java.io.File(root))
   }
 
   test("pca: power iteration finds the dominant axis of a diagonal scatter") {
@@ -752,7 +753,7 @@ class SimilaritySpec extends SparkSpec {
       // rank 1 with score 1.0 and burned a result slot
       assert(probed.forall { case (q, n) => q != n },
         "filtered probe returned the query itself")
-    } finally Dedup.rmTree(new java.io.File(root))
+    } finally Scratch.rmTree(new java.io.File(root))
   }
 
   test("PSI drift: identical snapshots read ~zero; a planted shift flags only its dim") {

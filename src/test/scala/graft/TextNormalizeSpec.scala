@@ -161,10 +161,15 @@ class TextNormalizeSpec extends SparkSpec {
     }
     val equalDup = base.collect { case (id, t) if id % 11 == 0 => (id + 2000L, t) }
     val docs = (base ++ truncated ++ equalDup).toDF("doc_id", "text")
-    for (t <- Seq(0.6, 0.9)) {
-      val plain = Dedup.containmentDups(docs, t)
+    // a 25-shingle doc whose first 16 words open a 56-word doc:
+    // containment 14/25 = 0.56, where 25 * 0.56 rounds up past 14
+    val w = (1 to 67).map(i => s"ce$i")
+    val edge = Seq((1L, w.take(27).mkString(" ")),
+      (2L, (w.take(16) ++ w.drop(27)).mkString(" "))).toDF("doc_id", "text")
+    for ((input, t) <- Seq((docs, 0.6), (docs, 0.9), (edge, 0.56))) {
+      val plain = Dedup.containmentDups(input, t)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val pref = Dedup.containmentDupsPrefix(docs, t)
+      val pref = Dedup.containmentDupsPrefix(input, t)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       assert(pref === plain, s"threshold $t: prefix variant diverged")
       assert(plain.nonEmpty, s"threshold $t: fixture should produce pairs")

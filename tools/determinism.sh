@@ -2,11 +2,18 @@
 # Cross-parallelism determinism check: every declared query must produce
 # IDENTICAL rows at different core counts (plan changes, shuffle layouts
 # and partial-agg orders must not leak into results).
+#
+# Usage: tools/determinism.sh [sfDir] [key1,key2,...]
+# With a key list, only those queries run (at both core counts). Both
+# output directories are cleared first, so no query left over from an
+# earlier run is compared.
 set -e
 cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.01}
-SPARK_GRAFT_CPUS=4 sbt -batch "runMain graft.Verify $SF /tmp/det_vout4" > /tmp/det4.log 2>&1
-SPARK_GRAFT_CPUS=16 sbt -batch "runMain graft.Verify $SF /tmp/det_vout16" > /tmp/det16.log 2>&1
+KEYS=${2:-}
+rm -rf /tmp/det_vout4 /tmp/det_vout16
+SPARK_GRAFT_CPUS=4 sbt -batch "runMain graft.Verify $SF /tmp/det_vout4 $KEYS" > /tmp/det4.log 2>&1
+SPARK_GRAFT_CPUS=16 sbt -batch "runMain graft.Verify $SF /tmp/det_vout16 $KEYS" > /tmp/det16.log 2>&1
 python3 - <<'EOF'
 import duckdb, os, sys
 con = duckdb.connect()
