@@ -1,8 +1,8 @@
 package graft.operators
 
-import graft.engine.Tables
+import graft.sources.BinaryIngest
+import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Bitext sentence alignment — the parallel-corpus construction step of
   * a translation-data pipeline (Gale & Church 1993, hunalign): given a
@@ -124,36 +124,9 @@ object Bitext {
     groups.reverse.toSeq
   }
 
-  // ----------------------------------------------------------- fixture
-
-  /** Stage both sides as real sentence-per-line text files (the shape a
-    * downloaded parallel corpus has), one pair per document. */
-  def stageBitextFixture(s: SparkSession, d: String): String = {
-    import graft.sources.BinaryIngest
-    val fix = BinaryIngest.fixtureRoot("bitext_fixture", d)
-    BinaryIngest.publishFixture(fix) { tmp =>
-      import s.implicits._
-      Tables.documents(s, d).filter(col("doc_id") < 200)
-        .select(col("doc_id")).as[Long]
-        .mapPartitions { it =>
-          it.map { id =>
-            val n = nSrcSentences(id)
-            val srcTxt = (0 until n).map(k => sentence(srcLen(id, k))).mkString("\n")
-            val tgtTxt = tgtLens(id).map(sentence).mkString("\n")
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(tmp, f"src$id%05d.txt"),
-              srcTxt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(tmp, f"tgt$id%05d.txt"),
-              tgtTxt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            id
-          }
-        }.count()
-    }
-    fix
-  }
-
-  /** Oracle-checked alignment: the engine reads BOTH staged sides,
+  /** Oracle-checked alignment: the engine reads BOTH staged sides (real
+    * sentence-per-line text files, the shape a downloaded parallel corpus
+    * has: one fixture kind per side, one file per document),
     * collapses each to its sentence-length array, joins the pair on
     * doc_id (lengths only — text never shuffles) and runs the DP; the
     * oracle restates the planted merge/split pattern in closed form,
@@ -162,21 +135,15 @@ object Bitext {
   def qBitext(s: SparkSession, d: String): DataFrame = {
     val spark = s
     import spark.implicits._
-    val fix = stageBitextFixture(s, d)
-    def side(prefix: String) =
-      s.read.format("binaryFile")
-        .option("pathGlobFilter", s"$prefix*.txt")
-        .load(fix)
-        .select(
-          regexp_extract(col("path"), prefix + "(\\d+)\\.txt", 1).cast("long").as("doc_id"),
-          col("content"))
-        .as[(Long, Array[Byte])]
+    def side(prefix: String)(sentences: Long => Seq[String]) =
+      BinaryIngest.readPerDoc(s, d, s"bitext_${prefix}_fixture", prefix, "txt")(
+          (id, _) => sentences(id).mkString("\n").getBytes(UTF_8))
         .mapPartitions(_.map { case (id, bytes) =>
-          (id, new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-            .split("\n", -1).filter(_.nonEmpty).map(_.length))
+          (id, new String(bytes, UTF_8).split("\n", -1).filter(_.nonEmpty).map(_.length))
         })
         .toDF("doc_id", s"${prefix}_lens")
-    side("src").join(side("tgt"), "doc_id")
+    side("src")(id => (0 until nSrcSentences(id)).map(k => sentence(srcLen(id, k))))
+      .join(side("tgt")(id => tgtLens(id).map(sentence)), "doc_id")
       .as[(Long, Array[Int], Array[Int])]
       .mapPartitions(_.flatMap { case (id, sl, tl) =>
         align(sl, tl).zipWithIndex.map { case ((ss, ns, ts, nt), idx) =>

@@ -106,8 +106,7 @@ object Ingest {
         element_at(col("pages"), 1).getField("page_link").as("first_page_link"),
         element_at(col("document_tags"), 1).as("first_tag"),
         element_at(col("document_metadata"), "lang").as("meta_lang"),
-        aggregate(col("pages"), lit(0L), (acc, p) => acc + size(p.getField("page_snippets")))
-          .as("n_snippets"))
+        size(flatten(col("pages").getField("page_snippets"))).cast("long").as("n_snippets"))
       .orderBy("document_id")
   }
 }

@@ -198,7 +198,7 @@ object Multimodal {
 
   /** Real PNG uploads, one file per document. */
   private def pngFiles(s: SparkSession, d: String) =
-    BinaryIngest.readPerDoc(s, d, "png_fixture", "img", "png")(buildPng)
+    BinaryIngest.readPerDoc(s, d, "png_fixture", "img", "png")((id, _) => buildPng(id))
 
   /** Oracle-checked REAL-image round trip: documents staged as actual PNG
     * files -> binaryFile scan -> ImageIO decode (mapPartitions, per-
@@ -511,7 +511,7 @@ object Multimodal {
   } catch { case _: Exception => None }
 
   private def pngMetaFiles(s: SparkSession, d: String) =
-    BinaryIngest.readPerDoc(s, d, "pngmeta_fixture", "meta", "png") { id =>
+    BinaryIngest.readPerDoc(s, d, "pngmeta_fixture", "meta", "png") { (id, _) =>
       addTextChunks(buildPng(id), pngMetaFor(id))
     }
 
@@ -689,7 +689,7 @@ object Multimodal {
     pngOf(docId)((x, y) => x + y + (docId % 64).toInt)
 
   private def blurFiles(s: SparkSession, d: String) =
-    BinaryIngest.readPerDoc(s, d, "blur_fixture", "blur", "png") { id =>
+    BinaryIngest.readPerDoc(s, d, "blur_fixture", "blur", "png") { (id, _) =>
       if (id % 4 == 0) buildPngBlur(id) else buildPngTextured(id, 0)
     }
 
@@ -745,7 +745,7 @@ object Multimodal {
   }
 
   private def wavClipFiles(s: SparkSession, d: String) =
-    BinaryIngest.readPerDoc(s, d, "wavclip_fixture", "clip", "wav")(buildWavClip)
+    BinaryIngest.readPerDoc(s, d, "wavclip_fixture", "clip", "wav")((id, _) => buildWavClip(id))
 
   /** Oracle-checked clipping detection — the audio-QC sibling of the
     * blur screen (a clipped recording distorts features downstream the
@@ -853,7 +853,7 @@ object Multimodal {
   }
 
   private def wavVadFiles(s: SparkSession, d: String) =
-    BinaryIngest.readPerDoc(s, d, "wavvad_fixture", "vad", "wav")(buildWavVad)
+    BinaryIngest.readPerDoc(s, d, "wavvad_fixture", "vad", "wav")((id, _) => buildWavVad(id))
 
   /** Oracle-checked voice-activity detection: staged clips plant silence
     * in a quadratic-residue pattern (variable-length runs); the engine
@@ -881,7 +881,7 @@ object Multimodal {
 
   /** Real WAV uploads, one file per document. */
   private def wavFiles(s: SparkSession, d: String) =
-    BinaryIngest.readPerDoc(s, d, "wav_fixture", "clip", "wav")(buildWav)
+    BinaryIngest.readPerDoc(s, d, "wav_fixture", "clip", "wav")((id, _) => buildWav(id))
 
   /** Oracle-checked REAL-audio round trip: documents staged as actual
     * RIFF/WAVE files -> binaryFile scan -> JDK AudioSystem decode
@@ -994,7 +994,7 @@ object Multimodal {
 
   /** Real animated-GIF uploads, one file per document. */
   private def gifFiles(s: SparkSession, d: String) =
-    BinaryIngest.readPerDoc(s, d, "gif_fixture", "anim", "gif")(buildGif)
+    BinaryIngest.readPerDoc(s, d, "gif_fixture", "anim", "gif")((id, _) => buildGif(id))
 
   /** Oracle-checked REAL frame extraction: documents staged as actual
     * animated GIFs -> binaryFile scan -> per-frame ImageIO decode
@@ -1263,7 +1263,7 @@ object Multimodal {
 
   /** Real AVI uploads, one clip per document. */
   private def aviFiles(s: SparkSession, d: String) =
-    BinaryIngest.readPerDoc(s, d, "avi_fixture", "clip", "avi")(buildAvi)
+    BinaryIngest.readPerDoc(s, d, "avi_fixture", "clip", "avi")((id, _) => buildAvi(id))
 
   /** Oracle-checked REAL video-frame extraction: documents staged as
     * actual RIFF/AVI clips -> binaryFile scan -> independent container
@@ -1333,7 +1333,7 @@ object Multimodal {
   /** Shot-detection clips: the [[buildAviDib]] encoder with planted
     * scene cuts every segLen frames. */
   private def aviShotsFiles(s: SparkSession, d: String) =
-    BinaryIngest.readPerDoc(s, d, "avishots_fixture", "shots", "avi") { id =>
+    BinaryIngest.readPerDoc(s, d, "avishots_fixture", "shots", "avi") { (id, _) =>
       buildAviDib(((id % 19 + 6).toInt, (id % 11 + 6).toInt, ShotFrames), shotPixel(id))
     }
 

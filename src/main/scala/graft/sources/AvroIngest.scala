@@ -99,29 +99,17 @@ object AvroIngest {
     out.toByteArray
   }
 
-  /** Stage the documents table as 8 hand-rolled Avro shards,
-    * executor-written, versioned + atomically published. */
+  /** Stage the documents table as 8 hand-rolled Avro shards (doc_id % 8,
+    * see [[BinaryIngest.stageShards]]). */
   def stageAvroFixture(s: SparkSession, d: String): String = {
-    val fix = BinaryIngest.fixtureRoot("avro_fixture", d)
-    BinaryIngest.publishFixture(fix) { tmp =>
-      import s.implicits._
-      Tables.documents(s, d)
-        .select(col("doc_id"), col("lang"), col("source"), col("text"))
-        .as[(Long, String, String, String)]
-        .repartition(8, col("doc_id") % 8)
-        .mapPartitions { it =>
-          val docs = it.toSeq.sortBy(_._1)
-          if (docs.isEmpty) Iterator.empty
-          else {
-            val shard = docs.head._1 % 8
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(tmp, f"shard-$shard%02d.avro"),
-              buildShard(shard, docs))
-            Iterator.single(shard)
-          }
-        }.count()
+    import s.implicits._
+    BinaryIngest.stageShards(s, d, "avro_fixture",
+        Tables.documents(s, d)
+          .select(col("doc_id"), col("lang"), col("source"), col("text"))
+          .as[(Long, String, String, String)],
+        shard => f"shard-$shard%02d.avro")(_._1) {
+      (shard, docs, out) => out.write(buildShard(shard, docs))
     }
-    fix
   }
 
   /** Oracle-checked Avro round trip: hand-rolled object container files

@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.engine.{Scratch, Tables}
 import graft.operators.Ingest
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** S1: the reference's binary upload source (data_ingestion.py:110-134
@@ -643,71 +643,123 @@ object BinaryIngest {
     * (the old paths simply stop being looked at). */
   private val FixtureVersion = 4 // v4: buildPdfTreeInherit's /F1 became a direct inline dict (q_pdf_tree)
 
+  /** Shard count of every sharded fixture (see [[stageShards]]). */
+  private val FixtureShards = 8
+
   /** Versioned fixture root for sf dir `d`: deterministic per (builder
     * version, sf dir), so a builder change = a fresh path. */
-  private[graft] def fixtureRoot(kind: String, d: String): String =
+  private def fixtureRoot(kind: String, d: String): String =
     s"/tmp/graft_${kind}_v${FixtureVersion}_" + d.replaceAll("[^A-Za-z0-9]", "_")
 
-  /** Atomically publish a staged directory: `build` populates a per-JVM
-    * temp dir which is then renamed into `target` (same-FS dir rename is
-    * atomic on POSIX). A concurrent verify/bench JVM either sees no
-    * target (and builds its own identical copy) or a COMPLETE one — never
-    * a half-written dir. The `_SUCCESS` marker inside survives the rename
-    * with the rest of the contents. */
-  private[graft] def publishFixture(target: String)(build: String => Unit): Unit = {
-    if (new java.io.File(target, "_SUCCESS").exists()) return
-    val tmp = target + ".tmp." + java.lang.ProcessHandle.current().pid()
-    val tmpDir = new java.io.File(tmp)
-    if (tmpDir.exists()) Scratch.rmTree(tmpDir)
-    tmpDir.mkdirs()
-    build(tmp)
-    new java.io.File(tmp, "_SUCCESS").createNewFile()
-    try
-      java.nio.file.Files.move(java.nio.file.Paths.get(tmp),
-        java.nio.file.Paths.get(target),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch { // a racer published first; ours is identical — discard it
-      case _: java.nio.file.FileAlreadyExistsException |
-           _: java.nio.file.FileSystemException => Scratch.rmTree(tmpDir)
+  private val publishSeq = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Publish the fixture `kind` of sf dir `d` atomically and return its
+    * root: `build` populates a temp dir private to this call, which is
+    * then renamed into the root (same-FS dir rename is atomic on POSIX).
+    * A concurrent caller, in this JVM or another, either sees no root
+    * (and builds its own identical copy) or a COMPLETE one — never a
+    * half-written dir. The `_SUCCESS` marker inside survives the rename
+    * with the rest of the contents; once it exists `build` never runs
+    * again. When `build` throws, the temp dir is removed and the error
+    * rethrown, so the next call builds afresh. */
+  private[graft] def publishFixture(kind: String, d: String)(build: String => Unit): String = {
+    val target = fixtureRoot(kind, d)
+    if (!new java.io.File(target, "_SUCCESS").exists()) {
+      val tmp = s"$target.tmp.${java.lang.ProcessHandle.current().pid()}.${publishSeq.incrementAndGet()}"
+      val tmpDir = new java.io.File(tmp)
+      if (tmpDir.exists()) Scratch.rmTree(tmpDir)
+      tmpDir.mkdirs()
+      try {
+        build(tmp)
+        new java.io.File(tmp, "_SUCCESS").createNewFile()
+      } catch { case e: Throwable => Scratch.rmTree(tmpDir); throw e }
+      try
+        java.nio.file.Files.move(java.nio.file.Paths.get(tmp),
+          java.nio.file.Paths.get(target),
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      catch { // a racer published first; ours is identical — discard it
+        case _: java.nio.file.FileAlreadyExistsException |
+             _: java.nio.file.FileSystemException => Scratch.rmTree(tmpDir)
+      }
     }
+    target
   }
 
-  /** Stage a per-document media fixture: one `<prefix><doc_id %05d>.<ext>`
-    * file per document with doc_id < 200, its bytes `build(doc_id)`,
-    * written by the executors (the bytes never pass through the driver)
-    * under the versioned root of `kind` and published atomically (see
+  /** The documents a capped fixture stages: doc_id < 200 — the point is
+    * the source plumbing, not volume. */
+  private[graft] def fixtureDocs(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d).filter(col("doc_id") < 200)
+
+  /** Stage a per-document fixture: one `<prefix><doc_id %05d>.<ext>`
+    * file per document with doc_id < 200, its bytes `build(doc_id, text)`
+    * (a NULL text passed as ""), written by the executors (the bytes
+    * never pass through the driver) and published atomically (see
     * [[publishFixture]]). Returns the root. */
   private[graft] def stagePerDoc(s: SparkSession, d: String, kind: String,
-      prefix: String, ext: String)(build: Long => Array[Byte]): String = {
-    val fix = fixtureRoot(kind, d)
-    publishFixture(fix) { tmp =>
+      prefix: String, ext: String)(build: (Long, String) => Array[Byte]): String =
+    publishFixture(kind, d) { tmp =>
       import s.implicits._
-      Tables.documents(s, d).filter(col("doc_id") < 200)
-        .select(col("doc_id")).as[Long]
-        .mapPartitions(_.map { id =>
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(tmp, f"$prefix$id%05d.$ext"), build(id))
+      fixtureDocs(s, d).select(col("doc_id"), col("text")).as[(Long, String)]
+        .mapPartitions(_.map { case (id, text) =>
+          java.nio.file.Files.write(java.nio.file.Paths.get(tmp, f"$prefix$id%05d.$ext"),
+            build(id, if (text == null) "" else text))
           id
         }).count()
     }
-    fix
-  }
 
-  /** A per-document media fixture as `(doc_id, content)`: staged by
+  /** The doc_id a [[stagePerDoc]] file carries in its `path`. */
+  private[graft] def docIdOf(prefix: String, ext: String): Column =
+    regexp_extract(col("path"), s"$prefix(\\d+)\\.$ext", 1).cast("long").as("doc_id")
+
+  /** A per-document fixture as `(doc_id, content)`: staged by
     * [[stagePerDoc]] (a no-op once published), then one `binaryFile` scan
     * of its `*.<ext>` files with the id taken from the file name. */
   private[graft] def readPerDoc(s: SparkSession, d: String, kind: String,
-      prefix: String, ext: String)(build: Long => Array[Byte])
-      : org.apache.spark.sql.Dataset[(Long, Array[Byte])] = {
+      prefix: String, ext: String)(build: (Long, String) => Array[Byte])
+      : Dataset[(Long, Array[Byte])] = {
     import s.implicits._
     s.read.format("binaryFile")
       .option("pathGlobFilter", s"*.$ext")
       .load(stagePerDoc(s, d, kind, prefix, ext)(build))
-      .select(
-        regexp_extract(col("path"), s"$prefix(\\d+)\\.$ext", 1).cast("long").as("doc_id"),
-        col("content"))
+      .select(docIdOf(prefix, ext), col("content"))
       .as[(Long, Array[Byte])]
   }
+
+  /** Stage `rows` as sharded files under the fixture root of `kind`:
+    * rows go to shard `doc_id % 8`, each non-empty partition sorts its
+    * rows by `id` and `write`s them as ONE file named `file(shard)`
+    * (streamed to the output, which the stager closes), then `finish`
+    * runs on the populated dir and the lot is published atomically (see
+    * [[publishFixture]]). Returns the root.
+    *
+    * Shard-naming invariant: `repartition(8, doc_id % 8)`
+    * hash-co-partitions, so a residue class is never split across
+    * partitions; naming each partition's single output file by its HEAD
+    * row's shard is therefore collision-free even when two residue
+    * classes hash into one partition (that partition writes one file
+    * containing both; the other classes' partitions are empty). So
+    * every shard file's rows share no residue with any other file, but
+    * a file may hold more than one residue. */
+  private[graft] def stageShards[T](s: SparkSession, d: String, kind: String,
+      rows: Dataset[T], file: Long => String,
+      finish: String => Unit = _ => ())(id: T => Long)
+      (write: (Long, Seq[T], java.io.OutputStream) => Unit): String =
+    publishFixture(kind, d) { tmp =>
+      import s.implicits._
+      rows.repartition(FixtureShards, col("doc_id") % FixtureShards)
+        .mapPartitions { it =>
+          val docs = it.toSeq.sortBy(id)
+          if (docs.isEmpty) Iterator.empty
+          else {
+            val shard = id(docs.head) % FixtureShards
+            val out = java.nio.file.Files.newOutputStream(
+              java.nio.file.Paths.get(tmp, file(shard)))
+            try write(shard, docs, out) finally out.close()
+            Iterator.single(shard)
+          }
+        }.count()
+      finish(tmp)
+    }
 
   /** Stage the pre-extracted fixture: one text FILE per document (the
     * per-upload unit the reference receives, DI:110), written DISTRIBUTED
@@ -715,15 +767,11 @@ object BinaryIngest {
     * the driver. Versioned deterministic location per sf dir; published
     * atomically (see [[publishFixture]]). Capped at 200 docs: the point
     * is the source plumbing, not volume. */
-  def stageFixture(s: SparkSession, d: String): String = {
-    val fix = fixtureRoot("s1_fixture", d)
-    publishFixture(fix) { tmp =>
-      Tables.documents(s, d).filter(col("doc_id") < 200)
-        .select(col("text"), col("doc_id"))
+  def stageFixture(s: SparkSession, d: String): String =
+    publishFixture("s1_fixture", d) { tmp =>
+      fixtureDocs(s, d).select(col("text"), col("doc_id"))
         .write.partitionBy("doc_id").mode("overwrite").text(tmp + "/data")
-    }
-    fix + "/data"
-  }
+    } + "/data"
 
   /** Build one VALID single-page PDF whose content stream is
     * Flate-COMPRESSED and carries `text` as a single escaped show-text
@@ -1465,14 +1513,8 @@ object BinaryIngest {
     * keys from the /Encrypt dict the xref trailer references): the old
     * route-to-legacy fallback decrypts but loses page scoping and
     * provably garbles one page. */
-  def qPdfEncXref(s: SparkSession, d: String): DataFrame = {
-    val fix = stagePdfFixture(s, d, kind = "pdfencx_fixture", build = buildPdfEncXref)
-    readBinaryDocs(s, fix, pdfTextExtractorFull, glob = "*.pdf")
-      .withColumn("doc_id",
-        regexp_extract(col("path"), "doc(\\d+)\\.pdf", 1).cast("long"))
-      .select(col("doc_id"), col("text"))
-      .orderBy("doc_id")
-  }
+  def qPdfEncXref(s: SparkSession, d: String): DataFrame =
+    pdfRoundTrip(s, d, "pdfencx_fixture", buildPdfEncXref)
 
   /** [[buildPdfTwoPageDiff]]'s structural sibling for the round-13
     * page-tree seams: a NESTED page tree (the root /Pages node holds an
@@ -1596,14 +1638,8 @@ object BinaryIngest {
     * + indirection resolution all at once: a single-level /Kids read
     * loses half the text, and any resource-resolution miss decodes one
     * page with the other's glyphs. */
-  def qPdfTree(s: SparkSession, d: String): DataFrame = {
-    val fix = stagePdfFixture(s, d, kind = "pdftree_fixture", build = buildPdfTreeInherit)
-    readBinaryDocs(s, fix, pdfTextExtractorFull, glob = "*.pdf")
-      .withColumn("doc_id",
-        regexp_extract(col("path"), "doc(\\d+)\\.pdf", 1).cast("long"))
-      .select(col("doc_id"), col("text"))
-      .orderBy("doc_id")
-  }
+  def qPdfTree(s: SparkSession, d: String): DataFrame =
+    pdfRoundTrip(s, d, "pdftree_fixture", buildPdfTreeInherit)
 
   /** Oracle-checked PER-PAGE font-scope round trip (round 12): documents
     * staged as TWO-PAGE xref-stream PDFs ([[buildPdfTwoPageDiff]]) whose
@@ -1611,38 +1647,17 @@ object BinaryIngest {
     * Differences maps — only page-scoped resolution reproduces the
     * text; a document-level per-name merge decodes page 1 with page 2's
     * glyphs and hash-fails. */
-  def qPdfPageScope(s: SparkSession, d: String): DataFrame = {
-    val fix = stagePdfFixture(s, d, kind = "pdfpage_fixture", build = buildPdfTwoPageDiff)
-    readBinaryDocs(s, fix, pdfTextExtractorFull, glob = "*.pdf")
-      .withColumn("doc_id",
-        regexp_extract(col("path"), "doc(\\d+)\\.pdf", 1).cast("long"))
-      .select(col("doc_id"), col("text"))
-      .orderBy("doc_id")
-  }
+  def qPdfPageScope(s: SparkSession, d: String): DataFrame =
+    pdfRoundTrip(s, d, "pdfpage_fixture", buildPdfTwoPageDiff)
 
-  /** Stage real COMPRESSED-PDF uploads: one .pdf file per document,
-    * written from the EXECUTORS (mapPartitions — document bytes never
-    * pass through the driver; in local mode /tmp is the shared FS, on a
-    * cluster point this at one). Deterministic, idempotent. */
-  def stagePdfFixture(s: SparkSession, d: String, kind: String = "pdf_fixture",
-      build: String => Array[Byte] = buildPdf): String = {
-    val fix = fixtureRoot(kind, d)
-    publishFixture(fix) { tmp =>
-      import s.implicits._
-      Tables.documents(s, d).filter(col("doc_id") < 200)
-        .select(col("doc_id"), col("text"))
-        .as[(Long, String)]
-        .mapPartitions { it =>
-          it.map { case (id, text) =>
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(tmp, f"doc$id%05d.pdf"),
-              build(Option(text).getOrElse("")))
-            id
-          }
-        }.count()
-    }
-    fix
-  }
+  /** The PDF round trip every q_pdf_* key runs: documents staged as
+    * `doc<id>.pdf` files built by `build(text)` ([[stagePerDoc]]), read
+    * back through [[pdfTextExtractorFull]] as (doc_id, text). */
+  private def pdfRoundTrip(s: SparkSession, d: String, kind: String,
+      build: String => Array[Byte]): DataFrame =
+    readPerDoc(s, d, kind, "doc", "pdf")((_, text) => build(text))
+      .select(col("doc_id"), pdfTextExtractorFull(col("content")).as("text"))
+      .orderBy("doc_id")
 
   /** Oracle-checked FULL-PDF round trip: documents staged as real
     * Flate-compressed PDFs -> binaryFile scan -> [[pdfTextExtractorFull]]
@@ -1650,14 +1665,8 @@ object BinaryIngest {
     * the source table. A single flipped byte, bad escape, lost run or
     * broken inflate fails the hash compare — the extractor itself is
     * under the driver gate, not just its spec. */
-  def qPdfIngest(s: SparkSession, d: String): DataFrame = {
-    val fix = stagePdfFixture(s, d)
-    readBinaryDocs(s, fix, pdfTextExtractorFull, glob = "*.pdf")
-      .withColumn("doc_id",
-        regexp_extract(col("path"), "doc(\\d+)\\.pdf", 1).cast("long"))
-      .select(col("doc_id"), col("text"))
-      .orderBy("doc_id")
-  }
+  def qPdfIngest(s: SparkSession, d: String): DataFrame =
+    pdfRoundTrip(s, d, "pdf_fixture", buildPdf)
 
   /** Oracle-checked COMPOSITE-FONT round trip (r5 stretch item #8):
     * documents staged as Type0/Identity-H PDFs ([[buildPdfCid]] — hex
@@ -1665,14 +1674,8 @@ object BinaryIngest {
     * through the SAME extractor slot, exact text equality against the
     * source table. The 0x100 code offset means a decoder that ignores
     * the CMap cannot accidentally pass. */
-  def qPdfCid(s: SparkSession, d: String): DataFrame = {
-    val fix = stagePdfFixture(s, d, kind = "pdfcid_fixture", build = buildPdfCid)
-    readBinaryDocs(s, fix, pdfTextExtractorFull, glob = "*.pdf")
-      .withColumn("doc_id",
-        regexp_extract(col("path"), "doc(\\d+)\\.pdf", 1).cast("long"))
-      .select(col("doc_id"), col("text"))
-      .orderBy("doc_id")
-  }
+  def qPdfCid(s: SparkSession, d: String): DataFrame =
+    pdfRoundTrip(s, d, "pdfcid_fixture", buildPdfCid)
 
   /** Oracle-checked /DIFFERENCES round trip (VERDICT r10 Next #5 — the
     * last documented S1 fidelity seam): documents staged as simple-font
@@ -1680,14 +1683,8 @@ object BinaryIngest {
     * encoding map ([[buildPdfDiffEnc]] — identity-skipping code
     * assignment, AGL-subset names + uniXXXX fallback) through the SAME
     * extractor slot; exact text equality against the source table. */
-  def qPdfDiffenc(s: SparkSession, d: String): DataFrame = {
-    val fix = stagePdfFixture(s, d, kind = "pdfdiff_fixture", build = buildPdfDiffEnc)
-    readBinaryDocs(s, fix, pdfTextExtractorFull, glob = "*.pdf")
-      .withColumn("doc_id",
-        regexp_extract(col("path"), "doc(\\d+)\\.pdf", 1).cast("long"))
-      .select(col("doc_id"), col("text"))
-      .orderBy("doc_id")
-  }
+  def qPdfDiffenc(s: SparkSession, d: String): DataFrame =
+    pdfRoundTrip(s, d, "pdfdiff_fixture", buildPdfDiffEnc)
 
   /** Oracle-checked PER-FONT ToUnicode round trip (round 12, the CMap
     * sibling of [[qPdfDiffenc2]]): documents staged as TWO-COMPOSITE-FONT
@@ -1695,14 +1692,8 @@ object BinaryIngest {
     * characters — only Tf-tracked per-font CMap scoping reproduces the
     * text; the merged document CMap decodes one half with the other
     * half's characters and hash-fails. */
-  def qPdfCid2(s: SparkSession, d: String): DataFrame = {
-    val fix = stagePdfFixture(s, d, kind = "pdfcid2_fixture", build = buildPdfCid2)
-    readBinaryDocs(s, fix, pdfTextExtractorFull, glob = "*.pdf")
-      .withColumn("doc_id",
-        regexp_extract(col("path"), "doc(\\d+)\\.pdf", 1).cast("long"))
-      .select(col("doc_id"), col("text"))
-      .orderBy("doc_id")
-  }
+  def qPdfCid2(s: SparkSession, d: String): DataFrame =
+    pdfRoundTrip(s, d, "pdfcid2_fixture", buildPdfCid2)
 
   /** Oracle-checked PER-FONT /Differences round trip (VERDICT r11 Next
     * #1): documents staged as TWO-FONT PDFs ([[buildPdfDiffEnc2]])
@@ -1711,14 +1702,8 @@ object BinaryIngest {
     * each show op to ITS font's map reproduces the text; the merged
     * per-document map decodes half the document with the other half's
     * glyphs and hash-fails. */
-  def qPdfDiffenc2(s: SparkSession, d: String): DataFrame = {
-    val fix = stagePdfFixture(s, d, kind = "pdfdiff2_fixture", build = buildPdfDiffEnc2)
-    readBinaryDocs(s, fix, pdfTextExtractorFull, glob = "*.pdf")
-      .withColumn("doc_id",
-        regexp_extract(col("path"), "doc(\\d+)\\.pdf", 1).cast("long"))
-      .select(col("doc_id"), col("text"))
-      .orderBy("doc_id")
-  }
+  def qPdfDiffenc2(s: SparkSession, d: String): DataFrame =
+    pdfRoundTrip(s, d, "pdfdiff2_fixture", buildPdfDiffEnc2)
 
   /** Oracle-checked ENCRYPTED-PDF round trip (the r5 verdict's remaining
     * named PDF gap after CID): documents staged as RC4-128
@@ -1726,26 +1711,14 @@ object BinaryIngest {
     * extractor slot — key derivation from /O,/P,/ID, /U verification,
     * per-object decryption, THEN inflate — exact text equality against
     * the source table. */
-  def qPdfEncrypted(s: SparkSession, d: String): DataFrame = {
-    val fix = stagePdfFixture(s, d, kind = "pdfenc_fixture", build = buildPdfEncrypted)
-    readBinaryDocs(s, fix, pdfTextExtractorFull, glob = "*.pdf")
-      .withColumn("doc_id",
-        regexp_extract(col("path"), "doc(\\d+)\\.pdf", 1).cast("long"))
-      .select(col("doc_id"), col("text"))
-      .orderBy("doc_id")
-  }
+  def qPdfEncrypted(s: SparkSession, d: String): DataFrame =
+    pdfRoundTrip(s, d, "pdfenc_fixture", buildPdfEncrypted)
 
   /** Oracle-checked AES round trip: documents staged as /V 4 /AESV2
     * PDFs ([[buildPdfAes]]) — salted per-object keys, AES-128-CBC with
     * prepended IVs — through the same seam; exact text equality. */
-  def qPdfAes(s: SparkSession, d: String): DataFrame = {
-    val fix = stagePdfFixture(s, d, kind = "pdfaes_fixture", build = buildPdfAes)
-    readBinaryDocs(s, fix, pdfTextExtractorFull, glob = "*.pdf")
-      .withColumn("doc_id",
-        regexp_extract(col("path"), "doc(\\d+)\\.pdf", 1).cast("long"))
-      .select(col("doc_id"), col("text"))
-      .orderBy("doc_id")
-  }
+  def qPdfAes(s: SparkSession, d: String): DataFrame =
+    pdfRoundTrip(s, d, "pdfaes_fixture", buildPdfAes)
 
   /** Oracle-checked AES-256 round trip: documents staged as /V 5 /R 6
     * /AESV3 PDFs ([[buildPdfAes256]]) — Algorithm-2.B password hash,
@@ -1753,14 +1726,8 @@ object BinaryIngest {
     * same seam; exact text equality. With this, ALL THREE
     * standard-security generations (RC4 V2, AES V4, AES-256 V5) are
     * first-class. */
-  def qPdfAes256(s: SparkSession, d: String): DataFrame = {
-    val fix = stagePdfFixture(s, d, kind = "pdfaes256_fixture", build = buildPdfAes256)
-    readBinaryDocs(s, fix, pdfTextExtractorFull, glob = "*.pdf")
-      .withColumn("doc_id",
-        regexp_extract(col("path"), "doc(\\d+)\\.pdf", 1).cast("long"))
-      .select(col("doc_id"), col("text"))
-      .orderBy("doc_id")
-  }
+  def qPdfAes256(s: SparkSession, d: String): DataFrame =
+    pdfRoundTrip(s, d, "pdfaes256_fixture", buildPdfAes256)
 
   /** Oracle-checked POST-1.5-LAYOUT round trip: documents staged as
     * cross-reference-stream + /ObjStm PDFs that carry a freed STALE
@@ -1770,14 +1737,8 @@ object BinaryIngest {
     * resurrects "STALE ..." into the output and hash-mismatches; a
     * reader that cannot decode the PNG-predicted xref rows, the ObjStm
     * pair table, or the indirect-/Length-in-ObjStm extracts nothing. */
-  def qPdfObjStm(s: SparkSession, d: String): DataFrame = {
-    val fix = stagePdfFixture(s, d, kind = "pdfobjstm_fixture", build = buildPdfObjStm)
-    readBinaryDocs(s, fix, pdfTextExtractorFull, glob = "*.pdf")
-      .withColumn("doc_id",
-        regexp_extract(col("path"), "doc(\\d+)\\.pdf", 1).cast("long"))
-      .select(col("doc_id"), col("text"))
-      .orderBy("doc_id")
-  }
+  def qPdfObjStm(s: SparkSession, d: String): DataFrame =
+    pdfRoundTrip(s, d, "pdfobjstm_fixture", buildPdfObjStm)
 
   /** Oracle-checked S1 round trip: stage files -> binaryFile scan ->
     * UTF-8 extraction -> nested document build (broadcast dim lookup,
@@ -1802,8 +1763,7 @@ object BinaryIngest {
         col("document_id"),
         col("category_name"),
         size(col("pages")).cast("long").as("n_pages"),
-        aggregate(col("pages"), lit(0L),
-          (acc, p) => acc + size(p.getField("page_snippets"))).as("n_snippets"),
+        size(flatten(col("pages").getField("page_snippets"))).cast("long").as("n_snippets"),
         element_at(element_at(col("pages"), 1).getField("page_snippets"), 1)
           .getField("snippet_text").as("first_snippet"))
       .orderBy("document_id")

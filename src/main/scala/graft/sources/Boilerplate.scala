@@ -1,8 +1,7 @@
 package graft.sources
 
-import graft.engine.Tables
+import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Block-level boilerplate removal — the main-content extraction step of
   * the crawl pipeline (the jusText / Boilerpipe family: Kohlschütter 2010,
@@ -162,26 +161,6 @@ object Boilerplate {
 <footer>&copy; 2026 Graft</footer>
 </body></html>"""
 
-  /** Stage boilerplate-laden .html files, one per document. */
-  def stageBpFixture(s: SparkSession, d: String): String = {
-    val fix = BinaryIngest.fixtureRoot("bp_fixture", d)
-    BinaryIngest.publishFixture(fix) { tmp =>
-      import s.implicits._
-      Tables.documents(s, d).filter(col("doc_id") < 200)
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .mapPartitions { it =>
-          it.map { case (id, text) =>
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(tmp, f"bp$id%05d.html"),
-              buildBpPage(id, if (text == null) "" else text)
-                .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            id
-          }
-        }.count()
-    }
-    fix
-  }
-
   /** Oracle-checked boilerplate removal: staged pages bury each
     * document's text in nav/tag-cloud/teaser/footer noise; the extractor
     * must keep EXACTLY the body (when long enough) and the prose block —
@@ -192,18 +171,11 @@ object Boilerplate {
   def qBoilerplate(s: SparkSession, d: String): DataFrame = {
     val spark = s
     import spark.implicits._
-    val fix = stageBpFixture(s, d)
-    s.read.format("binaryFile")
-      .option("pathGlobFilter", "*.html")
-      .load(fix)
-      .select(
-        regexp_extract(col("path"), "bp(\\d+)\\.html", 1).cast("long").as("doc_id"),
-        col("content"))
-      .as[(Long, Array[Byte])]
+    BinaryIngest.readPerDoc(s, d, "bp_fixture", "bp", "html")(
+        (id, text) => buildBpPage(id, text).getBytes(UTF_8))
       .mapPartitions { it =>
         it.map { case (id, bytes) =>
-          val (main, nb, nc) =
-            extractMain(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
+          val (main, nb, nc) = extractMain(new String(bytes, UTF_8))
           (id, nb, nc, main)
         }
       }

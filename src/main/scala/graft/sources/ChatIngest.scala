@@ -1,8 +1,7 @@
 package graft.sources
 
-import graft.engine.Tables
+import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Chat-transcript preparation — the SFT (supervised fine-tuning) slice
   * of a training mix: conversations arrive as role-tagged transcripts,
@@ -70,25 +69,6 @@ Follow-up $docId?
 <|assistant|>
 Reply two."""
 
-  def stageChatFixture(s: SparkSession, d: String): String = {
-    val fix = BinaryIngest.fixtureRoot("chat_fixture", d)
-    BinaryIngest.publishFixture(fix) { tmp =>
-      import s.implicits._
-      Tables.documents(s, d).filter(col("doc_id") < 200)
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .mapPartitions { it =>
-          it.map { case (id, text) =>
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(tmp, f"chat$id%05d.txt"),
-              buildChat(id, if (text == null) "" else text)
-                .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            id
-          }
-        }.count()
-    }
-    fix
-  }
-
   /** Oracle-checked turn parsing + loss masking: staged transcripts
     * embed the document body as the user turn among closed-form turns,
     * an unknown-role turn and pre-marker garbage; the oracle states
@@ -98,16 +78,10 @@ Reply two."""
   def qChatTurns(s: SparkSession, d: String): DataFrame = {
     val spark = s
     import spark.implicits._
-    val fix = stageChatFixture(s, d)
-    s.read.format("binaryFile")
-      .option("pathGlobFilter", "*.txt")
-      .load(fix)
-      .select(
-        regexp_extract(col("path"), "chat(\\d+)\\.txt", 1).cast("long").as("doc_id"),
-        col("content"))
-      .as[(Long, Array[Byte])]
+    BinaryIngest.readPerDoc(s, d, "chat_fixture", "chat", "txt")(
+        (id, text) => buildChat(id, text).getBytes(UTF_8))
       .mapPartitions(_.flatMap { case (id, bytes) =>
-        parseChat(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
+        parseChat(new String(bytes, UTF_8))
           .map { case (i, r, c, n, loss) => (id, i, r, c, n, loss) }
       })
       .toDF("doc_id", "turn_idx", "role", "content", "n_tokens", "in_loss")

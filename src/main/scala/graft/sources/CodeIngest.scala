@@ -1,8 +1,7 @@
 package graft.sources
 
-import graft.engine.Tables
+import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Code-corpus preparation — the source-code slice of a pretraining mix
   * (The Stack / StarCoder prep): license screening decides what may be
@@ -92,42 +91,14 @@ object CodeIngest {
       "}\n"
   }
 
-  def stageCodeFixture(s: SparkSession, d: String): String = {
+  private def codeFiles(s: SparkSession, d: String) = {
+    import s.implicits._
     // own v2 suffix: the 41-hex boundary decoy joined the template after
     // first staging; a CSV-style kind bump avoids rebuilding every other
     // fixture for a code-only change
-    val fix = BinaryIngest.fixtureRoot("code_v2_fixture", d)
-    BinaryIngest.publishFixture(fix) { tmp =>
-      import s.implicits._
-      Tables.documents(s, d).filter(col("doc_id") < 200)
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .mapPartitions { it =>
-          it.map { case (id, text) =>
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(tmp, f"mod$id%05d.js"),
-              buildCode(id, if (text == null) "" else text)
-                .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            id
-          }
-        }.count()
-    }
-    fix
-  }
-
-  private def codeFiles(s: SparkSession, d: String) = {
-    val spark = s
-    import spark.implicits._
-    val fix = stageCodeFixture(s, d)
-    s.read.format("binaryFile")
-      .option("pathGlobFilter", "*.js")
-      .load(fix)
-      .select(
-        regexp_extract(col("path"), "mod(\\d+)\\.js", 1).cast("long").as("doc_id"),
-        col("content"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        (id, new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
-      })
+    BinaryIngest.readPerDoc(s, d, "code_v2_fixture", "mod", "js")(
+        (id, text) => buildCode(id, text).getBytes(UTF_8))
+      .mapPartitions(_.map { case (id, bytes) => (id, new String(bytes, UTF_8)) })
   }
 
   // ---------------------------------------------------- comment scanner

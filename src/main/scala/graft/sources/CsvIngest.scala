@@ -58,38 +58,25 @@ object CsvIngest {
   def csvUnescape(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     replace(c, lit("\\\\"), lit("\\"))
 
-  /** Stage the documents table as 8 CSV shards with header rows,
-    * executor-written, versioned + atomically published (doc_id % 8
-    * sharding — the JSONL/WARC co-partitioning invariant). */
+  /** Stage the documents table as 8 CSV shards with header rows (doc_id
+    * % 8, see [[BinaryIngest.stageShards]]). */
   def stageCsvFixture(s: SparkSession, d: String): String = {
+    import s.implicits._
     // kind carries its own e2 suffix: the escape scheme changed after the
     // first staging (backslash doubling + quoted empty), and the global
     // FixtureVersion must not rebuild every other fixture for a CSV-only
     // format change
-    val fix = BinaryIngest.fixtureRoot("csv_e2_fixture", d)
-    BinaryIngest.publishFixture(fix) { tmp =>
-      import s.implicits._
-      Tables.documents(s, d)
-        .select(col("doc_id"), col("lang"), col("source"), col("text"))
-        .as[(Long, String, String, String)]
-        .repartition(8, col("doc_id") % 8)
-        .mapPartitions { it =>
-          val docs = it.toSeq.sortBy(_._1)
-          if (docs.isEmpty) Iterator.empty
-          else {
-            val shard = docs.head._1 % 8
-            val sb = new StringBuilder("doc_id,lang,source,text\r\n")
-            docs.foreach { case (id, lang, source, text) =>
-              sb.append(csvRow(Seq(id.toString, lang, source, text))).append("\r\n")
-            }
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(tmp, f"shard-$shard%02d.csv"),
-              sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            Iterator.single(shard)
-          }
-        }.count()
+    BinaryIngest.stageShards(s, d, "csv_e2_fixture",
+        Tables.documents(s, d)
+          .select(col("doc_id"), col("lang"), col("source"), col("text"))
+          .as[(Long, String, String, String)],
+        shard => f"shard-$shard%02d.csv")(_._1) { (_, docs, out) =>
+      val sb = new StringBuilder("doc_id,lang,source,text\r\n")
+      docs.foreach { case (id, lang, source, text) =>
+        sb.append(csvRow(Seq(id.toString, lang, source, text))).append("\r\n")
+      }
+      out.write(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
-    fix
   }
 
   /** Oracle-checked CSV round trip: hand-rolled RFC 4180 shards read

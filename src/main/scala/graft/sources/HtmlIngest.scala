@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.engine.Tables
+import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -140,26 +140,10 @@ object HtmlIngest {
 <footer>&copy; 2026&nbsp;&#x47;raft</footer>
 </body></html>"""
 
-  /** Stage real .html files, one per document — executor-written,
-    * versioned + atomically published like the PDF/PNG/WAV fixtures. */
-  def stageHtmlFixture(s: SparkSession, d: String): String = {
-    val fix = BinaryIngest.fixtureRoot("html_fixture", d)
-    BinaryIngest.publishFixture(fix) { tmp =>
-      import s.implicits._
-      Tables.documents(s, d).filter(col("doc_id") < 200)
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .mapPartitions { it =>
-          it.map { case (id, text) =>
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(tmp, f"page$id%05d.html"),
-              buildHtml(id, if (text == null) "" else text)
-                .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            id
-          }
-        }.count()
-    }
-    fix
-  }
+  /** The HTML fixture: one real web page per document ([[buildHtml]]). */
+  private def htmlFiles(s: SparkSession, d: String) =
+    BinaryIngest.readPerDoc(s, d, "html_fixture", "page", "html")(
+      (id, text) => buildHtml(id, text).getBytes(UTF_8))
 
   /** Oracle-checked HTML round trip: documents staged as real web pages
     * -> binaryFile scan -> state-machine extraction -> exact equality
@@ -170,17 +154,10 @@ object HtmlIngest {
   def qHtmlIngest(s: SparkSession, d: String): DataFrame = {
     val spark = s
     import spark.implicits._
-    val fix = stageHtmlFixture(s, d)
-    s.read.format("binaryFile")
-      .option("pathGlobFilter", "*.html")
-      .load(fix)
-      .select(
-        regexp_extract(col("path"), "page(\\d+)\\.html", 1).cast("long").as("doc_id"),
-        col("content"))
-      .as[(Long, Array[Byte])]
+    htmlFiles(s, d)
       .mapPartitions { it =>
         it.map { case (id, bytes) =>
-          (id, htmlToText(new String(bytes, java.nio.charset.StandardCharsets.UTF_8)))
+          (id, htmlToText(new String(bytes, UTF_8)))
         }
       }
       .toDF("doc_id", "text_clean")
@@ -283,18 +260,11 @@ object HtmlIngest {
     import graft.operators.UrlOps
     val spark = s
     import spark.implicits._
-    val fix = stageHtmlFixture(s, d)
-    s.read.format("binaryFile")
-      .option("pathGlobFilter", "*.html")
-      .load(fix)
-      .select(
-        regexp_extract(col("path"), "page(\\d+)\\.html", 1).cast("long").as("doc_id"),
-        col("content"))
-      .as[(Long, Array[Byte])]
+    htmlFiles(s, d)
       .mapPartitions { it =>
         it.flatMap { case (id, bytes) =>
           val base = pageBaseUrl(id)
-          extractHrefs(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
+          extractHrefs(new String(bytes, UTF_8))
             .zipWithIndex.flatMap { case (href, k) =>
               UrlOps.resolveRef(base, href).map { abs =>
                 val host = UrlOps.parseUrl(abs).map(_.host).getOrElse("")
@@ -401,26 +371,6 @@ object HtmlIngest {
 </body></html>"""
   }
 
-  /** Stage the anchor-hub fixture (same versioned atomic-publish pattern
-    * as every binary fixture). */
-  def stageAnchorFixture(s: SparkSession, d: String): String = {
-    val fix = BinaryIngest.fixtureRoot("anchor_fixture", d)
-    BinaryIngest.publishFixture(fix) { tmp =>
-      import s.implicits._
-      Tables.documents(s, d).filter(col("doc_id") < 200)
-        .select(col("doc_id")).as[Long]
-        .mapPartitions { it =>
-          it.map { id =>
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(tmp, f"hub$id%05d.html"),
-              buildAnchorPage(id).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            id
-          }
-        }.count()
-    }
-    fix
-  }
-
   // ------------------------------------------- table extraction (web tables)
 
   /** All table cells of a page in document order — the web-tables harvest
@@ -512,25 +462,6 @@ $body
 </body></html>"""
   }
 
-  /** Stage the table fixture (versioned atomic publish). */
-  def stageTableFixture(s: SparkSession, d: String): String = {
-    val fix = BinaryIngest.fixtureRoot("table_fixture", d)
-    BinaryIngest.publishFixture(fix) { tmp =>
-      import s.implicits._
-      Tables.documents(s, d).filter(col("doc_id") < 200)
-        .select(col("doc_id")).as[Long]
-        .mapPartitions { it =>
-          it.map { id =>
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(tmp, f"tab$id%05d.html"),
-              buildTablePage(id).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            id
-          }
-        }.count()
-    }
-    fix
-  }
-
   /** Oracle-checked web-table extraction: staged pages -> binaryFile scan
     * -> single-pass table walk -> one scalar row per CELL. The oracle
     * states every cell in closed form (header labels, the data-cell
@@ -542,17 +473,11 @@ $body
   def qHtmlTables(s: SparkSession, d: String): DataFrame = {
     val spark = s
     import spark.implicits._
-    val fix = stageTableFixture(s, d)
-    s.read.format("binaryFile")
-      .option("pathGlobFilter", "*.html")
-      .load(fix)
-      .select(
-        regexp_extract(col("path"), "tab(\\d+)\\.html", 1).cast("long").as("doc_id"),
-        col("content"))
-      .as[(Long, Array[Byte])]
+    BinaryIngest.readPerDoc(s, d, "table_fixture", "tab", "html")(
+        (id, _) => buildTablePage(id).getBytes(UTF_8))
       .mapPartitions { it =>
         it.flatMap { case (id, bytes) =>
-          extractTables(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
+          extractTables(new String(bytes, UTF_8))
             .map { case (t, r, c, h, text) => (id, t, r, c, h, text) }
         }
       }
@@ -578,18 +503,12 @@ $body
     import org.apache.spark.sql.expressions.Window
     val spark = s
     import spark.implicits._
-    val fix = stageAnchorFixture(s, d)
-    val links = s.read.format("binaryFile")
-      .option("pathGlobFilter", "*.html")
-      .load(fix)
-      .select(
-        regexp_extract(col("path"), "hub(\\d+)\\.html", 1).cast("long").as("doc_id"),
-        col("content"))
-      .as[(Long, Array[Byte])]
+    val links = BinaryIngest.readPerDoc(s, d, "anchor_fixture", "hub", "html")(
+        (id, _) => buildAnchorPage(id).getBytes(UTF_8))
       .mapPartitions { it =>
         it.flatMap { case (id, bytes) =>
           val base = pageBaseUrl(id)
-          extractAnchors(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
+          extractAnchors(new String(bytes, UTF_8))
             .flatMap { case (href, text) =>
               UrlOps.resolveRef(base, href).map { abs =>
                 val host = UrlOps.parseUrl(abs).map(_.host).getOrElse("")

@@ -1,6 +1,5 @@
 package graft.sources
 
-import graft.engine.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -163,29 +162,17 @@ object JsonContract {
   }
 
   def stageContractFixture(s: SparkSession, d: String): String = {
-    val fix = BinaryIngest.fixtureRoot("contract_fixture", d)
-    BinaryIngest.publishFixture(fix) { tmp =>
-      import s.implicits._
-      Tables.documents(s, d).filter(col("doc_id") < 200)
-        .select(col("doc_id"), col("lang"), col("source"), col("text"))
-        .as[(Long, String, String, String)]
-        .repartition(8, col("doc_id") % 8)
-        .mapPartitions { it =>
-          val docs = it.toSeq.sortBy(_._1)
-          if (docs.isEmpty) Iterator.empty
-          else {
-            val shard = docs.head._1 % 8
-            val body = docs.map { case (id, lang, source, text) =>
-              buildLine(id, lang, source, text)
-            }.mkString("", "\n", "\n")
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(tmp, f"shard-$shard%02d.jsonl"),
-              body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            Iterator.single(shard)
-          }
-        }.count()
+    import s.implicits._
+    BinaryIngest.stageShards(s, d, "contract_fixture",
+        BinaryIngest.fixtureDocs(s, d)
+          .select(col("doc_id"), col("lang"), col("source"), col("text"))
+          .as[(Long, String, String, String)],
+        shard => f"shard-$shard%02d.jsonl")(_._1) { (_, docs, out) =>
+      val body = docs.map { case (id, lang, source, text) =>
+        buildLine(id, lang, source, text)
+      }.mkString("", "\n", "\n")
+      out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
-    fix
   }
 
   /** Oracle-checked contract validation: staged shards plant one

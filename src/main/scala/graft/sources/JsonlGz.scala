@@ -46,35 +46,22 @@ object JsonlGz {
     s"""{"doc_id":$id,"lang":${field(lang)},"source":${field(source)},"text":${field(text)}}"""
   }
 
-  /** Stage the documents table as 8 gzipped JSONL shards (doc_id % 8),
-    * executor-written, versioned + atomically published. Shard naming
-    * relies on the hash-co-partitioning invariant documented at
-    * [[WarcIngest.stageWarcFixture]] — keep the two in sync. */
+  /** Stage the documents table as 8 gzipped JSONL shards (doc_id % 8,
+    * see [[BinaryIngest.stageShards]]). */
   def stageJsonlGzFixture(s: SparkSession, d: String): String = {
-    val fix = BinaryIngest.fixtureRoot("jsonlgz_fixture", d)
-    BinaryIngest.publishFixture(fix) { tmp =>
-      import s.implicits._
-      Tables.documents(s, d)
-        .select(col("doc_id"), col("lang"), col("source"), col("text"))
-        .as[(Long, String, String, String)]
-        .repartition(8, col("doc_id") % 8)
-        .mapPartitions { it =>
-          val docs = it.toSeq.sortBy(_._1)
-          if (docs.isEmpty) Iterator.empty
-          else {
-            val shard = docs.head._1 % 8
-            val os = new java.util.zip.GZIPOutputStream(
-              java.nio.file.Files.newOutputStream(
-                java.nio.file.Paths.get(tmp, f"shard-$shard%02d.jsonl.gz")))
-            try docs.foreach { case (id, lang, source, text) =>
-              os.write((docJsonLine(id, lang, source, text) + "\n")
-                .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            } finally os.close()
-            Iterator.single(shard)
-          }
-        }.count()
+    import s.implicits._
+    BinaryIngest.stageShards(s, d, "jsonlgz_fixture",
+        Tables.documents(s, d)
+          .select(col("doc_id"), col("lang"), col("source"), col("text"))
+          .as[(Long, String, String, String)],
+        shard => f"shard-$shard%02d.jsonl.gz")(_._1) { (_, docs, out) =>
+      val os = new java.util.zip.GZIPOutputStream(out)
+      docs.foreach { case (id, lang, source, text) =>
+        os.write((docJsonLine(id, lang, source, text) + "\n")
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      }
+      os.finish()
     }
-    fix
   }
 
   /** Oracle-checked gzip-JSONL round trip: the staged shards read back

@@ -1,8 +1,7 @@
 package graft.sources
 
-import graft.engine.Tables
+import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** LaTeX → prose extraction — the arXiv slice of a pretraining mix
   * (RedPajama/peS2o-style): papers arrive as .tex source, and the
@@ -157,26 +156,6 @@ e = mc^2 + $docId
 \\end{figure}
 \\end{document}"""
 
-  /** Stage real .tex files, one per document. */
-  def stageTexFixture(s: SparkSession, d: String): String = {
-    val fix = BinaryIngest.fixtureRoot("tex_fixture", d)
-    BinaryIngest.publishFixture(fix) { tmp =>
-      import s.implicits._
-      Tables.documents(s, d).filter(col("doc_id") < 200)
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .mapPartitions { it =>
-          it.map { case (id, text) =>
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(tmp, f"paper$id%05d.tex"),
-              buildTex(id, if (text == null) "" else text)
-                .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            id
-          }
-        }.count()
-    }
-    fix
-  }
-
   /** Oracle-checked LaTeX extraction: staged papers wrap each document's
     * text in preamble/math/citation/float machinery; the extractor must
     * surface exactly the prose — a leaked equation body, citation key,
@@ -185,17 +164,9 @@ e = mc^2 + $docId
   def qLatex(s: SparkSession, d: String): DataFrame = {
     val spark = s
     import spark.implicits._
-    val fix = stageTexFixture(s, d)
-    s.read.format("binaryFile")
-      .option("pathGlobFilter", "*.tex")
-      .load(fix)
-      .select(
-        regexp_extract(col("path"), "paper(\\d+)\\.tex", 1).cast("long").as("doc_id"),
-        col("content"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        (id, texToText(new String(bytes, java.nio.charset.StandardCharsets.UTF_8)))
-      })
+    BinaryIngest.readPerDoc(s, d, "tex_fixture", "paper", "tex")(
+        (id, text) => buildTex(id, text).getBytes(UTF_8))
+      .mapPartitions(_.map { case (id, bytes) => (id, texToText(new String(bytes, UTF_8))) })
       .toDF("doc_id", "text_tex")
       .orderBy("doc_id")
   }

@@ -1,8 +1,7 @@
 package graft.sources
 
-import graft.engine.Tables
+import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Markdown → text extraction: README/docs/forum corpora (The Stack,
   * StackExchange dumps, GitHub docs) arrive as markdown, and a training
@@ -102,26 +101,6 @@ val x = 1
 > quoted wisdom line
 Inline `code span` and _under emphasis_ close."""
 
-  /** Stage real .md files, one per document. */
-  def stageMdFixture(s: SparkSession, d: String): String = {
-    val fix = BinaryIngest.fixtureRoot("md_fixture", d)
-    BinaryIngest.publishFixture(fix) { tmp =>
-      import s.implicits._
-      Tables.documents(s, d).filter(col("doc_id") < 200)
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .mapPartitions { it =>
-          it.map { case (id, text) =>
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(tmp, f"doc$id%05d.md"),
-              buildMd(id, if (text == null) "" else text)
-                .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            id
-          }
-        }.count()
-    }
-    fix
-  }
-
   /** Oracle-checked markdown round trip: staged pages wrap each
     * document's text in markdown structure; the extractor must surface
     * exactly the prose — a heading marker or bullet leaking, fence code
@@ -130,19 +109,9 @@ Inline `code span` and _under emphasis_ close."""
   def qMarkdown(s: SparkSession, d: String): DataFrame = {
     val spark = s
     import spark.implicits._
-    val fix = stageMdFixture(s, d)
-    s.read.format("binaryFile")
-      .option("pathGlobFilter", "*.md")
-      .load(fix)
-      .select(
-        regexp_extract(col("path"), "doc(\\d+)\\.md", 1).cast("long").as("doc_id"),
-        col("content"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          (id, mdToText(new String(bytes, java.nio.charset.StandardCharsets.UTF_8)))
-        }
-      }
+    BinaryIngest.readPerDoc(s, d, "md_fixture", "doc", "md")(
+        (id, text) => buildMd(id, text).getBytes(UTF_8))
+      .mapPartitions(_.map { case (id, bytes) => (id, mdToText(new String(bytes, UTF_8))) })
       .toDF("doc_id", "text_md")
       .orderBy("doc_id")
   }

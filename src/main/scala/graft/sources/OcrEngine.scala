@@ -1,6 +1,5 @@
 package graft.sources
 
-import graft.engine.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -286,26 +285,6 @@ object OcrEngine {
     c => u(c)
   }
 
-  /** Stage scanned (image-only) PDFs for doc_id < 200 — executor-written,
-    * versioned + atomically published like every other fixture. */
-  def stageScannedFixture(s: SparkSession, d: String): String = {
-    val fix = BinaryIngest.fixtureRoot("ocr_fixture", d)
-    BinaryIngest.publishFixture(fix) { tmp =>
-      import s.implicits._
-      Tables.documents(s, d).filter(col("doc_id") < 200)
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .mapPartitions { it =>
-          it.map { case (id, text) =>
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(tmp, f"scan$id%05d.pdf"),
-              buildPdfScanned(text))
-            id
-          }
-        }.count()
-    }
-    fix
-  }
-
   /** Oracle-checked OCR round trip: documents staged as scanned PDFs ->
     * binaryFile scan -> REAL text-layer extraction finds nothing ->
     * needs_ocr routing -> template-matching OCR recovers the normalized
@@ -314,13 +293,13 @@ object OcrEngine {
     * TRUE for every document — a text-layer leak, a routing slip or any
     * misclassified glyph hash-mismatches. */
   def qOcrIngest(s: SparkSession, d: String): DataFrame = {
-    val fix = stageScannedFixture(s, d)
+    // scanned (image-only) PDFs, one per document
+    val fix = BinaryIngest.stagePerDoc(s, d, "ocr_fixture", "scan", "pdf")(
+      (_, text) => buildPdfScanned(text))
     BinaryIngest.readWithOcrFallback(s, fix,
         extractor = BinaryIngest.pdfTextExtractorFull,
         ocr = ocrExtractor, glob = "*.pdf")
-      .select(
-        regexp_extract(col("path"), "scan(\\d+)\\.pdf", 1).cast("long").as("doc_id"),
-        col("needs_ocr"), col("text"))
+      .select(BinaryIngest.docIdOf("scan", "pdf"), col("needs_ocr"), col("text"))
       .orderBy("doc_id")
   }
 }

@@ -1,6 +1,5 @@
 package graft.sources
 
-import graft.engine.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -80,29 +79,6 @@ object OcrTrained {
       case None => ""
     }
 
-  /** Stage Font-B scanned PDFs for doc_id < 200 (same no-text-layer
-    * container, same per-cell 1-bit noise model, different font). */
-  def stageScannedFixtureB(s: SparkSession, d: String): String = {
-    val fix = BinaryIngest.fixtureRoot("ocr_b_fixture", d)
-    BinaryIngest.publishFixture(fix) { tmp =>
-      import s.implicits._
-      val fontB = FontB.toMap
-      Tables.documents(s, d).filter(col("doc_id") < 200)
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .mapPartitions { it =>
-          it.map { case (id, text) =>
-            val (w, h, img) = OcrEngine.renderRasterWith(fontB)(
-              OcrEngine.ocrNormalize(text))
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(tmp, f"scanb$id%05d.pdf"),
-              OcrEngine.buildScannedPdf(w, h, img))
-            id
-          }
-        }.count()
-    }
-    fix
-  }
-
   /** Oracle-checked TRAINED-OCR round trip: learn the font from labeled
     * samples, then read scanned Font-B PDFs end to end — text-layer
     * extraction finds nothing, needs_ocr routes, the LEARNED templates
@@ -112,7 +88,13 @@ object OcrTrained {
     * slip of even one bit on one glyph hash-mismatches every document
     * containing that glyph. */
   def qOcrTrained(s: SparkSession, d: String): DataFrame = {
-    val fix = stageScannedFixtureB(s, d)
+    // Font-B scanned PDFs: the same no-text-layer container and per-cell
+    // 1-bit noise model as q_ocr_ingest, a different font
+    val fontB = FontB.toMap
+    val fix = BinaryIngest.stagePerDoc(s, d, "ocr_b_fixture", "scanb", "pdf") { (_, text) =>
+      val (w, h, img) = OcrEngine.renderRasterWith(fontB)(OcrEngine.ocrNormalize(text))
+      OcrEngine.buildScannedPdf(w, h, img)
+    }
     val learned = trainTemplates(trainingSamples(s))
     val ocr: org.apache.spark.sql.Column => org.apache.spark.sql.Column = {
       val u = udf((b: Array[Byte]) => ocrExtractPdfWith(learned)(b))
@@ -121,9 +103,7 @@ object OcrTrained {
     BinaryIngest.readWithOcrFallback(s, fix,
         extractor = BinaryIngest.pdfTextExtractorFull,
         ocr = ocr, glob = "*.pdf")
-      .select(
-        regexp_extract(col("path"), "scanb(\\d+)\\.pdf", 1).cast("long").as("doc_id"),
-        col("needs_ocr"), col("text"))
+      .select(BinaryIngest.docIdOf("scanb", "pdf"), col("needs_ocr"), col("text"))
       .orderBy("doc_id")
   }
 }

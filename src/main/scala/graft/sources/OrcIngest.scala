@@ -22,16 +22,13 @@ object OrcIngest {
 
   /** Stage the documents table as ORC shards, versioned + atomically
     * published (same discipline as every other fixture). */
-  def stageOrcFixture(s: SparkSession, d: String): String = {
-    val fix = BinaryIngest.fixtureRoot("orc_fixture", d)
-    BinaryIngest.publishFixture(fix) { tmp =>
+  def stageOrcFixture(s: SparkSession, d: String): String =
+    BinaryIngest.publishFixture("orc_fixture", d) { tmp =>
       Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("source"), col("text"))
         .repartition(8, col("doc_id"))
         .write.mode("overwrite").orc(tmp + "/data")
-    }
-    fix + "/data"
-  }
+    } + "/data"
 
   /** Oracle-checked ORC round trip: the staged shards read back through
     * the native vectorized ORC source must reproduce the documents table

@@ -39,9 +39,8 @@ object SchemaEvolve {
     * three-column schema under `gen=0/`, odd doc_ids with today's
     * four-column schema under `gen=1/` — versioned + atomically published
     * like every other fixture ([[BinaryIngest.publishFixture]]). */
-  def stageEvolvedFixture(s: SparkSession, d: String): String = {
-    val fix = BinaryIngest.fixtureRoot("schemaevo_fixture", d)
-    BinaryIngest.publishFixture(fix) { tmp =>
+  def stageEvolvedFixture(s: SparkSession, d: String): String =
+    BinaryIngest.publishFixture("schemaevo_fixture", d) { tmp =>
       val docs = Tables.documents(s, d)
       docs.filter(col("doc_id") % 2 === 0)
         .select("doc_id", "lang", "n_chars")
@@ -50,8 +49,6 @@ object SchemaEvolve {
         .select("doc_id", "lang", "n_chars", "source")
         .write.mode("overwrite").parquet(s"$tmp/gen=1")
     }
-    fix
-  }
 
   /** Oracle-checked merged-schema read: both generations come back under
     * ONE unified schema, old rows carrying NULL for the post-migration

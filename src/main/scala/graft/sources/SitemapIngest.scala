@@ -1,6 +1,5 @@
 package graft.sources
 
-import graft.engine.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,8 +14,6 @@ import org.apache.spark.sql.functions._
   * the XML spec requires the escaping) decode on extraction. */
 object SitemapIngest {
 
-  val Shards = 8
-
   def siteUrl(id: Long): String =
     s"https://example.com/docs/$id" + (if (id % 2 == 1) "?a=1&b=2" else "")
 
@@ -28,57 +25,47 @@ object SitemapIngest {
 
   private def xmlEscape(s: String): String = s.replace("&", "&amp;")
 
-  /** Stage a sitemapindex + [[Shards]] gzipped urlset shards for the
-    * doc_id < 200 slice — executor-written, atomically published. */
+  /** Stage a sitemapindex + 8 gzipped urlset shards for the doc_id < 200
+    * slice (doc_id % 8, see [[BinaryIngest.stageShards]]). */
   def stageSitemapFixture(s: SparkSession, d: String): String = {
-    val fix = BinaryIngest.fixtureRoot("sitemap_fixture", d)
-    BinaryIngest.publishFixture(fix) { tmp =>
-      import s.implicits._
-      Tables.documents(s, d).filter(col("doc_id") < 200)
-        .select(col("doc_id")).as[Long]
-        .repartition(Shards, col("doc_id") % Shards)
-        .mapPartitions { it =>
-          val ids = it.toSeq.sorted
-          if (ids.isEmpty) Iterator.empty
-          else {
-            val shard = ids.head % Shards
-            val sb = new StringBuilder
-            sb.append("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n")
-            sb.append("<urlset xmlns=\"http://www.sitemaps.org/schemas/sitemap/0.9\">\n")
-            ids.foreach { id =>
-              sb.append("  <url>\n")
-              sb.append(s"    <loc>${xmlEscape(siteUrl(id))}</loc>\n")
-              sb.append(s"    <lastmod>${lastmodOf(id)}</lastmod>\n")
-              sb.append(s"    <priority>${priorityOf(id)}</priority>\n")
-              sb.append("  </url>\n")
-            }
-            sb.append("</urlset>\n")
-            val os = new java.util.zip.GZIPOutputStream(
-              java.nio.file.Files.newOutputStream(
-                java.nio.file.Paths.get(tmp, f"sitemap-$shard%02d.xml.gz")))
-            try os.write(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            finally os.close()
-            Iterator.single(shard)
-          }
-        }.count()
-      // the index names the shards ACTUALLY written (repartition hashes
-      // the residue, so residues can share a partition and a file carries
-      // every residue of its partition — the writer owns the truth about
-      // shard names, exactly like a real sitemap generator)
-      val shardNames = Option(new java.io.File(tmp).listFiles()).getOrElse(Array.empty)
-        .map(_.getName).filter(_.endsWith(".xml.gz")).sorted
-      val idx = new StringBuilder
-      idx.append("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n")
-      idx.append("<sitemapindex xmlns=\"http://www.sitemaps.org/schemas/sitemap/0.9\">\n")
-      shardNames.foreach { name =>
-        idx.append(s"  <sitemap><loc>https://example.com/$name</loc></sitemap>\n")
+    import s.implicits._
+    BinaryIngest.stageShards(s, d, "sitemap_fixture",
+        BinaryIngest.fixtureDocs(s, d).select(col("doc_id")).as[Long],
+        shard => f"sitemap-$shard%02d.xml.gz", writeIndex)(identity) { (_, ids, out) =>
+      val sb = new StringBuilder
+      sb.append("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n")
+      sb.append("<urlset xmlns=\"http://www.sitemaps.org/schemas/sitemap/0.9\">\n")
+      ids.foreach { id =>
+        sb.append("  <url>\n")
+        sb.append(s"    <loc>${xmlEscape(siteUrl(id))}</loc>\n")
+        sb.append(s"    <lastmod>${lastmodOf(id)}</lastmod>\n")
+        sb.append(s"    <priority>${priorityOf(id)}</priority>\n")
+        sb.append("  </url>\n")
       }
-      idx.append("</sitemapindex>\n")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(tmp, "sitemapindex.xml"),
-        idx.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      sb.append("</urlset>\n")
+      val os = new java.util.zip.GZIPOutputStream(out)
+      os.write(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      os.finish()
     }
-    fix
+  }
+
+  /** The index names the shards ACTUALLY written in `dir` (residues can
+    * share a partition and a file carries every residue of its partition
+    * — the writer owns the truth about shard names, exactly like a real
+    * sitemap generator). */
+  private def writeIndex(dir: String): Unit = {
+    val shardNames = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+      .map(_.getName).filter(_.endsWith(".xml.gz")).sorted
+    val idx = new StringBuilder
+    idx.append("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n")
+    idx.append("<sitemapindex xmlns=\"http://www.sitemaps.org/schemas/sitemap/0.9\">\n")
+    shardNames.foreach { name =>
+      idx.append(s"  <sitemap><loc>https://example.com/$name</loc></sitemap>\n")
+    }
+    idx.append("</sitemapindex>\n")
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(dir, "sitemapindex.xml"),
+      idx.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
   /** Extract `<tag>value</tag>` occurrences — the sitemap vocabulary is

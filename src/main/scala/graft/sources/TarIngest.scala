@@ -20,7 +20,6 @@ import org.apache.spark.sql.functions._
   * (.tar.gz — the webdataset on-disk form). */
 object TarIngest {
 
-  val Shards = 8
   private val Block = 512
 
   private def octal(v: Long, width: Int): Array[Byte] = {
@@ -140,33 +139,21 @@ object TarIngest {
     if (seen) v else -1L
   }
 
-  /** Stage the documents table as [[Shards]] gzipped tar shards. */
+  /** Stage the documents table as 8 gzipped tar shards (doc_id % 8, see
+    * [[BinaryIngest.stageShards]]). */
   def stageTarFixture(s: SparkSession, d: String): String = {
-    val fix = BinaryIngest.fixtureRoot("tar_fixture", d)
-    BinaryIngest.publishFixture(fix) { tmp =>
-      import s.implicits._
-      Tables.documents(s, d)
-        .select(col("doc_id"), col("text"))
-        .as[(Long, String)]
-        .repartition(Shards, col("doc_id") % Shards)
-        .mapPartitions { it =>
-          val docs = it.toSeq.sortBy(_._1)
-          if (docs.isEmpty) Iterator.empty
-          else {
-            val shard = docs.head._1 % Shards
-            val entries = docs.map { case (id, text) =>
-              (f"doc$id%07d.txt", (if (text == null) "" else text)
-                .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            }
-            val os = new java.util.zip.GZIPOutputStream(
-              java.nio.file.Files.newOutputStream(
-                java.nio.file.Paths.get(tmp, f"shard-$shard%02d.tar.gz")))
-            try os.write(buildTar(entries)) finally os.close()
-            Iterator.single(shard)
-          }
-        }.count()
+    import s.implicits._
+    BinaryIngest.stageShards(s, d, "tar_fixture",
+        Tables.documents(s, d).select(col("doc_id"), col("text")).as[(Long, String)],
+        shard => f"shard-$shard%02d.tar.gz")(_._1) { (_, docs, out) =>
+      val entries = docs.map { case (id, text) =>
+        (f"doc$id%07d.txt", (if (text == null) "" else text)
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      }
+      val os = new java.util.zip.GZIPOutputStream(out)
+      os.write(buildTar(entries))
+      os.finish()
     }
-    fix
   }
 
   /** Oracle-checked tar round trip: staged .tar.gz shards -> binaryFile

@@ -1,6 +1,5 @@
 package graft.sources
 
-import graft.engine.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -148,35 +147,14 @@ object WarcIngest {
   // ------------------------------------------------------------- fixture
 
   /** Stage a small crawl: 8 multi-record WARC files (docs sharded by
-    * doc_id % 8), executor-written, versioned + atomically published.
-    *
-    * Shard-naming invariant (shared with [[JsonlGz.stageJsonlGzFixture]]
-    * — keep in sync): `repartition(n, doc_id % n)` hash-co-partitions,
-    * so a residue class is never split across partitions; naming each
-    * partition's single output file by its HEAD row's shard is therefore
-    * collision-free even when two residue classes hash into one
-    * partition (that partition writes one file containing both; the
-    * other classes' partitions are empty). */
+    * doc_id % 8, see [[BinaryIngest.stageShards]]). */
   def stageWarcFixture(s: SparkSession, d: String): String = {
-    val fix = BinaryIngest.fixtureRoot("warc_fixture", d)
-    BinaryIngest.publishFixture(fix) { tmp =>
-      import s.implicits._
-      Tables.documents(s, d).filter(col("doc_id") < 200)
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .repartition(8, col("doc_id") % 8)
-        .mapPartitions { it =>
-          val docs = it.toSeq.sortBy(_._1)
-          if (docs.isEmpty) Iterator.empty
-          else {
-            val shard = docs.head._1 % 8
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(tmp, f"crawl-$shard%02d.warc"),
-              buildWarcFile(docs))
-            Iterator.single(shard)
-          }
-        }.count()
+    import s.implicits._
+    BinaryIngest.stageShards(s, d, "warc_fixture",
+        BinaryIngest.fixtureDocs(s, d).select(col("doc_id"), col("text")).as[(Long, String)],
+        shard => f"crawl-$shard%02d.warc")(_._1) {
+      (_, docs, out) => out.write(buildWarcFile(docs))
     }
-    fix
   }
 
   /** Oracle-checked WARC round trip — the full crawl first mile: staged

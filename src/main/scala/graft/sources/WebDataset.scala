@@ -1,6 +1,5 @@
 package graft.sources
 
-import graft.engine.Tables
 import graft.operators.Multimodal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -22,38 +21,22 @@ import org.apache.spark.sql.functions._
   */
 object WebDataset {
 
-  val Shards = 8
-
   /** Stage doc_id < 200 as WebDataset tar shards: per document a
     * `<id>.txt` entry (UTF-8 text) and a `<id>.png` entry (the
     * deterministic PNG of [[Multimodal.buildPng]]), adjacent under the
-    * same key, sharded by doc_id % Shards. */
+    * same key, sharded by doc_id % 8 ([[BinaryIngest.stageShards]]). */
   def stageWdsFixture(s: SparkSession, d: String): String = {
-    val fix = BinaryIngest.fixtureRoot("wds_fixture", d)
-    BinaryIngest.publishFixture(fix) { tmp =>
-      import s.implicits._
-      Tables.documents(s, d).filter(col("doc_id") < 200)
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .repartition(Shards, col("doc_id") % Shards)
-        .mapPartitions { it =>
-          val docs = it.toSeq.sortBy(_._1)
-          if (docs.isEmpty) Iterator.empty
-          else {
-            val shard = docs.head._1 % Shards
-            val entries = docs.flatMap { case (id, text) =>
-              Seq(
-                f"$id%09d.txt" -> Option(text).getOrElse("")
-                  .getBytes(java.nio.charset.StandardCharsets.UTF_8),
-                f"$id%09d.png" -> Multimodal.buildPng(id))
-            }
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(tmp, f"shard-$shard%05d.tar"),
-              TarIngest.buildTar(entries))
-            Iterator.single(shard)
-          }
-        }.count()
+    import s.implicits._
+    BinaryIngest.stageShards(s, d, "wds_fixture",
+        BinaryIngest.fixtureDocs(s, d).select(col("doc_id"), col("text")).as[(Long, String)],
+        shard => f"shard-$shard%05d.tar")(_._1) { (_, docs, out) =>
+      out.write(TarIngest.buildTar(docs.flatMap { case (id, text) =>
+        Seq(
+          f"$id%09d.txt" -> Option(text).getOrElse("")
+            .getBytes(java.nio.charset.StandardCharsets.UTF_8),
+          f"$id%09d.png" -> Multimodal.buildPng(id))
+      }))
     }
-    fix
   }
 
   /** Oracle-checked WebDataset round trip: staged tar shards -> per-

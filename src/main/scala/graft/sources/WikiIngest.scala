@@ -1,6 +1,5 @@
 package graft.sources
 
-import graft.engine.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -162,30 +161,15 @@ $text
     sb.toString
   }
 
-  /** Stage 8 dump shards (doc_id % 8), executor-written, versioned +
-    * atomically published. */
+  /** Stage 8 dump shards (doc_id % 8, see [[BinaryIngest.stageShards]]). */
   def stageDumpFixture(s: SparkSession, d: String): String = {
-    val fix = BinaryIngest.fixtureRoot("wiki_fixture", d)
-    BinaryIngest.publishFixture(fix) { tmp =>
-      import s.implicits._
-      Tables.documents(s, d).filter(col("doc_id") < 200)
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .repartition(8, col("doc_id") % 8)
-        .mapPartitions { it =>
-          val docs = it.toSeq.sortBy(_._1)
-          if (docs.isEmpty) Iterator.empty
-          else {
-            val shard = docs.head._1 % 8
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(tmp, f"dump-$shard%02d.xml"),
-              buildDumpShard(docs.map { case (id, t) =>
-                (id, if (t == null) "" else t)
-              }).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            Iterator.single(shard)
-          }
-        }.count()
+    import s.implicits._
+    BinaryIngest.stageShards(s, d, "wiki_fixture",
+        BinaryIngest.fixtureDocs(s, d).select(col("doc_id"), col("text")).as[(Long, String)],
+        shard => f"dump-$shard%02d.xml")(_._1) { (_, docs, out) =>
+      out.write(buildDumpShard(docs.map { case (id, t) => (id, if (t == null) "" else t) })
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
-    fix
   }
 
   private val PageSchema = StructType(Seq(

@@ -22,41 +22,23 @@ import org.apache.spark.sql.functions._
   */
 object ZipIngest {
 
-  val Shards = 8
-
-  /** Stage the documents table as [[Shards]] ZIP shards (doc_id % 8),
-    * one deflated `docNNNNNNN.txt` entry per document — executor-written,
-    * versioned + atomically published like the other fixtures. Shard
-    * naming relies on the hash-co-partitioning invariant documented at
-    * [[WarcIngest.stageWarcFixture]]. */
+  /** Stage the documents table as 8 ZIP shards (doc_id % 8, see
+    * [[BinaryIngest.stageShards]]), one deflated `docNNNNNNN.txt` entry
+    * per document. */
   def stageZipFixture(s: SparkSession, d: String): String = {
-    val fix = BinaryIngest.fixtureRoot("zip_fixture", d)
-    BinaryIngest.publishFixture(fix) { tmp =>
-      import s.implicits._
-      Tables.documents(s, d)
-        .select(col("doc_id"), col("text"))
-        .as[(Long, String)]
-        .repartition(Shards, col("doc_id") % Shards)
-        .mapPartitions { it =>
-          val docs = it.toSeq.sortBy(_._1)
-          if (docs.isEmpty) Iterator.empty
-          else {
-            val shard = docs.head._1 % Shards
-            val zos = new java.util.zip.ZipOutputStream(
-              java.nio.file.Files.newOutputStream(
-                java.nio.file.Paths.get(tmp, f"shard-$shard%02d.zip")),
-              java.nio.charset.StandardCharsets.UTF_8)
-            try docs.foreach { case (id, text) =>
-              zos.putNextEntry(new java.util.zip.ZipEntry(f"doc$id%07d.txt"))
-              zos.write((if (text == null) "" else text)
-                .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-              zos.closeEntry()
-            } finally zos.close()
-            Iterator.single(shard)
-          }
-        }.count()
+    import s.implicits._
+    BinaryIngest.stageShards(s, d, "zip_fixture",
+        Tables.documents(s, d).select(col("doc_id"), col("text")).as[(Long, String)],
+        shard => f"shard-$shard%02d.zip")(_._1) { (_, docs, out) =>
+      val zos = new java.util.zip.ZipOutputStream(out, java.nio.charset.StandardCharsets.UTF_8)
+      docs.foreach { case (id, text) =>
+        zos.putNextEntry(new java.util.zip.ZipEntry(f"doc$id%07d.txt"))
+        zos.write((if (text == null) "" else text)
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        zos.closeEntry()
+      }
+      zos.finish()
     }
-    fix
   }
 
   /** Unpack one archive's bytes: (entry name, UTF-8 text) per entry.

@@ -278,8 +278,7 @@ class EngineSpec extends SparkSpec {
     // golden PDF becomes a nested document with paginated snippets
     val bin = BinaryIngest.readWithOcrFallback(spark, dir.getAbsolutePath,
       BinaryIngest.pdfTextExtractor, glob = "*.pdf")
-      .withColumn("doc_id",
-        regexp_extract(col("path"), "doc(\\d+)\\.pdf", 1).cast("long"))
+      .withColumn("doc_id", BinaryIngest.docIdOf("doc", "pdf"))
       .withColumn("lang", lit("und"))
       .withColumn("source", col("path"))
       .select("doc_id", "lang", "source", "text")

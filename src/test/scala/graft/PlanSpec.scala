@@ -359,7 +359,7 @@ class PlanSpec extends SparkSpec {
     import graft.operators.Ingest
     import graft.sources.BinaryIngest
     import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
-    import org.apache.spark.sql.functions.{col, lit, regexp_extract}
+    import org.apache.spark.sql.functions.{col, lit}
     import spark.implicits._
     // AQE's pre-execution plan string hides codegen spans; inspect with AQE off
     graft.engine.Scope.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
@@ -369,16 +369,17 @@ class PlanSpec extends SparkSpec {
       assert("""\*\(\d+\)""".r.findAllIn(p).nonEmpty, p)
       // ...and no interpreted lambda rides inside them: `transform` and the
       // other higher-order functions are CodegenFallback, walked per element
-      val pdfs = BinaryIngest.stagePdfFixture(spark, sf0001)
-      val binary = BinaryIngest.readBinaryDocs(spark, pdfs,
-        BinaryIngest.pdfTextExtractorFull, "*.pdf")
-        .select(regexp_extract(col("path"), "doc(\\d+)\\.pdf", 1).cast("long").as("doc_id"),
-          lit("en").as("lang"), col("path").as("source"), col("text"))
+      val binary = BinaryIngest.readPerDoc(spark, sf0001, "pdf_fixture", "doc", "pdf")(
+          (_, text) => BinaryIngest.buildPdf(text))
+        .select(col("doc_id"), lit("en").as("lang"), lit("pdf").as("source"),
+          BinaryIngest.pdfTextExtractorFull(col("content")).as("text"))
       val ingest = Ingest.flattenSnippets(Ingest.buildDocuments(binary,
         Seq((0, "c0"), (1, "c1")).toDF("category_id", "category_name")))
       Seq("q_snippets" -> SparkEntry.queries("q_snippets")(spark, sf0001),
         "q_ingest_flatten" -> SparkEntry.queries("q_ingest_flatten")(spark, sf0001),
-        "readBinaryDocs -> buildDocuments -> flattenSnippets" -> ingest)
+        "q_nested_project" -> SparkEntry.queries("q_nested_project")(spark, sf0001),
+        "q_binary_ingest" -> SparkEntry.queries("q_binary_ingest")(spark, sf0001),
+        "readPerDoc -> buildDocuments -> flattenSnippets" -> ingest)
         .foreach { case (name, df) =>
           val exec = df.queryExecution.executedPlan
           val hofs = exec.flatMap(_.expressions.flatMap(_.collect {

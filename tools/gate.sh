@@ -10,6 +10,14 @@ stray=$(grep -rlE '^[[:space:]]*def main\(|extends App\b' src/main/scala \
   | grep -vE '^src/main/scala/graft/((Bench|Verify|Smoke)\.scala|tools/)' || true)
 [ -z "$stray" ] || { echo "def main outside graft.{Bench,Verify,Smoke} and graft.tools: $stray"; exit 1; }
 echo "ok"
+echo "=== fixtures ==="
+# staged files carry their doc id in the file name, read back only through
+# BinaryIngest (readPerDoc / docIdOf): a hand-rolled path regex elsewhere
+# in src/main fails the gate
+stray=$(grep -rlF 'regexp_extract(col("path")' src/main/scala \
+  | grep -vx 'src/main/scala/graft/sources/BinaryIngest.scala' || true)
+[ -z "$stray" ] || { echo "regexp_extract(col(\"path\") outside sources/BinaryIngest.scala: $stray"; exit 1; }
+echo "ok"
 echo "=== sbt test ==="
 sbt -batch test 2>&1 | grep -E "Tests:|Passed:"
 echo "=== benchmark harness build ==="
