@@ -351,6 +351,7 @@ object Mutations {
       val part = new java.io.File(tmp).listFiles()
         .find(_.getName.endsWith(".parquet")).get
       java.nio.file.Files.copy(part.toPath, new java.io.File(sidecars, name).toPath)
+      Scratch.rmTree(new java.io.File(tmp))
     }
     writeSidecar("sc0.parquet", "f0.parquet")
     writeSidecar("sc1.parquet", "f1.parquet")

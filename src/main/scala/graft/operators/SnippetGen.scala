@@ -95,11 +95,10 @@ object SnippetGen {
       graft.engine.Tables.documents(s, d), "doc_id")
     docs
       .select(col("doc_id"), splitWords(col("text")).as("words"))
-      .select(col("doc_id"),
-        array_join(
-          transform(sequence(lit(0), floor((size(col("words")) - 1) / 8).cast("int")),
-            k => array_join(slice(col("words"), k * 8 + 1, lit(8)), " ")),
-          ". ").as("sent_text"))
+      // words hold no space, so every 8th separator of the space-joined
+      // words is where a sentence ends: it becomes ". "
+      .select(col("doc_id"), regexp_replace(array_join(col("words"), " "),
+        "((?:[^ ]* ){7}[^ ]*) ", "$1. ").as("sent_text"))
       .select(col("doc_id"), splitSentences(col("sent_text")).as("sents"))
       .select(col("doc_id"), explode(snippetWindows(col("sents"))).as("sn"))
       .select(col("doc_id"), col("sn.snippet_id").as("snippet_id"),

@@ -22,9 +22,12 @@ import org.apache.spark.sql.functions._
   */
 object ZipIngest {
 
+  private val EntryTime = java.time.LocalDateTime.of(2000, 1, 1, 0, 0)
+
   /** Stage the documents table as 8 ZIP shards (doc_id % 8, see
     * [[BinaryIngest.stageShards]]), one deflated `docNNNNNNN.txt` entry
-    * per document. */
+    * per document. Every entry carries the same fixed local time, so two
+    * stagings of one sf dir are byte-identical. */
   def stageZipFixture(s: SparkSession, d: String): String = {
     import s.implicits._
     BinaryIngest.stageShards(s, d, "zip_fixture",
@@ -32,7 +35,9 @@ object ZipIngest {
         shard => f"shard-$shard%02d.zip")(_._1) { (_, docs, out) =>
       val zos = new java.util.zip.ZipOutputStream(out, java.nio.charset.StandardCharsets.UTF_8)
       docs.foreach { case (id, text) =>
-        zos.putNextEntry(new java.util.zip.ZipEntry(f"doc$id%07d.txt"))
+        val e = new java.util.zip.ZipEntry(f"doc$id%07d.txt")
+        e.setTimeLocal(EntryTime)
+        zos.putNextEntry(e)
         zos.write((if (text == null) "" else text)
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
         zos.closeEntry()

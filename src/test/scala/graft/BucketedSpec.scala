@@ -3,14 +3,13 @@ package graft
 import graft.engine.{Bucketed, Tables}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
-import java.nio.file.Files
 
 /** The co-located-join scale path: bucketed+sorted tables join with ZERO
   * exchanges, and produce the same rows as the shuffled join. */
 class BucketedSpec extends SparkSpec {
 
   test("bucketed fact-fact join: no exchange under the join, same result") {
-    val root = Files.createTempDirectory("graft_bucketed").toString
+    val root = tempDir("graft_bucketed")
     val orders = Tables.orders(spark, sf0001)
     val li = Tables.lineitem(spark, sf0001)
       .withColumnRenamed("l_orderkey", "o_orderkey")
@@ -53,7 +52,7 @@ class BucketedSpec extends SparkSpec {
 
   test("partitioned layout: a partition-key filter prunes at planning, not post-scan") {
     import org.apache.spark.sql.functions._
-    val root = Files.createTempDirectory("graft_part").toString
+    val root = tempDir("graft_part")
     Tables.documents(spark, sf0001)
       .write.partitionBy("lang").parquet(s"$root/docs_by_lang")
 

@@ -89,13 +89,14 @@ class ContractBlurSpec extends SparkSpec {
   test("lapEnergy: zero on exact ramps, quadratic curvature clears threshold") {
     // linear ramp: Laplacian identically zero at every interior pixel
     val (w, h) = (10, 8)
-    val ramp = Array.tabulate(w * h)(i => (i % w) + (i / w) + 5)
-    assert(Multimodal.lapEnergy(w, h, ramp) === 0L)
-    // quadratic without wraps: d = -(6 + 10) = -16 per interior pixel
-    val quad = Array.tabulate(w * h) { i =>
-      val x = i % w; val y = i / w; 3 * x * x + 5 * y * y + 7 * x * y
+    def raster(px: (Int, Int) => Int) = new Multimodal.Gray(w, h) {
+      def apply(x: Int, y: Int): Int = px(x, y)
     }
-    assert(Multimodal.lapEnergy(w, h, quad) === 256L * (w - 2) * (h - 2))
+    val ramp = raster((x, y) => x + y + 5)
+    assert(Multimodal.lapEnergy(ramp) === 0L)
+    // quadratic without wraps: d = -(6 + 10) = -16 per interior pixel
+    val quad = raster((x, y) => 3 * x * x + 5 * y * y + 7 * x * y)
+    assert(Multimodal.lapEnergy(quad) === 256L * (w - 2) * (h - 2))
   }
 
   test("blur fixtures decode to the closed-form verdicts") {
@@ -104,13 +105,13 @@ class ContractBlurSpec extends SparkSpec {
       val bytes =
         if (id % 4 == 0) Multimodal.buildPngBlur(id)
         else Multimodal.buildPngTextured(id, 0)
-      val Some((dw, dh, px)) = Multimodal.decodePngGray(bytes)
-      assert(dw === w && dh === h)
-      val e = Multimodal.lapEnergy(w, h, px)
+      val Seq(px) = Multimodal.decodeImage(bytes)
+      assert(px.w === w && px.h === h)
+      val e = Multimodal.lapEnergy(px)
       val blurry = e < Multimodal.BlurThresholdPerPixel * (w - 2) * (h - 2)
       assert(blurry === (id % 4 == 0), s"doc $id energy $e")
       if (id % 4 == 0) assert(e === 0L, s"ramp image $id must be exactly flat")
     }
-    assert(Multimodal.decodePngGray("junk".getBytes).isEmpty)
+    assert(Multimodal.decodeImage("junk".getBytes).isEmpty)
   }
 }

@@ -3,7 +3,6 @@ package graft
 import graft.streaming.StreamingJobs
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
-import java.nio.file.Files
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
@@ -32,7 +31,7 @@ class DedupGatePropertySpec extends SparkSpec {
   import DedupGatePropertySpec._
 
   private def run(batches: Seq[Seq[Doc]], exactPairs: Boolean,
-      root: String = Files.createTempDirectory("graft_gate_prop").toString): Outcome = {
+      root: String = tempDir("graft_gate_prop")): Outcome = {
     val (acc, idx, rej) = (s"$root/accepted", s"$root/index", s"$root/rejected")
     batches.zipWithIndex.foreach { case (b, i) =>
       val rows = b.map(d => Row(d.id.map(Long.box).orNull, d.text.orNull))
@@ -76,7 +75,7 @@ class DedupGatePropertySpec extends SparkSpec {
       val batch = text.toSeq.sorted.flatMap { case (id, t) =>
         Seq.fill(if (twice(id)) 2 else 1)(Doc(Some(id), Some(t))) }
       assert(model(Seq(batch)) === Outcome(Seq(1L, 2L), Nil))
-      val root = Files.createTempDirectory("graft_gate_twice").toString
+      val root = tempDir("graft_gate_twice")
       assert(run(Seq(batch), exactPairs, root) === Outcome(Seq(1L, 2L), Nil), s"$exactPairs $twice")
       assert(spark.read.parquet(s"$root/index").select("doc_id").collect()
         .map(_.getLong(0)).sorted.toSeq === Seq(1L, 2L))

@@ -116,7 +116,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("exact cross and fused gate joins equal the brute-force model") {
-    val idx = java.nio.file.Files.createTempDirectory("graft_fused_idx")
+    val idx = java.nio.file.Paths.get(tempDir("graft_fused_idx"))
     val idxDir = idx.resolve("idx").toString
     Dedup.shingleIndex(corpus).write.parquet(idxDir)
     try for (t <- Seq(0.5, 0.56)) {
@@ -221,7 +221,7 @@ class DedupSpec extends SparkSpec {
 
   test("persisted dedup index: write, probe, append, probe again") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft_dedup_idx").toString + "/idx"
+    val path = tempDir("graft_dedup_idx") + "/idx"
     Dedup.writeIndex(docs.select("doc_id", "text"), path)
     val editRow = docs.orderBy("doc_id").select("doc_id", "text").head()
     val edited = editRow.getString(1).trim.split("\\s+").toSeq

@@ -21,11 +21,11 @@ class DeltaLayoutSpec extends SparkSpec {
     */
   private def buildFixture(): String = {
     import spark.implicits._
-    val root = Files.createTempDirectory("delta_fixture").toString
+    val root = tempDir("delta_fixture")
     val log = Paths.get(root, "_delta_log")
     Files.createDirectories(log)
     def writeData(name: String, rows: Seq[(Long, String)]): Unit = {
-      val tmp = Files.createTempDirectory("dl_part").toString
+      val tmp = tempDir("dl_part")
       rows.toDF("id", "body").coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(f => f.getName.endsWith(".parquet")).get
@@ -45,7 +45,7 @@ class DeltaLayoutSpec extends SparkSpec {
       """{"add":{"path":"f2.parquet","dataChange":true}}"""))
     // checkpoint @ 2: one row per active file, `add` struct column (a
     // remove-tombstone row with add = null must be ignored by the reader)
-    val tmp = Files.createTempDirectory("dl_ckpt").toString
+    val tmp = tempDir("dl_ckpt")
     Seq(Some("f1.parquet"), Some("f2.parquet"), None).toDF("path")
       .selectExpr("CASE WHEN path IS NOT NULL THEN struct(path) END AS add",
         "CASE WHEN path IS NULL THEN struct('f0.parquet' AS path) END AS remove")
@@ -95,7 +95,7 @@ class DeltaLayoutSpec extends SparkSpec {
     import spark.implicits._
     // a FRESH, not-yet-existing table path: the first commit must create
     // it (round-11 review finding — every earlier caller pre-created it)
-    val root = Files.createTempDirectory("delta_writer").toString + "/nested/table"
+    val root = tempDir("delta_writer") + "/nested/table"
     val t = new DeltaLayoutTable(spark, root)
     assert(t.commitAppend(Seq((1L, "a"), (2L, "b")).toDF("id", "body")) === "v_0")
     assert(t.commitAppend(Seq((3L, "c")).toDF("id", "body")) === "v_1")
@@ -128,10 +128,10 @@ class DeltaLayoutSpec extends SparkSpec {
 
   test("protocol guard: reader version > 1 and column mapping refuse loudly (round 12)") {
     import spark.implicits._
-    val root = Files.createTempDirectory("delta_guard").toString
+    val root = tempDir("delta_guard")
     val log = Paths.get(root, "_delta_log")
     Files.createDirectories(log)
-    val tmp = Files.createTempDirectory("dg_part").toString
+    val tmp = tempDir("dg_part")
     Seq((1L, "a")).toDF("id", "body").coalesce(1).write.mode("overwrite").parquet(tmp)
     val part = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
     Files.copy(part.toPath, Paths.get(root, "f0.parquet"))
@@ -146,7 +146,7 @@ class DeltaLayoutSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](t.readAsOf("v_0"))
     assert(e.getMessage.contains("minReaderVersion=3"))
     // column mapping under reader version 1: refused by configuration
-    val root2 = Files.createTempDirectory("delta_guard2").toString
+    val root2 = tempDir("delta_guard2")
     val log2 = Paths.get(root2, "_delta_log")
     Files.createDirectories(log2)
     Files.copy(part.toPath, Paths.get(root2, "f0.parquet"))
@@ -158,7 +158,7 @@ class DeltaLayoutSpec extends SparkSpec {
       new DeltaLayoutTable(spark, root2).readAsOf("v_0"))
     assert(e2.getMessage.contains("column mapping"))
     // a version-1 protocol action passes through untouched
-    val root3 = Files.createTempDirectory("delta_guard3").toString
+    val root3 = tempDir("delta_guard3")
     Files.createDirectories(Paths.get(root3, "_delta_log"))
     Files.copy(part.toPath, Paths.get(root3, "f0.parquet"))
     Files.writeString(Paths.get(root3, "_delta_log").resolve(f"${0L}%020d.json"), Seq(
@@ -210,7 +210,7 @@ class DeltaLayoutSpec extends SparkSpec {
     // write) is read: stage one @3 materializing {f1,f2,f3}, prune every
     // JSON commit — v_3 must survive on the parts alone
     def writePart(m: Int, p: Int, files: Seq[String]): Unit = {
-      val tmp = Files.createTempDirectory("dl_mp").toString
+      val tmp = tempDir("dl_mp")
       files.toDF("path").selectExpr("struct(path) AS add")
         .coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
@@ -231,7 +231,7 @@ class DeltaLayoutSpec extends SparkSpec {
 
   test("empty version takes its schema from metaData, not a later donor (ADVICE r11)") {
     import spark.implicits._
-    val root = Files.createTempDirectory("delta_meta").toString
+    val root = tempDir("delta_meta")
     val t = new DeltaLayoutTable(spark, root)
     // the writer opens the log with protocol + metaData (round 12)
     t.commitAppend(Seq((1L, "a")).toDF("id", "body"))
@@ -274,7 +274,7 @@ class DeltaLayoutSpec extends SparkSpec {
 
   test("vacuumData: only unreadable versions' files reclaimed; orphans cleared (round 12)") {
     import spark.implicits._
-    val root = Files.createTempDirectory("delta_vac").toString
+    val root = tempDir("delta_vac")
     val t = new DeltaLayoutTable(spark, root)
     t.commitAppend(Seq((1L, "a"), (2L, "b")).toDF("id", "body")) // v_0
     t.commitReplace(Seq((3L, "c")).toDF("id", "body"))           // v_1
@@ -297,8 +297,8 @@ class DeltaLayoutSpec extends SparkSpec {
 
   test("importHistory: a Snapshot store's versions migrate aligned (round 12)") {
     import spark.implicits._
-    val snapRoot = Files.createTempDirectory("mig_snap").toString
-    val deltaRoot = Files.createTempDirectory("mig_delta").toString
+    val snapRoot = tempDir("mig_snap")
+    val deltaRoot = tempDir("mig_delta")
     val snap = new graft.engine.Snapshot(spark, snapRoot)
     snap.publish(Seq((1L, "a"), (2L, "b")).toDF("id", "body"))
     snap.publish(Seq((1L, "a2"), (3L, "c")).toDF("id", "body"))
@@ -346,7 +346,7 @@ class DeltaLayoutSpec extends SparkSpec {
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("path",
             org.apache.spark.sql.types.StringType))))))
-    val tmp = Files.createTempDirectory("dl_v2").toString
+    val tmp = tempDir("dl_v2")
     spark.read.schema(schema).json(lines.toDS())
       .coalesce(1).write.mode("overwrite").parquet(tmp)
     val part = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
@@ -416,7 +416,7 @@ class DeltaLayoutSpec extends SparkSpec {
     val root = buildFixture()
     val log = Paths.get(root, "_delta_log")
     def writePart(m: Int, p: Int, files: Seq[String]): Unit = {
-      val tmp = Files.createTempDirectory("dl_mp").toString
+      val tmp = tempDir("dl_mp")
       files.toDF("path").selectExpr("struct(path) AS add")
         .coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
@@ -448,7 +448,7 @@ class DeltaLayoutSpec extends SparkSpec {
     import spark.implicits._
     spark.conf.set("graft.delta.checkpointPartRows", "2")
     try {
-      val root = Files.createTempDirectory("delta_mpw").toString
+      val root = tempDir("delta_mpw")
       val t = new DeltaLayoutTable(spark, root)
       // two appends of 2 partitions each -> 4 data files active; at 2
       // rows per part the checkpoint must write 2 parts
@@ -476,11 +476,11 @@ class DeltaLayoutSpec extends SparkSpec {
 
   test("distributed replay: thousand-action log reconciles; file bound refuses (round 13)") {
     import spark.implicits._
-    val root = Files.createTempDirectory("delta_big").toString
+    val root = tempDir("delta_big")
     val log = Paths.get(root, "_delta_log")
     Files.createDirectories(log)
     def writeData(name: String, rows: Seq[(Long, String)]): Unit = {
-      val tmp = Files.createTempDirectory("dl_big").toString
+      val tmp = tempDir("dl_big")
       rows.toDF("id", "body").coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(_.getName.endsWith(".parquet")).get
@@ -517,7 +517,7 @@ class DeltaLayoutSpec extends SparkSpec {
 
   test("add actions carry the protocol-required fields (ADVICE r12)") {
     import spark.implicits._
-    val root = Files.createTempDirectory("delta_conform").toString
+    val root = tempDir("delta_conform")
     val t = new DeltaLayoutTable(spark, root)
     t.commitAppend(Seq((1L, "a")).toDF("id", "body"))
     t.commitReplace(Seq((2L, "b")).toDF("id", "body"))
@@ -547,10 +547,10 @@ class DeltaLayoutSpec extends SparkSpec {
   test("protocol gate: mr=3 passes only with implemented features (round 13)") {
     import spark.implicits._
     def stage(lines: Seq[String]): String = {
-      val root = Files.createTempDirectory("delta_feat").toString
+      val root = tempDir("delta_feat")
       val log = Paths.get(root, "_delta_log")
       Files.createDirectories(log)
-      val tmp = Files.createTempDirectory("df_part").toString
+      val tmp = tempDir("df_part")
       Seq((1L, "a")).toDF("id", "body").coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
       Files.copy(part.toPath, Paths.get(root, "f0.parquet"))
@@ -573,8 +573,8 @@ class DeltaLayoutSpec extends SparkSpec {
 
   test("importHistory fails fast when the source advances mid-migration (round 13)") {
     import spark.implicits._
-    val snapRoot = Files.createTempDirectory("mig_race_snap").toString
-    val deltaRoot = Files.createTempDirectory("mig_race_delta").toString
+    val snapRoot = tempDir("mig_race_snap")
+    val deltaRoot = tempDir("mig_race_delta")
     val snap = new graft.engine.Snapshot(spark, snapRoot)
     snap.publish(Seq((1L, "a")).toDF("id", "body"))
     snap.publish(Seq((1L, "a"), (2L, "b")).toDF("id", "body"))

@@ -169,7 +169,7 @@ class EmptyInputSpec extends SparkSpec {
 
   test("watermarked streaming gates on an empty events table return empty, not NPE") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_empty_sf").toString
+    val dir = tempDir("graft_empty_sf")
     Seq.empty[(Long, java.sql.Timestamp, Long, String, Double, String)]
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")

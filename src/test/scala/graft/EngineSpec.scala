@@ -11,7 +11,7 @@ class EngineSpec extends SparkSpec {
 
   test("snapshot store: publish, read, mutate, crash-safety of versions") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = tempDir("graft_snap")
     val store = new Snapshot(spark, root)
     assert(store.currentVersion().isEmpty)
     intercept[IllegalStateException] { store.read() }
@@ -84,7 +84,7 @@ class EngineSpec extends SparkSpec {
 
   test("time travel: versions(), readAsOf, immutable-history rollback, retention bound") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_tt").toString
+    val root = tempDir("graft_tt")
     val store = new Snapshot(spark, root)
     assert(store.versions() === Seq.empty)
     store.publish(Seq((1L, "a"), (2L, "b")).toDF("id", "v"))          // v_0
@@ -138,7 +138,7 @@ class EngineSpec extends SparkSpec {
   }
 
   test("partitioned writes enable partition pruning at the scan") {
-    val dir = Files.createTempDirectory("graft_part").toString + "/docs"
+    val dir = tempDir("graft_part") + "/docs"
     spark.read.parquet(s"$sf0001/documents.parquet")
       .write.partitionBy("lang").parquet(dir)
     val pruned = spark.read.parquet(dir).filter(col("lang") === "en")
@@ -154,12 +154,12 @@ class EngineSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val expected = docs.orderBy("doc_id").collect().map(_.toSeq).toSeq
 
-    val jsonDir = Files.createTempDirectory("graft_json").toString + "/docs"
+    val jsonDir = tempDir("graft_json") + "/docs"
     docs.write.json(jsonDir)
     val fromJson = spark.read.schema(docs.schema).json(jsonDir)
     assert(fromJson.orderBy("doc_id").collect().map(_.toSeq).toSeq === expected)
 
-    val csvDir = Files.createTempDirectory("graft_csv").toString + "/docs"
+    val csvDir = tempDir("graft_csv") + "/docs"
     docs.write.option("header", "true").option("quoteAll", "true").csv(csvDir)
     val fromCsv = spark.read.schema(docs.schema).option("header", "true").csv(csvDir)
     assert(fromCsv.orderBy("doc_id").collect().map(_.toSeq).toSeq === expected)
@@ -168,7 +168,7 @@ class EngineSpec extends SparkSpec {
   test("ORC sink/source round-trips and pushes filters like parquet") {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val expected = docs.orderBy("doc_id").collect().map(_.toSeq).toSeq
-    val dir = Files.createTempDirectory("graft_orc").toString + "/docs"
+    val dir = tempDir("graft_orc") + "/docs"
     docs.write.orc(dir)
     val fromOrc = spark.read.orc(dir)
     assert(fromOrc.orderBy("doc_id").collect().map(_.toSeq).toSeq === expected)
@@ -179,7 +179,7 @@ class EngineSpec extends SparkSpec {
   }
 
   test("raw text source ingests line-per-row corpora") {
-    val dir = Files.createTempDirectory("graft_text").toString
+    val dir = tempDir("graft_text")
     Files.writeString(java.nio.file.Paths.get(dir, "corpus.txt"),
       "first line\nsecond line\n\nfourth line\n")
     val lines = spark.read.text(dir)
@@ -188,7 +188,7 @@ class EngineSpec extends SparkSpec {
   }
 
   test("schema evolution: mergeSchema reads old and new writer generations") {
-    val dir = Files.createTempDirectory("graft_evolve").toString
+    val dir = tempDir("graft_evolve")
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     // generation 1: no quality column; generation 2 adds it
     docs.select("doc_id", "text").filter(col("doc_id") % 2 === 0)
@@ -206,7 +206,7 @@ class EngineSpec extends SparkSpec {
 
   test("OCR fallback routes empty-text-layer uploads through the ocr extractor") {
     import graft.sources.BinaryIngest
-    val dir = Files.createTempDirectory("graft_ocr").toString
+    val dir = tempDir("graft_ocr")
     Files.writeString(java.nio.file.Paths.get(dir, "doc_good.txt"), "real text layer here")
     Files.writeString(java.nio.file.Paths.get(dir, "doc_scanned.txt"), " \n\t\n") // no text layer
     val out = BinaryIngest.readWithOcrFallback(spark, dir)
@@ -256,7 +256,7 @@ class EngineSpec extends SparkSpec {
         stream + "\nendstream endobj\n" +
         "trailer << /Root 1 0 R >>\n%%EOF\n").getBytes("ISO-8859-1")
     }
-    val dir = Files.createTempDirectory("graft_pdf_golden").toFile
+    val dir = new java.io.File(tempDir("graft_pdf_golden"))
     Files.write(new java.io.File(dir, "doc0.pdf").toPath,
       minimalPdf(Seq("the quick brown fox jumps over the lazy dog",
         "and keeps jumping for a second sentence of page text")))
@@ -350,7 +350,7 @@ class EngineSpec extends SparkSpec {
     def minimalPdf(texts: Seq[String]): Array[Byte] = pdf(
       if (texts.isEmpty) Seq(("BT ET", false))
       else texts.map(t => (s"BT /F1 12 Tf 72 712 Td ($t) Tj ET", false)))
-    val dir = Files.createTempDirectory("graft_pdf_full").toFile
+    val dir = new java.io.File(tempDir("graft_pdf_full"))
     Files.write(new java.io.File(dir, "doc0.pdf").toPath,
       minimalPdf(Seq("the quick brown fox", "second run")))
     Files.write(new java.io.File(dir, "doc1.pdf").toPath,

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -45,7 +44,7 @@ class EventsReaderCanarySpec extends SparkSpec {
   /** Write a synthetic events dir whose `ts` column has the given writer
     * applied, then assert the adaptive reader recovers the fixture micros. */
   private def roundTrip(label: String)(tsCol: org.apache.spark.sql.Column): Unit = {
-    val dir = Files.createTempDirectory(s"graft_canary_$label").toString
+    val dir = tempDir(s"graft_canary_$label")
     import spark.implicits._
     fixtureMicros.toSeq.sortBy(_._1)
       .toDF("event_id", "us")

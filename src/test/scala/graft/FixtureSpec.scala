@@ -1,7 +1,7 @@
 package graft
 
 import graft.engine.Scratch
-import graft.sources.BinaryIngest
+import graft.sources.{BinaryIngest, ZipIngest}
 import java.io.File
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions.col
   * doc_id < 200 cap, the NULL-text rule, the shard rule and the atomic,
   * build-once publish. Every case stages under a throwaway `kind` and a
   * throwaway sf dir, and removes what it staged. */
-class FixtureSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
+class FixtureSpec extends SparkSpec {
   import spark.implicits._
 
   private val texts: Seq[(Long, String)] =
@@ -20,7 +20,7 @@ class FixtureSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       .toMap.toSeq.sortBy(_._1)
 
   private lazy val sfDir: String = {
-    val dir = Files.createTempDirectory("graft_fixture_sf").toString
+    val dir = tempDir("graft_fixture_sf")
     texts.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
     dir
   }
@@ -43,10 +43,6 @@ class FixtureSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       Scratch.rmTree(new File(root))
       leftovers(root).foreach(n => Scratch.rmTree(new File(new File(root).getParentFile, n)))
     }
-
-  override def afterAll(): Unit = {
-    try Scratch.rmTree(new File(sfDir)) finally super.afterAll()
-  }
 
   test("stagePerDoc names one file per doc_id < 200, NULL text as \"\"; readPerDoc reads it back, built once") {
     val kind = freshKind()
@@ -102,6 +98,28 @@ class FixtureSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       assert(new String(Files.readAllBytes(Paths.get(root, "index.txt")), UTF_8) ===
         files.mkString("\n"))
       assert(new File(root, "_SUCCESS").exists())
+    }
+  }
+
+  test("stageZipFixture: two stagings of one documents table are byte-identical") {
+    def staged(): (String, Map[String, Array[Byte]]) = {
+      val d = tempDir("graft_zip_sf")
+      texts.toDF("doc_id", "text").write.parquet(s"$d/documents.parquet")
+      val root = ZipIngest.stageZipFixture(spark, d)
+      root -> new File(root).list().filter(_.endsWith(".zip"))
+        .map(n => n -> Files.readAllBytes(Paths.get(root, n))).toMap
+    }
+    val (rootA, a) = staged()
+    withRoot(rootA) {
+      // zip entry times have a 2 s resolution: a wall-clock stamp moves
+      Thread.sleep(2100)
+      val (rootB, b) = staged()
+      withRoot(rootB) {
+        assert(rootA !== rootB)
+        assert(a.nonEmpty && a.keySet === b.keySet)
+        val differ = a.keys.filterNot(n => java.util.Arrays.equals(a(n), b(n)))
+        assert(differ.isEmpty, differ)
+      }
     }
   }
 

@@ -95,7 +95,7 @@ class HnswSpec extends SparkSpec {
     val panel = emb.filter(col("vec_id") < 20)
       .select(col("vec_id"), col("embedding")).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
-    val root = java.nio.file.Files.createTempDirectory("hnsw_restore").toString
+    val root = tempDir("hnsw_restore")
     try {
       Hnsw.writeHnswIndex(spark, emb, root)
       val fresh = Hnsw.hnswTopK(emb, panel, 10)
@@ -116,7 +116,7 @@ class HnswSpec extends SparkSpec {
 
   test("stored shard column equals shardOf(vec_id); one directory per shard") {
     val emb = graft.engine.Tables.embeddings(spark, sf0001)
-    val root = java.nio.file.Files.createTempDirectory("hnsw_shards").toString
+    val root = tempDir("hnsw_shards")
     try {
       Hnsw.writeHnswIndex(spark, emb, root)
       val path = new graft.engine.Snapshot(spark, root).currentPath()
@@ -139,7 +139,7 @@ class HnswSpec extends SparkSpec {
     val batch = even.filter(col("vec_id") < 100)
     val panel = loadEmb().filter(t => t._1 % 2 == 1 && t._1 < 40)
     val k = 10
-    val root = java.nio.file.Files.createTempDirectory("hnsw_insert").toString
+    val root = tempDir("hnsw_insert")
     try {
       Hnsw.writeHnswIndex(spark, base, root)
       Hnsw.appendHnswIndex(spark, root, batch)
@@ -154,7 +154,7 @@ class HnswSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1)))
       val grownRecall = exact.count(grown.contains).toDouble / exact.length
       // a from-scratch build over the SAME final corpus is the parity bar
-      val rebuiltRoot = java.nio.file.Files.createTempDirectory("hnsw_rebuild").toString
+      val rebuiltRoot = tempDir("hnsw_rebuild")
       try {
         Hnsw.writeHnswIndex(spark, even, rebuiltRoot)
         val rebuilt = Hnsw.probeHnswIndex(spark, rebuiltRoot, panel, k)
@@ -189,8 +189,8 @@ class HnswSpec extends SparkSpec {
     val batch = corpus.filter(col("vec_id") < 100)
     val panel = loadEmb().filter(t => t._1 % 2 == 1 && t._1 < 40)
     val k = 10
-    val root = java.nio.file.Files.createTempDirectory("hnsw_reshard").toString
-    val freshRoot = java.nio.file.Files.createTempDirectory("hnsw_reshard_fresh").toString
+    val root = tempDir("hnsw_reshard")
+    val freshRoot = tempDir("hnsw_reshard_fresh")
     try {
       Hnsw.writeHnswIndex(spark, base, root, numShards = 2)
       val snap = new graft.engine.Snapshot(spark, root)

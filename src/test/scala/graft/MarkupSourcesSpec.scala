@@ -33,7 +33,7 @@ class MarkupSourcesSpec extends SparkSpec {
       (2L, null: String, "s1", ""),              // null lang, EMPTY text
       (3L, "de", null: String, null: String),    // null source AND text
       (4L, "fr", "s2", "unicode é中文 and, commas"))
-    val dir = java.nio.file.Files.createTempDirectory("avro_spec").toString
+    val dir = tempDir("avro_spec")
     // small blockRows forces a multi-block walk
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "s.avro"),
       AvroIngest.buildShard(0L, rows, blockRows = 2))

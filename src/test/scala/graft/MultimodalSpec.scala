@@ -95,6 +95,39 @@ class MultimodalSpec extends SparkSpec {
     assert(s1 !== s2)
   }
 
+  test("hand-written RIFF writers keep their pinned bytes (ids 0-49)") {
+    // SHA-256 of the concatenated output for ids 0..49, one digest per
+    // writer and pixel/sample rule; a change to the shared RIFF chunk
+    // writer, the fmt/avih/strh/strf layouts or a sample rule shows here
+    def sha(build: Long => Array[Byte]): String = {
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      (0L until 50L).foreach(id => md.update(build(id)))
+      md.digest().map("%02x".format(_)).mkString
+    }
+    val got = Seq(
+      "buildWav" -> sha(Multimodal.buildWav),
+      "buildWavClip" -> sha(Multimodal.buildWavClip),
+      "buildWavVad" -> sha(Multimodal.buildWavVad),
+      "buildWavTextured(_, 1)" -> sha(Multimodal.buildWavTextured(_, 1)),
+      "buildWavTextured(_, 2)" -> sha(Multimodal.buildWavTextured(_, 2)),
+      "buildAvi" -> sha(Multimodal.buildAvi),
+      "buildAviDib shots" -> sha(id => Multimodal.buildAviDib(
+        ((id % 19 + 6).toInt, (id % 11 + 6).toInt, Multimodal.ShotFrames),
+        Multimodal.shotPixel(id))),
+      "buildAviDib video textured" -> sha(id => Multimodal.buildAviDib(
+        Multimodal.aviDims(id), Multimodal.videoPixelTextured(id, 0))))
+    assert(got === Seq(
+      "buildWav" -> "448762ae7f7fba6b0519a4fdf2b383496cb24c6db43ce6a24470ce7baca73b65",
+      "buildWavClip" -> "6e5fd04fefe0b06b3a293d98161623248cd61574aa3ba88783e1035f5db76b49",
+      "buildWavVad" -> "9aed172b92bbe0f647973858db09abd6b48c55c837f5312bbda86be97da1b0c5",
+      "buildWavTextured(_, 1)" -> "9da6820068f69c73f5cce52ac8a8105b16ef7e580e8126e8043084926a77adaa",
+      "buildWavTextured(_, 2)" -> "6fbc0ff44cf457674e5d9a81f1e7e84ecda64434aebb0c3fcbfde1916d824edd",
+      "buildAvi" -> "ec2406e2c7e97e7839a8e3abe018674c2c7448c0415d2b8bba2e64d89dd25c2e",
+      "buildAviDib shots" -> "2c64bcb8f15f4981df9b186f1278a4240c3a7a4594d9a62edade14be7570e072",
+      "buildAviDib video textured" ->
+        "b08d2dbc71252f2b3ece63e4fce69798ca56f7c44eb4fcb4100f1cc79a09f902"))
+  }
+
   test("undecodable audio bytes return None, not an exception") {
     assert(Multimodal.decodeWav("not a wav".getBytes).isEmpty)
     assert(Multimodal.decodeWav(Array.emptyByteArray).isEmpty)
@@ -340,9 +373,10 @@ class MultimodalSpec extends SparkSpec {
       val seg = Multimodal.shotSegLen(id)
       val dims = ((id % 19 + 6).toInt, (id % 11 + 6).toInt, Multimodal.ShotFrames)
       val bytes = Multimodal.buildAviDib(dims, Multimodal.shotPixel(id))
-      val Some((w, h, rasters)) = Multimodal.decodeAviGray(bytes)
-      assert(w === dims._1 && h === dims._2 && rasters.length === Multimodal.ShotFrames)
-      Multimodal.shotBoundaries(w, h, rasters).foreach { case (f, mad, cut) =>
+      val Some(frames) = Multimodal.decodeAviGray(bytes)
+      assert(frames.forall(g => g.w === dims._1 && g.h === dims._2) &&
+        frames.length === Multimodal.ShotFrames)
+      Multimodal.shotBoundaries(frames).foreach { case (f, mad, cut) =>
         val expect =
           if (f % seg != 0) 1L
           else if ((f / seg) % 2 == 1) (41 - seg).toLong
@@ -369,11 +403,11 @@ class MultimodalSpec extends SparkSpec {
       val fromPng = Multimodal.dhashBands(png).get
       val w = (id % 40 + 8).toInt
       val h = (id % 23 + 8).toInt
-      val px = Array.tabulate(w * h) { i =>
-        val (x, y) = (i % w, i / w)
-        ((x.toLong * x * 3 + y.toLong * y * 5 + x.toLong * y * 7 + id * 11) % 256).toInt
+      val px = new Multimodal.Gray(w, h) {
+        def apply(x: Int, y: Int): Int =
+          ((x.toLong * x * 3 + y.toLong * y * 5 + x.toLong * y * 7 + id * 11) % 256).toInt
       }
-      assert(Multimodal.dhashBandsOfRaster(w, h, px) === fromPng)
+      assert(Multimodal.dhashBandsOfRaster(px) === fromPng)
     }
   }
 

@@ -102,7 +102,7 @@ class MutationsSpec extends SparkSpec {
 
   test("changeFeed: adds/deletes/changes between versions, new content attached") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_feed").toString
+    val root = tempDir("graft_feed")
     val snap = new graft.engine.Snapshot(spark, root)
     snap.publish(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "body"))  // v_0
     snap.mutate(_ => Seq((1L, "a"), (3L, "C2"), (4L, "d")).toDF("id", "body")) // v_1

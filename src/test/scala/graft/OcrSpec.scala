@@ -43,7 +43,7 @@ class OcrSpec extends SparkSpec {
   }
 
   test("needs_ocr routing feeds scanned PDFs to the OCR engine end to end") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ocr_e2e").toString
+    val dir = tempDir("graft_ocr_e2e")
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "scan1.pdf"),
       OcrEngine.buildPdfScanned("Scanned page one"))
     // a REAL-text-layer PDF in the same batch must NOT route to OCR

@@ -102,7 +102,7 @@ object ParserFuzzProps extends Properties("parserfuzz") {
     Multimodal.buildPngTextured(7L, 0),
     Multimodal.buildPngBlur(8L))) { bytes =>
     Multimodal.decodePng(bytes)
-    Multimodal.decodePngGray(bytes)
+    Multimodal.decodeImage(bytes).foreach(Multimodal.lapEnergy)
     Multimodal.pngTextChunks(bytes)
     Multimodal.dhashBands(bytes)
   }

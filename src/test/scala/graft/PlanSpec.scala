@@ -376,6 +376,7 @@ class PlanSpec extends SparkSpec {
       val ingest = Ingest.flattenSnippets(Ingest.buildDocuments(binary,
         Seq((0, "c0"), (1, "c1")).toDF("category_id", "category_name")))
       Seq("q_snippets" -> SparkEntry.queries("q_snippets")(spark, sf0001),
+        "q_sentence_snippets" -> SparkEntry.queries("q_sentence_snippets")(spark, sf0001),
         "q_ingest_flatten" -> SparkEntry.queries("q_ingest_flatten")(spark, sf0001),
         "q_nested_project" -> SparkEntry.queries("q_nested_project")(spark, sf0001),
         "q_binary_ingest" -> SparkEntry.queries("q_binary_ingest")(spark, sf0001),
@@ -386,8 +387,9 @@ class PlanSpec extends SparkSpec {
             case h: HigherOrderFunction => h.prettyName }))
           assert(hofs.isEmpty, s"$name evaluates ${hofs.mkString(", ")}:\n$exec")
           // the page kernel runs once per document: no inferred filter on
-          // `pages` re-evaluates it below the explode
-          if (name != "q_snippets") {
+          // `pages` re-evaluates it below the explode (the two snippet
+          // queries window the documents table and run no page kernel)
+          if (!Set("q_snippets", "q_sentence_snippets")(name)) {
             val kernels = exec.flatMap(_.expressions.flatMap(_.collect {
               case k: graft.functions.IngestPages => k }))
             assert(kernels.size == 1, s"$name evaluates ingestpages ${kernels.size} times:\n$exec")

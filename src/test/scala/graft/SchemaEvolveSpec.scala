@@ -36,8 +36,7 @@ class SchemaEvolveSpec extends SparkSpec {
 
   test("empty corpus returns the typed empty frame (no footer to infer)") {
     import spark.implicits._
-    val emptyDir = java.nio.file.Files
-      .createTempDirectory("graft_schemaevo_empty").toString
+    val emptyDir = tempDir("graft_schemaevo_empty")
     Seq.empty[(Long, String, String, String, Long)]
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$emptyDir/documents.parquet")

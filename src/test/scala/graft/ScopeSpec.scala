@@ -2,7 +2,6 @@ package graft
 
 import graft.engine.Scope
 import graft.streaming.StreamingJobs
-import java.nio.file.Files
 
 /** The engine scope: each helper undoes its driver-side state when its
   * block exits, normally or by an exception. */
@@ -68,7 +67,7 @@ class ScopeSpec extends SparkSpec {
     val batch1 = Seq((5L, text), (6L, text + " kappa"), (7L, "five six seven eight nine"))
       .toDF("doc_id", "text")
     Seq(true, false).foreach { exactPairs =>
-      val root = Files.createTempDirectory("graft_scope_gate").toString
+      val root = tempDir("graft_scope_gate")
       Seq(batch0, batch1).zipWithIndex.foreach { case (b, i) =>
         val before = storedIds()
         StreamingJobs.dedupGateBatch(spark, b, i.toLong, s"$root/accepted", s"$root/index",

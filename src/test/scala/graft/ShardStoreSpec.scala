@@ -14,7 +14,7 @@ import java.nio.file.{Files, Paths}
 class ShardStoreSpec extends SparkSpec {
 
   private def freshStore(): (ShardStore, String) = {
-    val root = Files.createTempDirectory("shard_store").toString
+    val root = tempDir("shard_store")
     (new ShardStore(spark, root), root)
   }
 

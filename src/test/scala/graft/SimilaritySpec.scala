@@ -266,9 +266,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("persisted ANN index: point lookup equals in-memory lshTopK and prunes the scan") {
     import spark.implicits._
-    // per-user fixed path + overwrite: repeated test runs reuse one
-    // directory, and another user's run on a shared host cannot collide
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_ann_idx_spec_${System.getProperty("user.name")}"
+    val dir = tempDir("graft_ann_idx_spec") + "/idx"
     Similarity.writeAnnIndex(emb, dir)
     val q = emb.filter(col("vec_id") === 7L)
     val qEmb = q.select("embedding").as[Array[Float]].head()
@@ -444,7 +442,7 @@ class SimilaritySpec extends SparkSpec {
     val emb = graft.engine.Tables.embeddings(spark, sf0001)
     val corpus = emb.filter(col("vec_id") % 2 === 0)
     val queries = emb.filter(col("vec_id") % 2 =!= 0 && col("vec_id") < 40)
-    val root = java.nio.file.Files.createTempDirectory("graft_ivf_spec").toString
+    val root = tempDir("graft_ivf_spec")
 
     Similarity.writeIvfIndex(spark, corpus, root, 10, 2)
     val probed = Similarity.ivfProbeIndex(spark, root, queries, 10, 4)
@@ -721,7 +719,7 @@ class SimilaritySpec extends SparkSpec {
     val k = 10
     val base = toks.filter(col("doc_id") >= 25)
     val batch = toks.filter(col("doc_id") < 25)
-    val grown = java.nio.file.Files.createTempDirectory("maxsim_grow").toString
+    val grown = tempDir("maxsim_grow")
     S.writeMaxSimIndex(spark, base, grown)
     S.appendMaxSimIndex(spark, grown, batch)
     val probed = S.maxSimProbeIndex(spark, grown, toks, panel, k).collect()
@@ -738,7 +736,7 @@ class SimilaritySpec extends SparkSpec {
     assert(recall >= 0.7, s"grown-index MaxSim recall $recall")
     // (c) parity with a from-scratch build over the same corpus: the
     // grown index must not be a degraded second-class citizen
-    val rebuilt = java.nio.file.Files.createTempDirectory("maxsim_full").toString
+    val rebuilt = tempDir("maxsim_full")
     S.writeMaxSimIndex(spark, toks, rebuilt)
     val full = S.maxSimProbeIndex(spark, rebuilt, toks, panel, k).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
@@ -760,7 +758,7 @@ class SimilaritySpec extends SparkSpec {
     // serve-time filter against the PERSISTED graph (no rebuild per
     // predicate): over-fetch then filter then exact rerank — recall vs
     // the exact filtered ranking floored, all results obey the predicate
-    val root = java.nio.file.Files.createTempDirectory("hnsw_filtered").toString
+    val root = tempDir("hnsw_filtered")
     try {
       graft.operators.Hnsw.writeHnswIndex(spark, emb, root)
       // the predicate keeps ~1-in-3 of the corpus, so size over-fetch by

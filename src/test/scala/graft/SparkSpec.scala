@@ -1,24 +1,41 @@
 package graft
 
+import graft.engine.Scratch
+import java.io.File
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one per JVM). */
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sf0001 = "/root/testdata/sf0.001"
+
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[File]()
+
+  /** A fresh temp dir named after `prefix`, removed with everything in it
+    * when the suite ends. */
+  def tempDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tempDirs.add(dir)
+    dir.toString
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.forEach(dir => Scratch.rmTree(dir)) finally super.afterAll()
 }
 
 object SparkSpec {
   lazy val session: SparkSession = {
+    val warehouse = java.nio.file.Files.createTempDirectory("graft_wh").toFile
+    sys.addShutdownHook(Scratch.rmTree(warehouse))
     val s = SparkSession.builder()
       .master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
+      .config("spark.sql.warehouse.dir", warehouse.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -30,7 +30,7 @@ class StreamingSpec extends SparkSpec {
         base.withColumn("ts", timestamp_micros(col("us")).cast(TimestampNTZType))
       case _ => base.withColumn("ts", timestamp_micros(col("us")))
     }
-    val stage = Files.createTempDirectory("graft_late")
+    val stage = java.nio.file.Paths.get(tempDir("graft_late"))
     withTs.select("event_id", "ts", "user_id", "event_type", "value", "props")
       .coalesce(1).write.mode("overwrite").parquet(stage.toString)
     val part = new java.io.File(stage.toString).listFiles()
@@ -40,7 +40,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming tumbling-window counts == batch groupBy") {
     // FileStreamSource wants a directory; stage the events file into one
-    val dir = Files.createTempDirectory("graft_events")
+    val dir = java.nio.file.Paths.get(tempDir("graft_events"))
     Files.copy(java.nio.file.Paths.get(s"$sf0001/events.parquet"),
       dir.resolve("part-0.parquet"))
     val streaming = StreamingJobs.eventWindowCounts(spark, dir.toString)
@@ -72,7 +72,7 @@ class StreamingSpec extends SparkSpec {
     val commands = stream.toDF()
       .toDF("action_code", "document_id", "document_name", "category_id", "category_name", "text")
 
-    val stateDir = Files.createTempDirectory("graft_dispatch").toString
+    val stateDir = tempDir("graft_dispatch")
     var states = Map.empty[Long, EngineState]
     val query = CommandDispatch.runStream(spark, commands,
       EngineState(docs0, snippets0, cats0), stateDir,
@@ -109,14 +109,14 @@ class StreamingSpec extends SparkSpec {
     // batch 1: January events; batch 2: a single much-later event that
     // advances the watermark past every January window, so append mode
     // emits the finalized January windows
-    val dir = Files.createTempDirectory("graft_events_wm")
+    val dir = java.nio.file.Paths.get(tempDir("graft_events_wm"))
     Files.copy(java.nio.file.Paths.get(s"$sf0001/events.parquet"),
       dir.resolve("part-0.parquet"))
     val streaming = StreamingJobs.eventWindowCounts(spark, dir.toString)
     val q = streaming.writeStream
       .format("memory").queryName("wm_counts").outputMode("append")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft_wm_ckpt").toString)
+        tempDir("graft_wm_ckpt"))
       .start()
     try {
       q.processAllAvailable()
@@ -142,7 +142,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     // the reference bounds its queue at 40 items (DI:37); the streaming
     // analog is source-side backpressure: each file is one bounded batch
-    val cmdDir = Files.createTempDirectory("graft_cmds")
+    val cmdDir = java.nio.file.Paths.get(tempDir("graft_cmds"))
     val docs0 = Seq((1L, "doc_a", 1, "Cat1", "alpha beta", "Active"))
       .toDF("document_id", "document_name", "category_id", "category_name", "text", "document_status")
     val cats0 = Seq((1, "Cat1")).toDF("category_id", "category_name")
@@ -163,7 +163,7 @@ class StreamingSpec extends SparkSpec {
       .schema(CommandDispatch.commandSchema)
       .option("maxFilesPerTrigger", "1")
       .parquet(cmdDir.toString + "/*/")
-    val stateDir = Files.createTempDirectory("graft_dispatch_file").toString
+    val stateDir = tempDir("graft_dispatch_file")
     var states = Map.empty[Long, EngineState]
     val query = CommandDispatch.runStream(spark, commands,
       EngineState(docs0, snippets0, cats0), stateDir,
@@ -214,7 +214,7 @@ class StreamingSpec extends SparkSpec {
     val commands = toCommands(
       spark.readStream.format("rate").option("rowsPerSecond", "50").load()
         .filter(col("value") < 4))
-    val stateDir = Files.createTempDirectory("graft_dispatch_rate").toString
+    val stateDir = tempDir("graft_dispatch_rate")
     @volatile var latest: Option[EngineState] = None
     val query = CommandDispatch.runStream(spark, commands,
       EngineState(docs0, snippets0, cats0), stateDir,
@@ -282,9 +282,9 @@ class StreamingSpec extends SparkSpec {
 
   test("restart recovery: a resumed query rebases on the last snapshot, not `initial`") {
     import spark.implicits._
-    val cmdDir = Files.createTempDirectory("graft_restart_cmds")
-    val ckpt = Files.createTempDirectory("graft_restart_ckpt").toString
-    val stateDir = Files.createTempDirectory("graft_restart_state").toString
+    val cmdDir = java.nio.file.Paths.get(tempDir("graft_restart_cmds"))
+    val ckpt = tempDir("graft_restart_ckpt")
+    val stateDir = tempDir("graft_restart_state")
     val docs0 = Seq((1L, "doc_a", 1, "Cat1", "alpha beta", "Active"))
       .toDF("document_id", "document_name", "category_id", "category_name", "text", "document_status")
     val cats0 = Seq((1, "Cat1")).toDF("category_id", "category_name")
@@ -323,9 +323,9 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming expiry sweep: per-batch maintenance, restart + mid-sweep replay idempotence") {
     import spark.implicits._
-    val cmdDir = Files.createTempDirectory("graft_sweep_cmds")
-    val ckpt = Files.createTempDirectory("graft_sweep_ckpt").toString
-    val stateDir = Files.createTempDirectory("graft_sweep_state").toString
+    val cmdDir = java.nio.file.Paths.get(tempDir("graft_sweep_cmds"))
+    val ckpt = tempDir("graft_sweep_ckpt")
+    val stateDir = tempDir("graft_sweep_state")
     // seed: doc_a already past expiry (swept in batch 0), doc_z no expiry
     val docs0 = Seq(
       (1L, "doc_a", 1, "Cat1", "alpha beta", "Active", Some("2001-01-01")),
@@ -501,8 +501,8 @@ class StreamingSpec extends SparkSpec {
   test("streaming dispatch: a 40-command batch runs in at most 15 jobs and releases its caches") {
     import spark.implicits._
     // the reference's queue holds 40 commands (DI:37); one file is one batch
-    val cmdDir = Files.createTempDirectory("graft_jobs_cmds")
-    val stateDir = Files.createTempDirectory("graft_jobs_state").toString
+    val cmdDir = java.nio.file.Paths.get(tempDir("graft_jobs_cmds"))
+    val stateDir = tempDir("graft_jobs_state")
     def upload(id: Int, expiry: String) =
       s"""{"action_code":1,"document_id":$id,"document_name":"doc_$id","category_id":${1 + id % 3},""" +
         s""""text":"w$id alpha beta gamma delta epsilon zeta eta theta","document_expiryDate":"$expiry"}"""
@@ -592,7 +592,7 @@ class StreamingSpec extends SparkSpec {
       Seq((140L, fresh(0)._2), (141L, near(fresh(1)._2)),
         (142L, text("v101_", 30)), (143L, near(text("v102_", 30))))
     Seq(true -> 14, false -> 17).foreach { case (exactPairs, bound) =>
-      val root = Files.createTempDirectory("graft_gate_jobs").toString
+      val root = tempDir("graft_gate_jobs")
       def gate(rows: Seq[(Long, String)], b: Long): Unit =
         StreamingJobs.dedupGateBatch(spark, rows.toDF("doc_id", "text"), b,
           s"$root/accepted", s"$root/index", s"$root/rejected", 0.5, exactPairs)
@@ -633,7 +633,7 @@ class StreamingSpec extends SparkSpec {
 
   test("flatMapGroupsWithState sessionization == batch sessionize once watermark closes") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_sess")
+    val dir = java.nio.file.Paths.get(tempDir("graft_sess"))
     Files.copy(java.nio.file.Paths.get(s"$sf0001/events.parquet"),
       dir.resolve("w1.parquet"))
     val streamed = StreamingJobs.sessionizeStream(spark, dir.toString, 30)
@@ -683,7 +683,7 @@ class StreamingSpec extends SparkSpec {
     val w2 = wave(("2024-01-01 12:40:00", "view"), ("2024-01-01 08:45:00", "view"))
     val w3 = wave(("2024-01-02 12:00:00", "__flush"))
     val w4 = wave(("2024-01-02 13:00:00", "__flush"))
-    val root = Files.createTempDirectory("graft_wm_gate").toString
+    val root = tempDir("graft_wm_gate")
     val got = StreamingJobs.replayWatermarkedWaves(spark, root,
       Seq(w1, adv, w2, w3, w4), "2 hours")
       .collect().map(r => (r.getTimestamp(0).toString, r.getString(1), r.getLong(2)))
@@ -727,7 +727,7 @@ class StreamingSpec extends SparkSpec {
     val w2 = wave((1L, "2024-01-01 10:20:00"), (1L, "2024-01-01 12:00:00"),
       (2L, "2024-01-01 10:30:00"))
     val flush = wave((-1L, "2024-01-02 12:00:00"))
-    val root = Files.createTempDirectory("graft_sess_gate").toString
+    val root = tempDir("graft_sess_gate")
     val got = StreamingJobs.replaySessionWaves(spark, root,
       Seq(w1, w2, flush), "1 hour", "30 minutes")
       .collect()
@@ -776,7 +776,7 @@ class StreamingSpec extends SparkSpec {
     val c2 = cwave((201L, 1L, "2024-01-01 10:29:00"), // cross-wave, in window
       (202L, 2L, "2024-01-01 10:31:00"),              // 31 min: out of window
       (203L, 1L, "2024-01-01 12:05:00"))              // matches wave-2 view
-    val root = Files.createTempDirectory("graft_ss_join").toString
+    val root = tempDir("graft_ss_join")
     val got = StreamingJobs.replayStreamJoin(spark, root, Seq(v1, v2), Seq(c1, c2))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got === Set(
@@ -795,7 +795,7 @@ class StreamingSpec extends SparkSpec {
     val w3 = wave((9L, "2024-01-01 15:00:00"))             // advance + new key
     val adv = w1.filter(lit(false))                        // eviction lags a batch
     val w4 = wave((1L, "2024-01-01 15:00:00"))             // expired: re-admit
-    val root = Files.createTempDirectory("graft_wm_dedup").toString
+    val root = tempDir("graft_wm_dedup")
     val got = StreamingJobs.replayDedupWaves(spark, root,
       Seq(w1, w2, w3, adv, w4), "1 hour")
       .collect().map(r => (r.getLong(0), r.getTimestamp(1).toString)).toSet
@@ -807,7 +807,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming dedup gate: exact + near dups rejected within and across batches") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_dedup_gate")
+    val root = java.nio.file.Paths.get(tempDir("graft_dedup_gate"))
     val docsDir = root.resolve("docs"); Files.createDirectory(docsDir)
     val accepted = root.resolve("accepted").toString
     val index = root.resolve("index").toString

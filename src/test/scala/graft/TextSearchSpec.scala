@@ -547,8 +547,7 @@ class TextSearchSpec extends SparkSpec {
 
   test("export shards: written layout matches the manifest") {
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_export_spec_" +
-      System.getProperty("user.name")
+    val dir = tempDir("graft_export_spec") + "/export"
     val manifest = Curation.exportShards(docs, dir, 8).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(manifest.keySet === (0L to 7L).toSet)

@@ -87,7 +87,7 @@ class TextSourcesSpec extends SparkSpec {
       (5L, "plain"),
       (6L, "C:\\path\\N end"),            // interior backslashes round-trip
       (7L, "\\\\N"))                      // double-backslash-N stays distinct from \N
-    val dir = java.nio.file.Files.createTempDirectory("csv_spec").toString
+    val dir = tempDir("csv_spec")
     val sb = new StringBuilder("doc_id,text\r\n")
     rows.foreach { case (id, t) =>
       sb.append(CsvIngest.csvRow(Seq(id.toString, t))).append("\r\n")
@@ -113,7 +113,7 @@ class TextSourcesSpec extends SparkSpec {
     // knob is not exposed through Spark options — a corpus with
     // meaningful CRs should ship JSONL/parquet, not CSV. Pin it so a
     // future Spark that changes the behavior surfaces loudly.
-    val dir = java.nio.file.Files.createTempDirectory("csv_crlf").toString
+    val dir = tempDir("csv_crlf")
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "s.csv"),
       ("doc_id,text\r\n" + CsvIngest.csvRow(Seq("1", "a\r\nb")) + "\r\n").getBytes("UTF-8"))
     import org.apache.spark.sql.types._

@@ -18,6 +18,17 @@ stray=$(grep -rlF 'regexp_extract(col("path")' src/main/scala \
   | grep -vx 'src/main/scala/graft/sources/BinaryIngest.scala' || true)
 [ -z "$stray" ] || { echo "regexp_extract(col(\"path\") outside sources/BinaryIngest.scala: $stray"; exit 1; }
 echo "ok"
+echo "=== codecs ==="
+# one image decoder and one PCM decoder, both in operators.Multimodal
+# (decodeImage, decodeWavSamples): a second ImageIO.read/getImageReaders
+# or AudioSystem.getAudioInputStream call site in src/main fails the gate
+codecs='ImageIO\.(read|getImageReaders)\(|AudioSystem\.getAudioInputStream\('
+img=$(grep -rhoE 'ImageIO\.(read|getImageReaders)\(' src/main/scala | wc -l)
+pcm=$(grep -rhoF 'AudioSystem.getAudioInputStream(' src/main/scala | wc -l)
+[ "$img" -le 1 ] && [ "$pcm" -le 1 ] || {
+  echo "$img image and $pcm PCM decode call sites (at most one each):"
+  grep -rnE "$codecs" src/main/scala; exit 1; }
+echo "ok"
 echo "=== sbt test ==="
 sbt -batch test 2>&1 | grep -E "Tests:|Passed:"
 echo "=== benchmark harness build ==="
