@@ -149,11 +149,4 @@ object Tables {
     StructField("snippet_id", IntegerType, nullable = false),
     StructField("snippet_text", StringType, nullable = true),
     StructField("document_status", StringType, nullable = false)))
-
-  /** Category dim (in-memory dict in the reference, data_ingestion.py:29). */
-  def seedCategories(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq((1, "Collective Agreements"), (2, "Benefits"))
-      .toDF("category_id", "category_name")
-  }
 }

@@ -4,7 +4,9 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionDescription, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -287,6 +289,48 @@ object TextHashes {
     }
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
+
+  /** Whether `fn`'s `array<float|double>` input `t` holds floats. */
+  def floatElements(t: DataType, fn: String): Boolean = t match {
+    case ArrayType(FloatType, _) => true
+    case ArrayType(DoubleType, _) => false
+    case t => throw new IllegalArgumentException(s"$fn needs array<float|double>, got $t")
+  }
+
+  /** Spark's `round(x, 6)` on a double, for driver loops and closures
+    * that must round as the expression paths do: NaN and the infinities
+    * pass through, else `BigDecimal.valueOf` HALF_UP at scale 6. */
+  def sparkRound6(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+
+  /** The `n` nearest of the centroids `cents` (ids `ids`) to `emb` as
+    * `(id, score)` rows, best first; null for no centroid. The score is
+    * [[cosineSim]] against the centroid, [[sparkRound6]]ed when `rounded`.
+    * Rows rank as Spark orders `struct(score, -id)` descending: NaN above
+    * every number, -0.0 equal to 0.0, ties to the smaller id. A null
+    * `emb` scores null everywhere, so only the ids rank. */
+  def nearestCentroids(emb: ArrayData, embFloat: Boolean, cents: Array[ArrayData],
+      ids: Array[Long], rounded: Boolean, n: Int): ArrayData = {
+    val k = cents.length
+    if (k == 0) return null
+    val score = Array.tabulate(k) { i =>
+      val c = if (emb == null) 0.0 else cosineSim(emb, cents(i), embFloat, false)
+      if (rounded) sparkRound6(c) else c
+    }
+    val taken = new Array[Boolean](k)
+    val out = new Array[Any](math.min(n, k))
+    for (r <- out.indices) {
+      var b = -1
+      for (i <- 0 until k if !taken(i)) {
+        val c = if (b < 0) 1 else SQLOrderingUtil.compareDoubles(score(i), score(b))
+        if (c > 0 || (c == 0 && ids(i) < ids(b))) b = i
+      }
+      taken(b) = true
+      out(r) = InternalRow(ids(b), if (emb == null) null else score(b))
+    }
+    new GenericArrayData(out)
+  }
 }
 
 /** `poly_hash(str) -> long`: codegen'd polynomial fingerprint. */
@@ -377,13 +421,8 @@ case class CutTokens(words: Expression, starts: Expression, k: Int)
 case class CosineSim(left: Expression, right: Expression)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
   override def dataType: DataType = DoubleType
-  private def isFloat(e: Expression): Boolean = e.dataType match {
-    case ArrayType(FloatType, _) => true
-    case ArrayType(DoubleType, _) => false
-    case t => throw new IllegalArgumentException(s"cosine_sim needs array<float|double>, got $t")
-  }
-  private lazy val lf = isFloat(left)
-  private lazy val rf = isFloat(right)
+  private lazy val lf = TextHashes.floatElements(left.dataType, "cosine_sim")
+  private lazy val rf = TextHashes.floatElements(right.dataType, "cosine_sim")
   override def nullSafeEval(a: Any, b: Any): Any =
     TextHashes.cosineSim(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], lf, rf)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -427,6 +466,36 @@ case class LshProbes(child: Expression, planes: Seq[Double], tables: Int,
     copy(child = newChild)
 }
 
+/** `nearest_centroids(array<float|double>) -> array<struct<id, score>>`:
+  * the `n` nearest of a fixed centroid set ([[TextHashes.nearestCentroids]]).
+  * The centroids and ids reach generated code as reference objects, as
+  * [[LshBuckets]]' planes do, so the code text depends on neither: a new
+  * centroid set compiles nothing new. */
+case class NearestCentroids(child: Expression, centroids: Seq[(Long, Array[Double])],
+    rounded: Boolean, n: Int) extends UnaryExpression {
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("id", LongType, nullable = false), StructField("score", DoubleType))),
+    containsNull = false)
+  override def nullable: Boolean = centroids.isEmpty
+  private lazy val embFloat = TextHashes.floatElements(child.dataType, "nearest_centroids")
+  private lazy val cents =
+    centroids.map(c => UnsafeArrayData.fromPrimitiveArray(c._2): ArrayData).toArray
+  private lazy val ids = centroids.map(_._1).toArray
+  override def eval(input: InternalRow): Any = TextHashes.nearestCentroids(
+    child.eval(input).asInstanceOf[ArrayData], embFloat, cents, ids, rounded, n)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val e = child.genCode(ctx)
+    val cRef = ctx.addReferenceObj("centroids", cents, "ArrayData[]")
+    val iRef = ctx.addReferenceObj("centroidIds", ids, "long[]")
+    ev.copy(code = code"""${e.code}
+      ArrayData ${ev.value} = graft.functions.TextHashes.nearestCentroids(
+        ${e.isNull} ? null : ${e.value}, $embFloat, $cRef, $iRef, $rounded, $n);
+      boolean ${ev.isNull} = ${ev.value} == null;""")
+  }
+  override protected def withNewChildInternal(newChild: Expression): NearestCentroids =
+    copy(child = newChild)
+}
+
 /** Column-API + SQL registration for the custom expressions. */
 object GraftFunctions {
   def lsh_buckets(c: Column, planes: Seq[Double], tables: Int, bits: Int, dim: Int): Column =
@@ -438,6 +507,10 @@ object GraftFunctions {
 
   def cosine_sim(a: Column, b: Column): Column =
     ColumnBridge.column(CosineSim(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+
+  def nearest_centroids(emb: Column, centroids: Seq[(Long, Array[Double])],
+      rounded: Boolean, n: Int = 1): Column =
+    ColumnBridge.column(NearestCentroids(ColumnBridge.expression(emb), centroids, rounded, n))
 
   def poly_hash(c: Column): Column = ColumnBridge.column(PolyHash(ColumnBridge.expression(c)))
 

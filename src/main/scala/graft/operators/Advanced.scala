@@ -293,9 +293,7 @@ object Advanced {
     ps.zipWithIndex.map { case (p, i) =>
       val le = rankAgg.getLong(1 + 2 * i).toDouble / n
       val lt = rankAgg.getLong(2 + 2 * i).toDouble / n
-      val exact6 = BigDecimal(exact(i))
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      (p, exact6, lt <= p + eps && le >= p - eps)
+      (p, graft.functions.TextHashes.sparkRound6(exact(i)), lt <= p + eps && le >= p - eps)
     }.toDF("p", "exact_pct", "rank_within_eps")
   }
 

@@ -457,10 +457,6 @@ object Dedup {
       array_min(transform(shingleCodes, x => (lit(a) * x + lit(b)) % Prime))
     }: _*)
 
-  /** LSH candidate pairs: docs sharing any band of the signature. */
-  def minhashCandidates(docs: DataFrame): DataFrame =
-    minhashCandidatesSigs(Scope.checkpoint(sigsOf(shingleIndex(docs))))
-
   /** (doc_id, sh, sig), lazy. Codegen'd MinHashSig: one compiled loop
     * instead of K x |sh| interpreted lambda evaluations. Signing is the CPU
     * cost, so a site whose band bucketing and verification both re-read

@@ -28,13 +28,7 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
   import Tables._
-
-  /** Spark's `round(x, 6)` on DOUBLE input, replicated bit-exactly for
-    * the driver fast paths: shortest-decimal repr (BigDecimal.valueOf),
-    * HALF_UP at scale 6 — the same function GraphSpec's bruteRank
-    * asserts the distributed loops compute. */
-  private def r6(x: Double): Double = java.math.BigDecimal.valueOf(x)
-    .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+  import graft.functions.TextHashes.sparkRound6
 
   /** A 6dp-rounded double as the exact DECIMAL(·,6) Spark's cast yields
     * (valueOf = shortest repr, then HALF_UP re-scale — a no-op on an
@@ -101,12 +95,13 @@ object Graph {
         for (_ <- 1 to iterations) {
           val sums = scala.collection.mutable.HashMap.empty[Any, java.math.BigDecimal]
           taken.foreach { r =>
-            val c = dec6(r6(pr(r.get(0)) * r.getDouble(2) / r.getDouble(3)))
+            val c = dec6(sparkRound6(pr(r.get(0)) * r.getDouble(2) / r.getDouble(3)))
             sums.update(r.get(1), sums.getOrElse(r.get(1), java.math.BigDecimal.ZERO).add(c))
           }
           val base = (1 - damping) / n
           pr = nodes.map(nd =>
-            nd -> r6(base + damping * sums.get(nd).map(_.doubleValue).getOrElse(0.0))).toMap
+            nd -> sparkRound6(
+              base + damping * sums.get(nd).map(_.doubleValue).getOrElse(0.0))).toMap
         }
         return localFrame(s, nodes.map(nd => org.apache.spark.sql.Row(nd, pr(nd))),
           org.apache.spark.sql.types.StructType(Seq(
@@ -344,20 +339,20 @@ object Graph {
         for (_ <- 1 to iterations) {
           val sa = scala.collection.mutable.HashMap.empty[Any, java.math.BigDecimal]
           taken.foreach { r =>
-            val c = dec6(r6(h(r.get(0)) * r.getDouble(2)))
+            val c = dec6(sparkRound6(h(r.get(0)) * r.getDouble(2)))
             sa.update(r.get(1), sa.getOrElse(r.get(1), java.math.BigDecimal.ZERO).add(c))
           }
           val ta = sa.values.foldLeft(java.math.BigDecimal.ZERO)(_.add(_)).doubleValue
           a = nodes.map(nd =>
-            nd -> r6(sa.get(nd).map(_.doubleValue).getOrElse(0.0) / ta)).toMap
+            nd -> sparkRound6(sa.get(nd).map(_.doubleValue).getOrElse(0.0) / ta)).toMap
           val sh = scala.collection.mutable.HashMap.empty[Any, java.math.BigDecimal]
           taken.foreach { r =>
-            val c = dec6(r6(a(r.get(1)) * r.getDouble(2)))
+            val c = dec6(sparkRound6(a(r.get(1)) * r.getDouble(2)))
             sh.update(r.get(0), sh.getOrElse(r.get(0), java.math.BigDecimal.ZERO).add(c))
           }
           val th = sh.values.foldLeft(java.math.BigDecimal.ZERO)(_.add(_)).doubleValue
           h = nodes.map(nd =>
-            nd -> r6(sh.get(nd).map(_.doubleValue).getOrElse(0.0) / th)).toMap
+            nd -> sparkRound6(sh.get(nd).map(_.doubleValue).getOrElse(0.0) / th)).toMap
         }
         return localFrame(s,
           nodes.map(nd => org.apache.spark.sql.Row(nd, a(nd), h(nd))),

@@ -1,7 +1,10 @@
 package graft.operators
 
 import graft.engine.{Scope, Scratch, Tables}
+import graft.functions.{GraftFunctions, TextHashes}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -22,21 +25,10 @@ object Similarity {
 
   /** Cosine similarity of two numeric-array columns, computed in double via
     * the codegen'd [[graft.functions.CosineSim]] expression (one compiled
-    * loop; bit-identical to [[cosineDeclarative]], asserted in
+    * loop; bit-identical to the declarative higher-order form kept in
     * FunctionsSpec). */
   def cosine(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.cosine_sim(a, b)
-
-  /** The declarative formulation (higher-order functions only) — kept as
-    * the reference semantics the custom expression must match. */
-  def cosineDeclarative(a: Column, b: Column): Column = {
-    val ad = transform(a, x => x.cast("double"))
-    val bd = transform(b, x => x.cast("double"))
-    val dot = aggregate(zip_with(ad, bd, (x, y) => x * y), lit(0.0), (s, x) => s + x)
-    val na = sqrt(aggregate(transform(ad, x => x * x), lit(0.0), (s, x) => s + x))
-    val nb = sqrt(aggregate(transform(bd, x => x * x), lit(0.0), (s, x) => s + x))
-    dot / (na * nb)
-  }
 
   // ------------------------------------------------------ top-k kernel
 
@@ -285,30 +277,20 @@ object Similarity {
       lam: Double, lamComp: Double): DataFrame = {
     val spark = ranked.sparkSession
     import spark.implicits._
-    // EXACT-BINARY BigDecimal, not Scala's BigDecimal(x)/decimal(x)
-    // (those alias valueOf/shortest-repr): DuckDB's round() rounds the
-    // exact binary double, and the two disagree precisely at
-    // shortest-repr half-way points — measured on this corpus:
-    // 0.7·0.371485 = 0.26003949999... rounds to 0.260039 exact-binary
-    // (and in DuckDB) but to 0.260040 via valueOf. Driver-side rounding
-    // must match the ORACLE's semantics, not Spark Round's.
+    // DuckDB's round(x, 6) on a double, not Spark Round's valueOf
+    // rounding: scale by 1e6 in double arithmetic, round half away from
+    // zero (std::round), scale back. The two disagree at shortest-repr
+    // half-way points — measured on this corpus: 0.7·0.371485 =
+    // 0.26003949999... scales to 260039.49999999997 and rounds to
+    // 0.260039 here and in DuckDB, but to 0.260040 via valueOf; and the
+    // scaled product can round up to a tie the exact binary value is
+    // below (an exact-binary rounding missed the oracle at sf0.001 and
+    // sf0.1 by 1e-6). Driver-side rounding must match the ORACLE's.
     def r6(x: Double): Double =
       // + 0.0 collapses -0.0 to 0.0: Double.compare orders -0.0 < 0.0, so
       // without it two candidates rounding to +/-0.0 would tie-break by
       // sign instead of n_id, and the emitted value could print -0.0
-      // where DuckDB's round emits 0.0
-      new java.math.BigDecimal(x)
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue() + 0.0
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      // the cosineSim operation sequence verbatim (float->double, index
-      // order, dot/(sqrt(na)*sqrt(nb))) so driver sims equal the engine's
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) {
-        val x = a(i).toDouble; val y = b(i).toDouble
-        dot += x * y; na += x * x; nb += y * y; i += 1
-      }
-      dot / (math.sqrt(na) * math.sqrt(nb))
-    }
+      math.copySign(Math.round(math.abs(x) * 1e6).toDouble, x) / 1e6 + 0.0
     val cands = ranked
       .join(vectors.select(col("vec_id").as("n_id"),
         col("embedding").cast("array<float>").as("n_emb")), Seq("n_id"))
@@ -319,8 +301,9 @@ object Similarity {
       // (n_id, rel, vec, maxsim-to-selected); maxsim is None until the
       // first selection — sims can be NEGATIVE, so a 0.0 initializer
       // would silently floor the diversity term (measured: it did)
-      val rem = scala.collection.mutable.ArrayBuffer(
-        rows.map(r => (r._2, r._3, r._4, Option.empty[Double])): _*)
+      // vectors as ArrayData so driver sims run the engine's own cosine
+      val rem = scala.collection.mutable.ArrayBuffer(rows.map(r => (r._2, r._3,
+        UnsafeArrayData.fromPrimitiveArray(r._4): ArrayData, Option.empty[Double])): _*)
       def mmrOf(rel: Double, ms: Option[Double]): Double =
         ms.fold(r6(lam * rel))(m => r6(lam * rel - lamComp * m))
       (1 to math.min(k, rem.length)).map { rank =>
@@ -330,7 +313,7 @@ object Similarity {
         var i = 0
         while (i < rem.length) {
           val c = rem(i)
-          val s = r6(cos(c._3, best._3))
+          val s = r6(TextHashes.cosineSim(c._3, best._3, true, true))
           rem(i) = (c._1, c._2, c._3, Some(c._4.fold(s)(m => math.max(m, s))))
           i += 1
         }
@@ -541,19 +524,6 @@ object Similarity {
     Seq.fill(LshTables, LshBits)(Seq.fill(64)(next()))
   }
 
-  /** Bucket id of `emb` in table `t` (B sign bits packed into a long) —
-    * declarative reference form; the pipeline uses the codegen'd
-    * [[graft.functions.LshBuckets]] (equality asserted in FunctionsSpec:
-    * the interpreted per-plane dots made ANN slower than brute force at
-    * 20k vectors). */
-  def lshBucketDeclarative(emb: Column, t: Int): Column =
-    planes(t).zipWithIndex.map { case (p, i) =>
-      val dot = aggregate(
-        zip_with(emb, lit(p.toArray), (x, w) => x.cast("double") * w),
-        lit(0.0), (s, v) => s + v)
-      when(dot >= 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
-
   private lazy val flatPlanes: Seq[Double] = planes.flatten.flatten
 
   /** One row per (vector, table): (table, bucket) keys — what you'd persist
@@ -690,35 +660,37 @@ object Similarity {
 
   /** Lloyd's k-means as Spark jobs: recompute centroids as per-list means
     * (posexplode + two groupBys — a keyed aggregation that scales like any
-    * groupBy), then re-assign each vector to its nearest centroid.
-    * Deterministic: the seed partition is vec_id mod k, ties break to the
-    * smallest list_id.
+    * groupBy), then re-assign each vector to its nearest centroid by raw
+    * cosine. Deterministic: the seed partition is vec_id mod k, ties break
+    * to the smallest list_id.
     *
     * Centroid sync is the k tiny (list_id, centroid) rows COLLECTED to the
-    * driver and re-broadcast as expression literals (the same centroid
-    * broadcast every distributed k-means does — k*dim doubles, not data).
-    * The ASSIGN step is then a fully narrow per-row argmax over the
-    * literal centroid array: no crossJoin, no N*k row_number window, no
-    * exchange at all (asserted in SimilaritySpec), where the previous
-    * formulation shuffled N*k rows per Lloyd iteration. Lineage resets
-    * every iteration because `assigned` is rebuilt from the scan plus
-    * literals, so no checkpoint is needed. */
+    * driver and handed to the nearest-centroid kernel as a VALUE, so every
+    * iteration plans the same expression and compiles no new class. The
+    * ASSIGN step is a fully narrow per-row argmax: no crossJoin, no N*k
+    * row_number window, no exchange (asserted in SimilaritySpec), and no
+    * checkpoint, as `assigned` is rebuilt from the scan each iteration. */
   def kmeansAssign(corpus: DataFrame, k: Int, iters: Int,
-      seed0: Option[Seq[(Long, Array[Double])]] = None): DataFrame = {
+      seed0: Option[Seq[(Long, Array[Double])]] = None): DataFrame =
+    lloyd(corpus, k, iters, seed0)((ids, cents) =>
+      ids.withColumn("list_id", nearest(col("embedding"), cents, rounded = false)))
+
+  /** The Lloyd loop of [[kmeansAssign]] and [[kmeansAssignHier]]: seed
+    * partition vec_id mod k, then `iters` rounds of mean
+    * ([[collectCentroids]]) and `assign`, which adds `list_id` to
+    * `(vec_id, embedding)`. Iteration 0's centroids are a pure function of
+    * (corpus, k): two trainers over one corpus (q_ann_recall) may share
+    * them as `seed0` and pay the seed aggregation once. */
+  private def lloyd(corpus: DataFrame, k: Int, iters: Int,
+      seed0: Option[Seq[(Long, Array[Double])]])(
+      assign: (DataFrame, Seq[(Long, Array[Double])]) => DataFrame): DataFrame = {
     val ids = corpus.select(col("vec_id"), col("embedding"))
-    var assigned = ids.withColumn("list_id",
-      pmod(col("vec_id"), lit(k.toLong))) // deterministic seed partition
+    var assigned = ids.withColumn("list_id", pmod(col("vec_id"), lit(k.toLong)))
     var i = 0
     while (i < iters) {
-      // iteration 0's centroids are a pure function of (corpus, k) — the
-      // caller may pass them precomputed so two trainers over the same
-      // corpus (q_ann_recall runs this AND [[kmeansAssignHier]]) pay the
-      // seed aggregation once instead of twice (guide §1.2: don't compute
-      // the same thing twice). Values are identical by construction
-      // (same deterministic aggregate, same sortBy).
       val cents = if (i == 0 && seed0.isDefined) seed0.get else
         collectCentroids(assigned)
-      assigned = ids.withColumn("list_id", nearestCentroid(col("embedding"), cents))
+      assigned = assign(ids, cents)
       i += 1
     }
     assigned
@@ -733,15 +705,11 @@ object Similarity {
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1).toIndexedSeq
 
-  /** Narrow argmax over literal centroids: `max struct(score, -id)` picks
-    * the highest cosine, ties to the SMALLEST list_id — the exact
-    * semantics of a per-query rank window ordered by (cscore desc,
-    * list_id), with zero exchanges. */
-  def nearestCentroid(emb: Column, cents: Seq[(Long, Array[Double])]): Column = {
-    val best = array_max(array(cents.map { case (id, c) =>
-      struct(cosine(emb, lit(c)).as("s"), lit(-id).as("nid")) }: _*))
-    -best.getField("nid")
-  }
+  /** Id of the nearest of `cents` to `emb` by raw or 6dp (`rounded`)
+    * cosine, ties to the SMALLEST id, with zero exchanges. */
+  private def nearest(emb: Column, cents: Seq[(Long, Array[Double])],
+      rounded: Boolean): Column =
+    GraftFunctions.nearest_centroids(emb, cents, rounded).getItem(0).getField("id")
 
   /** ANN top-k probing the `nprobe` nearest lists per query. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, listCol: String,
@@ -1156,36 +1124,22 @@ object Similarity {
     val s = emb.sparkSession
     import s.implicits._
     require(k >= 1, "k-center needs k >= 1")
-    Scope.collectWithin(emb.select(col("vec_id"), col("embedding")), driverRowBudget) match {
+    Scope.collectWithin(emb.select(col("vec_id"), col("embedding").cast("array<double>")),
+        driverRowBudget) match {
       case Some(taken) =>
         if (taken.isEmpty)
           return Seq.empty[(Long, Long, Double)].toDF("sel_rank", "vec_id", "d_min")
         // bit-identical replication of the distributed loop (spec'd in
         // SimilaritySpec against the forced-distributed path): the same
         // index-order double cosine (TextHashes.cosineSim), Spark's
-        // round(x,6) as valueOf+HALF_UP (NaN, a zero vector's cosine,
-        // passes through as Spark's round passes it), `least` and the (dmin desc,
+        // round(x,6) (TextHashes.sparkRound6: NaN, a zero vector's
+        // cosine, passes through), `least` and the (dmin desc,
         // vec_id) TakeOrdered both replayed through Double.compare —
         // Spark's double ordering (NaN greatest, -0.0 < 0.0), not the
         // IEEE `<` (which would diverge on NaN/-0.0 corners)
-        def r6(x: Double): Double =
-          if (x.isNaN || x.isInfinite) x
-          else java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
-        def cosA(a: Array[Double], b: Array[Double]): Double = {
-          var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-          while (i < a.length) {
-            dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
-          }
-          dot / (math.sqrt(na) * math.sqrt(nb))
-        }
-        def embOf(r: org.apache.spark.sql.Row): Array[Double] =
-          if (r.isNullAt(1)) null
-          else r.getSeq[Any](1).iterator.map {
-            case f: java.lang.Float => f.toDouble // float→double widening,
-            case n: java.lang.Number => n.doubleValue // as cosineSim does
-            case null => 0.0 // cosineSim's primitive read of a null slot
-          }.toArray
-        val rows = taken.map(r => (r.getLong(0), embOf(r)))
+        // a null slot unboxes to 0.0, as cosineSim's primitive read gives
+        val rows = taken.map(r => (r.getLong(0), Option(r.getSeq[Double](1))
+          .map(v => UnsafeArrayData.fromPrimitiveArray(v.toArray): ArrayData).orNull))
         val seedRow = rows.minBy(_._1)
         var selected = Vector((seedRow._1, 2.0, seedRow._2))
         val dmin = Array.fill(rows.length)(2.0)
@@ -1195,7 +1149,7 @@ object Similarity {
           while (i < rows.length) {
             val e = rows(i)._2
             if (e != null && cv != null) {
-              val d = 1.0 - r6(cosA(e, cv))
+              val d = 1.0 - TextHashes.sparkRound6(TextHashes.cosineSim(e, cv, false, false))
               if (java.lang.Double.compare(d, dmin(i)) < 0) dmin(i) = d
             }
             i += 1
@@ -1266,32 +1220,26 @@ object Similarity {
     * LEARNED from the data itself.
     *
     * Clustering = one Lloyd assignment step from deterministic seeds
-    * (the k lowest vec_ids), the same literal-centroid narrow argmax as
+    * (the k lowest vec_ids), the same nearest-centroid kernel as
     * [[kmeansAssign]] but with 6dp-ROUNDED scores so an oracle replays
     * the argmax exactly (ties to the lowest seed id). A vector is a
     * duplicate iff some LOWER-id vector in its cluster has cosine ≥ tau
     * — the keep-lowest-id greedy every exact-dedup operator here uses.
     *
-    * Shape: assignment is narrow (k literal seed vectors, zero
-    * exchange); the pair search joins the corpus to itself on the
+    * Shape: assignment is narrow (the k seeds travel as a value in the
+    * kernel, zero exchange); the pair search joins the corpus to itself on the
     * cluster key — one keyed exchange whose arrays legitimately travel
     * (vectors must co-locate to be compared; the join is the operator). */
-  def semDedup(emb: DataFrame, k: Int, tau: Double): DataFrame = {
-    val seeds = emb.orderBy("vec_id").limit(k)
+  def semDedup(emb: DataFrame, k: Int, tau: Double): DataFrame =
+    withinClusterDups(emb.select(col("vec_id"), col("embedding"),
+      nearest(col("embedding"), lowestSeeds(emb, k), rounded = true).as("cluster")), tau)
+
+  /** The k lowest-vec_id vectors, `(vec_id, double[])` by vec_id — the
+    * deterministic SemDeDup seeds (none for an empty corpus). */
+  private def lowestSeeds(emb: DataFrame, k: Int): Seq[(Long, Array[Double])] =
+    emb.orderBy("vec_id").limit(k)
       .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
-    if (seeds.isEmpty) // empty corpus: no seeds, no clusters, no rows
-      return emb.limit(0).select(col("vec_id"), lit(0L).as("cluster"),
-        lit(false).as("is_dup"))
-    val best = array_max(array(seeds.map { case (id, c) =>
-      struct(cosine6(col("embedding"), lit(c)).as("s"),
-        lit(-id).as("nid")) }.toIndexedSeq: _*))
-    val assigned = emb.select(col("vec_id"), col("embedding"),
-      (-best.getField("nid")).as("cluster"))
-    withinClusterDups(assigned, tau)
-  }
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1).toSeq
 
   /** Shared second stage: near-dup verdicts from a (vec_id, embedding,
     * cluster) frame — pair search joins on the cluster key only. */
@@ -1327,59 +1275,40 @@ object Similarity {
     * spec-gated on agreement + planted-dup recall, not oracle-gated —
     * the [[lshNearDups]]-vs-[[qEmbedDup]] pattern. */
   def semDedupHier(emb: DataFrame, k: Int, tau: Double,
-      lloydIters: Int = 5): DataFrame = {
-    val seeds = emb.orderBy("vec_id").limit(k)
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
-    if (seeds.isEmpty)
-      return emb.limit(0).select(col("vec_id"), lit(0L).as("cluster"),
-        lit(false).as("is_dup"))
-    val assigned = twoLevelNearest(emb, seeds, lloydIters)
-      .withColumnRenamed("nearest_id", "cluster")
-    withinClusterDups(assigned, tau)
-  }
+      lloydIters: Int = 5): DataFrame =
+    withinClusterDups(twoLevelNearest(emb, lowestSeeds(emb, k), lloydIters)
+      .withColumnRenamed("nearest_id", "cluster"), tau)
 
   /** The shared two-level nearest-item engine behind [[semDedupHier]] and
     * [[kmeansAssignHier]]: group the candidate items (id, vector) into
     * ~sqrt(|items|) cells with a driver-side Lloyd over the ITEM vectors
     * (|items| rows — negligible), route each corpus row to its TOP-2
-    * cells (multi-probe), then argmax only those cells' items through a
+    * cells (multi-probe, the centers a value in the nearest-centroid
+    * kernel, not plan literals), then argmax only those cells' items through a
     * broadcast join. O(sqrt(k)) coarse cosines per row narrow +
     * ~2·sqrt(k) fine cosines in the join, vs the flat argmax's k.
-    * Returns (vec_id, embedding, nearest_id); items must be non-empty
-    * (callers guard). */
+    * Returns (vec_id, embedding, nearest_id), no rows for no items. */
   private def twoLevelNearest(emb: DataFrame,
       seeds: Seq[(Long, Array[Double])], lloydIters: Int): DataFrame = {
-    def cosA(x: Array[Double], y: Array[Double]): Double = {
-      var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
-      while (i < x.length) { dot += x(i) * y(i); nx += x(i) * x(i); ny += y(i) * y(i); i += 1 }
-      dot / (math.sqrt(nx) * math.sqrt(ny))
-    }
+    if (seeds.isEmpty) return emb.limit(0).select(col("vec_id"), col("embedding"),
+      lit(0L).as("nearest_id"))
     val m = math.max(1, math.round(math.sqrt(seeds.length.toDouble)).toInt)
     // driver-side Lloyd over the k SEED vectors (k rows — negligible):
-    // deterministic init by seed order, mean centers, cosine assignment
+    // deterministic init by seed order, mean centers, assignment by the
+    // nearest-centroid kernel's static loop (raw cosine)
     var centers = Array.tabulate(m)(i => seeds(i * seeds.length / m)._2)
     var cellOf = Array.fill(seeds.length)(0)
+    val seedData = seeds.map(s => UnsafeArrayData.fromPrimitiveArray(s._2))
+    val cellIds = Array.tabulate(m)(_.toLong)
     (0 until lloydIters).foreach { _ =>
-      cellOf = seeds.map { case (_, v) =>
-        var bc = 0; var bs = Double.NegativeInfinity
-        centers.indices.foreach { c =>
-          val sc = cosA(v, centers(c))
-          if (sc > bs) { bs = sc; bc = c }
-        }
-        bc
-      }.toArray
+      val centerData = centers.map(c => UnsafeArrayData.fromPrimitiveArray(c): ArrayData)
+      cellOf = seedData.map(v => TextHashes.nearestCentroids(v, false, centerData, cellIds,
+        rounded = false, 1).getStruct(0, 2).getLong(0).toInt).toArray
       centers = Array.tabulate(m) { c =>
         val members = seeds.indices.filter(cellOf(_) == c)
         if (members.isEmpty) centers(c)
-        else {
-          val dim = seeds.head._2.length
-          val acc = new Array[Double](dim)
-          members.foreach { s => var i = 0; while (i < dim) { acc(i) += seeds(s)._2(i); i += 1 } }
-          acc.map(_ / members.length)
-        }
+        else Array.tabulate(seeds.head._2.length)(i =>
+          members.foldLeft(0.0)((acc, s) => acc + seeds(s)._2(i)) / members.length)
       }
     }
     val cells: Seq[(Int, Seq[(Long, Array[Double])])] =
@@ -1387,8 +1316,8 @@ object Similarity {
         .map { case (c, idxs) => (c, idxs.map(seeds(_)).toSeq) }
     // Multi-probe routing (the IVF nprobe trick): boundary vectors whose
     // true nearest seed sits in the runner-up cell dominate the
-    // disagreement, so probe the TOP-2 cells. The fine stage is the
-    // [[ivfTopK]] shape — explode the two probed cells, broadcast-join
+    // disagreement, so probe the TOP-2 cells (6dp scores). The fine stage
+    // is the [[ivfTopK]] shape — explode the two probed cells, broadcast-join
     // the (cell, seed) table, argmax per vector — NOT a per-cell literal
     // CASE: a k-seed when-chain defeats common-subexpression elimination
     // (each predicate re-derives the coarse argmax) and measured 10x
@@ -1400,23 +1329,14 @@ object Similarity {
     // route ONLY against OCCUPIED cells: a Lloyd cell that lost all its
     // seeds keeps a stale init center, and a vector routed to it would
     // find zero candidates in the seed join and silently VANISH from the
-    // output (both downstream joins are inner). The second-probe
-    // fallback for a single-cell seed set points at the first occupied
-    // cell for the same reason.
-    val occupied = cells.map(_._1).toSet
-    val floor = struct(lit(-2.0).as("s"), lit(-cells.head._1.toLong).as("nid"))
-    val centerArr = array(centers.zipWithIndex.collect {
-      case (cv, i) if occupied.contains(i) =>
-        struct(cosine6(col("embedding"), lit(cv)).as("s"),
-          lit(-i.toLong).as("nid")) }.toIndexedSeq: _*)
+    // output (both downstream joins are inner). A single occupied cell
+    // has no runner-up, so the second probe falls back to that cell.
     val routed = emb
-      .withColumn("carr", centerArr)
-      .withColumn("best", array_max(col("carr")))
-      .withColumn("second", array_max(filter(col("carr"),
-        x => x.getField("nid") =!= col("best").getField("nid"))))
+      .withColumn("top", GraftFunctions.nearest_centroids(col("embedding"),
+        cells.map { case (c, _) => (c.toLong, centers(c)) }, rounded = true, n = 2))
       .select(col("vec_id"), col("embedding"),
-        (-col("best").getField("nid")).cast("long").as("c1"),
-        (-coalesce(col("second"), floor).getField("nid")).cast("long").as("c2"))
+        col("top").getItem(0).getField("id").as("c1"),
+        col("top").getItem(math.min(1, cells.length - 1)).getField("id").as("c2"))
       .localCheckpoint()
     import emb.sparkSession.implicits._
     val seedDf = broadcast(cells.flatMap { case (c, ss) =>
@@ -1437,36 +1357,21 @@ object Similarity {
   }
 
   /** PRODUCTION-scale [[kmeansAssign]]: the flat assign step is N·k
-    * literal cosines per Lloyd iteration, and the IVF regime grows the
+    * cosines per Lloyd iteration, and the IVF regime grows the
     * list count WITH the corpus (constant target list size) — the
     * finding-12 quadratic, re-measured for learned-list retrieval in
-    * SCALE.md's ivf_topk_learned row. Each iteration here recomputes
-    * centroids with the same distributed groupBy-mean jobs, then assigns
-    * through [[twoLevelNearest]] — O(sqrt(k)) cosines per row. Assignment
+    * SCALE.md's ivf_topk_learned row. The same Lloyd loop ([[lloyd]]:
+    * seed partition, `seed0` sharing, distributed groupBy-mean) assigns
+    * here through [[twoLevelNearest]] — O(sqrt(k)) cosines per row. Assignment
     * is APPROXIMATE (a boundary vector can route past its true nearest
     * centroid), so this path is spec-gated on agreement with the flat
     * assign + identical-vector co-routing, the [[semDedupHier]]
     * pattern. */
   def kmeansAssignHier(corpus: DataFrame, k: Int, iters: Int,
       lloydIters: Int = 5,
-      seed0: Option[Seq[(Long, Array[Double])]] = None): DataFrame = {
-    val ids = corpus.select(col("vec_id"), col("embedding"))
-    var assigned = ids.withColumn("list_id",
-      pmod(col("vec_id"), lit(k.toLong))) // deterministic seed partition
-    var i = 0
-    while (i < iters) {
-      // seed0: see [[kmeansAssign]] — iteration 0's centroids may arrive
-      // precomputed from a sibling trainer over the same corpus
-      val cents = if (i == 0 && seed0.isDefined) seed0.get else
-        collectCentroids(assigned)
-      assigned =
-        if (cents.isEmpty) ids.limit(0).withColumn("list_id", lit(0L))
-        else twoLevelNearest(ids, cents, lloydIters)
-          .withColumnRenamed("nearest_id", "list_id")
-      i += 1
-    }
-    assigned
-  }
+      seed0: Option[Seq[(Long, Array[Double])]] = None): DataFrame =
+    lloyd(corpus, k, iters, seed0)((ids, cents) =>
+      twoLevelNearest(ids, cents, lloydIters).withColumnRenamed("nearest_id", "list_id"))
 
   /** Oracle-checked: 16 learned clusters, tau 0.35 (66 within-cluster
     * dup pairs at gate scale — selective but non-trivial). */
@@ -1568,15 +1473,6 @@ object Similarity {
     * Search", TPAMI 2011.) */
   val PqM = 16; val PqSub = 4; val PqK = 16
 
-  /** Squared-L2 distances of subspace `m` of `vd` (a double-array column)
-    * to each centroid of `book`, rounded to 6 dp (the engine's portable-
-    * double discipline — same as the cosine paths). */
-  private def pqDists(vd: Column, m: Int, book: Seq[Array[Double]]): Column =
-    array(book.map { cvec =>
-      round(aggregate(zip_with(slice(vd, m * PqSub + 1, PqSub), lit(cvec),
-        (x, y) => (x - y) * (x - y)), lit(0.0), (s, x) => s + x), 6)
-    }: _*)
-
   /** Deterministic seed codebooks: the subvectors of the K vectors ranked
     * first by a Knuth multiplicative hash of vec_id (portable integer
     * arithmetic — the DuckDB oracle reproduces the identical selection).
@@ -1584,57 +1480,48 @@ object Similarity {
     * [[qPqEncode]], whose argmin-over-seeds is fully SQL-expressible. */
   def pqSeedCodebooks(emb: DataFrame): Seq[Seq[Array[Double]]] = {
     val seeds = emb
-      .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("h", pmod(col("vec_id") * lit(2654435761L), lit(4294967296L)))
       .orderBy("h", "vec_id").limit(PqK)
       .collect().map(_.getSeq[Double](1).toArray)
     (0 until PqM).map(m => seeds.toSeq.map(_.slice(m * PqSub, (m + 1) * PqSub)))
   }
 
-  /** Spark's `round(x, 6)` for a finite double, JVM-side: the closure
-    * paths below must round exactly like the expression paths or a
-    * boundary vector's code could differ between them. */
-  private def round6d(x: Double): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
-
-  /** All M codes for one vector — the closure-side twin of [[pqEncode]]'s
-    * expression argmin (equality pinned in SimilaritySpec). */
+  /** All M codes for one vector: per subspace, the first code at the
+    * minimum 6dp [[subDist]] (code for code the expression argmin kept in
+    * SimilaritySpec and the q_pq_encode oracle's). JVM-side because a
+    * 16x16-literal expression tree's CODEGEN COMPILE dominated the actual
+    * work (round-6 probe: 8.1s for two Lloyd iterations over 2,000
+    * vectors; the arithmetic is microseconds). */
   private[graft] def pqCodesJvm(v: Array[Double],
-      bks: Array[Array[Array[Double]]]): Array[Int] = {
-    val codes = new Array[Int](PqM)
-    var m = 0
-    while (m < PqM) { codes(m) = nearestCodeJvm(v, m, bks(m)); m += 1 }
-    codes
-  }
-
-  /** First-minimum argmin over `book` for subspace `m`, with the same
-    * fold order and 6dp rounding as [[pqDists]] + `array_position(min)` —
-    * kept JVM-side because a 16x16-literal expression tree's CODEGEN
-    * COMPILE dominated the actual work (round-6 probe: 8.1s for two
-    * Lloyd iterations over 2,000 vectors; the arithmetic is microseconds). */
-  private def nearestCodeJvm(v: Array[Double], m: Int, book: Seq[Array[Double]]): Int = {
+      bks: Array[Array[Array[Double]]]): Array[Int] = Array.tabulate(PqM) { m =>
     var best = 0; var bestD = Double.PositiveInfinity
     var k = 0
-    while (k < book.length) {
-      val c = book(k); var s = 0.0; var j = 0
-      while (j < PqSub) { val dd = v(m * PqSub + j) - c(j); s += dd * dd; j += 1 }
-      val d = round6d(s)
+    while (k < bks(m).length) {
+      val d = TextHashes.sparkRound6(subDist(v, m, bks(m)(k)))
       if (d < bestD) { bestD = d; best = k }
       k += 1
     }
     best
   }
 
+  /** Squared L2 distance of subspace `m` of `v` to the code vector `c`,
+    * summed in index order. */
+  private def subDist(v: Array[Double], m: Int, c: Array[Double]): Double = {
+    var s = 0.0; var j = 0
+    while (j < PqSub) { val dd = v(m * PqSub + j) - c(j); s += dd * dd; j += 1 }
+    s
+  }
+
   /** Per-subspace Lloyd iterations on top of the seed codebooks. Each
-    * iteration is one narrow assignment pass (typed mapPartitions; the
+    * iteration is one narrow assignment pass (a typed flatMap; the
     * codebooks travel in the task closure — k·dim doubles, never a join
     * side) emitting (m, code, j, component) scalars, plus one
     * M*K*PqSub-key distributed aggregation for the new means. Codes whose
-    * cell empties keep their previous centroid. The assign is JVM code
-    * rather than literal expressions deliberately: same arithmetic (see
-    * [[nearestCodeJvm]]), but plan size — and therefore codegen compile
-    * time — is CONSTANT in M·K instead of quadratic. */
+    * cell empties keep their previous centroid (the flat k-means [[lloyd]]
+    * loop drops such a list instead, hence a loop of its own). The books
+    * are a value in the task closure, never plan text, so the plan is
+    * the same at every iteration and its size CONSTANT in M·K. */
   def pqTrainCodebooks(emb: DataFrame, iters: Int): Seq[Seq[Array[Double]]] = {
     var books = pqSeedCodebooks(emb)
     val spark = emb.sparkSession
@@ -1643,15 +1530,13 @@ object Similarity {
     while (i < iters) {
       val bks: Array[Array[Array[Double]]] = books.map(_.toArray).toArray
       val means = emb
-        .select(transform(col("embedding"), x => x.cast("double")).as("v"))
+        .select(col("embedding").cast("array<double>").as("v"))
         .as[Array[Double]]
-        .mapPartitions { it =>
-          it.flatMap { v =>
-            if (v == null || v.length < PqM * PqSub) Iterator.empty
-            else (0 until PqM).iterator.flatMap { m =>
-              val code = nearestCodeJvm(v, m, bks(m))
-              (0 until PqSub).iterator.map(j => (m, code, j, v(m * PqSub + j)))
-            }
+        .flatMap { v =>
+          if (v == null || v.length < PqM * PqSub) Nil
+          else {
+            val codes = pqCodesJvm(v, bks)
+            for (m <- 0 until PqM; j <- 0 until PqSub) yield (m, codes(m), j, v(m * PqSub + j))
           }
         }
         .toDF("m", "code", "j", "x")
@@ -1670,19 +1555,29 @@ object Similarity {
     books
   }
 
-  /** Encode: 8 int codes + total squared quantization error per vector.
-    * Fully narrow — the only non-literal input is the embedding column. */
+  /** Encode: `(vec_id, codes, qerr)` — the M codes ([[pqCodesJvm]]) and
+    * the quantization error, the M 6dp minimum distances summed exactly
+    * at scale 6 (the oracle's DECIMAL(18,6) sum) and rounded to 6dp; null
+    * for a null or short embedding. Narrow; the books travel in the task
+    * closure. */
   def pqEncode(df: DataFrame, books: Seq[Seq[Array[Double]]]): DataFrame = {
-    val vd = transform(col("embedding"), x => x.cast("double"))
-    val codes = (0 until PqM).map { m =>
-      val d = pqDists(vd, m, books(m))
-      (array_position(d, array_min(d)) - 1).cast("int")
-    }
-    val qerr = (0 until PqM).map { m =>
-      array_min(pqDists(vd, m, books(m))).cast("decimal(18,6)")
-    }.reduce(_ + _)
-    df.withColumn("codes", array(codes: _*))
-      .withColumn("qerr", round(qerr.cast("double"), 6))
+    val spark = df.sparkSession
+    import spark.implicits._
+    val bks: Array[Array[Array[Double]]] = books.map(_.toArray).toArray
+    df.select(col("vec_id"), col("embedding").cast("array<double>"))
+      .as[(Long, Array[Double])]
+      .map { case (id, v) =>
+        if (v == null || v.length < PqM * PqSub) (id, null, None)
+        else {
+          val codes = pqCodesJvm(v, bks)
+          val qerr = (0 until PqM).map(m => java.math.BigDecimal.valueOf(
+            TextHashes.sparkRound6(subDist(v, m, bks(m)(codes(m)))))
+            .setScale(6, java.math.RoundingMode.HALF_UP))
+            .reduce(_ add _)
+          (id, codes, Some(TextHashes.sparkRound6(qerr.doubleValue)))
+        }
+      }
+      .toDF("vec_id", "codes", "qerr")
   }
 
   /** ADC top-k: rank the whole corpus from codes + one per-query lookup
@@ -1698,44 +1593,19 @@ object Similarity {
     import spark.implicits._
     // both sides of the scan are built JVM-side with the books in the
     // task closure: the literal-expression formulations (a 256-term LUT
-    // array; 32 pqDists trees in the encode) each measured SECONDS of
-    // pure codegen compile per invocation, for arithmetic that takes
-    // microseconds — same fold order + rounding, so values and codes are
-    // bit-identical ([[pqCodesJvm]] parity is spec-pinned; the
-    // expression encode remains the oracle-gated q_pq_encode surface)
+    // array; 32 per-code distance trees in the encode) each measured
+    // SECONDS of pure codegen compile per invocation, for arithmetic that
+    // takes microseconds. The corpus codes are [[pqEncode]]'s, so the
+    // ranking reads the oracle-gated q_pq_encode codes.
     val bks: Array[Array[Array[Double]]] = books.map(_.toArray).toArray
-    val c = corpus
-      .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
-      .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, v) =>
-          if (v == null || v.length < PqM * PqSub) None
-          else Some((id, pqCodesJvm(v, bks)))
-        }
-      }
-      .toDF("n_id", "codes")
+    val c = pqEncode(corpus, books).filter(col("codes").isNotNull)
+      .select(col("vec_id").as("n_id"), col("codes"))
     val q = queries
-      .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, v) =>
-          if (v == null || v.length < PqM * PqSub) None
-          else Some((id, v))
-        }.map { case (id, v) =>
-          val lut = new Array[Double](PqM * PqK)
-          var m = 0
-          while (m < PqM) {
-            var kk = 0
-            while (kk < PqK) {
-              val cv = bks(m)(kk); var s = 0.0; var j = 0
-              while (j < PqSub) { val dd = v(m * PqSub + j) - cv(j); s += dd * dd; j += 1 }
-              lut(m * PqK + kk) = s
-              kk += 1
-            }
-            m += 1
-          }
-          (id, lut)
-        }
+      .filter(r => r._2 != null && r._2.length >= PqM * PqSub)
+      .map { case (id, v) =>
+        (id, Array.tabulate(PqM * PqK)(i => subDist(v, i / PqK, bks(i / PqK)(i % PqK))))
       }
       .toDF("q_id", "lut")
     val dist = (0 until PqM).map { m =>
@@ -1803,7 +1673,7 @@ object Similarity {
   }
 
   /** Oracle-gated PQ encode under the DETERMINISTIC seed codebooks (the
-    * trained path differs only in the literal centroid values; the DuckDB
+    * trained path differs only in the codebook values; the DuckDB
     * oracle replays seed selection, per-subspace argmin, and the exact
     * decimal error sum). */
   def qPqEncode(s: SparkSession, d: String): DataFrame = {

@@ -33,13 +33,36 @@ class FunctionsSpec extends SparkSpec {
     assert(mismatches === 0)
   }
 
+  /** The declarative cosine (higher-order functions only): the reference
+    * semantics [[graft.functions.CosineSim]] must match. */
+  private def cosineDeclarative(a: Column, b: Column): Column = {
+    val ad = transform(a, x => x.cast("double"))
+    val bd = transform(b, x => x.cast("double"))
+    val dot = aggregate(zip_with(ad, bd, (x, y) => x * y), lit(0.0), (s, x) => s + x)
+    val na = sqrt(aggregate(transform(ad, x => x * x), lit(0.0), (s, x) => s + x))
+    val nb = sqrt(aggregate(transform(bd, x => x * x), lit(0.0), (s, x) => s + x))
+    dot / (na * nb)
+  }
+
+  /** Bucket id of `emb` in LSH table `t` (B sign bits packed into a long),
+    * declaratively: the reference for [[graft.functions.LshBuckets]],
+    * whose interpreted per-plane dots made ANN slower than brute force
+    * at 20k vectors. */
+  private def lshBucketDeclarative(emb: Column, t: Int): Column =
+    graft.operators.Similarity.planes(t).zipWithIndex.map { case (p, i) =>
+      val dot = aggregate(
+        zip_with(emb, lit(p.toArray), (x, w) => x.cast("double") * w),
+        lit(0.0), (s, v) => s + v)
+      when(dot >= 0, lit(1L << i)).otherwise(lit(0L))
+    }.reduce(_ + _)
+
   test("CosineSim == declarative cosine, bit for bit, float and double") {
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet").limit(100)
     val pairs = emb.select(col("vec_id").as("ia"), col("embedding").as("ea"))
       .crossJoin(emb.select(col("vec_id").as("ib"), col("embedding").as("eb")))
       .filter(col("ia") < col("ib")).limit(2000)
     val mismatches = pairs.select(
-      graft.operators.Similarity.cosineDeclarative(col("ea"), col("eb")).as("slow"),
+      cosineDeclarative(col("ea"), col("eb")).as("slow"),
       graft.functions.GraftFunctions.cosine_sim(col("ea"), col("eb")).as("fast"))
       .filter(col("slow") =!= col("fast")).count()
     assert(mismatches === 0)
@@ -47,7 +70,7 @@ class FunctionsSpec extends SparkSpec {
     val dbl = pairs.select(
       transform(col("ea"), x => x.cast("double")).as("da"), col("eb"))
     val m2 = dbl.select(
-      graft.operators.Similarity.cosineDeclarative(col("da"), col("eb")).as("slow"),
+      cosineDeclarative(col("da"), col("eb")).as("slow"),
       graft.functions.GraftFunctions.cosine_sim(col("da"), col("eb")).as("fast"))
       .filter(col("slow") =!= col("fast")).count()
     assert(m2 === 0)
@@ -57,7 +80,7 @@ class FunctionsSpec extends SparkSpec {
     import graft.operators.Similarity
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet").limit(200)
     val declarative = array((0 until Similarity.LshTables)
-      .map(t => Similarity.lshBucketDeclarative(col("embedding"), t)): _*)
+      .map(t => lshBucketDeclarative(col("embedding"), t)): _*)
     val fast = graft.functions.GraftFunctions.lsh_buckets(
       col("embedding"), Similarity.planes.flatten.flatten,
       Similarity.LshTables, Similarity.LshBits, 64)
@@ -339,6 +362,56 @@ class FunctionsSpec extends SparkSpec {
         SnippetGen.WindowSize, SnippetGen.Stride))
     assertSame(lits, SnippetDeclarative.snippetWindows(col("words")),
       SnippetGen.snippetWindows(col("words")))
+  }
+
+  test("NearestCentroids == literal struct argmax on nulls, zero norms and ties") {
+    import spark.implicits._
+    val real = spark.read.parquet(s"$sf0001/embeddings.parquet").limit(40)
+      .select(col("embedding")).as[Array[Float]].collect().toSeq
+    def axis(i: Int, x: Float = 1f) = Array.tabulate(64)(j => if (j == i) x else 0f)
+    // a null embedding, a zero-norm one, one exactly between axes 0 and 1
+    // and one on axis 2; repartitioned so the projection runs in a stage
+    val rows = (Seq(null, new Array[Float](64), Array.tabulate(64)(j => if (j < 2) 1f else 0f),
+      axis(2)) ++ real).zipWithIndex.map(_.swap).toDF("rid", "embedding").repartition(2)
+    def dbl(a: Array[Float]) = a.map(_.toDouble)
+    val sets: Seq[Seq[(Long, Array[Double])]] = Seq(
+      // unsorted, non-contiguous ids; 7 and 3 tie exactly on rows 2 and 3
+      Seq(7L -> dbl(axis(0)), 3L -> dbl(axis(1)), 11L -> dbl(axis(0, -1f))),
+      // a zero-norm centroid scores NaN, which ranks above every number
+      Seq(5L -> dbl(axis(3)), 9L -> new Array[Double](64), 2L -> dbl(axis(2))),
+      real.slice(40 - 10, 40).zipWithIndex.map { case (v, i) => (100L - 3 * i) -> dbl(v) })
+    // the form the kernel replaced: `max struct(score, -id)`, and the
+    // runner-up as the max of the rest
+    def literal(cents: Seq[(Long, Array[Double])], rounded: Boolean): (Column, Column) = {
+      val arr = array(cents.map { case (id, c) =>
+        val sc = GraftFunctions.cosine_sim(col("embedding"), lit(c))
+        struct((if (rounded) round(sc, 6) else sc).as("s"), lit(-id).as("nid")) }: _*)
+      def pick(st: Column) = struct((-st.getField("nid")).as("id"), st.getField("s").as("score"))
+      val best = array_max(arr)
+      (pick(best), pick(array_max(filter(arr, x => x.getField("nid") =!= best.getField("nid")))))
+    }
+    compiledAndInterpreted {
+      for (cents <- sets; rounded <- Seq(false, true)) {
+        val kernel = GraftFunctions.nearest_centroids(col("embedding"), cents, rounded, n = 2)
+        val (best, second) = literal(cents, rounded)
+        val got = rows.select(kernel.getItem(0).as("k1"), kernel.getItem(1).as("k2"),
+          best.as("l1"), second.as("l2"))
+        assert(got.count() === rows.count())
+        val bad = got.filter(!(col("k1") <=> col("l1")) || !(col("k2") <=> col("l2")))
+        assert(bad.count() === 0, bad.collect().take(5).mkString("\n"))
+      }
+      // ties (and a null or zero-norm embedding, which ties everywhere)
+      // go to the smallest id; a NaN score beats every number
+      def picks(cents: Seq[(Long, Array[Double])]): Seq[Long] =
+        rows.filter(col("rid") < 4).orderBy("rid").select(GraftFunctions.nearest_centroids(
+          col("embedding"), cents, rounded = true).getItem(0).getField("id"))
+          .as[Long].collect().toSeq
+      assert(picks(sets(0)) === Seq(3L, 3L, 3L, 3L))
+      assert(picks(sets(1)) === Seq(2L, 2L, 9L, 9L))
+      // an empty centroid set gives null
+      assert(rows.select(GraftFunctions.nearest_centroids(col("embedding"), Nil, rounded = false)
+        .isNull).as[Boolean].collect().forall(identity))
+    }
   }
 
   test("custom expressions run inside whole-stage codegen (no fallback)") {

@@ -398,4 +398,23 @@ class PlanSpec extends SparkSpec {
       assert(!ingest.schema("page_number").nullable, ingest.schema.treeString)
     }
   }
+
+  test("vector trainers and encoders evaluate no interpreted lambda") {
+    import graft.operators.Similarity
+    import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    // the nearest-centroid kernel and the JVM PQ encode replaced literal
+    // argmax arrays and `aggregate(zip_with(...))` distance terms
+    graft.engine.Scope.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
+      Seq("q_pq_encode" -> SparkEntry.queries("q_pq_encode")(spark, sf0001),
+        "q_sem_dedup" -> SparkEntry.queries("q_sem_dedup")(spark, sf0001),
+        "kmeansAssign" -> Similarity.kmeansAssign(emb, 8, 2))
+        .foreach { case (name, df) =>
+          val exec = df.queryExecution.executedPlan
+          val hofs = exec.flatMap(_.expressions.flatMap(_.collect {
+            case h: HigherOrderFunction => h.prettyName }))
+          assert(hofs.isEmpty, s"$name evaluates ${hofs.mkString(", ")}:\n$exec")
+        }
+    }
+  }
 }

@@ -2,7 +2,7 @@ package graft
 
 import graft.engine.Scratch
 import graft.operators.Similarity
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** ANN quality gates: LSH and IVF recall measured against the brute-force
@@ -191,23 +191,53 @@ class SimilaritySpec extends SparkSpec {
     assert(t1.sameElements(t2), "ADC ranking must be deterministic")
   }
 
+  /** Squared-L2 distances of subspace `m` of `vd` (a double-array
+    * column) to each code vector of `book`, rounded to 6dp: the
+    * expression form the JVM encode replaced. */
+  private def pqDists(vd: Column, m: Int, book: Seq[Array[Double]]): Column =
+    array(book.map { cvec =>
+      round(aggregate(zip_with(slice(vd, m * Similarity.PqSub + 1, Similarity.PqSub),
+        lit(cvec), (x, y) => (x - y) * (x - y)), lit(0.0), (s, x) => s + x), 6)
+    }: _*)
+
   test("PQ closure encode matches the expression encode code for code") {
-    // the search path encodes JVM-side (codegen-compile economics); the
-    // oracle-gated q_pq_encode keeps the expression argmin — the two must
-    // agree exactly or the ADC ranking silently diverges from the gated
-    // surface
-    val books = Similarity.pqSeedCodebooks(emb)
-    val bks = books.map(_.toArray).toArray
-    val expr = Similarity.pqEncode(emb, books)
-      .select(col("vec_id"), col("codes")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Int](1).toSeq).toMap
-    val jvm = emb.select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-      .collect()
-      .map(r => r.getLong(0) ->
-        Similarity.pqCodesJvm(r.getSeq[Double](1).toArray, bks).toSeq)
-      .toMap
-    assert(expr === jvm)
+    // pqEncode (and so the ADC corpus scan) encodes JVM-side; the
+    // expression argmin and decimal error sum below are the reference —
+    // codes and qerr must agree exactly on the seed and trained books
+    val vd = transform(col("embedding"), x => x.cast("double"))
+    for (books <- Seq(Similarity.pqSeedCodebooks(emb), Similarity.pqTrainCodebooks(emb, 1))) {
+      val codes = (0 until Similarity.PqM).map { m =>
+        val d = pqDists(vd, m, books(m))
+        (array_position(d, array_min(d)) - 1).cast("int")
+      }
+      val qerr = (0 until Similarity.PqM).map { m =>
+        array_min(pqDists(vd, m, books(m))).cast("decimal(18,6)")
+      }.reduce(_ + _)
+      def rows(df: DataFrame) = df.select(col("vec_id"), col("codes"), col("qerr")).collect()
+        .map(r => r.getLong(0) -> (r.getSeq[Int](1).toSeq, r.getDouble(2))).toMap
+      val expr = rows(emb.select(col("vec_id"), array(codes: _*).as("codes"),
+        round(qerr.cast("double"), 6).as("qerr")))
+      assert(expr.size === 500)
+      assert(rows(Similarity.pqEncode(emb, books)) === expr)
+    }
+  }
+
+  test("a new centroid set compiles no new class: the kernel holds centroids as data") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // two centroid sets of the same k with different ids AND values: the
+    // assign plans the same code text for both, so once warm the second
+    // set compiles nothing (inlined `lit(-id)` literals recompiled)
+    val vecs = emb.orderBy("vec_id").limit(20)
+      .select(col("embedding").cast("array<double>")).collect().map(_.getSeq[Double](0).toArray)
+    val a = vecs.take(10).zipWithIndex.map { case (v, i) => (i.toLong, v) }.toSeq
+    val b = vecs.drop(10).zipWithIndex.map { case (v, i) => (1000L + 7 * i, v) }.toSeq
+    def assign(cents: Seq[(Long, Array[Double])]) =
+      Similarity.kmeansAssign(emb, 10, 1, Some(cents)).collect()
+    assign(a); assign(a)
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val lists = assign(b).map(_.getLong(2)).toSet
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before === 0)
+    assert(lists.subsetOf(b.map(_._1).toSet) && lists.size > 1)
   }
 
   test("PQ plan: corpus scan is narrow and no exchange carries an array") {

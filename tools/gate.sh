@@ -29,6 +29,18 @@ pcm=$(grep -rhoF 'AudioSystem.getAudioInputStream(' src/main/scala | wc -l)
   echo "$img image and $pcm PCM decode call sites (at most one each):"
   grep -rnE "$codecs" src/main/scala; exit 1; }
 echo "ok"
+echo "=== vectors ==="
+# one nearest-centroid kernel and one JVM cosine, both in graft.functions
+# (NearestCentroids, TextHashes.cosineSim): a literal-centroid argmax
+# (`struct(cosine(` / `struct(cosine6(`) or a second hand-written cosine
+# loop in src/main fails the gate
+argmax=$(grep -rnE 'struct\(cosine6?\(' src/main/scala || true)
+loops=$(grep -rhE 'math\.sqrt\(n[a-z]\) \* math\.sqrt\(n[a-z]\)' src/main/scala | wc -l)
+[ -z "$argmax" ] && [ "$loops" -le 1 ] || {
+  echo "literal-centroid argmax terms (none allowed): ${argmax:-none}"
+  echo "$loops cosine loops (at most one):"
+  grep -rnE 'math\.sqrt\(n[a-z]\) \* math\.sqrt\(n[a-z]\)' src/main/scala; exit 1; }
+echo "ok"
 echo "=== sbt test ==="
 sbt -batch test 2>&1 | grep -E "Tests:|Passed:"
 echo "=== benchmark harness build ==="
