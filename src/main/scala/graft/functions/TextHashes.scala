@@ -1,8 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{split, trim}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionDescription, UnaryExpression}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionDescription, Literal,
+  UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
@@ -28,8 +31,9 @@ object TextHashes {
   val Prime = 2147483647L
 
   /** Polynomial rolling hash of the UTF-8 bytes: fold (acc*31 + byte) mod
-    * 1e9+7. For ASCII input this equals the `ascii(substring(...))`
-    * column formulation used by the oracle-checked fingerprint query. */
+    * 1e9+7 — the shingle code of MinHash and span dedup. It equals
+    * [[codePointHash]] on ASCII text only: a multi-byte character folds
+    * as its bytes here ('é' gives 6214), as one code point there (233). */
   def polyHash(s: UTF8String): Long = {
     val bytes = s.getBytes
     var acc = 0L
@@ -37,6 +41,20 @@ object TextHashes {
     while (i < bytes.length) {
       acc = (acc * 31L + (bytes(i) & 0xFF)) % Mod
       i += 1
+    }
+    acc
+  }
+
+  /** The same fold over the code points: fold (acc*31 + code point) mod
+    * 1e9+7, as `aggregate` over `ascii(substring(s, i, 1))` folds them
+    * (the document fingerprint, operators.TextAnalysis.fingerprint). */
+  def codePointHash(s: UTF8String): Long = {
+    val nb = s.numBytes()
+    var acc = 0L
+    var i = 0
+    while (i < nb) {
+      acc = (acc * 31L + s.codePointFrom(i)) % Mod
+      i += UTF8String.numBytesForFirstByte(s.getByte(i))
     }
     acc
   }
@@ -62,34 +80,41 @@ object TextHashes {
     new GenericArrayData(mins)
   }
 
-  /** Distinct word n-gram shingles in one compiled pass (the declarative
-    * transform/element_at/concat_ws chain is interpreted per element). */
-  def wordNgrams(words: ArrayData, n: Int): ArrayData = {
-    val total = words.numElements() - n + 1
-    if (total <= 0) return new GenericArrayData(Array.empty[Any])
-    val seen = new java.util.LinkedHashSet[UTF8String]()
+  /** The `n`-grams of `words` (each `n` adjacent words joined with " ",
+    * null elements skipped as `concat_ws` skips them) or, when
+    * `distinct`, each gram once in order of first appearance. None when
+    * there are fewer than `n` words. */
+  def wordNgrams(words: ArrayData, n: Int, distinct: Boolean): ArrayData =
+    grams(words.numElements() - n + 1, distinct, SnippetKernels.join(words, _, n))
+
+  /** The `n`-grams of `s` over its code points, as `substring(s, i, n)`
+    * cuts them, with the same `distinct` choice as [[wordNgrams]]. */
+  def charNgrams(s: UTF8String, n: Int, distinct: Boolean): ArrayData = {
+    val nb = s.numBytes()
+    // the byte offset of each of the m code points, then the end
+    val at = new Array[Int](nb + 1)
+    var m = 0
     var i = 0
-    while (i < total) {
-      val parts = new Array[UTF8String](2 * n - 1)
-      var j = 0
-      while (j < n) {
-        parts(2 * j) = words.getUTF8String(i + j)
-        if (j < n - 1) parts(2 * j + 1) = UTF8String.fromString(" ")
-        j += 1
-      }
-      seen.add(UTF8String.concat(parts: _*))
-      i += 1
-    }
-    new GenericArrayData(seen.toArray.asInstanceOf[Array[Any]])
+    while (i < nb) { at(m) = i; m += 1; i += UTF8String.numBytesForFirstByte(s.getByte(i)) }
+    at(m) = nb
+    grams(m - n + 1, distinct, k => s.copyUTF8String(at(k), at(k + n) - 1))
+  }
+
+  private def grams(total: Int, distinct: Boolean, gram: Int => UTF8String): ArrayData = {
+    if (total <= 0) return new GenericArrayData(Array.empty[Any])
+    val out: java.util.Collection[UTF8String] =
+      if (distinct) new java.util.LinkedHashSet[UTF8String]()
+      else new java.util.ArrayList[UTF8String](total)
+    var i = 0
+    while (i < total) { out.add(gram(i)); i += 1 }
+    new GenericArrayData(out.toArray)
   }
 
   /** POSITIONAL word n-gram hashes in one compiled pass: out(i) =
     * polyHash("w_i w_i+1 ... w_i+n-1"), computed by folding the bytes
     * incrementally across words — no per-span string concatenation at
     * all. Bit-identical to polyHash over the concat_ws(" ", ...) form
-    * (asserted in FunctionsSpec). Unlike [[wordNgrams]] this keeps every
-    * position (winnowing and span-level dedup need sequence order, not
-    * the distinct shingle set). */
+    * (asserted in FunctionsSpec). */
   def spanHashes(words: ArrayData, n: Int): ArrayData = {
     val m = words.numElements()
     val total = m - n + 1
@@ -333,15 +358,22 @@ object TextHashes {
   }
 }
 
-/** `poly_hash(str) -> long`: codegen'd polynomial fingerprint. */
+/** `poly_hash(str) -> long`: codegen'd polynomial hash of the UTF-8 bytes
+  * ([[TextHashes.polyHash]]), or of the code points when `codePoints`
+  * ([[TextHashes.codePointHash]], the document fingerprint). */
 @ExpressionDescription(usage = "poly_hash(str) - polynomial rolling hash mod 1e9+7")
-case class PolyHash(child: Expression) extends UnaryExpression {
+case class PolyHash(child: Expression, codePoints: Boolean = false) extends UnaryExpression {
   override def dataType: DataType = LongType
-  override def nullSafeEval(v: Any): Any =
-    TextHashes.polyHash(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHashes.polyHash($c)")
-  override protected def withNewChildInternal(newChild: Expression): PolyHash = copy(newChild)
+  override def nullSafeEval(v: Any): Any = {
+    val s = v.asInstanceOf[UTF8String]
+    if (codePoints) TextHashes.codePointHash(s) else TextHashes.polyHash(s)
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val fn = if (codePoints) "codePointHash" else "polyHash"
+    defineCodeGen(ctx, ev, c => s"graft.functions.TextHashes.$fn($c)")
+  }
+  override protected def withNewChildInternal(newChild: Expression): PolyHash =
+    copy(child = newChild)
 }
 
 /** `minhash_sig(array<string>) -> array<long>`: codegen'd K-min signature
@@ -373,17 +405,37 @@ case class SimHash64(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** `word_ngrams(array<string>, n) -> array<string>`: codegen'd distinct
-  * word n-gram shingling (insertion-ordered, matching
-  * `array_distinct(transform(...concat_ws...))`). */
-case class WordNgrams(child: Expression, n: Int) extends UnaryExpression {
+/** `ngrams(array<string> | string, n) -> array<string>`: codegen'd
+  * n-grams, of words for an array ([[TextHashes.wordNgrams]]) and of code
+  * points for a string ([[TextHashes.charNgrams]]): every position in
+  * order, or each gram once when `distinct`. `n` must be an integer
+  * literal of at least 1, checked at analysis. SQL's `word_ngrams(words,
+  * n)` is the distinct word form (the dedup shingles). */
+case class Ngrams(child: Expression, n: Expression, distinct: Boolean)
+    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+  override def left: Expression = child
+  override def right: Expression = n
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(v: Any): Any =
-    TextHashes.wordNgrams(v.asInstanceOf[ArrayData], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHashes.wordNgrams($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression): WordNgrams =
-    copy(child = newChild)
+  private lazy val size = n.eval().asInstanceOf[Int]
+  private lazy val chars = child.dataType == StringType
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) | StringType =>
+      if (!n.foldable || n.dataType != IntegerType)
+        TypeCheckResult.TypeCheckFailure(s"n must be an integer literal, got ${n.sql}")
+      else if (size < 1) TypeCheckResult.TypeCheckFailure(s"n must be at least 1, got ${n.sql}")
+      else TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName needs array<string> or string, got ${t.catalogString}")
+  }
+  override def nullSafeEval(v: Any, unused: Any): Any =
+    if (chars) TextHashes.charNgrams(v.asInstanceOf[UTF8String], size, distinct)
+    else TextHashes.wordNgrams(v.asInstanceOf[ArrayData], size, distinct)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val fn = if (chars) "charNgrams" else "wordNgrams"
+    defineCodeGen(ctx, ev, (c, _) => s"graft.functions.TextHashes.$fn($c, $size, $distinct)")
+  }
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Ngrams =
+    copy(child = l, n = r)
 }
 
 /** `span_hashes(array<string>, n) -> array<long>`: codegen'd positional
@@ -512,10 +564,21 @@ object GraftFunctions {
       rounded: Boolean, n: Int = 1): Column =
     ColumnBridge.column(NearestCentroids(ColumnBridge.expression(emb), centroids, rounded, n))
 
+  /** The whitespace tokens of `text`, the one word rule of every token
+    * query: `trim` strips spaces only, so a text that starts with a tab
+    * has "" as its first token, and no token holds a space. */
+  def words(text: Column): Column = split(trim(text), "\\s+")
+
   def poly_hash(c: Column): Column = ColumnBridge.column(PolyHash(ColumnBridge.expression(c)))
 
-  def word_ngrams(c: Column, n: Int): Column =
-    ColumnBridge.column(WordNgrams(ColumnBridge.expression(c), n))
+  /** The code-point fold of [[PolyHash]]: `TextAnalysis.fingerprint`. */
+  def code_point_hash(c: Column): Column =
+    ColumnBridge.column(PolyHash(ColumnBridge.expression(c), codePoints = true))
+
+  /** Word n-grams of an `array<string>` or code-point n-grams of a
+    * string ([[Ngrams]]). */
+  def ngrams(c: Column, n: Int, distinct: Boolean = false): Column =
+    ColumnBridge.column(Ngrams(ColumnBridge.expression(c), Literal(n), distinct))
 
   def span_hashes(c: Column, n: Int): Column =
     ColumnBridge.column(SpanHashes(ColumnBridge.expression(c), n))
@@ -567,8 +630,7 @@ object GraftFunctions {
     reg.createOrReplaceTempFunction(
       "cosine_sim", exprs => CosineSim(exprs(0), exprs(1)), "built-in")
     reg.createOrReplaceTempFunction(
-      "word_ngrams", exprs => WordNgrams(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]), "built-in")
+      "word_ngrams", exprs => Ngrams(exprs(0), exprs(1), distinct = true), "built-in")
     reg.createOrReplaceTempFunction(
       "simhash64", exprs => SimHash64(exprs.head), "built-in")
     reg.createOrReplaceTempFunction(
@@ -595,9 +657,8 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
       new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
       (exprs: Seq[Expression]) => CosineSim(exprs(0), exprs(1))))
     e.injectFunction((FunctionIdentifier("word_ngrams"),
-      new ExpressionInfo(classOf[WordNgrams].getName, "word_ngrams"),
-      (exprs: Seq[Expression]) => WordNgrams(exprs.head,
-        exprs(1).eval().asInstanceOf[Int])))
+      new ExpressionInfo(classOf[Ngrams].getName, "word_ngrams"),
+      (exprs: Seq[Expression]) => Ngrams(exprs(0), exprs(1), distinct = true)))
     e.injectFunction((FunctionIdentifier("simhash64"),
       new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
       (exprs: Seq[Expression]) => SimHash64(exprs.head)))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.engine.Tables
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -41,7 +42,7 @@ object Curation {
       .rowsBetween(Window.unboundedPreceding, -1)
     docs
       .select(col(stratumCol), col("doc_id"),
-        size(split(trim(col("text")), "\\s+")).cast("long").as("n_tokens"))
+        size(GraftFunctions.words(col("text"))).cast("long").as("n_tokens"))
       .withColumn("start_token", coalesce(sum(col("n_tokens")).over(w), lit(0L)))
       // integer `div`, not double `/`: the running token sum passes 2^53 on
       // a 100 TB corpus and double division would silently mis-bin there
@@ -79,7 +80,7 @@ object Curation {
     assignSplit(documents(s, d), "text")
       .groupBy("split")
       .agg(count(lit(1)).as("n_docs"),
-        sum(size(split(trim(col("text")), "\\s+")).cast("long")).as("total_tokens"))
+        sum(size(GraftFunctions.words(col("text"))).cast("long")).as("total_tokens"))
       .orderBy("split")
 
   /** RAG-style token chunking: fixed `chunkSize`-token windows with
@@ -107,7 +108,7 @@ object Curation {
     require(overlap < chunkSize, s"overlap $overlap must be < chunkSize $chunkSize")
     val stride = chunkSize - overlap
     docs
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
+      .select(col("doc_id"), GraftFunctions.words(col("text")).as("words"))
       .select(col("doc_id"), size(col("words")).cast("long").as("n_tokens"), col("words"))
       .select(col("doc_id"), col("n_tokens"), col("words"),
         explode(sequence(lit(0L), expr(s"(n_tokens - 1) div $stride"))).as("chunk_id"))
@@ -267,7 +268,7 @@ object Curation {
     val q = TextAnalysis.withQuality(
       Tables.rebalance(docs, "doc_id")
         .filter(length(col("text")) > 0 &&
-          size(split(trim(col("text")), "\\s+")) >= 1))
+          size(GraftFunctions.words(col("text"))) >= 1))
     val u = (graft.functions.GraftFunctions.poly_hash(col("text")) + 1)
       .cast("double") / lit((m + 1).toDouble)
     q.withColumn("samp_key",
@@ -432,7 +433,7 @@ object Curation {
       // null text counts as zero tokens, so a source of failed
       // extractions gets an explicit 0-token row, never a NULL cap
       .select(col("source"),
-        coalesce(size(split(trim(col("text")), "\\s+")), lit(0))
+        coalesce(size(GraftFunctions.words(col("text"))), lit(0))
           .cast("long").as("nt"))
       .groupBy("source").agg(coalesce(sum(col("nt")), lit(0L)).as("n_tokens"))
       .withColumn("cap", col("n_tokens") * lit(epochCap))
@@ -537,7 +538,7 @@ object Curation {
     Tables.rebalance(docs, "doc_id")
       .select(col("doc_id"), col("n_chars"),
         pmod(col("doc_id"), lit(nShards.toLong)).as("shard"),
-        size(split(trim(col("text")), "\\s+")).cast("long").as("nt"))
+        size(GraftFunctions.words(col("text"))).cast("long").as("nt"))
       .groupBy("shard")
       .agg(count(lit(1)).as("n_docs"),
         sum(col("nt")).as("n_tokens"),

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.engine.{Scope, Scratch, Tables}
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -25,42 +26,13 @@ object Dedup {
 
   // -------------------------------------------------------------- shared pieces
 
-  /** Distinct word-3-gram shingles from a BOUND words-array column.
-    * PERFORMANCE: the words array must be a materialized attribute, not an
-    * inline `split(...)` expression — a subexpression inside a higher-order
-    * function lambda is re-evaluated per lambda element, so an inline split
-    * would re-tokenize the whole text for every shingle (measured 25x
-    * slow-down at sf0.1). */
-  def shinglesFromWords(w: Column): Column =
-    graft.functions.GraftFunctions.word_ngrams(w, 3)
-
-  /** Declarative reference form of [[shinglesFromWords]] (equality with the
-    * codegen'd WordNgrams expression asserted in FunctionsSpec). Guarded on
-    * size >= 3: `sequence(1, size-2)` DESCENDS when size < 3 (step defaults
-    * to -1) and the resulting `element_at(w, 0)` throws, where the codegen'd
-    * form returns an empty array. */
-  def shinglesFromWordsDeclarative(w: Column): Column =
-    when(size(w) >= 3,
-      array_distinct(
-        transform(sequence(lit(1), size(w) - 2),
-          i => concat_ws(" ", element_at(w, i), element_at(w, i + 1), element_at(w, i + 2)))))
-      .otherwise(array().cast("array<string>"))
-
-  /** Convenience for small inputs/tests: shingles straight from text (see
-    * the re-evaluation caveat on [[shinglesFromWords]]). */
-  def shingles(text: Column): Column = shinglesFromWords(split(trim(text), "\\s+"))
+  /** Distinct word-3-gram shingles of a words array, in order of first
+    * appearance (the compiled [[graft.functions.Ngrams]] kernel). */
+  def shinglesFromWords(w: Column): Column = GraftFunctions.ngrams(w, 3, distinct = true)
 
   /** Jaccard similarity of two (distinct-element) arrays. */
   def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast("double") / size(array_union(a, b))
-
-  /** Polynomial string hash mod 1e9+7 (same family as
-    * [[TextAnalysis.fingerprint]]), used as the shingle -> int code. */
-  def polyHash(sCol: Column): Column =
-    aggregate(
-      transform(sequence(lit(1), length(sCol)), i => ascii(substring(sCol, i, lit(1)))),
-      lit(0L),
-      (acc, c) => (acc * 31L + c) % 1000000007L)
 
   // -------------------------------------------------------------- exact dedup
 
@@ -94,7 +66,7 @@ object Dedup {
     * cluster persist it as a table for reuse across dedup runs. */
   private[graft] def shingleIndex(docs: DataFrame): DataFrame =
     Tables.rebalance(docs, "doc_id")
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
+      .select(col("doc_id"), GraftFunctions.words(col("text")).as("words"))
       .filter(size(col("words")) >= 3)
       .select(col("doc_id"), shinglesFromWords(col("words")).as("sh"))
 
@@ -450,12 +422,6 @@ object Dedup {
     def next(): Long = { x = (x * 6364136223846793005L + 1442695040888963407L) & Long.MaxValue; x }
     (0 until MinhashK).map(_ => (next() % (Prime - 1) + 1, next() % Prime))
   }
-
-  /** MinHash signature (array of K mins) over the shingle codes. */
-  def minhashSignature(shingleCodes: Column): Column =
-    array(hashParams.map { case (a, b) =>
-      array_min(transform(shingleCodes, x => (lit(a) * x + lit(b)) % Prime))
-    }: _*)
 
   /** (doc_id, sh, sig), lazy. Codegen'd MinHashSig: one compiled loop
     * instead of K x |sh| interpreted lambda evaluations. Signing is the CPU
@@ -969,7 +935,7 @@ object Dedup {
     // codegen'd SimHash64 expression over the bound token array (the typed
     // Dataset.map formulation paid full-row encoder round trips)
     val hashed = Tables.rebalance(docs, "doc_id")
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
+      .select(col("doc_id"), GraftFunctions.words(col("text")).as("words"))
       .select(col("doc_id"),
         graft.functions.GraftFunctions.simhash64(col("words")).as("simhash"))
       .localCheckpoint()
@@ -1014,7 +980,7 @@ object Dedup {
 
   def winnowFingerprints(docs: DataFrame): DataFrame = {
     val codes = Tables.rebalance(docs, "doc_id")
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
+      .select(col("doc_id"), GraftFunctions.words(col("text")).as("words"))
       .filter(size(col("words")) >= 3 + WinnowW - 1)
       .select(col("doc_id"),
         graft.functions.GraftFunctions.span_hashes(col("words"), 3).as("cs"))
@@ -1106,7 +1072,7 @@ object Dedup {
     * failed only one of the two gates and obscured the drift). */
   private def plantedContainmentCorpus(s: SparkSession, d: String): DataFrame = {
     val base = documents(s, d).select(col("doc_id"), col("text"))
-    val w = split(trim(col("text")), "\\s+")
+    val w = GraftFunctions.words(col("text"))
     val truncated = base.filter(col("doc_id") % 17 === 0)
       .select((col("doc_id") + 4000000L).as("doc_id"),
         concat_ws(" ", slice(w, lit(1), (size(w) / lit(2)).cast("int"))).as("text"))
@@ -1147,7 +1113,7 @@ object Dedup {
     // lambda ran interpreted and was measured 6x the hash cost once the
     // explode collapsed the transform into the generator)
     val codes = Tables.rebalance(docs, "doc_id")
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
+      .select(col("doc_id"), GraftFunctions.words(col("text")).as("words"))
       .filter(size(col("words")) >= SpanK)
       .select(col("doc_id"),
         graft.functions.GraftFunctions.span_hashes(col("words"), SpanK).as("cs"))
@@ -1217,7 +1183,7 @@ object Dedup {
       driverTokenBudget: Long = RepSpanDriverTokenBudget): DataFrame = {
     val spark = docs.sparkSession
     val w = Tables.rebalance(docs, "doc_id")
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
+      .select(col("doc_id"), GraftFunctions.words(col("text")).as("words"))
       .withColumn("len", size(col("words")))
       .localCheckpoint() // re-read every round
     // ONE cheap probe on the materialized frame decides the regime
@@ -1392,7 +1358,7 @@ object Dedup {
     val words = Tables.rebalance(docs, "doc_id")
       .select(col("doc_id"),
         when(col("text").isNull, array().cast("array<string>"))
-          .otherwise(split(trim(col("text")), "\\s+")).as("words"))
+          .otherwise(GraftFunctions.words(col("text"))).as("words"))
     val spans = words
       .filter(size(col("words")) >= SpanK)
       .select(col("doc_id"),
@@ -1430,7 +1396,7 @@ object Dedup {
     val prefix = base.filter(col("doc_id") % 30 === 0)
       .select((col("doc_id") + 2000000L).as("doc_id"),
         concat(
-          array_join(slice(split(trim(col("text")), "\\s+"), 1, 16), " "),
+          array_join(slice(GraftFunctions.words(col("text")), 1, 16), " "),
           lit(" unique tail "), col("doc_id").cast("string")).as("text"))
     spanDedup(base.unionByName(full).unionByName(prefix)).orderBy("doc_id")
   }

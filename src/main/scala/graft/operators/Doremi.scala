@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.engine.Tables
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -47,7 +48,7 @@ object Doremi {
     * swap-in seam for a real proxy-model loss. */
   def domainLoss(docs: DataFrame): DataFrame =
     Tables.rebalance(docs, "doc_id")
-      .select(col("source"), size(split(trim(col("text")), "\\s+")).cast("long").as("t"))
+      .select(col("source"), size(GraftFunctions.words(col("text"))).cast("long").as("t"))
       .groupBy("source")
       .agg(coalesce(sum(col("t")), lit(0L)).as("toks"), count(lit(1)).as("n"))
       .select(col("source"),

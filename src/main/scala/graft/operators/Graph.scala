@@ -164,13 +164,9 @@ object Graph {
     * pass over the tokens collapsing to the sparse |vocab|-node edge
     * frame; every PageRank iteration after touches only that frame. */
   def wordCooccurrenceEdges(docs: DataFrame): DataFrame = {
-    val pairs = Tables.rebalance(docs, "doc_id")
-      .select(split(trim(col("text")), "\\s+").as("ws"))
-      .filter(size(col("ws")) >= 2)
-      .select(explode(expr(
-        "transform(sequence(0, size(ws) - 2), i -> struct(ws[i] AS a, ws[i + 1] AS b))")).as("p"))
-      .filter(col("p.a") =!= col("p.b"))
-      .select(col("p.a").as("src"), col("p.b").as("dst"))
+    val pairs = TextSearch.bigramPairs(docs)
+      .filter(col("w1") =!= col("w2"))
+      .select(col("w1").as("src"), col("w2").as("dst"))
     pairs.unionByName(pairs.select(col("dst").as("src"), col("src").as("dst")))
       .groupBy("src", "dst").agg(count(lit(1)).cast("double").as("w"))
   }

@@ -33,7 +33,7 @@ object Ingest {
   def buildDocuments(docs: DataFrame, categories: DataFrame): DataFrame = {
     val w = Tables.rebalance(docs, "doc_id")
       .select(col("doc_id"), col("lang"), col("source"), col("text"),
-        split(trim(col("text")), "\\s+").as("words"))
+        GraftFunctions.words(col("text")).as("words"))
       .withColumn("category_id", (col("doc_id") % 5).cast("int"))
       .join(broadcast(categories), Seq("category_id"), "left")
     w.select(

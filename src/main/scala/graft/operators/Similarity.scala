@@ -438,7 +438,7 @@ object Similarity {
   def qHybridRrf(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val r = docs.agg(count(lit(1)),
-      sum(size(split(trim(col("text")), "\\s+")).cast("long"))).head()
+      sum(size(GraftFunctions.words(col("text"))).cast("long"))).head()
     val avgdl = r.getLong(1).toDouble / r.getLong(0)
     val wb = Window.orderBy(col("bm25").desc, col("doc_id")) // 20-row input
     val textRank = graft.operators.TextSearch.bm25(

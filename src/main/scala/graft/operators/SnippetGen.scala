@@ -46,10 +46,6 @@ object SnippetGen {
   def splitSentences(text: Column): Column =
     split(trim(text), "[.!?]\\s+")
 
-  /** Tokenize on runs of whitespace (used when windowing over words). */
-  def splitWords(text: Column): Column =
-    split(trim(text), "\\s+")
-
   /** F4: overlapping windows over an array of units (sentences or words).
     * Returns `array<struct<snippet_id int, snippet_text string>>` with
     * 1-based dense ids; empty array for an empty input, null for null.
@@ -71,7 +67,7 @@ object SnippetGen {
       // bind the token array once: an inline split inside the window
       // lambda would re-tokenize the text per window (see Dedup.shinglesFromWords)
       .select(col("doc_id"), col("lang"), col("source"),
-        splitWords(col("text")).as("words"))
+        GraftFunctions.words(col("text")).as("words"))
       .select(
         col("doc_id"), col("lang"), col("source"),
         explode(snippetWindows(col("words"))).as("s"))
@@ -94,7 +90,7 @@ object SnippetGen {
     val docs = graft.engine.Tables.rebalance(
       graft.engine.Tables.documents(s, d), "doc_id")
     docs
-      .select(col("doc_id"), splitWords(col("text")).as("words"))
+      .select(col("doc_id"), GraftFunctions.words(col("text")).as("words"))
       // words hold no space, so every 8th separator of the space-joined
       // words is where a sentence ends: it becomes ". "
       .select(col("doc_id"), regexp_replace(array_join(col("words"), " "),

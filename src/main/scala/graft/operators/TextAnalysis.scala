@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.engine.{Scope, Tables}
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -18,18 +19,17 @@ import org.apache.spark.sql.functions._
 object TextAnalysis {
   import Tables._
 
-  private val words: Column = split(trim(col("text")), "\\s+")
-
   /** Token counting: whitespace tokens + a BPE-ish char-budget estimate
     * (~4 chars/token, the common rule of thumb). */
   def withTokenCounts(df: DataFrame): DataFrame = df
-    .withColumn("n_tokens", size(words).cast("long"))
+    .withColumn("n_tokens", size(GraftFunctions.words(col("text"))).cast("long"))
     .withColumn("n_tokens_bpe", ceil(length(col("text")) / 4.0).cast("long"))
 
   /** Quality signals: length, token stats, punctuation/alpha ratios,
     * stopword ratio, plus one blended score in [0,1]. All double math is
     * division of exact integers -> bit-identical across engines. */
   def withQuality(df: DataFrame): DataFrame = {
+    val words = GraftFunctions.words(col("text"))
     val len = length(col("text")).cast("double")
     val nTok = size(words).cast("double")
     df.withColumn("n_tokens", size(words).cast("long"))
@@ -51,6 +51,7 @@ object TextAnalysis {
     * SQL-expressible, so it is oracle-checked; a production system would
     * plug a real model in the same column slot. */
   def withLangId(df: DataFrame): DataFrame = {
+    val words = GraftFunctions.words(col("text"))
     def hits(markers: Seq[String]): Column =
       size(filter(words, w => w.isInCollection(markers))).cast("long")
     val en = hits(Stopwords.en)
@@ -67,15 +68,12 @@ object TextAnalysis {
           .otherwise("fr"))
   }
 
-  /** Document fingerprint: polynomial rolling hash over the characters,
-    * mod 1e9+7 — deterministic, no UDF, reproducible in any engine
-    * (the per-doc identity for exact-dup detection and incremental
-    * re-ingestion). */
-  def fingerprint(text: Column): Column =
-    aggregate(
-      transform(sequence(lit(1), length(text)), i => ascii(substring(text, i, lit(1)))),
-      lit(0L),
-      (acc, c) => (acc * 31L + c) % 1000000007L)
+  /** Document fingerprint: polynomial rolling hash over the code points,
+    * mod 1e9+7, the fold the oracle runs over `ascii(text[i])` — one
+    * compiled loop ([[graft.functions.TextHashes.codePointHash]]); the
+    * per-doc identity for exact-dup detection and incremental
+    * re-ingestion. */
+  def fingerprint(text: Column): Column = GraftFunctions.code_point_hash(text)
 
   /** CCNet-style unigram-LM perplexity per document: score each doc by
     * exp(-mean log p(token)) under the CORPUS's own maximum-likelihood
@@ -98,7 +96,7 @@ object TextAnalysis {
     * can share a single OOV bucket) to bound the tf table. */
   def perplexity(docs: DataFrame): DataFrame = {
     val toks = Tables.rebalance(docs, "doc_id")
-      .select(col("doc_id"), explode(split(trim(col("text")), "\\s+")).as("tok"))
+      .select(col("doc_id"), explode(GraftFunctions.words(col("text"))).as("tok"))
       .filter(length(col("tok")) > 0)
     val tf = toks.groupBy("tok").agg(count(lit(1)).as("tf"))
     // The 1-row corpus total attaches at VOCAB level, not occurrence level,
@@ -152,7 +150,7 @@ object TextAnalysis {
     // localCheckpoint discipline — cut the corpus scan out of the reuse)
     val toks = base
       .select(col("doc_id"), col(labelCol).as("cls"),
-        explode(split(trim(col("text")), "\\s+")).as("tok"))
+        explode(GraftFunctions.words(col("text"))).as("tok"))
       .filter(length(col("tok")) > 0)
       .localCheckpoint()
     val vocabSize = toks.select("tok").distinct().count()
@@ -210,7 +208,7 @@ object TextAnalysis {
   def importanceWeights(docs: DataFrame, isTarget: Column): DataFrame = {
     val toks = Tables.rebalance(docs, "doc_id")
       .select(col("doc_id"), isTarget.as("is_t"),
-        explode(split(trim(col("text")), "\\s+")).as("tok"))
+        explode(GraftFunctions.words(col("text"))).as("tok"))
       .filter(length(col("tok")) > 0)
     val vocab = toks.groupBy("tok").agg(
       count(lit(1)).as("c_r"),
@@ -252,7 +250,7 @@ object TextAnalysis {
       sum(when(col("lang") === "en", 1L).otherwise(0L)).as("n_en"),
       sum(col("quality_score").cast("decimal(18,6)")).as("q_sum"))
     val vocab = docs
-      .select(explode(split(trim(col("text")), "\\s+")).as("tok"))
+      .select(explode(GraftFunctions.words(col("text"))).as("tok"))
       .filter(length(col("tok")) > 0)
       .agg(countDistinct(col("tok")).as("v"))
     base.crossJoin(broadcast(vocab))
@@ -306,7 +304,7 @@ object TextAnalysis {
     * SET would hide within-doc repetition); one source-keyed aggregate. */
   def novelty(docs: DataFrame): DataFrame = {
     val spans = Tables.rebalance(docs, "doc_id")
-      .select(col("source"), split(trim(col("text")), "\\s+").as("words"))
+      .select(col("source"), GraftFunctions.words(col("text")).as("words"))
       .filter(size(col("words")) >= 3)
       .select(col("source"),
         explode(graft.functions.GraftFunctions.span_hashes(col("words"), 3)).as("sh"))
@@ -347,7 +345,7 @@ object TextAnalysis {
     * between engines; one rounded division of exact ints cannot). All
     * narrow per-row compute — no shuffle, linear at any scale. */
   def readability(docs: DataFrame): DataFrame = {
-    val words = split(trim(col("text")), "\\s+")
+    val words = GraftFunctions.words(col("text"))
     val w = size(words).cast("long")
     val groups = size(regexp_extract_all(lower(col("text")), lit("[aeiouy]+"), lit(0))).cast("long")
     val noVowel = size(filter(words, x => not(lower(x).rlike("[aeiouy]")))).cast("long")
@@ -398,19 +396,14 @@ object TextAnalysis {
     * aggregations on scalar columns. */
   def repetition(docs: DataFrame): DataFrame = {
     val base = Tables.rebalance(docs, "doc_id")
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
+      .select(col("doc_id"), GraftFunctions.words(col("text")).as("words"))
     val tokenStats = base.select(col("doc_id"),
       size(col("words")).cast("long").as("n_tokens"),
       size(array_distinct(col("words"))).cast("long").as("n_distinct"))
-    // NOT word_ngrams: that expression emits DISTINCT n-grams (dedup
-    // semantics); repetition needs counts WITH multiplicity, so the
-    // bigram list is built positionally
+    // positional bigrams: counts WITH multiplicity
     val bigrams = base
-      .filter(size(col("words")) >= 2)
       .select(col("doc_id"), size(col("words")).cast("long").as("nw"),
-        explode(transform(sequence(lit(1), size(col("words")) - 1),
-          i => concat_ws(" ", element_at(col("words"), i),
-            element_at(col("words"), i + 1)))).as("bigram"))
+        explode(GraftFunctions.ngrams(col("words"), 2)).as("bigram"))
       .groupBy("doc_id", "nw", "bigram").agg(count(lit(1)).as("c"))
       .groupBy("doc_id").agg(
         max(col("c")).as("top_bigram_count"),
@@ -594,6 +587,7 @@ object TextAnalysis {
   /** Oracle-checked: the one-feature English detector (EN-stopword hit
     * ratio) swept over 20 thresholds against the true lang column. */
   def qCalibration(s: SparkSession, d: String): DataFrame = {
+    val words = GraftFunctions.words(col("text"))
     val enHits = size(filter(words, w => w.isInCollection(Stopwords.en)))
     calibrationSweep(documents(s, d), col("lang") === "en",
       enHits, size(words), buckets = 20)
@@ -651,7 +645,7 @@ object TextAnalysis {
     * text model could beat constant prediction on it. */
   def logitFeatures(docs: DataFrame): DataFrame = {
     val toks = docs
-      .select(col("doc_id"), explode(split(trim(col("text")), "\\s+")).as("tok"))
+      .select(col("doc_id"), explode(GraftFunctions.words(col("text"))).as("tok"))
       .select(col("doc_id"),
         pmod(fingerprint(col("tok")), lit(LogitBuckets.toLong)).as("j"),
         col("tok").isInCollection(Stopwords.en).cast("long").as("st"))
@@ -949,7 +943,7 @@ object TextAnalysis {
     val base = Tables.rebalance(docs, "doc_id")
       .filter(col("text").isNotNull)
       .select(col("doc_id"), col("lang"),
-        filter(split(trim(col("text")), "\\s+"), w => w =!= "").as("toks"))
+        array_remove(GraftFunctions.words(col("text")), "").as("toks"))
       .filter(size(col("toks")) >= 2)
     // pair formation over slim columns only (doc_id, lang)
     val w = Window.partitionBy("lang").orderBy("doc_id")
@@ -958,17 +952,12 @@ object TextAnalysis {
       .select(col("doc_id"), col("lang"),
         (col("rn") / 2).cast("long").as("pair_id"), (col("rn") % 2).as("role"))
     val toks = base.join(roles, Seq("doc_id", "lang"))
-    def gramCounts(n: Int) = {
-      val grams =
-        if (n == 1) explode(col("toks")).as("gram")
-        else explode(expr(
-          "transform(sequence(0, size(toks) - 2), i -> concat(toks[i], ' ', toks[i + 1]))"))
-          .as("gram")
+    def gramCounts(n: Int) =
       toks.select(col("lang"), col("pair_id"), col("role"), col("doc_id"),
-          size(col("toks")).as("n_toks"), grams)
+          size(col("toks")).as("n_toks"),
+          explode(GraftFunctions.ngrams(col("toks"), n)).as("gram"))
         .groupBy("lang", "pair_id", "role", "doc_id", "n_toks", "gram")
         .agg(count(lit(1)).as("c"))
-    }
     def overlap(n: Int, name: String) = {
       val g = gramCounts(n)
       val cand = g.filter(col("role") === 0)
@@ -1072,19 +1061,14 @@ object TextAnalysis {
     * Models"): for n = 1..3, the count of distinct word n-grams over the
     * count of all n-gram tokens — the degenerate-corpus detector a
     * generation pipeline reports next to ROUGE (mode collapse drives it
-    * toward 0). Positional n-grams WITH multiplicity (the repetition-op
-    * discipline: word_ngrams would dedup); one explode per n, each
-    * collapsing map-side; the ratio is a single integer division
+    * toward 0). Positional n-grams WITH multiplicity; one explode per n,
+    * each collapsing map-side; the ratio is a single integer division
     * rounded 6dp (portable). */
   def distinctN(docs: DataFrame, maxN: Int = 3): DataFrame = {
     val base = Tables.rebalance(docs, "doc_id")
-      .select(split(trim(col("text")), "\\s+").as("words"))
-      .filter(size(col("words")) >= 1)
+      .select(GraftFunctions.words(col("text")).as("words"))
     (1 to maxN).map { n =>
-      val grams = base.filter(size(col("words")) >= n)
-        .select(explode(transform(sequence(lit(1), size(col("words")) - (n - 1)),
-          i => concat_ws(" ", (0 until n).map(k =>
-            element_at(col("words"), i + k)): _*))).as("g"))
+      val grams = base.select(explode(GraftFunctions.ngrams(col("words"), n)).as("g"))
       grams.agg(
         lit(n).as("n"),
         count(lit(1)).as("total"),

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.engine.Tables
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -94,7 +95,7 @@ object TextNormalize {
     *                  LINE-level and meaningless on a corpus stored as
     *                  punctuation-free word streams, like this one). */
   def c4Filters(df: DataFrame, minTokens: Int = 5): DataFrame = {
-    val words = split(trim(col("text")), "\\s+")
+    val words = GraftFunctions.words(col("text"))
     val nTok = size(words).cast("long")
     // mean over actual token lengths — the chars-minus-separators form
     // counts every whitespace char beyond one-per-boundary as word mass,
@@ -104,7 +105,7 @@ object TextNormalize {
     df.withColumn("n_tokens", nTok)
       .withColumn("mean_word_len", round(meanLen, 6))
       .withColumn("n_stopwords",
-        size(filter(split(trim(lower(col("text"))), "\\s+"),
+        size(filter(GraftFunctions.words(lower(col("text"))),
           w => w.isInCollection(Stopwords.en))).cast("long"))
       .withColumn("reason",
         when(col("n_tokens") < minTokens, "too_short")
@@ -121,7 +122,7 @@ object TextNormalize {
     * rows prove each rule fires and the audit column names the culprit). */
   def qC4Filters(s: SparkSession, d: String): DataFrame = {
     val base = documents(s, d).select(col("doc_id"), col("text"))
-    val w = split(trim(col("text")), "\\s+")
+    val w = GraftFunctions.words(col("text"))
     val planted = base.filter(pmod(col("doc_id"), lit(10)).isin(1, 3, 4, 5))
       .select((col("doc_id") + 3000000L).as("doc_id"),
         when(pmod(col("doc_id"), lit(10)) === 1,

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.engine.Tables
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -26,7 +27,7 @@ object TextSearch {
   /** (doc_id, term) token postings with per-document length. */
   private def postings(docs: DataFrame): DataFrame =
     Tables.rebalance(docs, "doc_id")
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
+      .select(col("doc_id"), GraftFunctions.words(col("text")).as("words"))
       .select(col("doc_id"), size(col("words")).cast("long").as("dl"),
         explode(col("words")).as("term"))
 
@@ -89,7 +90,7 @@ object TextSearch {
   def qBm25(s: SparkSession, d: String): DataFrame = {
     val docs = documents(s, d)
     val r = docs.agg(count(lit(1)),
-      sum(size(split(trim(col("text")), "\\s+")).cast("long"))).head()
+      sum(size(GraftFunctions.words(col("text"))).cast("long"))).head()
     val n = r.getLong(0)
     val avgdl = r.getLong(1).toDouble / n
     bm25(docs, Bm25Query, n, avgdl)
@@ -114,7 +115,7 @@ object TextSearch {
   def phraseSearch(docs: DataFrame, terms: Seq[String]): DataFrame = {
     require(terms.nonEmpty, "phrase must have at least one term")
     val toks = docs
-      .select(col("doc_id"), posexplode(split(trim(col("text")), "\\s+")))
+      .select(col("doc_id"), posexplode(GraftFunctions.words(col("text"))))
       .filter(col("col").isin(terms.distinct: _*))
       .select(col("doc_id"), col("pos"), col("col").as("term"))
     val parts = terms.zipWithIndex.map { case (t, i) =>
@@ -139,7 +140,7 @@ object TextSearch {
   def contamination(corpus: DataFrame, bench: DataFrame, minCommon: Long): DataFrame = {
     def sh(df: DataFrame): DataFrame =
       Tables.rebalance(df, "doc_id")
-        .select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
+        .select(col("doc_id"), GraftFunctions.words(col("text")).as("words"))
         .filter(size(col("words")) >= 3)
         .select(col("doc_id"),
           explode(Dedup.shinglesFromWords(col("words"))).as("shingle"))
@@ -184,7 +185,7 @@ object TextSearch {
       minCommon: Long): DataFrame = {
     def sh(df: DataFrame): DataFrame =
       Tables.rebalance(df, "doc_id")
-        .select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
+        .select(col("doc_id"), GraftFunctions.words(col("text")).as("words"))
         .filter(size(col("words")) >= 3)
         .select(col("doc_id"),
           explode(Dedup.shinglesFromWords(col("words"))).as("shingle"))
@@ -247,7 +248,7 @@ object TextSearch {
     // materialized once: the exact top-k job and the sketch job would
     // otherwise each re-tokenize the corpus
     val toks = Tables.rebalance(docs, "doc_id")
-      .select(explode(split(trim(col("text")), "\\s+")).as("tok"))
+      .select(explode(GraftFunctions.words(col("text"))).as("tok"))
       .filter(length(col("tok")) > 0)
       .localCheckpoint()
     val exact = toks.groupBy("tok").agg(count(lit(1)).as("exact_n"))
@@ -277,7 +278,7 @@ object TextSearch {
     * instead of hard-coding one per language. */
   def stopwordDf(docs: DataFrame, k: Int): DataFrame =
     Tables.rebalance(docs, "doc_id")
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
+      .select(col("doc_id"), GraftFunctions.words(col("text")).as("words"))
       .select(col("doc_id"), explode(array_distinct(col("words"))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("df"))
       .orderBy(col("df").desc, col("token")).limit(k)
@@ -289,15 +290,13 @@ object TextSearch {
     * character pairs inside words across the corpus — the most frequent
     * pair is the first merge a byte-pair encoder would learn (Sennrich et
     * al. 2016, public). Pair generation is a per-word character slide
-    * (narrow, codegen'd); the only shuffle is the pair-count aggregate,
-    * which partial-aggregates map-side into at most |alphabet|^2 keys. */
+    * (narrow, the compiled code-point n-gram kernel); the only shuffle is
+    * the pair-count aggregate, which partial-aggregates map-side into at
+    * most |alphabet|^2 keys. */
   def bpePairs(docs: DataFrame, k: Int): DataFrame =
     Tables.rebalance(docs, "doc_id")
-      .select(explode(split(trim(col("text")), "\\s+")).as("w"))
-      .filter(length(col("w")) >= 2)
-      .select(explode(transform(
-        sequence(lit(1), length(col("w")) - 1),
-        i => col("w").substr(i, lit(2)))).as("pair"))
+      .select(explode(GraftFunctions.words(col("text"))).as("w"))
+      .select(explode(GraftFunctions.ngrams(col("w"), 2)).as("pair"))
       .groupBy("pair").agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("pair")).limit(k)
 
@@ -308,89 +307,38 @@ object TextSearch {
     * corpus (Sennrich et al. 2016) — [[bpePairs]] found only merge #1;
     * this runs the real loop: count adjacent segment pairs over the
     * current segmentation (weighted by word frequency), merge the most
-    * frequent pair everywhere, repeat. The corpus collapses to its
-    * (word, freq) VOCABULARY first — every iteration then runs on the
-    * vocabulary-sized frame (one tiny aggregate + one narrow string
-    * rewrite), so the loop cost is independent of corpus size: this is
-    * exactly how production BPE trainers scale.
+    * frequent pair everywhere, repeat. One distributed pass collapses the
+    * corpus to its (word, freq) vocabulary capped at the `maxVocab` most
+    * frequent words (ties by word), then the merge loop runs DRIVER-SIDE
+    * over that bounded table with incremental pair-count maintenance —
+    * zero Spark jobs per merge, where a distributed loop pays one job +
+    * one collect per merge (50k sequential jobs for a real vocab). This
+    * is how production BPE trainers scale: they operate on a
+    * word-frequency dict, not the corpus (Sennrich et al. 2016's
+    * learn_bpe works the same way). Merge-count scaling: each merge
+    * touches only the words containing the merged pair (incremental
+    * re-count) plus one linear-in-distinct-pairs max scan; a 50k-merge
+    * vocab over a capped dict is seconds of driver CPU, not 50k cluster
+    * round-trips.
     *
-    * Merge application is leftmost non-overlapping (`replace` on the
-    * space-delimited segmentation, identical semantics in the oracle's
-    * engine): an immediately repeated pair ("l r l r") merges its second
-    * occurrence on a LATER step, a documented, deterministic variant of
-    * the reference algorithm. Ties break (count desc, left, right). */
-  def bpeTrain(docs: DataFrame, nMerges: Int): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // ' a b c ' — one space between segments, sentinels at both ends so
-    // a merge pattern ' l r ' can anchor at word boundaries
-    var vocab = Tables.rebalance(docs, "doc_id")
-      .select(explode(split(trim(col("text")), "\\s+")).as("w"))
-      .filter(length(col("w")) > 0)
-      .groupBy("w").agg(count(lit(1)).as("freq"))
-      .select(concat(lit(" "), regexp_replace(col("w"), "(.)", "$1 ")).as("seg"),
-        col("freq"))
-      .localCheckpoint() // vocabulary-sized; cut the corpus scan out of the loop
-    val merges = scala.collection.mutable.ArrayBuffer[(Long, String, String, Long)]()
-    var step = 1
-    var exhausted = false
-    while (step <= nMerges && !exhausted) {
-      val top = vocab
-        .select(col("freq"), split(trim(col("seg")), " ").as("parts"))
-        .filter(size(col("parts")) >= 2)
-        .select(col("freq"), explode(expr(
-          "transform(sequence(1, size(parts) - 1), i -> struct(parts[i-1] AS l, parts[i] AS r))"))
-          .as("z"))
-        .groupBy(col("z.l").as("l"), col("z.r").as("r"))
-        .agg(sum(col("freq")).as("n"))
-        .orderBy(col("n").desc, col("l"), col("r")).limit(1)
-        .collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (l, r, n) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += ((step.toLong, l, r, n))
-        // merge tokens are DATA: pass them as literal COLUMNS, never
-        // interpolated into SQL text (a quote/backslash token would
-        // break the parse or silently rewrite the pattern)
-        vocab = vocab
-          .withColumn("seg",
-            replace(col("seg"), lit(s" $l $r "), lit(s" $l$r ")))
-          .localCheckpoint()
-        step += 1
-      }
-    }
-    merges.toSeq.toDF("step", "l_tok", "r_tok", "n")
-  }
-
-  /** BPE TRAINER, bounded-state variant — the declared scale path. One
-    * distributed pass collapses the corpus to its (word, freq) vocabulary
-    * capped at the `maxVocab` most frequent words (ties by word), then
-    * the merge loop runs DRIVER-SIDE over that bounded table with
-    * incremental pair-count maintenance — zero Spark jobs per merge,
-    * where [[bpeTrain]] pays one job + one collect per merge (fine for 8
-    * merges, 50k sequential jobs for a real vocab). This is how
-    * production BPE trainers scale: they operate on a word-frequency
-    * dict, not the corpus (Sennrich et al. 2016's learn_bpe works the
-    * same way). Merge-count scaling: each merge touches only the words
-    * containing the merged pair (incremental re-count) plus one
-    * linear-in-distinct-pairs max scan; a 50k-merge vocab over a capped
-    * dict is seconds of driver CPU, not 50k cluster round-trips.
-    *
-    * Semantics are IDENTICAL to [[bpeTrain]] (same leftmost
-    * non-overlapping space-delimited replace variant, same (count desc,
-    * left, right) tie-break in UTF-8 byte order) — asserted by equality
-    * spec; the cap does not bind at gate scale, so the same unrolled-CTE
-    * oracle verifies both. */
+    * Merge application is leftmost non-overlapping, as `replace` on the
+    * space-delimited segmentation applies it (the oracle's engine runs
+    * that replace): an immediately repeated pair ("l r l r") merges its
+    * second occurrence on a LATER step, a documented, deterministic
+    * variant of the reference algorithm. Ties break (count desc, left,
+    * right) in UTF-8 byte order. The distributed form of the same loop
+    * is the equality reference in the test sources; the cap does not
+    * bind at gate scale, so the unrolled-CTE oracle verifies this one. */
   def bpeTrainLocal(docs: DataFrame, nMerges: Int, maxVocab: Int = 1 << 16): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val rows = Tables.rebalance(docs, "doc_id")
-      .select(explode(split(trim(col("text")), "\\s+")).as("w"))
+      .select(explode(GraftFunctions.words(col("text"))).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("freq"))
       .orderBy(col("freq").desc, col("w")).limit(maxVocab)
       .collect()
-    // words char-split exactly like the distributed trainer's regexp
+    // words char-split exactly like `regexp_replace(w, "(.)", "$1 ")`
     val segs: Array[scala.collection.mutable.ArrayBuffer[String]] =
       rows.map(r => scala.collection.mutable.ArrayBuffer(
         r.getString(0).replaceAll("(.)", "$1 ").trim.split(" ").toIndexedSeq: _*))
@@ -426,7 +374,7 @@ object TextSearch {
     // the string-replace merge: " l r " -> " lr " consumes the boundary
     // space, so the token AFTER a merge cannot start the next match —
     // an immediately repeated pair merges its second occurrence on a
-    // later step (same documented variant as the distributed trainer)
+    // later step (the documented variant above)
     def applyMerge(s: scala.collection.mutable.ArrayBuffer[String],
         l: String, r: String): scala.collection.mutable.ArrayBuffer[String] = {
       val out = scala.collection.mutable.ArrayBuffer[String]()
@@ -480,21 +428,18 @@ object TextSearch {
     * production encoder would carry token ARRAYS instead of a flat
     * string.
     *
-    * Two implementations with identical output (TextSearchSpec asserts
-    * equality at the full learned-merge depth):
-    *
-    *  - [[bpeEncodeFold]]: one Catalyst `replace` column per merge — the
-    *    plan GROWS with the vocabulary, so a real 50k-merge vocab is a
-    *    50k-deep expression tree the analyzer/codegen cannot survive
-    *    (VERDICT r4 item #5). Kept as the oracle-shaped comparison
-    *    baseline.
-    *  - [[bpeEncode]] (production): ONE documented UDF driven by the
-    *    learned merge table, applying merges in rank order over a token
-    *    buffer per document — same left-to-right boundary-consuming
-    *    semantics as the string replace, but the plan is constant-size in
-    *    the vocabulary (the merge table rides the closure, one broadcast
-    *    per job, ~vocab·avg-token-len bytes). Per-document work, no
-    *    joins, no shuffle beyond the final count. */
+    * [[bpeEncode]] is ONE documented UDF driven by the learned merge
+    * table, applying merges in rank order over a token buffer per
+    * document — the same left-to-right boundary-consuming semantics as
+    * the string replace, but the plan is constant-size in the vocabulary
+    * (the merge table rides the closure, one broadcast per job,
+    * ~vocab·avg-token-len bytes). Per-document work, no joins, no shuffle
+    * beyond the final count. Its oracle-shaped twin, one Catalyst
+    * `replace` column per merge, is the equality reference in the test
+    * sources (TextSearchSpec asserts equality at the full learned-merge
+    * depth): its plan GROWS with the vocabulary, so a real 50k-merge
+    * vocab is a 50k-deep expression tree the analyzer/codegen cannot
+    * survive. */
   val BpeBoundary: String = "\u0001"
 
   /** One left-to-right merge pass over a token buffer — the same
@@ -566,23 +511,6 @@ object TextSearch {
       .select(col("doc_id"), countTokens(col("text")).as("n_bpe_tokens"))
   }
 
-  /** Plan-growing fold baseline (see scaladoc above) — spec-only. */
-  def bpeEncodeFold(docs: DataFrame, merges: Seq[(String, String)]): DataFrame = {
-    val seg0 = concat(lit(" "),
-      array_join(
-        transform(split(trim(col("text")), "\\s+"),
-          w => regexp_replace(w, "(.)", "$1 ")),
-        BpeBoundary + " "))
-    val segged = merges.foldLeft(
-      Tables.rebalance(docs, "doc_id").select(col("doc_id"), seg0.as("seg"))) {
-      case (df, (l, r)) =>
-        df.withColumn("seg", replace(col("seg"), lit(s" $l $r "), lit(s" $l$r ")))
-    }
-    segged.select(col("doc_id"),
-      size(filter(split(trim(col("seg")), " "), t => t =!= BpeBoundary))
-        .cast("long").as("n_bpe_tokens"))
-  }
-
   /** Oracle-checked: train 8 merges on the corpus, encode the corpus
     * with them (the oracle replays train + apply in one CTE chain). */
   def qBpeEncode(s: SparkSession, d: String): DataFrame = {
@@ -609,7 +537,7 @@ object TextSearch {
       .map(r => (r.getString(1), r.getString(2))).toSeq
     val enc = bpeEncode(docs, merges) // (doc_id, n_bpe_tokens)
     docs.select(col("doc_id"), col("lang"),
-        size(split(trim(col("text")), "\\s+")).cast("long").as("n_words"),
+        size(GraftFunctions.words(col("text"))).cast("long").as("n_words"),
         length(col("text")).cast("long").as("n_chars"))
       .join(enc, Seq("doc_id"))
       .groupBy("lang")
@@ -643,7 +571,7 @@ object TextSearch {
     * k is exactly the minimal covering prefix. */
   def vocabCoverage(docs: DataFrame, targets: Seq[Double]): DataFrame = {
     val tf = Tables.rebalance(docs, "doc_id")
-      .select(explode(split(trim(col("text")), "\\s+")).as("tok"))
+      .select(explode(GraftFunctions.words(col("text"))).as("tok"))
       .filter(length(col("tok")) > 0)
       .groupBy("tok").agg(count(lit(1)).as("tf"))
     val w = Window.orderBy(col("tf").desc, col("tok"))
@@ -683,16 +611,7 @@ object TextSearch {
     * bit-identical — and `vocabSize` arrives as a caller-side literal
     * (the nDocs pattern: no 1-row cross join in the plan). */
   def bigramLm(docs: DataFrame, vocabSize: Long): DataFrame = {
-    val pairs = Tables.rebalance(docs, "doc_id")
-      .select(split(trim(col("text")), "\\s+").as("words"))
-      .filter(size(col("words")) >= 2)
-      .select(explode(expr(
-        // Spark array subscripts are 0-based: i in [1, n-1] pairs
-        // words[i-1] with words[i]
-        "transform(sequence(1, size(words) - 1), i -> struct(words[i-1] AS w1, words[i] AS w2))"))
-        .as("z"))
-      .select(col("z.w1").as("w1"), col("z.w2").as("w2"))
-    val c12 = pairs.groupBy("w1", "w2").agg(count(lit(1)).as("n"))
+    val c12 = bigramPairs(docs).groupBy("w1", "w2").agg(count(lit(1)).as("n"))
     // context totals as a w1-partitioned window over the pair counts: one
     // keyed exchange, per-key state bounded by |vocab| successors. The
     // previous broadcast(c1) shipped a frame with one row per DISTINCT
@@ -710,7 +629,7 @@ object TextSearch {
   def qBigramLm(s: SparkSession, d: String): DataFrame = {
     val docs = documents(s, d)
     val v = docs
-      .select(explode(split(trim(col("text")), "\\s+")).as("tok"))
+      .select(explode(GraftFunctions.words(col("text"))).as("tok"))
       .distinct().count()
     bigramLm(docs, v)
       .orderBy(col("n").desc, col("w1"), col("w2")).limit(100)
@@ -741,16 +660,17 @@ object TextSearch {
     * Determinism: exact integer counts combined in double arithmetic
     * with the SAME expression shape as the oracle, rounded to 6 places
     * (the house bigramLm discipline). */
-  /** Per-occurrence corpus bigrams, doc-keyed — the ONE explode both KN
-    * surfaces (the table and the scorer) build on. */
+  /** Per-occurrence corpus bigrams (doc_id, w1, w2) — the ONE explode
+    * the Lidstone table, both KN surfaces (the table and the scorer) and
+    * the TextRank graph build on. Each positional bigram comes out of the
+    * compiled n-gram kernel as "w1 w2" and splits back at its one space:
+    * a whitespace token holds none. */
   def bigramPairs(docs: DataFrame): DataFrame =
     Tables.rebalance(docs, "doc_id")
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
-      .filter(size(col("words")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(1, size(words) - 1), i -> struct(words[i-1] AS w1, words[i] AS w2))"))
-        .as("z"))
-      .select(col("doc_id"), col("z.w1").as("w1"), col("z.w2").as("w2"))
+      .select(col("doc_id"),
+        explode(GraftFunctions.ngrams(GraftFunctions.words(col("text")), 2)).as("g"))
+      .select(col("doc_id"), substring_index(col("g"), " ", 1).as("w1"),
+        substring_index(col("g"), " ", -1).as("w2"))
 
   /** Distinct-bigram table with the KN count statistics attached: pair
     * count n, left-context total n1 = c(w1·), and the N1+ continuation
@@ -890,7 +810,7 @@ object TextSearch {
   /** (word, freq) table of the corpus, capped at [[UniMaxWordLen]]. */
   def uniWordFreq(docs: DataFrame): DataFrame =
     Tables.rebalance(docs, "doc_id")
-      .select(explode(split(trim(col("text")), "\\s+")).as("word"))
+      .select(explode(GraftFunctions.words(col("text"))).as("word"))
       // the '|' exclusion exists because segmentations serialize with '|'
       // as the piece separator (uniSegment / the oracle's path column): a
       // word containing the separator would desync n_pieces between the

@@ -66,9 +66,8 @@ object TrainedLangId {
   /** Character trigrams WITH multiplicity (spaces included — word
     * boundaries are a real n-gram signal). */
   private def trigrams(df: DataFrame): DataFrame =
-    df.filter(length(col("t")) >= 3)
-      .select(col("doc_id"), col("cls"),
-        explode(expr("transform(sequence(1, length(t) - 2), i -> substring(t, i, 3))")).as("tri"))
+    df.select(col("doc_id"), col("cls"),
+      explode(graft.functions.GraftFunctions.ngrams(col("t"), 3)).as("tri"))
 
   /** Train: top-K rank profile per class over the labeled frame —
     * (cls, tri, rank), ≤ 3·K rows total. */

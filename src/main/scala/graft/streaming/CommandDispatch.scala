@@ -216,7 +216,7 @@ object CommandDispatch {
     val newSnippets = newDocs
       .select(col("document_id"), col("document_name"), col("category_id"),
         col("document_status"),
-        explode(SnippetGen.snippetWindows(SnippetGen.splitWords(col("text")))).as("s"))
+        explode(SnippetGen.snippetWindows(graft.functions.GraftFunctions.words(col("text")))).as("s"))
       .select(col("document_id"), col("document_name"), col("category_id"),
         col("s.snippet_id").as("snippet_id"), col("s.snippet_text").as("snippet_text"),
         col("document_status"))

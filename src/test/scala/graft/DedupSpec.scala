@@ -1,6 +1,7 @@
 package graft
 
 import graft.engine.Scratch
+import graft.functions.GraftFunctions
 import graft.operators.Dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -14,6 +15,8 @@ class DedupSpec extends SparkSpec {
   // file, silently disabling parquet pushdown/pruning engine-wide.
   private lazy val docs = spark.read.parquet(s"$sf0001/documents.parquet")
 
+  private def shingles(text: Column): Column = Dedup.shinglesFromWords(GraftFunctions.words(text))
+
   /** Brute-force model: every (left, right) pair, or every left pair
     * doc_a < doc_b when `self`, scored on the full shingle sets and kept
     * at >= t, with the score rounded as the arms round it. */
@@ -21,7 +24,7 @@ class DedupSpec extends SparkSpec {
       score: (Column, Column) => Column = Dedup.jaccard,
       self: Boolean = false): Set[(Long, Long, Double)] = {
     def sh(df: DataFrame, side: String) =
-      df.select(col("doc_id").as(s"doc_$side"), Dedup.shingles(col("text")).as(s"sh_$side"))
+      df.select(col("doc_id").as(s"doc_$side"), shingles(col("text")).as(s"sh_$side"))
     val all = sh(left, "a").crossJoin(sh(right, "b"))
     scored((if (self) all.filter(col("doc_a") < col("doc_b")) else all)
       .withColumn("s", score(col("sh_a"), col("sh_b")))
@@ -535,7 +538,7 @@ class DedupSpec extends SparkSpec {
     // corpus postings every micro-batch). The hint is load-bearing, so a
     // plan flip must fail loudly here, not show up as a bench regression.
     val sigs = docs.limit(50)
-      .select(col("doc_id"), Dedup.shingles(col("text")).as("sh"))
+      .select(col("doc_id"), shingles(col("text")).as("sh"))
     val fused = Dedup.gateFusedExactPairs(spark, None, sigs, 0.5)
     val plan = fused.queryExecution.executedPlan.toString
     assert(plan.contains("ShuffledHashJoin"),

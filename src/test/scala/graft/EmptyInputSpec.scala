@@ -107,7 +107,7 @@ class EmptyInputSpec extends SparkSpec {
     assert(Dedup.spanDedup(emptyDocs).count() === 0)
     assert(TextSearch.bigramLm(emptyDocs, 0L).count() === 0)
     assert(TextSearch.vocabCoverage(emptyDocs, Seq(0.5, 0.9)).count() === 1) // one all-zero row
-    assert(TextSearch.bpeTrain(emptyDocs, 4).count() === 0) // exhausts at step 1
+    assert(TextSearch.bpeTrainLocal(emptyDocs, 4).count() === 0) // exhausts at step 1
     assert(TextSearch.bpeEncode(emptyDocs, Seq(("a", "b"))).count() === 0)
     assert(TextAnalysis.importanceWeights(emptyDocs, col("source") === "src0").count() === 0)
     assert(Curation.budgetSelect(emptyDocs, 100L).count() === 0)

@@ -12,9 +12,11 @@ class FunctionsSpec extends SparkSpec {
 
   private lazy val docs = spark.read.parquet(s"$sf0001/documents.parquet")
 
-  test("PolyHash == declarative ascii-fold fingerprint on real docs") {
+  test("PolyHash == declarative code-point fold on ASCII docs only") {
+    // the byte fold and the code-point fold part on any non-ASCII text
+    // (see "code-point fold" below); the generated corpus is all ASCII
     val mismatches = docs.select(
-      TextAnalysis.fingerprint(col("text")).as("slow"),
+      TokenDeclarative.fold(col("text")).as("slow"),
       GraftFunctions.poly_hash(col("text")).as("fast"))
       .filter(col("slow") =!= col("fast")).count()
     assert(mismatches === 0)
@@ -22,12 +24,12 @@ class FunctionsSpec extends SparkSpec {
 
   test("MinHashSig == declarative signature on real docs") {
     val withSh = docs
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
+      .select(col("doc_id"), GraftFunctions.words(col("text")).as("words"))
       .select(col("doc_id"), Dedup.shinglesFromWords(col("words")).as("sh"))
     val a = Dedup.hashParams.map(_._1)
     val b = Dedup.hashParams.map(_._2)
     val mismatches = withSh.select(
-      Dedup.minhashSignature(transform(col("sh"), s => Dedup.polyHash(s))).as("slow"),
+      TokenDeclarative.minhashSignature(transform(col("sh"), TokenDeclarative.fold(_))).as("slow"),
       GraftFunctions.minhash_sig(col("sh"), a, b).as("fast"))
       .filter(col("slow") =!= col("fast")).count()
     assert(mismatches === 0)
@@ -128,30 +130,93 @@ class FunctionsSpec extends SparkSpec {
 
   test("WordNgrams == declarative shingling on real docs") {
     val withWords = docs
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
-    val mismatches = withWords.select(
-      graft.operators.Dedup.shinglesFromWordsDeclarative(col("words")).as("slow"),
-      graft.functions.GraftFunctions.word_ngrams(col("words"), 3).as("fast"))
-      .filter(col("slow") =!= col("fast")).count()
-    assert(mismatches === 0)
+      .select(col("doc_id"), GraftFunctions.words(col("text")).as("words"))
+    compiledAndInterpreted {
+      assertSame(withWords, TokenDeclarative.ngrams(col("words"), 3, distinct = true),
+        Dedup.shinglesFromWords(col("words")))
+    }
   }
 
   test("WordNgrams == declarative shingling on SHORT inputs (size < 3)") {
-    // the unguarded declarative form used to throw here: sequence(1, size-2)
-    // descends for size < 3 and element_at(w, 0) is an error
+    // a descending `sequence(1, size-2)` would reach element_at(w, 0), an
+    // error; the kernel gives an empty array
     import spark.implicits._
     val short = Seq(Seq.empty[String], Seq("one"), Seq("one", "two"), Seq("a", "b", "c"))
       .toDF("words")
     val rows = short.select(
-      graft.operators.Dedup.shinglesFromWordsDeclarative(col("words")).as("slow"),
-      graft.functions.GraftFunctions.word_ngrams(col("words"), 3).as("fast")).collect()
+      TokenDeclarative.ngrams(col("words"), 3, distinct = true).as("slow"),
+      Dedup.shinglesFromWords(col("words")).as("fast")).collect()
     rows.foreach(r => assert(r.getSeq[String](0) === r.getSeq[String](1)))
     assert(rows.last.getSeq[String](0) === Seq("a b c"))
   }
 
+  test("Ngrams == declarative word grams, distinct and positional, n = 1..3") {
+    import spark.implicits._
+    // empty, short, repeated and null-element arrays, and a null array;
+    // repartitioned so the projection runs in a stage
+    val arrays = Seq[Option[Seq[String]]](Some(Nil), Some(Seq("a")), Some(Seq("a", "b")),
+      Some(Seq("a", "b", "a", "b", "a")), Some(Seq("a", null, "b", "c")),
+      Some(Seq(null, null)), Some(Seq("", "x", "")), None)
+      .toDF("words").repartition(2)
+    // real docs, plus texts whose first or last token is "": trim strips
+    // spaces only, so a leading tab or a trailing newline survives it
+    val texts = docs.select(col("text")).unionByName(
+      Seq("\tlead tab", "trail nl\n", "  two  spaces  ", "", " ").toDF("text"))
+      .select(GraftFunctions.words(col("text")).as("words")).repartition(2)
+    compiledAndInterpreted {
+      for (df <- Seq(arrays, texts); n <- 1 to 3; distinct <- Seq(false, true))
+        assertSame(df, TokenDeclarative.ngrams(col("words"), n, distinct),
+          GraftFunctions.ngrams(col("words"), n, distinct))
+    }
+    val lead = Seq("\tlead tab").toDF("text")
+      .select(GraftFunctions.ngrams(GraftFunctions.words(col("text")), 2))
+      .as[Seq[String]].head()
+    assert(lead === Seq(" lead", "lead tab"))
+    // concat_ws skips a null element, so it leaves a one-word gram
+    val nulls = Seq(Seq("a", null, "b", "c")).toDF("w")
+      .select(GraftFunctions.ngrams(col("w"), 2)).as[Seq[String]].head()
+    assert(nulls === Seq("a", "b", "b c"))
+  }
+
+  test("Ngrams == declarative char grams over code points") {
+    import spark.implicits._
+    val texts = docs.select(lower(col("text")).as("t")).unionByName(
+      Seq[Option[String]](Some(""), Some("ab"), Some("abc"), Some("aaaa"), Some("né à"),
+        Some("x\uD83D\uDE00y\uD83D\uDE00z"), Some("日本語テキスト"), None).toDF("t"))
+      .repartition(2)
+    compiledAndInterpreted {
+      for (n <- 1 to 3; distinct <- Seq(false, true))
+        assertSame(texts, TokenDeclarative.charNgrams(col("t"), n, distinct),
+          GraftFunctions.ngrams(col("t"), n, distinct))
+    }
+    // a supplementary-plane character is one code point, not two chars
+    val emoji = Seq("x\uD83D\uDE00y").toDF("t")
+      .select(GraftFunctions.ngrams(col("t"), 2)).as[Seq[String]].head()
+    assert(emoji === Seq("x\uD83D\uDE00", "\uD83D\uDE00y"))
+  }
+
+  test("code-point fold == declarative ascii fold, non-ASCII included") {
+    import spark.implicits._
+    val texts = docs.select(col("text")).unionByName(
+      Seq[Option[String]](Some(""), Some("é"), Some("naïve café"), Some("日本語"),
+        Some("x\uD83D\uDE00y"), None).toDF("text"))
+      .repartition(2)
+    compiledAndInterpreted {
+      assertSame(texts, TokenDeclarative.fold(col("text")), TextAnalysis.fingerprint(col("text")))
+    }
+    // 'é' is one code point, U+00E9, and two UTF-8 bytes, C3 A9
+    val e = Seq("é").toDF("t").select(TextAnalysis.fingerprint(col("t")),
+      GraftFunctions.poly_hash(col("t"))).as[(Long, Long)].head()
+    assert(e === ((233L, 0xC3L * 31 + 0xA9)))
+    assert(e._2 === 6214L)
+    val smile = Seq("\uD83D\uDE00").toDF("t").select(TextAnalysis.fingerprint(col("t")))
+      .as[Long].head()
+    assert(smile === 0x1F600L)
+  }
+
   test("SpanHashes == declarative positional poly_hash chain on real docs") {
     val withWords = docs
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
+      .select(col("doc_id"), GraftFunctions.words(col("text")).as("words"))
       .filter(size(col("words")) >= 8)
     val slow = transform(sequence(lit(1), size(col("words")) - 7),
       i => graft.functions.GraftFunctions.poly_hash(concat_ws(" ",
@@ -172,7 +237,7 @@ class FunctionsSpec extends SparkSpec {
     import spark.implicits._
     val k = 8
     val withCuts = docs
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
+      .select(col("doc_id"), GraftFunctions.words(col("text")).as("words"))
       .filter(size(col("words")) >= k)
       // deterministic pseudo-random cut starts: TWO residue patterns,
       // the second spaced 5 < k apart (so its intervals genuinely
@@ -209,7 +274,7 @@ class FunctionsSpec extends SparkSpec {
   test("SimHash64 expression == scala simhash64 on real docs") {
     import spark.implicits._
     val viaExpr = docs
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
+      .select(col("doc_id"), GraftFunctions.words(col("text")).as("words"))
       .select(col("doc_id"), GraftFunctions.simhash64(col("words")))
       .as[(Long, Long)].collect().toMap
     val viaScala = docs.select("doc_id", "text").as[(Long, String)].collect()
@@ -221,19 +286,37 @@ class FunctionsSpec extends SparkSpec {
     import spark.implicits._
     GraftFunctions.register(spark)
     val df = docs.limit(20)
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("w"))
+      .select(col("doc_id"), GraftFunctions.words(col("text")).as("w"))
     df.createOrReplaceTempView("fn_check")
     val viaSql = spark.sql(
       "SELECT doc_id, word_ngrams(w, 3) AS ng, simhash64(w) AS sh, " +
         "minhash_sig(word_ngrams(w, 3)) AS sig FROM fn_check")
       .collect().map(r => (r.getLong(0), r.getSeq[String](1), r.getLong(2), r.getSeq[Long](3))).toSeq
     val viaApi = df.select(col("doc_id"),
-      GraftFunctions.word_ngrams(col("w"), 3).as("ng"),
+      Dedup.shinglesFromWords(col("w")).as("ng"),
       GraftFunctions.simhash64(col("w")).as("sh"),
-      GraftFunctions.minhash_sig(GraftFunctions.word_ngrams(col("w"), 3),
+      GraftFunctions.minhash_sig(Dedup.shinglesFromWords(col("w")),
         Dedup.hashParams.map(_._1), Dedup.hashParams.map(_._2)).as("sig"))
       .collect().map(r => (r.getLong(0), r.getSeq[String](1), r.getLong(2), r.getSeq[Long](3))).toSeq
     assert(viaSql.sortBy(_._1) === viaApi.sortBy(_._1))
+  }
+
+  test("SQL word_ngrams skips null words; rejects n < 1 and a non-literal n") {
+    GraftFunctions.register(spark)
+    import spark.implicits._
+    compiledAndInterpreted {
+      // the NPE of a null word joined into a non-null element, in a stage
+      Seq(Seq("a", null, "b", "c")).toDF("w").repartition(2).createOrReplaceTempView("ng_null")
+      val got = spark.sql("SELECT word_ngrams(w, 2) AS g FROM ng_null").as[Seq[String]].head()
+      assert(got === Seq("a", "b", "b c"))
+      assert(spark.sql("SELECT size(word_ngrams(array('a', CAST(NULL AS STRING), 'b', 'c'), 2))")
+        .as[Int].head() === 3)
+    }
+    for (bad <- Seq("0", "-1", "CAST(NULL AS INT)", "CAST(rand() * 3 AS INT)", "2L")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        spark.sql(s"SELECT word_ngrams(array('a', 'b'), $bad)").collect())
+      assert(e.getMessage.contains("n must be"), e.getMessage)
+    }
   }
 
   test("poly_hash is callable from SQL after registration") {
@@ -325,13 +408,13 @@ class FunctionsSpec extends SparkSpec {
       Some(Seq.tabulate(16)(i => if (i % 3 == 2) null else s"u$i")))
       .toDF("units").repartition(2)
     compiledAndInterpreted {
-      val real = docs.select(SnippetGen.splitWords(col("text")).as("w"),
+      val real = docs.select(GraftFunctions.words(col("text")).as("w"),
         SnippetGen.splitSentences(col("text")).as("s"))
       assertSame(real, SnippetDeclarative.snippetWindows(col("w")),
         SnippetGen.snippetWindows(col("w")))
       assertSame(real, SnippetDeclarative.snippetWindows(col("s")),
         SnippetGen.snippetWindows(col("s")))
-      val gen = generatedDocs.select(SnippetGen.splitWords(col("text")).as("w"))
+      val gen = generatedDocs.select(GraftFunctions.words(col("text")).as("w"))
       assertSame(gen, SnippetDeclarative.snippetWindows(col("w")),
         SnippetGen.snippetWindows(col("w")))
       assertSame(units, SnippetDeclarative.snippetWindows(col("units")),
@@ -344,7 +427,7 @@ class FunctionsSpec extends SparkSpec {
 
   test("IngestPages == declarative pages, compiled and interpreted") {
     def pages(df: DataFrame): Unit = {
-      val w = df.select(SnippetGen.splitWords(col("text")).as("words"), col("source"))
+      val w = df.select(GraftFunctions.words(col("text")).as("words"), col("source"))
       assertSame(w, SnippetDeclarative.pages(col("words"), col("source")),
         GraftFunctions.ingest_pages(col("words"), col("source"), Ingest.PageTokens,
           SnippetGen.WindowSize, SnippetGen.Stride))

@@ -417,4 +417,28 @@ class PlanSpec extends SparkSpec {
         }
     }
   }
+
+  test("token family evaluates no interpreted lambda") {
+    import graft.operators.{Graph, TextAnalysis}
+    import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+    // the n-gram kernel and the code-point fold replaced `transform(
+    // sequence(...))` grams and an `aggregate` fold; the driver-side
+    // loops of q_textrank and q_logistic plan their token stages apart,
+    // so those stages are checked as frames too
+    val keys = Seq("q_bpe_pairs", "q_bigram_lm", "q_kneser_ney", "q_kn_score", "q_doremi_kn",
+      "q_langid_trained", "q_repetition", "q_rouge", "q_distinct_n", "q_textrank",
+      "q_fingerprint", "q_logistic")
+    graft.engine.Scope.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
+      (keys.map(k => k -> SparkEntry.queries(k)(spark, sf0001)) ++ Seq(
+        "wordCooccurrenceEdges" -> Graph.wordCooccurrenceEdges(docs),
+        "logitFeatures" -> TextAnalysis.logitFeatures(docs)))
+        .foreach { case (name, df) =>
+          val exec = df.queryExecution.executedPlan
+          val hofs = exec.flatMap(_.expressions.flatMap(_.collect {
+            case h: HigherOrderFunction => h.prettyName }))
+          assert(hofs.isEmpty, s"$name evaluates ${hofs.mkString(", ")}:\n$exec")
+        }
+    }
+  }
 }

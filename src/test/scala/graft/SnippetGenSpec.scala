@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.GraftFunctions
 import graft.operators.SnippetGen
 import org.apache.spark.sql.functions._
 
@@ -44,7 +45,7 @@ class SnippetGenSpec extends SparkSpec {
     import spark.implicits._
     val docs = spark.read.parquet(s"$sf0001/documents.parquet").limit(50).cache()
     val viaSql = docs
-      .select($"doc_id", explode(snippetWindows(splitWords($"text"))).as("s"))
+      .select($"doc_id", explode(snippetWindows(GraftFunctions.words($"text"))).as("s"))
       .select($"doc_id", $"s.snippet_id", $"s.snippet_text")
       .as[(Long, Int, String)].collect().toSet
     val viaFlatMap = docs.select($"doc_id", $"text").as[(Long, String)].collect()
@@ -69,7 +70,7 @@ class SnippetGenSpec extends SparkSpec {
   test("empty and whitespace-only text yield no crash, empty-ish output") {
     import spark.implicits._
     val got = Seq("", "   ").toDF("text")
-      .select(snippetWindows(splitWords($"text")).as("w"))
+      .select(snippetWindows(GraftFunctions.words($"text")).as("w"))
       .as[Seq[(Int, String)]].collect()
     // split("") -> [""], one window with empty text; acceptable boundary
     assert(got.forall(w => w.size <= 1))

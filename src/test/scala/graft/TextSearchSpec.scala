@@ -313,7 +313,7 @@ class TextSearchSpec extends SparkSpec {
     // and (c,d) broken lexicographically], step 3 (ab,ab), step 4 (c,d) --
     // then no pairs remain and the trainer stops short of 8
     val docs = Seq((1L, "abab abab cd"), (2L, "abab cd cd")).toDF("doc_id", "text")
-    val merges = TextSearch.bpeTrain(docs, 8)
+    val merges = TokenDeclarative.bpeTrain(docs, 8)
       .select("step", "l_tok", "r_tok", "n")
       .as[(Long, String, String, Long)].collect().sortBy(_._1).toSeq
     assert(merges === Seq(
@@ -342,7 +342,7 @@ class TextSearchSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select("doc_id", "n_bpe_tokens").as[(Long, Long)].collect().toMap
     assert(rows(TextSearch.bpeEncode(corpus, merges)) ===
-      rows(TextSearch.bpeEncodeFold(corpus, merges)))
+      rows(TokenDeclarative.bpeEncodeFold(corpus, merges)))
     // the single-pass plan is constant-size in the vocabulary: growing the
     // merge table 100x must not grow the analyzed plan (the fold's grows
     // linearly — one replace node per merge)
@@ -364,7 +364,7 @@ class TextSearchSpec extends SparkSpec {
     val u = TextSearch.bpeEncode(edge, merges.take(5))
       .select("doc_id", "n_bpe_tokens").collect()
       .map(r => r.getLong(0) -> (if (r.isNullAt(1)) -1L else r.getLong(1))).toMap
-    val f = TextSearch.bpeEncodeFold(edge, merges.take(5))
+    val f = TokenDeclarative.bpeEncodeFold(edge, merges.take(5))
       .select("doc_id", "n_bpe_tokens").collect()
       .map(r => r.getLong(0) -> (if (r.isNullAt(1)) -1L else r.getLong(1))).toMap
     assert(u === f)
@@ -388,7 +388,7 @@ class TextSearchSpec extends SparkSpec {
       .select("step", "l_tok", "r_tok", "n")
       .as[(Long, String, String, Long)].collect().sortBy(_._1).toSeq
     assert(trace(TextSearch.bpeTrainLocal(corpus, 8)) ===
-      trace(TextSearch.bpeTrain(corpus, 8)))
+      trace(TokenDeclarative.bpeTrain(corpus, 8)))
     // a binding vocab cap keeps only the most frequent words: with
     // maxVocab=1 the trainer sees a single word and still terminates
     val capped = TextSearch.bpeTrainLocal(docs, 8, maxVocab = 1)

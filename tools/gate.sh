@@ -41,6 +41,29 @@ loops=$(grep -rhE 'math\.sqrt\(n[a-z]\) \* math\.sqrt\(n[a-z]\)' src/main/scala 
   echo "$loops cosine loops (at most one):"
   grep -rnE 'math\.sqrt\(n[a-z]\) \* math\.sqrt\(n[a-z]\)' src/main/scala; exit 1; }
 echo "ok"
+echo "=== tokens ==="
+# one whitespace tokenizer (GraftFunctions.words) and one compiled n-gram
+# kernel (Ngrams): a second `split(trim(...), "\\s+")` in src/main fails the
+# gate, and so does a `transform(sequence(` lambda beyond these survivors:
+#   operators/TextAnalysis.scala 1: the Luhn fold of qLuhn, a digit fold
+#     over a 16-digit number whose oracle replays the same lambda
+#   operators/Dedup.scala 2: the MinHash band keys (8 slices of a
+#     32-long signature per doc) and winnowing's sliding window minimum
+#     over the span hashes, neither a token n-gram (the MinHash agreement
+#     count is a `filter(sequence(`, outside this pattern)
+#   sources/OcrTrained.scala 1: the 35-bit glyph signature unpack
+tok=$(grep -rhoE 'split\(trim\(.*\), "\\\\s\+"\)' src/main/scala | wc -l)
+lambdas=$(grep -rlZ 'transform(' src/main/scala | xargs -0 perl -0ne \
+  '$n = () = /transform\(\s*sequence\(/g; print "$ARGV $n\n" if $n' | sort)
+allowed=$(printf '%s\n' 'src/main/scala/graft/operators/Dedup.scala 2' \
+  'src/main/scala/graft/operators/TextAnalysis.scala 1' \
+  'src/main/scala/graft/sources/OcrTrained.scala 1')
+[ "$tok" -le 1 ] && [ "$lambdas" = "$allowed" ] || {
+  echo "$tok whitespace tokenizers (at most one):"
+  grep -rnE 'split\(trim\(.*\), "\\\\s\+"\)' src/main/scala
+  echo "transform(sequence( sites per file, expected:"; echo "$allowed"
+  echo "found:"; echo "$lambdas"; exit 1; }
+echo "ok"
 echo "=== sbt test ==="
 sbt -batch test 2>&1 | grep -E "Tests:|Passed:"
 echo "=== benchmark harness build ==="
