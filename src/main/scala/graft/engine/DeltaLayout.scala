@@ -497,18 +497,12 @@ class DeltaLayoutTable(spark: SparkSession, root: String) extends VersionedTable
     * time). */
   private def stageDataFiles(df: DataFrame, commit: Long): Seq[(String, Long, Long)] = {
     Files.createDirectories(Paths.get(root)) // first commit to a fresh path
-    val tmp = Files.createTempDirectory("graft_dlw").toString
-    df.write.mode("overwrite").parquet(tmp)
-    val names = Option(new java.io.File(tmp).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      .sortBy(_.getName).zipWithIndex.map { case (f, i) =>
-        val name = f"data-$commit%020d-$i%05d.parquet"
-        val dst = Paths.get(root, name)
-        Files.move(f.toPath, dst)
-        (name, Files.size(dst), Files.getLastModifiedTime(dst).toMillis)
-      }.toSeq
-    Scratch.rmTree(new java.io.File(tmp)) // scratch (_SUCCESS/.crc) never accumulates
-    names
+    Scratch.stageParts(df)(_.zipWithIndex.map { case (f, i) =>
+      val name = f"data-$commit%020d-$i%05d.parquet"
+      val dst = Paths.get(root, name)
+      Files.move(f.toPath, dst)
+      (name, Files.size(dst), Files.getLastModifiedTime(dst).toMillis)
+    })
   }
 
   /** Publish one commit with the given actions. The commit FILE is the
@@ -647,30 +641,25 @@ class DeltaLayoutTable(spark: SparkSession, root: String) extends VersionedTable
     val nAdds = state.files.length // already resolved (bounded) by replayLog
     val total = nAdds + factLines.length
     val parts = math.max(1L, (nAdds + checkpointPartRows - 1) / checkpointPartRows).toInt
-    val tmp = Files.createTempDirectory("graft_dlck").toString
-    addActions.unionByName(factsDf.select(addActions.columns.toSeq.map(col): _*))
-      .repartition(parts).write.mode("overwrite").parquet(tmp)
-    val written = Option(new java.io.File(tmp).listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    val p = written.length
-    if (p <= 1) {
-      val part = written.headOption.getOrElse(
-        throw new IllegalStateException("checkpoint write produced no parquet file"))
-      Files.move(part.toPath, logDir.resolve(f"$n%020d.checkpoint.parquet"),
-        StandardCopyOption.REPLACE_EXISTING)
-    } else {
-      written.zipWithIndex.foreach { case (f, i) =>
-        Files.move(f.toPath,
-          logDir.resolve(f"$n%020d.checkpoint.${i + 1}%010d.$p%010d.parquet"),
+    val p = Scratch.stageParts(addActions
+        .unionByName(factsDf.select(addActions.columns.toSeq.map(col): _*))
+        .repartition(parts)) { written =>
+      if (written.length <= 1) {
+        val part = written.headOption.getOrElse(
+          throw new IllegalStateException("checkpoint write produced no parquet file"))
+        Files.move(part.toPath, logDir.resolve(f"$n%020d.checkpoint.parquet"),
           StandardCopyOption.REPLACE_EXISTING)
+      } else {
+        written.zipWithIndex.foreach { case (f, i) =>
+          Files.move(f.toPath,
+            logDir.resolve(f"$n%020d.checkpoint.${i + 1}%010d.${written.length}%010d.parquet"),
+            StandardCopyOption.REPLACE_EXISTING)
+        }
       }
+      written.length
     }
-    Scratch.rmTree(new java.io.File(tmp))
-    val lcTmp = logDir.resolve("_last_checkpoint.tmp")
-    Files.writeString(lcTmp,
+    Scratch.replaceFile(logDir.resolve("_last_checkpoint"),
       s"""{"version":$n,"size":$total${if (p > 1) s""","parts":$p""" else ""}}""")
-    Files.move(lcTmp, logDir.resolve("_last_checkpoint"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
     n
   }
 

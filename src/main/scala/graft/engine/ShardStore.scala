@@ -1,7 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 /** Append-only sharded parquet store with an atomically-swapped shard
   * MANIFEST — the persistence shape the incremental MinHash dedup index
@@ -25,7 +25,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *
   * Layout: `<root>/shard_<n>/` (parquet) + `<root>/shard_<n>.claim`
   * (exclusive-create markers) + `<root>/MANIFEST` (live shard names,
-  * append order, swapped via tmp-file ATOMIC_MOVE). */
+  * append order, swapped by [[Scratch.replaceFile]]). */
 class ShardStore(spark: SparkSession, root: String) {
   private val manifestPtr = Paths.get(root, "MANIFEST")
 
@@ -64,10 +64,7 @@ class ShardStore(spark: SparkSession, root: String) {
             s"[${names.mkString(", ")}]: expected [${e.mkString(", ")}], " +
             s"found [${cur.mkString(", ")}] — failing fast, nothing published")
       }
-      val tmp = Paths.get(root, "MANIFEST.tmp")
-      Files.writeString(tmp, names.mkString("", "\n", "\n"))
-      Files.move(tmp, manifestPtr, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
+      Scratch.replaceFile(manifestPtr, names.mkString("", "\n", "\n"))
     } finally { Files.deleteIfExists(lock); () }
   }
 

@@ -1,7 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 /** Atomic snapshot store (SURVEY §7.4): every mutation writes a NEW
   * versioned directory and then atomically swaps a pointer file — readers
@@ -17,6 +17,11 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   */
 class Snapshot(spark: SparkSession, root: String) extends VersionedTable {
   private val currentPtr = Paths.get(root, "CURRENT")
+
+  /** The version number of a `v_<n>` directory or `v_<n>.claim` marker;
+    * None for any other entry, which is ignored. */
+  private def versionOf(name: String): Option[Long] =
+    scala.util.Try(name.stripPrefix("v_").stripSuffix(".claim").toLong).toOption
 
   /** Highest published version, or None before the first publish. */
   def currentVersion(): Option[String] =
@@ -62,10 +67,7 @@ class Snapshot(spark: SparkSession, root: String) extends VersionedTable {
     Files.createDirectories(Paths.get(root))
     Files.createFile(Paths.get(root, next + ".claim")) // throws FileAlreadyExistsException on a lost race
     write(s"$root/$next")
-    val tmp = Paths.get(root, "CURRENT.tmp")
-    Files.writeString(tmp, next)
-    Files.move(tmp, currentPtr, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    Scratch.replaceFile(currentPtr, next)
     // the claim file is deliberately KEPT: a racer that read the old
     // CURRENT before this swap computes the same `next`, and only the
     // still-existing claim makes its createFile fail fast — deleting the
@@ -89,8 +91,6 @@ class Snapshot(spark: SparkSession, root: String) extends VersionedTable {
     * appear — retention bounds time travel, same as any table format. */
   def versions(): Seq[String] = {
     val current = currentVersion().map(_.stripPrefix("v_").toLong).getOrElse(-1L)
-    def versionOf(name: String): Option[Long] =
-      scala.util.Try(name.stripPrefix("v_").toLong).toOption
     Option(Paths.get(root).toFile.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("v_") &&
         versionOf(f.getName).exists(_ <= current))
@@ -143,8 +143,6 @@ class Snapshot(spark: SparkSession, root: String) extends VersionedTable {
       case Some(current) =>
         val cutoff = current - keep + 1 // keep [cutoff, current]
         val entries = Option(Paths.get(root).toFile.listFiles()).getOrElse(Array.empty)
-        def versionOf(name: String): Option[Long] =
-          scala.util.Try(name.stripPrefix("v_").toLong).toOption
         val old = entries.filter(f =>
           f.isDirectory && f.getName.startsWith("v_") &&
             versionOf(f.getName).exists(_ < cutoff))
@@ -163,9 +161,6 @@ class Snapshot(spark: SparkSession, root: String) extends VersionedTable {
     * and untouched. Returns the pruned version names. */
   def recoverOrphans(): Seq[String] = {
     val current = currentVersion().map(_.stripPrefix("v_").toLong).getOrElse(-1L)
-    def versionOf(name: String): Option[Long] =
-      scala.util.Try(name.stripPrefix("v_").stripSuffix(".claim").toLong)
-        .toOption // None = non-version entry, ignored
     val entries = Option(Paths.get(root).toFile.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.startsWith("v_"))
     val orphans = entries.filter(f => f.isDirectory && versionOf(f.getName).exists(_ > current))

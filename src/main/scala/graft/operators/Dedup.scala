@@ -599,41 +599,24 @@ object Dedup {
 
   // ------------------------------------------------- persisted dedup index
 
-  /** Persist the MinHash dedup index — the (doc_id, sh, sig) table — so
+  /** The persisted MinHash dedup index — the (doc_id, sh, sig) table —
+    * over a [[graft.engine.ShardStore]] (VERDICT r10 Next #4), so
     * incremental ingestion probes it instead of re-signing the whole
     * corpus per batch. The band keys are NOT stored: they are a cheap
     * narrow explode of `sig` at probe time, while storing them would 8x
-    * the index row count. At cluster scale write this bucketed by doc_id
-    * (or partitioned by band at read-mostly sites). */
-  def writeIndex(docs: DataFrame, path: String): Unit =
-    sigsOf(shingleIndex(docs)).write.mode("overwrite").parquet(path)
-
-  /** Append newly-accepted docs to the persisted index. */
-  def appendIndex(docs: DataFrame, path: String): Unit =
-    sigsOf(shingleIndex(docs)).write.mode("append").parquet(path)
-
-  /** Probe the persisted index: (incoming doc -> indexed doc) near-dup
-    * pairs with Jaccard >= threshold. The incoming micro-batch is signed
-    * fresh; the corpus side comes straight off the stored parquet. */
-  def probeIndex(spark: SparkSession, path: String, incoming: DataFrame,
-      threshold: Double): DataFrame =
-    crossNearDupsSigs(Scope.checkpoint(sigsOf(shingleIndex(incoming))),
-      spark.read.parquet(path), threshold)
-
-  // ------------------------------------ compactable sharded index store
-
-  /** The MinHash index over a [[graft.engine.ShardStore]] (VERDICT r10
-    * Next #4): micro-batch appends land as new shard directories, probes
-    * read the live shard set through one manifest, and periodic
-    * [[graft.engine.ShardStore.compact]] bounds the probe's file count by
-    * the TARGET partition count instead of the append history — with
-    * Snapshot's claim/swap atomicity, so a crashed compaction never
-    * corrupts the index. Probe results are spec-pinned identical before
-    * and after compaction (a pure layout operation). */
+    * the index row count. Micro-batch appends land as new shard
+    * directories, probes read the live shard set through one manifest,
+    * and periodic [[graft.engine.ShardStore.compact]] bounds the probe's
+    * file count by the TARGET partition count instead of the append
+    * history — with Snapshot's claim/swap atomicity, so a crashed
+    * compaction never corrupts the index. Probe results are spec-pinned
+    * identical before and after compaction (a pure layout operation). */
   def appendIndexStore(docs: DataFrame, store: graft.engine.ShardStore): Unit =
     store.append(sigsOf(shingleIndex(docs)))
 
-  /** Band-bucket probe of the sharded index ([[probeIndex]] semantics). */
+  /** Probe the persisted index: (incoming doc -> indexed doc) near-dup
+    * pairs with Jaccard >= threshold. The incoming micro-batch is signed
+    * fresh; the corpus side comes straight off the live shards. */
   def probeIndexStore(store: graft.engine.ShardStore, incoming: DataFrame,
       threshold: Double): DataFrame =
     crossNearDupsSigs(Scope.checkpoint(sigsOf(shingleIndex(incoming))), store.read(), threshold)
@@ -667,16 +650,18 @@ object Dedup {
   /** Oracle-gated incremental-ingestion demo: the even-id half of the
     * corpus is written out as the persisted MinHash index, then the odd-id
     * half arrives as an incoming batch and probes it — the end-to-end
-    * [[writeIndex]]/[[probeIndex]] path a streaming pipeline runs per
-    * micro-batch, checked against a DuckDB replica of the same split. The
-    * index round-trips through parquet at a PER-PROCESS temp path
-    * (repeated calls in one JVM overwrite the same directory; concurrent
-    * processes cannot clobber each other's index mid-read) and is removed
-    * by a shutdown hook. */
+    * [[graft.engine.ShardStore.write]]/[[probeIndexStore]] path a
+    * streaming pipeline runs per micro-batch, checked against a DuckDB
+    * replica of the same split. The store is cleared first and lives
+    * under a PER-PROCESS temp path (concurrent processes cannot clobber
+    * each other's index mid-read), removed by a shutdown hook. */
   def qDedupIncremental(s: SparkSession, d: String): DataFrame = {
+    val root = new java.io.File(incrementalIdxDir, "store")
+    Scratch.rmTree(root)
+    val store = new graft.engine.ShardStore(s, root.getPath)
     val docs = documents(s, d)
-    writeIndex(docs.filter(col("doc_id") % 2 === 0), incrementalIdxDir)
-    probeIndex(s, incrementalIdxDir, docs.filter(col("doc_id") % 2 =!= 0), 0.5)
+    store.write(sigsOf(shingleIndex(docs.filter(col("doc_id") % 2 === 0))))
+    probeIndexStore(store, docs.filter(col("doc_id") % 2 =!= 0), 0.5)
       .orderBy("doc_a", "doc_b")
   }
 

@@ -228,39 +228,6 @@ object Mutations {
     versionSummaries(snap.versions(), snap.readAsOf, Some(cur)).orderBy("version")
   }
 
-  /** Stage same-schema fixture data files in ONE write job instead of one
-    * `coalesce(1)` job per file (the [[graft.streaming.StreamingJobs]]
-    * wave-staging shape): tag, union, hash-repartition by the tag (one
-    * file per tag), write `partitionBy` the tag, then move each part to
-    * its destination name. Row content per file is identical to the
-    * per-file writes; an EMPTY slice (no partition directory written)
-    * falls back to its own coalesce(1) job. */
-  private def stageDataFiles(root: java.io.File,
-      named: Seq[(String, DataFrame)]): Unit = {
-    val stage = java.nio.file.Files.createTempDirectory("graft_dstage")
-    named.zipWithIndex.map { case ((_, df), i) => df.withColumn("__f", lit(i)) }
-      .reduce(_ unionByName _)
-      .repartition(named.length, col("__f"))
-      .sortWithinPartitions("__f", "doc_id")
-      .write.partitionBy("__f").mode("overwrite").parquet(stage.toString)
-    named.zipWithIndex.foreach { case ((name, df), i) =>
-      val dir = new java.io.File(stage.toString, s"__f=$i")
-      Option(dir.listFiles()).getOrElse(Array.empty)
-        .find(_.getName.endsWith(".parquet")) match {
-        case Some(part) =>
-          java.nio.file.Files.copy(part.toPath, new java.io.File(root, name).toPath)
-        case None =>
-          val tmp = java.nio.file.Files.createTempDirectory("graft_dl").toString
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val p = new java.io.File(tmp).listFiles()
-            .find(_.getName.endsWith(".parquet")).get
-          java.nio.file.Files.copy(p.toPath, new java.io.File(root, name).toPath)
-          Scratch.rmTree(new java.io.File(tmp))
-      }
-    }
-    Scratch.rmTree(stage.toFile)
-  }
-
   /** Per-version (count, id-sum) summary of a versioned table as ONE
     * union-of-aggregates plan instead of one sequential `.head()` job per
     * version (guide §1.2 #1 / §2.6: the version scans are independent —
@@ -287,6 +254,17 @@ object Mutations {
 
   private lazy val timeTravelRoot: String = Scratch.processTempDir("graft_time_travel")
 
+  /** The three data files of the Delta-layout fixtures, staged under
+    * `root` in one write job: f0 = ids below 100, f1 = ids 100..149,
+    * f2 = f0 without the multiples of 10 (f0's compaction edit). */
+  private def stageDeltaFixture(root: java.io.File, docs: DataFrame): Unit =
+    Scratch.stageFiles(Seq(
+      new java.io.File(root, "f0.parquet") -> docs.filter(col("doc_id") < 100),
+      new java.io.File(root, "f1.parquet") ->
+        docs.filter(col("doc_id") >= 100 && col("doc_id") < 150),
+      new java.io.File(root, "f2.parquet") ->
+        docs.filter(col("doc_id") < 100 && col("doc_id") % 10 =!= 0)))
+
   /** Oracle-gated read of an EXTERNAL Delta-layout table (VERDICT r10
     * Next #3): stage a three-commit log-structured table from the
     * documents slice — append, append, compaction-edit (remove + re-add)
@@ -303,10 +281,7 @@ object Mutations {
     val log = new java.io.File(root, "_delta_log")
     log.mkdirs()
     val docs = documents(s, d).select(col("doc_id"), col("text"))
-    stageDataFiles(root, Seq(
-      "f0.parquet" -> docs.filter(col("doc_id") < 100),
-      "f1.parquet" -> docs.filter(col("doc_id") >= 100 && col("doc_id") < 150),
-      "f2.parquet" -> docs.filter(col("doc_id") < 100 && col("doc_id") % 10 =!= 0)))
+    stageDeltaFixture(root, docs)
     def commit(n: Long, lines: Seq[String]): Unit =
       java.nio.file.Files.writeString(
         new java.io.File(log, f"$n%020d.json").toPath,
@@ -339,22 +314,13 @@ object Mutations {
     val sidecars = new java.io.File(log, "_sidecars")
     sidecars.mkdirs()
     val docs = documents(s, d).select(col("doc_id"), col("text"))
-    stageDataFiles(root, Seq(
-      "f0.parquet" -> docs.filter(col("doc_id") < 100),
-      "f1.parquet" -> docs.filter(col("doc_id") >= 100 && col("doc_id") < 150),
-      "f2.parquet" -> docs.filter(col("doc_id") < 100 && col("doc_id") % 10 =!= 0)))
+    stageDeltaFixture(root, docs)
     // sidecar action files: add-only parquet under _delta_log/_sidecars
-    def writeSidecar(name: String, dataFile: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_dlv2sc").toString
-      Seq(dataFile).toDF("path").selectExpr("struct(path) AS add")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(part.toPath, new java.io.File(sidecars, name).toPath)
-      Scratch.rmTree(new java.io.File(tmp))
-    }
-    writeSidecar("sc0.parquet", "f0.parquet")
-    writeSidecar("sc1.parquet", "f1.parquet")
+    Scratch.stageFiles(Seq("sc0.parquet" -> "f0.parquet", "sc1.parquet" -> "f1.parquet")
+      .map { case (name, dataFile) =>
+        new java.io.File(sidecars, name) ->
+          Seq(dataFile).toDF("path").selectExpr("struct(path) AS add")
+      })
     java.nio.file.Files.writeString(
       new java.io.File(log,
         f"${1L}%020d.checkpoint.80a083e8-4d2a-4c1f-9a0e-000000000001.json").toPath,

@@ -811,7 +811,7 @@ object Similarity {
     * partition pruning on `tbl`, and parquet min/max row-group stats on
     * the sorted `bucket` column — so serving a query against a 100 TB
     * index touches only the probed buckets' row groups, not the corpus.
-    * (The dedup-index analog is [[Dedup.writeIndex]]; this is the
+    * (The dedup-index analog is [[Dedup.appendIndexStore]]; this is the
     * embedding side.) */
   def writeAnnIndex(corpus: DataFrame, path: String): Unit =
     lshKeys(corpus)

@@ -92,11 +92,16 @@ object TrainedLangId {
     docs.select(col("doc_id"), col("t")).as[(Long, String)]
       .mapPartitions { it =>
         it.flatMap { case (id, t) =>
-          if (t == null || t.length < 3) Iterator.empty
+          // trigrams over code points, as `trainProfiles` cuts them
+          if (t == null || t.codePointCount(0, t.length) < 3) Iterator.empty
           else {
+            val grams = graft.functions.TextHashes.charNgrams(
+              org.apache.spark.unsafe.types.UTF8String.fromString(t), 3, distinct = false)
             val m = new java.util.HashMap[String, Long]()
             var i = 0
-            while (i + 3 <= t.length) { m.merge(t.substring(i, i + 3), 1L, _ + _); i += 1 }
+            while (i < grams.numElements()) {
+              m.merge(grams.getUTF8String(i).toString, 1L, _ + _); i += 1
+            }
             val arr = new Array[(String, Long)](m.size)
             val eit = m.entrySet().iterator()
             var j = 0

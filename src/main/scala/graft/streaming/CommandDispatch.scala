@@ -174,7 +174,7 @@ object CommandDispatch {
     // optional content near-dup gate: reject uploads whose TEXT is a
     // near-dup of an existing doc (the streaming content-dedup extension).
     // This re-signs state.docs per batch — at scale keep the persisted
-    // MinHash index (Dedup.writeIndex/probeIndex/appendIndex) instead.
+    // MinHash index (Dedup.appendIndexStore/probeIndexStore) instead.
     val rejected: Set[Long] = contentDedup.fold(Set.empty[Long]) { t =>
       graft.operators.Dedup.crossNearDups(
         cmds.filter(isIn(cmds, CmdId, nameAccepted))

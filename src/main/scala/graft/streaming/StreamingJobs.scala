@@ -138,63 +138,74 @@ object StreamingJobs {
 
   // --------------------------------------- watermark + late-data gate
 
-  private lazy val streamWinDir: String = Scratch.processTempDir("graft_stream_window")
-
-  /** Stage `df` as ONE parquet file named `name` under `srcDir`, with an
-    * explicit modification time: the FileStreamSource orders files by
-    * (modTime, path), so distinct staged mod-times pin the wave replay
-    * order deterministically (`maxFilesPerTrigger=1` then maps one wave to
-    * one micro-batch). */
-  private def stageWave(df: DataFrame, srcDir: String, name: String, modMs: Long): Unit = {
-    val stage = java.nio.file.Files.createTempDirectory("graft_wave")
-    df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-    val part = new java.io.File(stage.toString).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    val dst = new java.io.File(srcDir, name)
-    dst.getParentFile.mkdirs()
-    java.nio.file.Files.copy(part.toPath, dst.toPath)
-    dst.setLastModified(modMs)
-    Scratch.rmTree(stage.toFile)
-  }
-
-  /** Stage ALL waves of one replay in a single write job: the waves are
-    * tagged, unioned and written `partitionBy` the wave number (hash
-    * repartition puts each wave in exactly one task, so each wave
-    * directory holds exactly one file), then each file is moved to its
-    * `names(i)` with its pinned mod-time — same files, same replay
-    * order as N [[stageWave]] calls, at one job wave instead of N.
-    * An EMPTY wave (a watermark-advance batch — load-bearing, see
-    * [[qStreamWindow]] wave 2) writes no partition directory, so those
-    * fall back to the per-wave path, which emits a 0-row file. */
-  private def stageWaves(waves: Seq[DataFrame], srcDir: String,
-      names: Seq[String], modMs: Seq[Long]): Unit = {
-    val stage = java.nio.file.Files.createTempDirectory("graft_waves")
-    val tagged = waves.zipWithIndex.map { case (w, i) => w.withColumn("__wave", lit(i)) }
-      .reduce(_ unionByName _)
-      .repartition(waves.length, col("__wave"))
-    // deterministic row order WITHIN each staged wave file (ADVICE r13):
-    // the hash repartition alone would leave within-wave order run-to-run
-    // nondeterministic; current streaming consumers are order-insensitive
-    // inside a micro-batch, but a future first-wins stateful op must not
-    // become flaky because of the staging layout. Wave schemas are flat
-    // scalar columns, so sorting by all of them is total and cheap.
-    tagged
-      .sortWithinPartitions(tagged.columns.map(col).toIndexedSeq: _*)
-      .write.partitionBy("__wave").mode("overwrite").parquet(stage.toString)
-    waves.indices.foreach { i =>
-      val dir = new java.io.File(stage.toString, s"__wave=$i")
-      Option(dir.listFiles()).getOrElse(Array.empty)
-        .find(_.getName.endsWith(".parquet")) match {
-        case Some(part) =>
-          val dst = new java.io.File(srcDir, names(i))
-          dst.getParentFile.mkdirs()
-          java.nio.file.Files.copy(part.toPath, dst.toPath)
-          dst.setLastModified(modMs(i))
-        case None => stageWave(waves(i), srcDir, names(i), modMs(i))
+  /** The one wave-replay harness behind the four stateful replays
+    * ([[replayWatermarkedWaves]], [[replaySessionWaves]],
+    * [[replayStreamJoin]], [[replayDedupWaves]]) and so behind
+    * q_stream_window, q_stream_session, q_stream_join and q_stream_dedup.
+    * It clears `root`, stages every source's waves as parquet files in one
+    * [[Scratch.stageFiles]] job (so all sources' waves must share one
+    * schema), reads each source as a file stream with the schema of its
+    * wave frames, runs `query` over the streams (in `sources` order) under
+    * `conf`, writes its append output to parquet under `AvailableNow`,
+    * awaits it and reads the output back.
+    *
+    * Replay order: the file source orders new files by (modTime, path),
+    * so wave `i` of every source gets the mod-time `t0 + i·10 s`, and
+    * `maxFilesPerTrigger=1` then maps one wave to one micro-batch. An
+    * empty wave is a 0-row file and still a micro-batch: the window and
+    * dedup replays use one to advance the watermark (see
+    * [[qStreamWindow]], wave 2).
+    *
+    * No-data micro-batches exist to advance watermarks promptly on a
+    * continuous stream. An inner stream-stream join and
+    * `dropDuplicatesWithinWatermark` emit each row on arrival, so in a
+    * bounded replay the trailing no-data batch adds no output at any
+    * scale and costs a full trigger (about 0.5 s of state-store commits,
+    * from the per-batch listener durations in OPTIMIZATION_r14.md change
+    * #9): the join and dedup replays turn them off. The session and
+    * window aggregations in append mode emit a group only on a batch
+    * after the watermark has passed it, so they keep them on: the
+    * session replay's single flush wave emits in the no-data batch that
+    * follows it (the window replay's second flush wave makes its output
+    * complete either way).
+    *
+    * State partitions (`spark.sql.shuffle.partitions`, fixed at a
+    * stream's first batch): a replay is a handful of waves, and its cost
+    * is fixed per-(state store × partition × batch) overhead, not rows.
+    * Join 2 (a stream-stream join runs four state stores per partition;
+    * a probe ran the same 40k rows in 26 s at 8 partitions and 6 s at 2);
+    * dedup 8; session 8 (state is one row per open session, wider than
+    * the window's, measured equal to 1 partition at sf0.1); window 1
+    * (one row per open window and type; each extra partition costs two
+    * checkpointed state tasks per batch). A production deployment sizes
+    * these to its key cardinality. */
+  private[graft] def replayWaves(s: SparkSession, root: String,
+      sources: Seq[(String, Seq[DataFrame])], conf: (String, String)*)(
+      query: Seq[DataFrame] => DataFrame): DataFrame = {
+    Scratch.rmTree(new java.io.File(root))
+    val t0 = System.currentTimeMillis() - 60000
+    val files = sources.flatMap { case (name, waves) =>
+      waves.zipWithIndex.map { case (w, i) =>
+        (new java.io.File(s"$root/$name", f"w$i%02d.parquet"), w, t0 + i * 10000L)
       }
     }
-    Scratch.rmTree(stage.toFile)
+    Scratch.stageFiles(files.map { case (f, w, _) => f -> w })
+    files.foreach { case (f, _, modMs) => f.setLastModified(modMs) }
+    val out = s"$root/out"
+    Scope.withConf(s, conf: _*) {
+      query(sources.map { case (name, waves) =>
+        s.readStream.schema(waves.head.schema).option("maxFilesPerTrigger", "1")
+          .parquet(s"$root/$name")
+      }).writeStream.format("parquet").option("path", out)
+        .option("checkpointLocation", s"$root/ck")
+        .outputMode("append")
+        .trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
+    }
+    s.read.parquet(out)
   }
+
+  private lazy val streamWinDir: String = Scratch.processTempDir("graft_stream_window")
 
   /** Event-time watermark + late-data handling, driver-gated (SURVEY §2.9
     * "absent" row — an engine extension; the reference has no event-time
@@ -250,8 +261,7 @@ object StreamingJobs {
       .select(timestamp_micros(lit(mxUs + offsetHours * 3600 * us)).as("ts"),
         lit("__flush").as("event_type"))
     replayWatermarkedWaves(s, streamWinDir,
-      Seq(wave1, advance, lateWave, flush(10), flush(11)), "2 hours",
-      statePartitions = Some(1))
+      Seq(wave1, advance, lateWave, flush(10), flush(11)), "2 hours")
       .orderBy("hour", "event_type")
   }
 
@@ -293,13 +303,8 @@ object StreamingJobs {
     // real session's end (+4h > 1h delay + 30min gap)
     val flush = s.range(1).select(lit(-1L).as("user_id"),
       timestamp_micros(lit(mxUs + 4 * 3600 * us)).as("ts"))
-    // 8 state partitions: session state is per-OPEN-SESSION (~|users|,
-    // much wider than q_stream_window's per-window-per-type rows), so the
-    // replay parallelizes the state sort while keeping checkpoint task
-    // count small; measured equal to 1 partition at sf0.1 (the cost is
-    // fixed micro-batch overhead), chosen for the wider-state regime
     replaySessionWaves(s, streamSessDir, Seq(wave1, wave2, flush),
-      delay = "1 hour", gap = "30 minutes", statePartitions = Some(8))
+      delay = "1 hour", gap = "30 minutes")
       .orderBy("user_id", "session_start")
   }
 
@@ -342,53 +347,24 @@ object StreamingJobs {
 
   /** Replay two wave sequences through one watermarked stream-stream
     * interval join; returns the append output (view_id, click_id,
-    * user_id). */
+    * user_id). Both sides are staged in one (id, user, ts) shape, so
+    * their waves share one staging job; the columns are named back in
+    * the query. */
   private[graft] def replayStreamJoin(s: SparkSession, root: String,
       viewWaves: Seq[DataFrame], clickWaves: Seq[DataFrame]): DataFrame = {
-    Scratch.rmTree(new java.io.File(root))
-    val (srcV, srcC, out, ck) = (s"$root/views", s"$root/clicks", s"$root/out", s"$root/ck")
-    val t0 = System.currentTimeMillis() - 60000
-    stageWaves(viewWaves, srcV,
-      viewWaves.indices.map(i => f"v$i%02d.parquet"),
-      viewWaves.indices.map(i => t0 + i * 10000L))
-    stageWaves(clickWaves, srcC,
-      clickWaves.indices.map(i => f"c$i%02d.parquet"),
-      clickWaves.indices.map(i => t0 + i * 10000L))
-    val vSchema = StructType(Seq(StructField("view_id", LongType),
-      StructField("v_user", LongType), StructField("view_ts", TimestampType)))
-    val cSchema = StructType(Seq(StructField("click_id", LongType),
-      StructField("c_user", LongType), StructField("click_ts", TimestampType)))
-    // 2 state partitions: a stream-stream join runs FOUR state stores per
-    // partition, and the replay's cost is per-(store x partition x batch)
-    // fixed overhead, not rows (probe: 8 partitions 26s, 2 partitions 6s
-    // for the same 40k rows); a production deployment sizes this to its
-    // actual key cardinality.
-    // No-data micro-batches exist to advance watermarks PROMPTLY on a
-    // continuous stream; an INNER stream-stream join emits each match on
-    // arrival, so in this bounded AvailableNow replay the trailing
-    // no-data batch contributes zero output rows at any scale and costs a
-    // full trigger (~0.5 s of state-store commits, measured from the
-    // per-batch StreamingQueryListener durations in OPTIMIZATION_r14.md
-    // change #9). (q_stream_session keeps the default: its single-flush
-    // design EMITS in the post-flush batch.)
-    Scope.withConf(s, "spark.sql.shuffle.partitions" -> "2",
+    def shape(waves: Seq[DataFrame]) = waves.map(_.toDF("id", "user", "ts"))
+    replayWaves(s, root, Seq("views" -> shape(viewWaves), "clicks" -> shape(clickWaves)),
+        "spark.sql.shuffle.partitions" -> "2",
         "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
-      val v = s.readStream.schema(vSchema).option("maxFilesPerTrigger", "1")
-        .parquet(srcV).withWatermark("view_ts", "1 hour")
-      val c = s.readStream.schema(cSchema).option("maxFilesPerTrigger", "1")
-        .parquet(srcC).withWatermark("click_ts", "1 hour")
-      val q = v.join(c,
-          col("v_user") === col("c_user") &&
-            col("click_ts") >= col("view_ts") &&
-            col("click_ts") <= col("view_ts") + expr("INTERVAL 30 MINUTES"))
-        .select(col("view_id"), col("click_id"), col("v_user").as("user_id"))
-        .writeStream.format("parquet").option("path", out)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      case Seq(views, clicks) =>
+        val v = views.toDF("view_id", "v_user", "view_ts").withWatermark("view_ts", "1 hour")
+        val c = clicks.toDF("click_id", "c_user", "click_ts").withWatermark("click_ts", "1 hour")
+        v.join(c,
+            col("v_user") === col("c_user") &&
+              col("click_ts") >= col("view_ts") &&
+              col("click_ts") <= col("view_ts") + expr("INTERVAL 30 MINUTES"))
+          .select(col("view_id"), col("click_id"), col("v_user").as("user_id"))
     }
-    s.read.parquet(out)
   }
 
   private lazy val streamDedupDir: String = Scratch.processTempDir("graft_stream_dedup")
@@ -439,105 +415,41 @@ object StreamingJobs {
     * watermarked `dropDuplicatesWithinWatermark("doc_id")`, one wave per
     * micro-batch, append output. */
   private[graft] def replayDedupWaves(s: SparkSession, root: String,
-      waves: Seq[DataFrame], delay: String): DataFrame = {
-    Scratch.rmTree(new java.io.File(root))
-    val (src, out, ck) = (s"$root/src", s"$root/out", s"$root/ck")
-    val t0 = System.currentTimeMillis() - 60000
-    stageWaves(waves, src,
-      waves.indices.map(i => f"w$i%02d.parquet"),
-      waves.indices.map(i => t0 + i * 10000L))
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("ts", TimestampType)))
-    // dropDuplicatesWithinWatermark emits survivors ON ARRIVAL — the
-    // trailing no-data batch contributes nothing to a bounded replay's
-    // output at any scale (the replayStreamJoin rationale; eviction
-    // timing is already proven by the explicit advance waves)
-    Scope.withConf(s, "spark.sql.shuffle.partitions" -> "8",
+      waves: Seq[DataFrame], delay: String): DataFrame =
+    replayWaves(s, root, Seq("src" -> waves),
+        "spark.sql.shuffle.partitions" -> "8",
         "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
-      val q = s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
-        .withWatermark("ts", delay)
-        .dropDuplicatesWithinWatermark("doc_id")
-        .writeStream.format("parquet").option("path", out)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      case Seq(src) => src.withWatermark("ts", delay).dropDuplicatesWithinWatermark("doc_id")
     }
-    s.read.parquet(out)
-  }
 
-  /** The [[replayWatermarkedWaves]] harness for session windows: replay
-    * `waves` (each: user_id LONG, ts TIMESTAMP) through one watermarked
-    * `session_window` count, one wave per micro-batch, return the
-    * append-mode output. */
+  /** Replay `waves` (each: user_id LONG, ts TIMESTAMP) through one
+    * watermarked `session_window` count, one wave per micro-batch, and
+    * return the append-mode output. */
   private[graft] def replaySessionWaves(s: SparkSession, root: String,
-      waves: Seq[DataFrame], delay: String, gap: String,
-      statePartitions: Option[Int] = None): DataFrame = {
-    Scratch.rmTree(new java.io.File(root))
-    val (src, out, ck) = (s"$root/src", s"$root/out", s"$root/ck")
-    val t0 = System.currentTimeMillis() - 60000
-    stageWaves(waves, src,
-      waves.indices.map(i => f"w$i%02d.parquet"),
-      waves.indices.map(i => t0 + i * 10000L))
-    val schema = StructType(Seq(
-      StructField("user_id", LongType), StructField("ts", TimestampType)))
-    val conf = statePartitions.map("spark.sql.shuffle.partitions" -> _.toString).toSeq
-    Scope.withConf(s, conf: _*) {
-      val q = s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
-        .withWatermark("ts", delay)
-        .groupBy(session_window(col("ts"), gap), col("user_id"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(col("session_window.start").as("session_start"),
-          col("session_window.end").as("session_end_gap"),
-          col("user_id"), col("n_events"))
-        .writeStream.format("parquet").option("path", out)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      waves: Seq[DataFrame], delay: String, gap: String): DataFrame =
+    replayWaves(s, root, Seq("src" -> waves), "spark.sql.shuffle.partitions" -> "8") {
+      case Seq(src) =>
+        src.withWatermark("ts", delay)
+          .groupBy(session_window(col("ts"), gap), col("user_id"))
+          .agg(count(lit(1)).as("n_events"))
+          .select(col("session_window.start").as("session_start"),
+            col("session_window.end").as("session_end_gap"),
+            col("user_id"), col("n_events"))
     }
-    s.read.parquet(out)
-  }
 
   /** Replay `waves` (each: ts TIMESTAMP, event_type STRING) through one
     * watermarked tumbling-window count, one wave per micro-batch, and
     * return the append-mode output — the harness behind [[qStreamWindow]]
-    * and the StreamingSpec late-data proofs.
-    *
-    * `statePartitions` pins `spark.sql.shuffle.partitions` (= the state
-    * store partition count, fixed at the stream's first batch) for the
-    * duration of the stream, restoring the session value after: the GATE
-    * stream is micro-scale by construction (a handful of waves), and each
-    * extra state partition costs two checkpointed state tasks per batch. A
-    * production deployment of the same query keeps the session default —
-    * the aggregation itself shuffles once on (window, event_type) however
-    * wide the cluster is. */
+    * and the StreamingSpec late-data proofs. */
   private[graft] def replayWatermarkedWaves(s: SparkSession, root: String,
-      waves: Seq[DataFrame], delay: String,
-      statePartitions: Option[Int] = None): DataFrame = {
-    Scratch.rmTree(new java.io.File(root))
-    val (src, out, ck) = (s"$root/src", s"$root/out", s"$root/ck")
-    val t0 = System.currentTimeMillis() - 60000
-    stageWaves(waves, src,
-      waves.indices.map(i => f"w$i%02d.parquet"),
-      waves.indices.map(i => t0 + i * 10000L))
-    val schema = StructType(Seq(
-      StructField("ts", TimestampType), StructField("event_type", StringType)))
-    val conf = statePartitions.map("spark.sql.shuffle.partitions" -> _.toString).toSeq
-    Scope.withConf(s, conf: _*) {
-      val q = s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
-        .withWatermark("ts", delay)
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("window.start").as("hour"), col("event_type"), col("n"))
-        .writeStream.format("parquet").option("path", out)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      waves: Seq[DataFrame], delay: String): DataFrame =
+    replayWaves(s, root, Seq("src" -> waves), "spark.sql.shuffle.partitions" -> "1") {
+      case Seq(src) =>
+        src.withWatermark("ts", delay)
+          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+          .agg(count(lit(1)).as("n"))
+          .select(col("window.start").as("hour"), col("event_type"), col("n"))
     }
-    s.read.parquet(out)
-  }
 
   // ------------------------------------------------- streaming dedup gate
 
@@ -570,7 +482,7 @@ object StreamingJobs {
     * memory — the fingerprint probe is a pruned (xxh, doc_id) scan
     * restricted to the batch's hashes, and the dedup index stores each
     * doc's shingles once (band keys are re-derived at probe time,
-    * Dedup.writeIndex). The corpus side of every stage leaves the cluster
+    * Dedup.appendIndexStore). The corpus side of every stage leaves the cluster
     * already reduced to one row per batch hash or batch document. Per
     * batch the driver holds 16 bytes of keys per document (doc_id, xxh),
     * one row per rejected document, and the within-batch pair list while

@@ -224,23 +224,23 @@ class DedupSpec extends SparkSpec {
 
   test("persisted dedup index: write, probe, append, probe again") {
     import spark.implicits._
-    val path = tempDir("graft_dedup_idx") + "/idx"
-    Dedup.writeIndex(docs.select("doc_id", "text"), path)
+    val store = new graft.engine.ShardStore(spark, tempDir("graft_dedup_idx") + "/idx")
+    store.write(Dedup.sigsOf(Dedup.shingleIndex(docs.select("doc_id", "text"))))
     val editRow = docs.orderBy("doc_id").select("doc_id", "text").head()
     val edited = editRow.getString(1).trim.split("\\s+").toSeq
       .updated(0, "REPLACED").mkString(" ")
     val fresh = (1 to 40).map(i => s"freshidx$i").mkString(" ")
     val incoming = Seq((900001L, edited), (900002L, fresh)).toDF("doc_id", "text")
     // probe parity with the recompute-everything path
-    val viaIndex = Dedup.probeIndex(spark, path, incoming, 0.5)
+    val viaIndex = Dedup.probeIndexStore(store, incoming, 0.5)
       .collect().map(_.toSeq).toSet
     val recomputed = Dedup.crossNearDups(incoming, docs.select("doc_id", "text"), 0.5)
       .collect().map(_.toSeq).toSet
     assert(viaIndex === recomputed)
     assert(viaIndex.map(_.head).contains(900001L) && !viaIndex.map(_.head).contains(900002L))
     // append the accepted doc; a re-upload of it now probes as a dup
-    Dedup.appendIndex(incoming.filter(col("doc_id") === 900002L), path)
-    val reprobe = Dedup.probeIndex(spark, path,
+    Dedup.appendIndexStore(incoming.filter(col("doc_id") === 900002L), store)
+    val reprobe = Dedup.probeIndexStore(store,
       Seq((900003L, fresh)).toDF("doc_id", "text"), 0.5)
       .select("doc_b").as[Long].collect().toSet
     assert(reprobe === Set(900002L))

@@ -273,8 +273,8 @@ class TextPipelineOpsSpec extends SparkSpec {
     // order puts the surrogate pair (D83D DE00) FIRST, binary UTF-8
     // order (= Spark string sort = DuckDB collation) puts it LAST. The
     // doc profile must agree with the SQL window it replaces.
-    val emoji = "a\uD83D\uDE00" // a + U+1F600: 3 UTF-16 units -> one trigram
-    val pua = "a\uE000\uE000" // a + two U+E000: 3 UTF-16 units
+    val emoji = "a\uD83D\uDE00b" // a + U+1F600 + b: 3 code points
+    val pua = "a\uE000b" // a + U+E000 + b: 3 code points
     assert(emoji.compareTo(pua) < 0, "precondition: UTF-16 order differs")
     val t = emoji + " " + pua // every trigram occurs once: pure tie-break
     val prof = TrainedLangId.docProfiles(Seq((1L, t)).toDF("doc_id", "t"))
@@ -287,5 +287,19 @@ class TextPipelineOpsSpec extends SparkSpec {
       .collect().map(_.getString(0))
     assert(sparkOrder.head === pua,
       "Spark's binary string sort itself puts the PUA trigram first")
+  }
+
+  test("trained langid: the doc profile cuts trigrams over code points, as training does") {
+    import graft.operators.TrainedLangId
+    import spark.implicits._
+    // U+1F600 is one code point but two UTF-16 units: a code-unit cut
+    // yields "x\uD83D\uDE00", "\uD83D\uDE00y" and "\uDE00yz", which
+    // starts with a lone surrogate
+    val doc = Seq((1L, "x\uD83D\uDE00yz")).toDF("doc_id", "t")
+    val prof = TrainedLangId.docProfiles(doc).select("tri").as[String].collect().toSet
+    val grams = doc.select(explode(graft.functions.GraftFunctions.ngrams(col("t"), 3)))
+      .as[String].collect().toSet
+    assert(grams === Set("x\uD83D\uDE00y", "\uD83D\uDE00yz"))
+    assert(prof === grams)
   }
 }

@@ -64,6 +64,19 @@ allowed=$(printf '%s\n' 'src/main/scala/graft/operators/Dedup.scala 2' \
   echo "transform(sequence( sites per file, expected:"; echo "$allowed"
   echo "found:"; echo "$lambdas"; exit 1; }
 echo "ok"
+echo "=== staging ==="
+# one parquet-file stager (engine.Scratch: stageFiles / stageParts) and one
+# wave-replay harness (StreamingJobs.replayWaves): a createTempDirectory(
+# in src/main outside engine/Scratch.scala, or a second
+# writeStream.format("parquet") sink, fails the gate
+tmpdirs=$(grep -rlF 'createTempDirectory(' src/main/scala \
+  | grep -vx 'src/main/scala/graft/engine/Scratch.scala' || true)
+sinks=$(grep -rhoF 'writeStream.format("parquet")' src/main/scala | wc -l)
+[ -z "$tmpdirs" ] && [ "$sinks" -le 1 ] || {
+  echo "createTempDirectory( outside engine/Scratch.scala: ${tmpdirs:-none}"
+  echo "$sinks parquet stream sinks (at most one):"
+  grep -rnF 'writeStream.format("parquet")' src/main/scala; exit 1; }
+echo "ok"
 echo "=== sbt test ==="
 sbt -batch test 2>&1 | grep -E "Tests:|Passed:"
 echo "=== benchmark harness build ==="
